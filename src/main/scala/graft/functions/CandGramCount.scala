@@ -17,8 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * each document's grams against the per-lang candidate index in-row
   * replaces the CharGrams-array + posexplode + broadcast-join pipeline
   * (one row and one join probe per gram OCCURRENCE — the measured whole
-  * cost of the key: ProfileR21 `hh:recount` 1.92 s of `hh:full` 1.92 s
-  * at sf0.1) with a zero-copy walk that emits ONE row per (doc,
+  * cost of the key: r21 stage profile `hh:recount` 1.92 s of `hh:full`
+  * 1.92 s at sf0.1, commit b952ce9) with a zero-copy walk that emits ONE
+  * row per (doc,
   * candidate-present) pair. The downstream exact aggregation is
   * unchanged in value: summing per-doc counts per (lang, gram) equals
   * counting occurrences per (lang, gram) — QueriesSpec pins identity

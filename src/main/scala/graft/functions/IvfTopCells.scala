@@ -8,18 +8,19 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** The IVF cell-assignment ranking `(embedding, nrm) → top-m cell ids by
-  * cosine` as ONE native pass over the embedding (r22, guide §4; ProfileR22
-  * `ivf`: the assignment frame was 0.44 s of ann_ivf's ~1 s at sf0.1).
+  * cosine` as ONE native pass over the embedding (r22, guide §4;
+  * OPTIMIZATION_r22.md `ivf`: the assignment frame was 0.44 s of
+  * ann_ivf's ~1 s at sf0.1).
   *
-  * The Column form (`topCellsFor`) builds k `struct(sim, -c, c)` nodes —
+  * The Column form it replaced built k `struct(sim, -c, c)` nodes —
   * one [[FloatDot]] each, every call re-walking the embedding — then
   * `reverse(array_sort(array(...)))`: k struct allocations and an
   * interpreted struct-ordering sort PER ROW. Here the embedding is walked
   * once per centroid inside a tight JVM loop and a bounded insertion pass
   * keeps the top m.
   *
-  * BIT-IDENTICAL ranking by construction (pinned against the Column form
-  * in VectorSpec):
+  * BIT-IDENTICAL ranking by construction (pinned in VectorSpec against an
+  * independent plain-Scala ranking that follows these rules):
   *  - sim_c = float_dot(emb, cent_c) / (nrm · cn_c) with [[FloatDot]]'s
   *    exact arithmetic — sequential left fold of double-widened float
   *    products, then one double division;

@@ -71,7 +71,7 @@ object MinHashSig {
   * concat_ws(' ', slice(toks, i, 3)))` materializes every shingle string
   * through interpreted higher-order-function dispatch before the
   * signature kernel hashes and discards it — measured as ~0.27 s of the
-  * minhash stage at sf0.1 (ProfileR22 `mh`), multiplied across the five
+  * minhash stage at sf0.1 (OPTIMIZATION_r22.md `mh`), multiplied across the five
   * minhash keys and the streaming ingest gate. Here each shingle's UTF-8
   * bytes are assembled in a reused buffer and hashed in place.
   *

@@ -135,7 +135,7 @@ case class MisraGries(
   * one array cell) per gram occurrence (r22, guide §2.3 aggregate-before-
   * shuffle + §4 expressions): `explode(char_grams(text, n))` feeding
   * `misra_gries(gram, k)` generates ~1 row per corpus char through the
-  * aggregation hash map (ProfileR22 `hh2`: 0.36 s generate + 0.72 s
+  * aggregation hash map (OPTIMIZATION_r22.md `hh2`: 0.36 s generate + 0.72 s
   * aggregate of the key's ~1.5 s at sf0.1); here update() walks the text's
   * UTF-8 bytes once per DOCUMENT row and feeds each gram straight into the
   * same <=k-counter buffer. Gram extraction is byte-for-byte

@@ -22,10 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * sf0.1 `ann_pq` scan). This runs the identical arithmetic as three
   * tight primitive loops (norm fold, subspace dots, argmin) —
   * per-vector cost S·ks·d ≈ 16k mult-adds, microseconds — and is pinned
-  * BIT-IDENTICAL to the Column form in VectorSpec: same double
-  * widening, same fold order, same divide-then-round-to-float
-  * normalization, same `dd` expression, same strict-< tie rule as
-  * `least(struct(dd, c))`.
+  * BIT-IDENTICAL in VectorSpec to an independent plain-Scala encode with
+  * the Column form's rules: same double widening, same fold order, same
+  * divide-then-round-to-float normalization, same `dd` expression, same
+  * tie rule as `least(struct(dd, c))`.
   *
   * The codebooks ride the expression as a bound constant (ks·S·d floats
   * ≈ 64 KB — shipped once per task with the serialized plan, the
@@ -50,8 +50,8 @@ case class PqEncode(child: Expression, books: IndexedSeq[IndexedSeq[IndexedSeq[F
   @transient private lazy val booksArr: Array[Array[Array[Float]]] =
     books.map(_.map(_.toArray).toArray).toArray
 
-  // |c|² per (subspace, centroid), precomputed once per task — the same
-  // Scala double sum the Column form folds into its literal
+  // |c|² per (subspace, centroid), precomputed once per task — a
+  // sequential double sum in centroid order
   @transient private lazy val cn2: Array[Array[Double]] =
     booksArr.map(_.map(_.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
 
@@ -80,9 +80,8 @@ case class PqEncode(child: Expression, books: IndexedSeq[IndexedSeq[IndexedSeq[F
       v(i) = a.getFloat(i)
       i += 1
     }
-    // normalization exactly as the Column form: double fold in array
-    // order (FloatDot semantics), sqrt, divide, round to float; a
-    // zero-norm vector encodes raw (the `otherwise` branch)
+    // normalization: double fold in array order (FloatDot semantics),
+    // sqrt, divide, round to float; a zero-norm vector encodes raw
     var acc = 0.0
     i = 0
     while (i < dim) { acc += v(i).toDouble * v(i).toDouble; i += 1 }
@@ -127,8 +126,8 @@ case class PqEncode(child: Expression, books: IndexedSeq[IndexedSeq[IndexedSeq[F
   * plan overhead per run for a 10-row query frame (measured: the
   * `ann_pq` keys at 3.8 s when everything data-side was already
   * milliseconds). One opaque node fixes the plan cost; the row cost
-  * (16k mult-adds) was never the problem. Bit-identity to the Column
-  * form is pinned in VectorSpec. NULL on length mismatch or null
+  * (16k mult-adds) was never the problem. Bit-identity to a plain-Scala
+  * LUT is pinned in VectorSpec. NULL on length mismatch or null
   * elements, as FloatDot. Books as IndexedSeq for structural equality,
   * as [[PqEncode]].
   */

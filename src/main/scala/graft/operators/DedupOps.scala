@@ -110,9 +110,10 @@ object DedupOps {
     * [[org.apache.spark.sql.GraftShim.reliableCheckpointTracked]] — an
     * executor loss recomputes the round from storage instead of failing
     * the job, the mode a multi-hour 100 TB clustering run wants; costs
-    * one checkpoint write per round (measured via `graft.CcBench` at
-    * sf0.01: 1.345 s vs 1.310 s median — ~3% on a local-disk checkpoint
-    * dir; replicated HDFS writes cost more, which is exactly the
+    * one checkpoint write per round (measured at sf0.01 with the CC
+    * bench main of commit b952ce9, SURVEY §2 `dedup_clusters`: 1.345 s
+    * vs 1.310 s median — ~3% on a local-disk checkpoint dir; replicated
+    * HDFS writes cost more, which is exactly the
     * insurance premium). Superseded generations release their blocks AND
     * files deterministically each round in both modes.
     */
@@ -121,7 +122,7 @@ object DedupOps {
     * label (labels are node ids, so the round's label map applies to
     * itself) — chain-shaped components collapse in ~O(log diameter)
     * rounds instead of O(diameter), at the price of one extra join +
-    * shuffle per round. MEASURED at sf0.1 (CcBench, within-run pairs —
+    * shuffle per round. MEASURED at sf0.1 (SURVEY §6, within-run pairs —
     * this host's cross-run noise is documented in §6): the chain-shaped
     * embedding-cosine graph drops 12 → 8 rounds and ~20% wall
     * (4.52 → 3.51 s; 7.26 → 3.65 s in a second pairing), the deeper
@@ -605,8 +606,9 @@ object DedupOps {
     val edges = simhashPairsScored(d).select(col("doc_a").as("src"), col("doc_b").as("dst"))
     // Path halving ON: hamming ≤ 3 is a looser relation than
     // est-Jaccard ≥ 0.75, so near-dup docs chain into wide-diameter
-    // components — CcBench at sf0.1 measures 18 propagation rounds plain
-    // vs 10 with halving (4.21 → 2.70 s same-window; the deepest graph of
+    // components — at sf0.1 the CC bench of commit b952ce9 measured 18
+    // propagation rounds plain vs 10 with halving (4.21 → 2.70 s
+    // same-window; the deepest graph of
     // the clustering family, past the documented >4-rounds threshold)
     clusterReportReleased(d.select("doc_id"), edges, s"dedup_clusters_simhash_$sfDir",
       compress = true)
@@ -855,7 +857,7 @@ object DedupOps {
     * ([[graft.streaming.DedupGate]]).
     */
   private[graft] def bandedSigs(d: DataFrame): DataFrame =
-    // r22 (guide §4; ProfileR22 `mh`): the shingles were materialized by
+    // r22 (guide §4; OPTIMIZATION_r22.md `mh`): the shingles were materialized by
     // an interpreted transform/concat_ws/slice chain (~0.27 s at sf0.1,
     // paid by all five minhash keys + the streaming gate) only for the
     // signature kernel to hash and discard them — minhash_shingle_sig

@@ -206,7 +206,7 @@ object HygieneOps {
     // repartition only adds an exchange without a reuse (verified on the
     // final adaptive plan), and a localCheckpoint would pin corpus-scale
     // line rows in executor storage to save a 0.12 s re-explode
-    // (ProfileR22 `dlg`) — the wrong trade at 100 TB, where the
+    // (OPTIMIZATION_r22.md `dlg`) — the wrong trade at 100 TB, where the
     // metadata-scale answer is the broadcast-sliver production form
     // below.
     val l = lineView(boilerPlanted(spark, sfDir))

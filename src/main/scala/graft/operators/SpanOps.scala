@@ -220,7 +220,8 @@ object SpanOps {
     * then a join of the sites back onto the dup sliver) evaluated the
     * K-gram generator TWICE and shuffled the gram strings twice (once as
     * partial-agg keys, once as join keys) — measured 3.88 s vs 1.33 s at
-    * sf0.1 (ProfileR21 dsp2, noop sink). Skew exposure is UNCHANGED: the
+    * sf0.1 (r21 stage profile `dsp2`, commit b952ce9, noop sink). Skew
+    * exposure is UNCHANGED: the
     * join form already funneled every site of a hot gram through one
     * reducer partition (equi-join on gram), and WindowExec buffers with
     * graceful spill; the scale-safe production sibling remains the
@@ -702,7 +703,7 @@ object SpanOps {
       lmTable: String, maxBits: Double,
       minTokens: Int = 20, minQuality: Double = 0.4): DataFrame = {
     import graft.streaming.{CharLmGate, DedupGate, SpanGate}
-    // r22 (guide §1.2 step 1; ProfileR21 `ccf2` decomposition): the
+    // r22 (guide §1.2 step 1; `ccf2` stage profile, commit b952ce9): the
     // composite's DAG consumes its expensive stages TWICE each — `scored`
     // feeds the canonical groupBy and the join back, `lmDecided` feeds
     // the near-dup probe and the flag join, `deduped` feeds the winnow

@@ -558,7 +558,7 @@ object TextOps {
     // nulls) — filter them before the candidate pass so the driver-side
     // lang sort below cannot NPE on a null key (r21 ADVICE)
     //
-    // r22 (guide §2.3/§4; ProfileR22 `hh2`): the candidate pass ran
+    // r22 (guide §2.3/§4; OPTIMIZATION_r22.md `hh2`): the candidate pass ran
     // explode(char_grams) → misra_gries(gram), materializing one array
     // cell AND one aggregation-input row per gram occurrence (~1 per
     // corpus char: 0.36 s generate + 0.72 s aggregate of the key's
@@ -582,8 +582,9 @@ object TextOps {
     // (the codebook-collect idiom) and recount per doc through the
     // zero-copy [[graft.functions.CandGramCount]] kernel instead of
     // re-materializing every gram occurrence as a join-probe row
-    // (ProfileR21: the join recount was 1.92 s of the key's 1.92 s at
-    // sf0.1). Summing per-doc counts per (lang, gram) is the same exact
+    // (r21 stage profile, commit b952ce9: the join recount was 1.92 s of
+    // the key's 1.92 s at sf0.1). Summing per-doc counts per (lang, gram)
+    // is the same exact
     // count; the Misra-Gries superset guarantee and the cnt·(k+1) > n
     // filter are untouched, so the output still equals the exact
     // full-domain answer (oracle unchanged; QueriesSpec pins identity
@@ -607,32 +608,6 @@ object TextOps {
       .groupBy(col("lang"), col("c.gram").as("gram"))
       .agg(sum(col("c.cnt")).as("cnt"))
       .join(broadcast(langN), Seq("lang"))
-      .filter(col("cnt") * (k + 1) > col("n"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("share_ppm", expr("cnt * 1000000 DIV n"))
-      .select("lang", "rank", "gram", "cnt", "n", "share_ppm")
-      .orderBy("lang", "rank")
-  }
-
-  /** The r7-r20 broadcast-join recount form of [[heavyHittersOf]] —
-    * retained as the independent Column-algebra implementation the
-    * kernel recount is pinned row-identical against (QueriesSpec).
-    */
-  private[graft] def heavyHittersJoinFormOf(d: DataFrame): DataFrame = {
-    import graft.functions.MisraGries.misra_gries
-    import org.apache.spark.sql.expressions.Window
-    val k = 127
-    val grams = d
-      .filter(length(col("text")) >= 3)
-      .select(col("lang"),
-        explode(graft.functions.CharGrams.char_grams(col("text"), 3)).as("gram"))
-    val cand = grams.groupBy("lang")
-      .agg(misra_gries(col("gram"), k).as("cands"), count(lit(1)).as("n"))
-      .select(col("lang"), col("n"), explode(col("cands")).as("c"))
-      .select(col("lang"), col("n"), col("c.item").as("gram"))
-    val w = Window.partitionBy("lang").orderBy(col("cnt").desc, col("gram"))
-    grams.join(broadcast(cand), Seq("lang", "gram"))
-      .groupBy("lang", "gram", "n").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * (k + 1) > col("n"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .withColumn("share_ppm", expr("cnt * 1000000 DIV n"))
@@ -689,8 +664,8 @@ object TextOps {
     * tradeoff. How much it saves depends on how symbol-disjoint the
     * head of the pair distribution is: natural text chains its top
     * pairs through shared letters, so EXACT batching is modest there
-    * (BpeBench, sf0.01: 90 → 78 driver rounds for 89 merges, identical
-    * lists at widths 1/8/32/128), while wider symbol distributions
+    * (BPE_BENCH.json, sf0.01: 90 → 78 driver rounds for 89 merges,
+    * identical lists at widths 1/8/32/128), while wider symbol distributions
     * batch fat (PropertySpec's 8-letter corpus). Raising the width
     * never changes output and never adds driver rounds, so the default
     * errs high.

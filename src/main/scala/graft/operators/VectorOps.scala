@@ -71,7 +71,7 @@ object VectorOps {
     * and the answer to "recall sagged when the corpus grew": at FIXED
     * nProbe the scanned fraction ≈ ma·nProbe/k shrinks as k = √N grows,
     * and on an isotropic corpus recall tracks scanned fraction almost
-    * exactly (AnnSweep, SURVEY §6: ~0.83 recall@3 at ~1/3 scanned at
+    * exactly (SURVEY §6 ANN sweep: ~0.83 recall@3 at ~1/3 scanned at
     * BOTH sf0.01 [k=25, nProbe 4] and sf0.1 [k=45, nProbe 8]; fixed
     * nProbe 4 decays 0.83 → 0.60 across the same growth). Holding the
     * fraction at ~1/3 holds recall ≥ 0.8 at every measured SF — asserted
@@ -222,7 +222,7 @@ object VectorOps {
     val nodes = e.select(col("vec_id").as("doc_id"))
     // cosine-threshold graphs are chain-shaped (12 propagation rounds at
     // sf0.1 vs the minhash graph's 2) — path halving pays here, measured
-    // ~20% faster end to end (CcBench; see connectedComponentsTracked)
+    // ~20% faster end to end (SURVEY §6; see connectedComponentsTracked)
     DedupOps.clusterReportReleased(nodes, edges, s"embed_clusters_$sfDir", compress = true)
       .withColumnRenamed("doc_id", "vec_id")
   }
@@ -429,22 +429,18 @@ object VectorOps {
 
   // ---- ann_ivf -----------------------------------------------------------
 
-  /** Per-centroid cosine scores as orderable structs: `(sim, -c, c)` so
-    * that `greatest`/`array_sort` tie-break toward the lower centroid id.
-    * `nrmCol = None` omits the query-vector norm — legal for ARGMAX use
-    * (the norm is a per-row positive constant across centroids).
+  /** The argmax-cosine centroid id: per-centroid scores as orderable
+    * structs `(sim, -c, c)` so that `greatest` tie-breaks toward the lower
+    * centroid id. The query-vector norm is omitted — legal for ARGMAX use
+    * (it is a per-row positive constant across centroids). `greatest()`
+    * needs >= 2 args; a 1-centroid corpus assigns trivially.
     */
-  private def centSimsFor(cents: Seq[(Int, Array[Float], Double)],
-      embCol: String, nrmCol: Option[String]): Seq[Column] = cents.map { case (i, arr, cn) =>
-    val denom = nrmCol.map(nc => col(nc) * cn).getOrElse(lit(cn))
-    struct((float_dot(col(embCol), typedLit(arr)) / denom).as("s"),
-      lit(-i).as("negc"), lit(i).as("c"))
-  }
-
-  // greatest() needs >= 2 args; a 1-centroid corpus assigns trivially
   private def bestCentFor(cents: Seq[(Int, Array[Float], Double)],
-      embCol: String, nrmCol: Option[String]): Column = {
-    val sims = centSimsFor(cents, embCol, nrmCol)
+      embCol: String): Column = {
+    val sims = cents.map { case (i, arr, cn) =>
+      struct((float_dot(col(embCol), typedLit(arr)) / lit(cn)).as("s"),
+        lit(-i).as("negc"), lit(i).as("c"))
+    }
     (if (sims.length == 1) sims.head else greatest(sims: _*)).getField("c")
   }
 
@@ -511,7 +507,7 @@ object VectorOps {
       // rows at k=45). Materializing `cent` in its own projection first
       // keeps it below the Generate: once per vector.
       val assigned = train
-        .select(col("embedding"), bestCentFor(cents, "embedding", None).as("cent"))
+        .select(col("embedding"), bestCentFor(cents, "embedding").as("cent"))
       val stats = assigned
         .select(col("cent"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .select(col("cent"), col("pos"),
@@ -634,67 +630,11 @@ object VectorOps {
 
   // r22: the native one-pass ranking kernel (see IvfTopCells — the Column
   // form built k structs + an interpreted struct sort per row, 0.44 s of
-  // ann_ivf at sf0.1); the Column form below is retained as the
-  // independent implementation the kernel is pinned row-identical against
-  // in VectorSpec
+  // ann_ivf at sf0.1); VectorSpec pins it row-identical against an
+  // independent plain-Scala ranking
   private def topCellsFor(cents: Seq[(Int, Array[Float], Double)],
       embCol: String, nrmCol: String, m: Int): Column =
     graft.functions.IvfTopCells.ivf_top_cells(col(embCol), col(nrmCol), cents, m)
-
-  private[graft] def topCellsForColumnForm(cents: Seq[(Int, Array[Float], Double)],
-      embCol: String, nrmCol: String, m: Int): Column = transform(
-    slice(reverse(array_sort(array(centSimsFor(cents, embCol, Some(nrmCol)): _*))), 1, m),
-    s => s.getField("c"))
-
-  /** Cell assignment as a BROADCAST JOIN against the codebook table —
-    * the large-k form of [[topCellsFor]] (r16 verdict task 5). The
-    * literal form inlines every centroid as an expression constant:
-    * exactly right up to the few-hundred-centroid range (k = √N at sf
-    * scales, PqEncode's fixed ks = 256), but at 100 TB an IVF coarse
-    * quantizer carries k ≈ 10⁵–10⁶ centroids — megabytes of literals
-    * re-analyzed per plan and far past janino's method limit (the
-    * measured ann_pq failure mode). Here the codebook is DATA: one
-    * broadcast nested-loop join streams each vector past the k
-    * broadcast rows and a bounded [[graft.functions.TopK]] partial
-    * aggregation keeps the m best cells — the same N·k dot products
-    * the literal form computes (assignment cost is irreducible without
-    * a hierarchical quantizer), but the PLAN is O(1) in k and the only
-    * exchange carries N×m assignment rows (what the index write
-    * materializes anyway). Same similarity arithmetic, same
-    * (sim DESC, cell ASC) tie rule — pinned row-identical to the
-    * literal form in VectorSpec, with the plan asserted to carry the
-    * broadcast and no centroid literals. Crossover documented in
-    * SURVEY §6: inline up to ~10³ centroids, join beyond.
-    *
-    * Input frame needs `vec_id` + `embCol`; emits `(vec_id, cells)`
-    * with `cells` the m cell ids, best first. Zero-norm vectors keep
-    * the literal form's NaN ordering only when the corpus has none
-    * (the synthetic and any L2-normalized corpus) — documented, not
-    * pinned.
-    */
-  private[graft] def cellAssignJoin(e: DataFrame, centsDf: DataFrame,
-      embCol: String, m: Int): DataFrame = {
-    import graft.functions.TopK.top_k
-    e.select(col("vec_id"), col(embCol), normCol(embCol).as("__nrm"))
-      .crossJoin(broadcast(centsDf.select(col("c"), col("cent"), col("cn"))))
-      .select(col("vec_id"),
-        (float_dot(col(embCol), col("cent")) / (col("__nrm") * col("cn"))).as("__s"),
-        col("c"))
-      .groupBy("vec_id")
-      .agg(top_k(col("__s"), col("c").cast("long"), col("c").cast("long"), m).as("__tk"))
-      .select(col("vec_id"),
-        transform(col("__tk"), t => t.getField("id").cast("int")).as("cells"))
-  }
-
-  /** The codebook as the join-form table `(c, cent, cn)` — the shape
-    * [[cellAssignJoin]] consumes; at full scale this is the persisted
-    * codebook artifact read back, not an in-memory Seq.
-    */
-  private[graft] def centsDfOf(spark: SparkSession,
-      cents: Seq[(Int, Array[Float], Double)]): DataFrame = {
-    import spark.implicits._
-    cents.toDF("c", "cent", "cn")
-  }
 
   /** The probe-join stage over any assignment frame `(vec_id, embedding,
     * nrm, cent, cidx, cell)` — shared by the inline path and the
@@ -1366,26 +1306,6 @@ object VectorOps {
     }
   }
 
-  /** The S-code column for one vector: per subspace, argmin-L2 centroid
-    * id over ks literal centroids — `|v_s|²` is constant across the
-    * argmin so only `|c|² − 2·v_s·c` is scored; `least(struct)`
-    * tie-breaks to the lower id, matching the trainer. All codegen'd
-    * [[graft.functions.FloatDot]] over array slices: a narrow map, the
-    * whole encode is one shuffle-free projection.
-    */
-  private def pqCodesFor(books: Array[Array[Array[Float]]], embCol: String): Column = {
-    val d = books(0)(0).length
-    array(books.toIndexedSeq.zipWithIndex.map { case (book, s) =>
-      val sub = slice(col(embCol), s * d + 1, d)
-      val scored = book.toIndexedSeq.zipWithIndex.map { case (cvec, ci) =>
-        val cn2 = cvec.map(x => x.toDouble * x).sum
-        struct((lit(cn2) - lit(2.0) * float_dot(sub, typedLit(cvec))).as("dd"),
-          lit(ci).as("c"))
-      }
-      (if (scored.length == 1) scored.head else least(scored: _*)).getField("c")
-    }: _*)
-  }
-
   /** Appends the `codes` column: encode of the NORMALIZED `embedding`
     * via the native [[graft.functions.PqEncode]] expression (normalize +
     * per-subspace argmin-L2 as tight JVM loops — the Column-algebra form
@@ -1399,37 +1319,6 @@ object VectorOps {
     */
   private def withPqCodes(df: DataFrame, books: Array[Array[Array[Float]]]): DataFrame =
     df.withColumn("codes", graft.functions.PqEncode.pq_encode(col("embedding"), books))
-
-  /** The Column-algebra encode retained as the INDEPENDENT implementation
-    * the native expression is pinned bit-identical against (the
-    * `bpe_encode` replace-chain stance): normalize in column space, then
-    * S·ks literal-[[graft.functions.FloatDot]] terms under
-    * `least(struct)`. Correct at any ks, but past a few dozen centroids
-    * the tree exceeds janino's method limit and evaluates interpreted —
-    * never on the hot path, only under VectorSpec.
-    */
-  private[graft] def pqCodesColumnForm(df: DataFrame,
-      books: Array[Array[Array[Float]]]): DataFrame =
-    df.withColumn("pq_nrm", normCol("embedding"))
-      .withColumn("nemb", when(col("pq_nrm") > 0.0,
-        transform(col("embedding"), x => (x / col("pq_nrm")).cast("float")))
-        .otherwise(col("embedding")))
-      .withColumn("codes", pqCodesFor(books, "nemb"))
-      .drop("pq_nrm", "nemb")
-
-  /** The per-query ADC lookup table: `q_lut(s)(c) = q_s · book(s)(c)` —
-    * S·ks = 128 subspace dots computed ONCE per query row; every
-    * candidate then costs S `element_at`s + S−1 adds instead of a
-    * dim-length dot (the asymmetric-distance trick that makes the code
-    * scan cheap as well as small).
-    */
-  private[graft] def pqLutFor(books: Array[Array[Array[Float]]], embCol: String): Column = {
-    val d = books(0)(0).length
-    array(books.toIndexedSeq.zipWithIndex.map { case (book, s) =>
-      val sub = slice(col(embCol), s * d + 1, d)
-      array(book.toIndexedSeq.map(cvec => float_dot(sub, typedLit(cvec))): _*)
-    }: _*)
-  }
 
   /** PQ/ADC approximate top-k with exact re-ranking — the at-scale ANN
     * shape when even the EMBEDDINGS don't fit: the corpus at rest is
@@ -1468,7 +1357,8 @@ object VectorOps {
   /** The standard query frame for the PQ paths: first 10 vectors with
     * their norms and ADC LUTs (native [[graft.functions.PqLut]] — the
     * Column form's 2048-literal tree cost seconds of PER-EXECUTION
-    * driver analysis; pinned identical in VectorSpec). */
+    * driver analysis; pinned identical to a plain-Scala oracle in
+    * VectorSpec). */
   private def pqQueries(base: DataFrame, books: Array[Array[Array[Float]]]): DataFrame =
     base.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -1544,7 +1434,7 @@ object VectorOps {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double, Long)].toDF("q_id", "cand_id", "sim", "rn")
     }
-    // r22 (guide §1.2 step 1; ProfileR22 `ivfpq`): the encode ran on the
+    // r22 (guide §1.2 step 1; OPTIMIZATION_r22.md `ivfpq`): the encode ran on the
     // EXPLODED assignment frame — once per multi-assign copy, in the
     // projection above the Generate (0.617 s vs 0.151 s on the base at
     // sf0.1). Encode below the explode: once per vector.

@@ -94,6 +94,20 @@ class PropertySpec extends AnyFunSuite {
         s"seed $seed: the two arms took different driver-round counts " +
           s"($roundsDist distributed vs $roundsB driver-side)")
     }
+    // the real corpus: natural text chains its top pairs through shared
+    // letters, so batches are thin and conflicts frequent — every width
+    // must still reproduce the batch=1 merge list exactly
+    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text")
+    val (seqMerges, seqRounds) = TextOps.bpeMergesTrained(spark, real, 128, batch = 1)
+    assert(seqMerges.nonEmpty, "sf0.001 documents: no merges trained")
+    for (w <- Seq(8, 32, 128)) {
+      val (ms, rounds) = TextOps.bpeMergesTrained(spark, real, 128, batch = w)
+      assert(ms == seqMerges,
+        s"sf0.001 documents: batch=$w merge list diverged from batch=1")
+      assert(rounds < seqRounds,
+        s"sf0.001 documents: batch=$w saved no driver rounds ($rounds vs $seqRounds)")
+    }
   }
 
   test("MisraGries.Buf: bound, undercount-only error <= n/(k+1), heavy superset — under random partitioning and merge order") {

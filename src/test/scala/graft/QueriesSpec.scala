@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -79,12 +79,39 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  /** The r7-r20 broadcast-join recount form of `TextOps.heavyHittersOf`:
+    * candidates from the exploded-gram Misra-Gries sketch, exact counts by
+    * joining every gram occurrence back onto them. The independent
+    * implementation the kernel recount is pinned row-identical against.
+    */
+  private def heavyHittersJoinFormOf(d: DataFrame): DataFrame = {
+    import graft.functions.MisraGries.misra_gries
+    import org.apache.spark.sql.expressions.Window
+    val k = 127
+    val grams = d
+      .filter(length(col("text")) >= 3)
+      .select(col("lang"),
+        explode(graft.functions.CharGrams.char_grams(col("text"), 3)).as("gram"))
+    val cand = grams.groupBy("lang")
+      .agg(misra_gries(col("gram"), k).as("cands"), count(lit(1)).as("n"))
+      .select(col("lang"), col("n"), explode(col("cands")).as("c"))
+      .select(col("lang"), col("n"), col("c.item").as("gram"))
+    val w = Window.partitionBy("lang").orderBy(col("cnt").desc, col("gram"))
+    grams.join(broadcast(cand), Seq("lang", "gram"))
+      .groupBy("lang", "gram", "n").agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") * (k + 1) > col("n"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .withColumn("share_ppm", expr("cnt * 1000000 DIV n"))
+      .select("lang", "rank", "gram", "cnt", "n", "share_ppm")
+      .orderBy("lang", "rank")
+  }
+
   test("heavy_hitters kernel recount ≡ join-form recount, incl. non-ASCII langs (r21)") {
     import spark.implicits._
     for (dir <- Seq(sfDir, "/root/testdata/sf0.01")) {
       val d = spark.read.parquet(s"$dir/documents.parquet").select("lang", "text")
       val k = graft.operators.TextOps.heavyHittersOf(d).collect().map(_.toSeq).toSeq
-      val j = graft.operators.TextOps.heavyHittersJoinFormOf(d).collect().map(_.toSeq).toSeq
+      val j = heavyHittersJoinFormOf(d).collect().map(_.toSeq).toSeq
       assert(k == j, s"kernel/join heavy_hitters outputs differ at $dir")
       assert(k.nonEmpty, "pin is vacuous")
     }
@@ -99,7 +126,7 @@ class QueriesSpec extends AnyFunSuite {
       (s"l${i % 3}", t)
     }.toDF("lang", "text")
     val k2 = graft.operators.TextOps.heavyHittersOf(docs).collect().map(_.toSeq).toSeq
-    val j2 = graft.operators.TextOps.heavyHittersJoinFormOf(docs).collect().map(_.toSeq).toSeq
+    val j2 = heavyHittersJoinFormOf(docs).collect().map(_.toSeq).toSeq
     assert(k2 == j2, s"kernel/join differ on multi-script langs: kernel=${k2.take(3)} join=${j2.take(3)}")
     assert(k2.nonEmpty, "multi-script pin vacuous")
   }

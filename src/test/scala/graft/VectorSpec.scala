@@ -23,6 +23,55 @@ class VectorSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  // ---- plain-Scala references for the native vector kernels -------------
+
+  /** FloatDot's arithmetic: the left fold of double-widened products over
+    * `n` elements of `a` from `aOff` against `b` from 0. */
+  private def foldDot(a: Array[Float], aOff: Int, b: Array[Float], n: Int): Double = {
+    var acc = 0.0
+    for (i <- 0 until n) acc += a(aOff + i).toDouble * b(i).toDouble
+    acc
+  }
+
+  /** Spark's SQL double ordering: equal values tie (-0.0 == 0.0), NaN is
+    * greater than every other value. */
+  private def sqlCompare(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** PQ encode: normalize as `(x / nrm)` rounded to float (a zero-norm
+    * vector stays raw), then per subspace the centroid with the least
+    * `|c|² − 2·v_s·c`, ties to the lower id. */
+  private def pqEncodeRef(v: Array[Float], books: Array[Array[Array[Float]]]): List[Int] = {
+    val nrm = math.sqrt(foldDot(v, 0, v, v.length))
+    val nv = if (nrm > 0.0) v.map(x => (x / nrm).toFloat) else v
+    val d = books(0)(0).length
+    books.indices.map { s =>
+      val scored = books(s).indices.map { c =>
+        val cent = books(s)(c)
+        (foldDot(cent, 0, cent, d) - 2.0 * foldDot(nv, s * d, cent, d), c)
+      }
+      scored.reduceLeft((best, next) => if (sqlCompare(next._1, best._1) < 0) next else best)._2
+    }.toList
+  }
+
+  /** ADC lookup table: `lut(s)(c) = v_s · book(s)(c)` over the RAW vector. */
+  private def pqLutRef(v: Array[Float], books: Array[Array[Array[Float]]]): List[List[Double]] = {
+    val d = books(0)(0).length
+    books.indices.map(s => books(s).map(cent => foldDot(v, s * d, cent, d)).toList).toList
+  }
+
+  /** IVF top cells: cosine `v·c / (nrm·cn)` per centroid, ranked by sim
+    * descending under Spark's ordering, ties to the lower cell id; the
+    * first `m`. */
+  private def topCellsRef(v: Array[Float], nrm: Double,
+      cents: Seq[(Int, Array[Float], Double)], m: Int): Seq[Int] =
+    cents.map { case (c, cent, cn) => (foldDot(v, 0, cent, cent.length) / (nrm * cn), c) }
+      .sortWith { case ((s1, c1), (s2, c2)) =>
+        val o = sqlCompare(s1, s2)
+        if (o != 0) o > 0 else c1 < c2
+      }
+      .take(m).map(_._2)
+
   // ---- TopK buffer unit tests ---------------------------------------------
 
   test("TopK.Buf keeps the k best by (score DESC, id ASC)") {
@@ -283,40 +332,39 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("native pq_encode is bit-identical to the Column-algebra encode") {
-    // the independent-implementation pin (the bpe_encode stance): the
-    // interpreted Column form — normalize in column space, S·ks literal
-    // FloatDot terms under least(struct) — must agree code-for-code with
-    // the native loop on every corpus vector. sf0.001 keeps the
-    // interpreted side fast; the arithmetic is SF-independent.
+    // the independent-implementation pin (the bpe_encode stance): a
+    // plain-Scala encode written from the Column-algebra rules — normalize
+    // as (x / nrm) cast to float, then per subspace the argmin of
+    // |c|² − 2·v_s·c, ties to the lower id — must agree code-for-code with
+    // the native loop on every sf0.001 vector
+    import graft.functions.PqEncode.{pq_encode, pq_lut}
     val dir = "/root/testdata/sf0.001"
     val base = spark.read.parquet(s"$dir/embeddings.parquet")
     val books = VectorOps.trainPqBooks(base, base.count())
-    val native = base
-      .withColumn("codes", graft.functions.PqEncode.pq_encode(col("embedding"), books))
-      .select("vec_id", "codes").collect()
-      .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toMap
-    val column = VectorOps.pqCodesColumnForm(base, books)
-      .select("vec_id", "codes").collect()
-      .map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toMap
-    assert(native.keySet == column.keySet)
-    val diffs = native.keySet.filter(k => native(k) != column(k))
-    assert(diffs.isEmpty, s"native/column encode differ on vec_ids $diffs")
-    // and the native ADC LUT against its Column form, value-identical
-    // (both are the same FloatDot double fold per (sub, cent))
-    val nativeLut = base
-      .withColumn("lut", graft.functions.PqEncode.pq_lut(col("embedding"), books))
-      .select("vec_id", "lut").collect()
-      .map(r => (r.getLong(0), r.getSeq[scala.collection.Seq[Double]](1).map(_.toList).toList)).toMap
-    val columnLut = base
-      .withColumn("lut", VectorOps.pqLutFor(books, "embedding"))
-      .select("vec_id", "lut").collect()
-      .map(r => (r.getLong(0), r.getSeq[scala.collection.Seq[Double]](1).map(_.toList).toList)).toMap
-    assert(nativeLut == columnLut, "native/column ADC LUTs differ")
+    val nativeRows = base
+      .select(col("vec_id"), pq_encode(col("embedding"), books).as("codes"),
+        pq_lut(col("embedding"), books).as("lut"))
+      .collect()
+    val native = nativeRows.map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toMap
+    val vecs = base.select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
+    val oracle = vecs.map { case (id, v) => id -> pqEncodeRef(v, books) }
+    assert(native.keySet == oracle.keySet)
+    val diffs = native.keySet.filter(k => native(k) != oracle(k))
+    assert(diffs.isEmpty, s"native/reference encode differ on vec_ids $diffs")
+    // and the native ADC LUT against the reference, value-identical
+    // (both are the same FloatDot double fold per (sub, cent) over the
+    // RAW vector)
+    val nativeLut = nativeRows
+      .map(r => (r.getLong(0), r.getSeq[scala.collection.Seq[Double]](2).map(_.toList).toList)).toMap
+    val refLut = vecs.map { case (id, v) => id -> pqLutRef(v, books) }
+    assert(nativeLut.keySet == refLut.keySet)
+    val lutDiffs = nativeLut.keySet.filter(k => nativeLut(k) != refLut(k))
+    assert(lutDiffs.isEmpty, s"native/reference ADC LUTs differ on vec_ids $lutDiffs")
     // schema-drift contract: a wrong-length vector encodes to NULL, loudly
     import spark.implicits._
     val bad = Seq((1L, Seq(0.1f, 0.2f))).toDF("vec_id", "embedding")
-    val r = bad.withColumn("codes",
-      graft.functions.PqEncode.pq_encode(col("embedding"), books))
+    val r = bad.withColumn("codes", pq_encode(col("embedding"), books))
       .select("codes").head()
     assert(r.isNullAt(0), "length-mismatched input must yield NULL codes")
   }
@@ -581,41 +629,6 @@ class VectorSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin"), s"unexpected shuffle join:\n$plan")
   }
 
-  test("cellAssignJoin ≡ literal cell assignment row-for-row; plan broadcasts the codebook, no centroid literals (r16 task 5)") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    import PlanTestUtil.flattenPlan
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val (cents, e) = VectorOps.ivfAssignments(spark, sfDir, kOpt = None,
-      lloydRounds = 2, multiAssign = 2)
-    assert(cents.nonEmpty)
-    // literal-form cells per vector, best-first (cidx is the rank)
-    val lit0 = e.groupBy("vec_id")
-      .agg(sort_array(collect_list(struct(col("cidx"), col("cell")))).as("cs"))
-      .select(col("vec_id"), expr("transform(cs, s -> s.cell)").as("cells"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val base = graft.sources.Tables(spark, sfDir, "embeddings")
-    val joinForm = VectorOps.cellAssignJoin(
-      base, VectorOps.centsDfOf(spark, cents), "embedding", 2)
-    val got = joinForm.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(got.keySet == lit0.keySet)
-    got.foreach { case (id, cells) =>
-      assert(cells == lit0(id), s"vec $id: join $cells vs literal ${lit0(id)}")
-    }
-    // structural plan facts: the codebook rides a broadcast join, and NO
-    // centroid materializes as an ARRAY<FLOAT> expression literal (the
-    // large-k failure mode the form exists to avoid)
-    val nodes = flattenPlan(joinForm.queryExecution.executedPlan)
-    assert(nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
-      s"codebook must join broadcast:\n${joinForm.queryExecution.executedPlan}")
-    val centLits = nodes.flatMap(_.expressions).flatMap(_.collect {
-      case l: Literal if l.dataType.isInstanceOf[ArrayType] &&
-        l.dataType.asInstanceOf[ArrayType].elementType == FloatType => l
-    })
-    assert(centLits.isEmpty,
-      s"join form must carry no centroid literals, found ${centLits.size}")
-  }
-
   test("ivf_top_cells kernel ≡ the Column-form ranking, incl. duplicate-centroid ties (r22)") {
     import graft.functions.FloatDot.float_dot
     import graft.functions.IvfTopCells.ivf_top_cells
@@ -628,22 +641,24 @@ class VectorSpec extends AnyFunSuite {
     val dim = sample.head.length
     // 8 real centroids + a DUPLICATE of centroid 0 (exact sim tie at two
     // ids — the tie rule must pick the lower). No zero-norm centroid:
-    // under ANSI (the Spark 4 default) the Column form THROWS on the 0.0
-    // divisor, and trainCodebook never emits one (zero-norm cells keep
-    // their previous centroid; seeds are real vectors).
+    // trainCodebook never emits one (zero-norm cells keep their previous
+    // centroid; seeds are real vectors).
     val dup = sample.head.clone()
     val cents: Seq[(Int, Array[Float], Double)] =
       sample.zipWithIndex.map { case (a, i) => (i, a, fn(a)) }.toSeq :+
         ((8, dup, fn(dup)))
     assert(dim > 0)
-    for (m <- Seq(1, 2, 4, 9, 17)) {
-      val d = base
-        .withColumn("kern", ivf_top_cells(col("embedding"), col("nrm"), cents, m))
-        .withColumn("colform",
-          VectorOps.topCellsForColumnForm(cents, "embedding", "nrm", m))
-      val bad = d.filter(col("kern") =!= col("colform"))
-      assert(bad.count() == 0,
-        s"m=$m: ${bad.limit(3).collect().mkString("\n")}")
+    val ms = Seq(1, 2, 4, 9, 17)
+    val rows = base
+      .select(col("vec_id") +: col("embedding") +: col("nrm") +:
+        ms.map(m => ivf_top_cells(col("embedding"), col("nrm"), cents, m).as(s"kern$m")): _*)
+      .collect()
+    assert(rows.nonEmpty)
+    for ((m, at) <- ms.zip(3 until 3 + ms.size)) {
+      val bad = rows.filter { r =>
+        r.getSeq[Int](at) != topCellsRef(r.getSeq[Float](1).toArray, r.getDouble(2), cents, m)
+      }
+      assert(bad.isEmpty, s"m=$m: ${bad.take(3).map(_.getLong(0)).mkString(", ")}")
     }
   }
 
