@@ -1,24 +1,29 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.{DedupOps, VectorOps}
 
 /** Wall-clock seconds per gate stage for ONE micro-batch — the gate's
-  * observability record ([[DedupGate.gateBatchWithinAwareTimed]] /
-  * `GateBench`). Stages map 1:1 onto [[DedupGate]]'s `gateCore` body,
-  * each ended by an eager action:
-  *   - `sigSec`: shingle + minhash + banding of the batch text
-  *     (the tracked checkpoint of `DedupOps.bandedSigs`);
+  * observability record ([[DedupGate.gateDecisions]] / `GateBench`).
+  * Stages map 1:1 onto [[DedupGate]]'s `gateCore` body, each ended by an
+  * eager action:
+  *   - `sigSec`: shingle + minhash + banding of the batch text into a
+  *     driver-local relation;
   *   - `probeSec`: the file-pruned index probe + within-batch check +
-  *     slot verification (the flags checkpoint) — the number that must
-  *     stay FLAT as the index grows, or the bucketed-probe claim is
-  *     wrong;
-  *   - `sinkSec`: the caller's `onBatch` body (includes re-evaluating
-  *     the raw batch plan for the flag join — the gate holds no
-  *     checkpoint of the full-width batch by design);
+  *     slot verification (flags collected to the driver) — the number
+  *     that must stay FLAT as the index grows, or the bucketed-probe
+  *     claim is wrong;
+  *   - `sinkSec`: the caller's `onBatch` body over the PINNED batch rows
+  *     (the batch plan's one evaluation, before any stage, is in none);
   *   - `appendSec`: the idempotent signature append of unflagged docs.
-  * `appended` is the number of docs actually indexed this batch.
+  * `appended` is the number of docs actually indexed this batch. A
+  * trigger with nothing to check (every watermark no-data trigger)
+  * reports zero sig/probe/append time: only its sink runs.
   */
 final case class GateStageTimings(
     batchId: Long, sigSec: Double, probeSec: Double,
@@ -41,13 +46,12 @@ final case class GateStageTimings(
   * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false`, same as
   * the ANN probes — asserted in BucketingSpec).
   *
-  * Scale shape (100 TB): the index is corpus-sized but each batch touches
-  * only the buckets its own band hashes land in — probe cost is
-  * O(batch × bucket population), never an index scan. The batch side is
-  * BROADCAST (a micro-batch is small by contract). Flagging is verified,
-  * not trusted: a band collision is only a candidate; the per-pair
-  * signature slot check (≥ [[DedupOps.MinhashVerifySlots]]/16) gates the
-  * flag exactly as in the batch clustering path.
+  * Scale shape (100 TB): each batch touches only the index buckets its
+  * band hashes land in — probe cost O(batch × bucket population), never
+  * an index scan; the batch side is driver-local and BROADCAST (small by
+  * contract). A band collision is only a candidate: the per-pair slot
+  * check (≥ [[DedupOps.MinhashVerifySlots]]/16) gates the flag exactly as
+  * in the batch clustering path.
   *
   * Dedup policy: NOVEL docs pass the gate and their signatures append to
   * the index (idempotently — replay-safe under foreachBatch's
@@ -57,21 +61,16 @@ final case class GateStageTimings(
   *
   * Contract boundaries: [[gateBatch]] checks batch-vs-INDEX only — two
   * near-dup docs arriving in ONE batch both pass (and both index);
-  * compose a within-batch dedup upstream ([[FrameDedup]] /
-  * `dropDuplicatesWithinWatermark`) for EXACT arrival duplicates, or use
-  * [[gateBatchWithinAware]] (the [[StreamMerge.gatedIngestPipeline]]
-  * body), which also checks each doc against its own batch's smaller-id
-  * siblings so one near-dup class indexes exactly one member. The
-  * INDEX is replay-stable, the ANNOTATIONS are not fully: a re-delivered
-  * doc_id is never flagged against itself (self-matches are excluded)
-  * and never re-indexed (doc_id anti-join), but near-dup siblings that
-  * first arrived together — both novel, both indexed — WILL flag against
-  * each other when their batch replays (each now sees the other at
-  * rest). A sink that drops flagged rows keyed on doc_id must therefore
-  * either dedup within the batch upstream (making the case impossible)
-  * or treat `is_dup` on replayed rows as advisory. `onBatch` also sees
-  * replayed rows again — exactly-once OUTPUT is the downstream sink's
-  * job, as everywhere in this streaming surface (the FileSink pattern).
+  * [[gateBatchWithinAware]] and [[gateDecisions]] (the
+  * [[StreamMerge.gatedIngestPipeline]] body) also check each doc against
+  * its batch's smaller-id siblings, so one near-dup class indexes one
+  * member. The INDEX is replay-stable, the ANNOTATIONS are not fully: a
+  * re-delivered doc_id never flags against itself and never re-indexes,
+  * but siblings that first arrived together — both novel, both indexed —
+  * WILL flag against each other on replay. A sink that drops flagged rows
+  * must dedup within the batch upstream or treat `is_dup` on replayed
+  * rows as advisory; exactly-once OUTPUT is the downstream sink's job, as
+  * everywhere in this streaming surface (the FileSink pattern).
   */
 object DedupGate {
 
@@ -213,22 +212,23 @@ object DedupGate {
     * match kept (highest slot agreement, ties to the lowest rest-side
     * doc id).
     *
-    * `pairKeep` restricts which (rest, in) pairs count: the index probe
-    * excludes self-matches (`rest_doc =!= in_doc` — a re-delivered doc
-    * must not flag against itself); the within-batch check keeps only
-    * `rest_doc < in_doc` (each doc can flag only against a SMALLER-id
-    * sibling, so the min-id member of a near-dup group always survives
-    * to be indexed).
+    * Self-matches are excluded (a re-delivered doc must not flag against
+    * itself).
     */
-  private[graft] def checkAgainst(
-      index: DataFrame, batchBanded: DataFrame,
-      pairKeep: Column => Column = rest => rest =!= col("in_doc")): DataFrame = {
-    val rest = index.select(col("doc_id").as("rest_doc"),
-      col("band_id"), col("bh"), col("sig").as("rest_sig"))
+  private[graft] def checkAgainst(index: DataFrame, batchBanded: DataFrame): DataFrame =
+    strongestVerified(restSide(index), batchBanded, col("rest_doc") =!= col("in_doc"))
+
+  private def restSide(banded: DataFrame): DataFrame =
+    banded.select(col("doc_id").as("rest_doc"), col("band_id"), col("bh"), col("sig").as("rest_sig"))
+
+  /** The verified join of both flag forms: `rest` rows colliding with the
+    * broadcast batch on (band_id, bh), kept by `keep`, slot-verified.
+    */
+  private def strongestVerified(rest: DataFrame, batchBanded: DataFrame, keep: Column): DataFrame = {
     val in = batchBanded
       .select(col("doc_id").as("in_doc"), col("band_id"), col("bh"), col("sig").as("in_sig"))
     rest.join(broadcast(in), Seq("band_id", "bh"))
-      .filter(pairKeep(col("rest_doc")))
+      .filter(keep)
       .withColumn("sig_match",
         graft.functions.SlotMatch.slot_match(col("rest_sig"), col("in_sig")))
       .filter(col("sig_match") >= DedupOps.MinhashVerifySlots)
@@ -239,33 +239,21 @@ object DedupGate {
         (lit(SigWidth) - col("best.miss")).as("sig_match"))
   }
 
-  /** Within-batch near-dup flags over one banded batch: the batch checked
-    * against ITSELF, directional on doc id (only smaller-id siblings can
-    * flag a doc), so near-dup siblings arriving TOGETHER resolve to one
-    * surviving representative — the min-id member — instead of both
-    * passing, closing the gate's documented batch-vs-index-only blind
-    * spot when composed ([[gateDecisions]]). In a chain (C≈B≈A, C≉A)
-    * this frame's raw `dup_of` points at the strongest verified
-    * smaller-id sibling, which may itself be flagged; the composed
-    * within-aware paths chase such chains to the surviving
-    * representative via [[Survivors.resolve]] (r20 — `sig_match` stays
-    * the strongest-match agreement), and only unflagged docs index.
-    */
-  private[graft] def withinBatchFlags(banded: DataFrame): DataFrame =
-    checkAgainst(banded, banded, rest => rest < col("in_doc"))
-
-  /** Index flags and within-batch flags combined: the strongest match per
-    * doc across both sources (highest slot agreement, ties to the lowest
-    * matched doc id — the [[checkAgainst]] rule re-applied over the
-    * union).
+  /** Index flags and within-batch flags in ONE verified join over (index
+    * slice ∪ batch): an index row counts against any other doc id (`rest
+    * ≠ in`), a batch row only against a LARGER id (`rest < in`, so
+    * near-dup siblings arriving together resolve to the min-id member).
+    * The strongest match per doc is the [[checkAgainst]] rule over both.
+    * In a chain (C≈B≈A, C≉A) a raw `dup_of` may point at a flagged
+    * sibling; the gate chases it to the survivor via [[Survivors]].
+    * Shared unchanged by `SpanOps.corpusCurateDecisionsOf`.
     */
   private[graft] def combinedFlags(index: DataFrame, banded: DataFrame): DataFrame =
-    checkAgainst(index, banded).unionByName(withinBatchFlags(banded))
-      .groupBy("doc_id")
-      .agg(min(struct((lit(SigWidth) - col("sig_match")).as("miss"),
-        col("dup_of"))).as("best"))
-      .select(col("doc_id"), col("best.dup_of"),
-        (lit(SigWidth) - col("best.miss")).as("sig_match"))
+    strongestVerified(
+      restSide(index).withColumn("at_rest", lit(true))
+        .unionByName(restSide(banded).withColumn("at_rest", lit(false))),
+      banded,
+      col("rest_doc") < col("in_doc") || (col("at_rest") && col("rest_doc") > col("in_doc")))
 
   /** Flags the batch's near-dups against the persisted index. The batch's
     * distinct band hashes are collected (metadata scale: ≤ 4 × batch
@@ -278,8 +266,7 @@ object DedupGate {
     validateMeta(spark, table)
     // convenience form: fully LAZY (plan inspection / one-shot use) — the
     // batch signatures evaluate twice (bh collect + verify join), bounded
-    // by batch size. gateBatch computes them once under a tracked
-    // checkpoint and frees the blocks deterministically.
+    // by batch size; gateBatch computes them once, driver-local.
     val banded = DedupOps.bandedSigs(batchDocs)
     checkAgainst(prunedIndexSlice(spark, table, banded), banded)
   }
@@ -294,6 +281,15 @@ object DedupGate {
     */
   val DefaultMaxProbeLiterals = 65536
 
+  /** The probe-literal bound in force, with its FailFast message. */
+  private def probeBound(spark: SparkSession): (Int, String) = {
+    val bound = IndexProbe.confBound(
+      spark, "graft.dedupGate.maxProbeLiterals", DefaultMaxProbeLiterals)
+    (bound, s"batch produced more than $bound distinct band hashes — the micro-batch-is-small " +
+      "probe contract is broken (a literal filter this size would dominate the plan); " +
+      "use smaller triggers or the batch dedup path, or raise graft.dedupGate.maxProbeLiterals")
+  }
+
   /** The index slice the batch can possibly collide with: the batch's
     * distinct band hashes as a literal bucket filter (file pruning) —
     * [[IndexProbe.prunedSlice]] with this gate's policy: band hashes
@@ -302,12 +298,8 @@ object DedupGate {
     */
   private[streaming] def prunedIndexSlice(
       spark: SparkSession, table: String, banded: DataFrame): DataFrame = {
-    val bound = IndexProbe.confBound(
-      spark, "graft.dedupGate.maxProbeLiterals", DefaultMaxProbeLiterals)
-    IndexProbe.prunedSlice(spark, table, banded, "bh", bound, IndexProbe.FailFast(
-      s"batch produced more than $bound distinct band hashes — the micro-batch-is-small " +
-        "probe contract is broken (a literal filter this size would dominate the plan); " +
-        "use smaller triggers or the batch dedup path, or raise graft.dedupGate.maxProbeLiterals"))
+    val (bound, message) = probeBound(spark)
+    IndexProbe.prunedSlice(spark, table, banded, "bh", bound, IndexProbe.FailFast(message))
   }
 
   /** Appends the signatures of docs not already at rest — idempotent by
@@ -324,112 +316,140 @@ object DedupGate {
   }
 
   /** [[appendNewSigsIdempotent]] over ALREADY-BANDED rows — the gate's
-    * hot path reuses the batch's checkpointed signatures instead of
-    * re-shingling and re-hashing the text (meta validation is the
-    * caller's, done once per batch).
+    * hot path reuses the batch's signatures (meta validation is the
+    * caller's, done once per batch). The rows are micro-batch scale, so
+    * the replay check runs on the driver: collect `banded`, read back only
+    * its doc ids from the index (a literal filter, no `distinct` or
+    * shuffle), write the rows whose doc_id is not at rest yet.
     */
   private[streaming] def appendBandedIdempotent(
       spark: SparkSession, banded: DataFrame, table: String): Long = {
-    import org.apache.spark.sql.GraftShim
     // epoch span start (see [[graft.operators.IndexEpoch]]): before the
     // anti-join reads the at-rest identity set
     val epoch = graft.operators.IndexEpoch.current(spark, table)
-    val existing = spark.table(table).select("doc_id").distinct()
-    // one tracked evaluation serves both the count and the append, and
-    // its blocks free deterministically (not at driver-GC pace)
-    val (fresh, freshRdd) = GraftShim.localCheckpointTracked(
-      banded.join(existing, Seq("doc_id"), "left_anti"))
-    try {
-      val n = fresh.select("doc_id").distinct().count()
-      if (n > 0) {
-        graft.operators.IndexEpoch.bump(spark, table, epoch)
-        fresh.write.mode("append").insertInto(table)
-        // foreachBatch writes through the micro-batch CLONE session; the
-        // caller session's relation cache must not serve the pre-append
-        // file list (counts/anti-joins would silently miss the new rows)
-        spark.catalog.refreshTable(table)
-      }
-      n
-    } finally GraftShim.releaseCheckpoint(freshRdd)
+    val rows = banded.collect()
+    val idIdx = banded.schema.fieldIndex("doc_id")
+    val ids = rows.map(_.getLong(idIdx)).distinct
+    val atRest =
+      if (ids.isEmpty) Set.empty[Long]
+      else spark.table(table).select("doc_id").filter(col("doc_id").isin(ids.toIndexedSeq: _*))
+        .collect().map(_.getLong(0)).toSet
+    val n = ids.count(id => !atRest(id)).toLong
+    if (n > 0) {
+      graft.operators.IndexEpoch.bump(spark, table, epoch)
+      // one writer task: an append adds at most one file per bucket
+      spark.createDataFrame(rows.filterNot(r => atRest(r.getLong(idIdx))).toSeq.asJava,
+        banded.schema).coalesce(1)
+        .write.mode("append").insertInto(table)
+      // foreachBatch writes through the micro-batch CLONE session; the
+      // caller session's relation cache must not serve the pre-append
+      // file list (counts/anti-joins would silently miss the new rows)
+      spark.catalog.refreshTable(table)
+    }
+    n
   }
 
   /** The full gate as a foreachBatch body: flag the batch against the
     * index, hand the annotated batch to `onBatch` (original columns plus
-    * `is_dup`/`dup_of`/`sig_match`), then index the novel docs so LATER
+    * `dup_of`/`sig_match`/`is_dup`), then index the novel docs so LATER
     * batches dedup against them. Call from
     * `stream.writeStream.foreachBatch(DedupGate.gateBatch(table, onBatch) _)`.
-    *
-    * Session discipline: foreachBatch hands frames owned by the
-    * micro-batch CLONE session — all table reads here go through
-    * `batch.sparkSession` (mixing frames across sessions breaks the
-    * analyzer), and the relation cache is refreshed at entry so every
-    * batch sees the appends of the previous one.
-    *
-    * Cost shape per batch: the text is shingled and minhashed ONCE (the
-    * tracked checkpoint serves the bh collect, the verify join, and the
-    * novel-doc append), and every checkpoint block frees deterministically
-    * before the batch returns — an indefinite stream must not lean on
-    * driver-GC-paced block reclamation.
+    * All table reads go through `batch.sparkSession` (foreachBatch hands
+    * frames owned by the micro-batch CLONE session), and the relation
+    * cache is refreshed before each probe so every batch sees the appends
+    * of the previous one.
     */
   def gateBatch(table: String,
       onBatch: (DataFrame, Long) => Unit)(batch: DataFrame, batchId: Long): Unit =
-    gateCore(table, withinBatch = false, onBatch)(batch, batchId)
+    gateCore(table, withinBatch = false, decisions = false, onBatch)(batch, batchId)
 
-  /** [[gateBatch]] with the within-batch blind spot CLOSED: in addition
-    * to the index probe, each doc is checked against its own batch's
-    * smaller-id siblings ([[withinBatchFlags]]), so a batch carrying two
-    * near-dup siblings indexes exactly ONE (the min-id member) and flags
-    * the other — no upstream composition required. This is the batch body
-    * [[StreamMerge.gatedIngestPipeline]] composes; `gateBatch` keeps the
-    * original batch-vs-index-only contract for callers that dedup
-    * upstream.
+  /** [[gateBatch]] with the within-batch blind spot CLOSED
+    * ([[combinedFlags]]): of two near-dup siblings in one batch, exactly
+    * ONE (the min-id member) indexes and the other flags.
     */
   def gateBatchWithinAware(table: String,
       onBatch: (DataFrame, Long) => Unit)(batch: DataFrame, batchId: Long): Unit =
-    gateCore(table, withinBatch = true, onBatch)(batch, batchId)
+    gateCore(table, withinBatch = true, decisions = false, onBatch)(batch, batchId)
 
-  /** [[gateBatchWithinAware]] with per-stage wall timings reported to
-    * `onTimings` after each batch — the gate's throughput observability
-    * hook (see [[GateStageTimings]] for the stage map). Timing is
-    * driver-side `System.nanoTime` around each stage's eager action;
-    * overhead is a few clock reads per BATCH, so the instrumented gate is
-    * the production gate.
+  /** The flag rows' schema (the [[checkAgainst]] shape). */
+  private val FlagSchema = StructType.fromDDL("doc_id BIGINT, dup_of BIGINT, sig_match INT")
+
+  /** The one gate body: with `decisions`, only `insert` rows are checked
+    * and flagged ones become `near_dup`; otherwise every row is checked
+    * and `is_dup` is appended. Cost shape per batch (timings are
+    * driver-side clock reads around each stage's eager action):
+    *   - the batch plan evaluates ONCE: a tracked checkpoint pins it and
+    *     counts the rows to check in the same job — in a stream, the
+    *     trigger's one pass over its stateful operators, so their state
+    *     commits on every trigger, data or not;
+    *   - with nothing to check (every watermark no-data trigger),
+    *     `onBatch` gets the pinned rows with null `dup_of`/`sig_match`
+    *     and no signature, probe or append job runs;
+    *   - otherwise the text is minhashed ONCE into a driver-local
+    *     relation (≤ [[NBands]] rows per doc, after the probe-literal
+    *     bound check), the verified flags of the file-pruned probe come
+    *     back to the driver, and the novel docs append from the driver.
+    * The pinned blocks free before the batch returns — an indefinite
+    * stream must not lean on driver-GC-paced block reclamation.
     */
-  def gateBatchWithinAwareTimed(table: String,
-      onBatch: (DataFrame, Long) => Unit,
-      onTimings: GateStageTimings => Unit)(batch: DataFrame, batchId: Long): Unit =
-    gateCore(table, withinBatch = true, onBatch, onTimings)(batch, batchId)
-
-  private def gateCore(table: String, withinBatch: Boolean,
+  private def gateCore(table: String, withinBatch: Boolean, decisions: Boolean,
       onBatch: (DataFrame, Long) => Unit,
       onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    s.catalog.refreshTable(table)
-    validateMeta(s, table)
     import org.apache.spark.sql.GraftShim
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val ((banded, bandedRdd), tSig) =
-      timed(GraftShim.localCheckpointTracked(DedupOps.bandedSigs(batch)))
+    val d = if (decisions) batch.schema.fieldIndex("decision") else -1
+    val insert = UTF8String.fromString("insert")
+    val (rows, rowsRdd, nChecked) = GraftShim.localCheckpointTrackedCount(batch,
+      r => d < 0 || (!r.isNullAt(d) && r.getUTF8String(d) == insert))
     try {
-      val rawFlags =
-        if (withinBatch) combinedFlags(prunedIndexSlice(s, table, banded), banded)
-        else checkAgainst(prunedIndexSlice(s, table, banded), banded)
-      val ((flags0, flagsRdd), tProbe) = timed(GraftShim.localCheckpointTracked(rawFlags))
-      try {
-        // chains only form when the batch checks against ITSELF
-        val flags = if (withinBatch) Survivors.resolve(s, flags0, "doc_id") else flags0
-        val annotated = batch.join(flags, Seq("doc_id"), "left")
-          .withColumn("is_dup", col("dup_of").isNotNull)
-        val (_, tSink) = timed(onBatch(annotated, batchId))
-        val (appended, tAppend) = timed(appendBandedIdempotent(
-          s, banded.join(flags.select("doc_id"), Seq("doc_id"), "left_anti"), table))
+      val s = rows.sparkSession
+      def sink(flags: Seq[Row]): Double = {
+        val joined = rows.join(broadcast(s.createDataFrame(flags.asJava, FlagSchema)),
+          Seq("doc_id"), "left")
+        val out =
+          if (decisions) joined.withColumn("decision",
+            when(col("dup_of").isNotNull, "near_dup").otherwise(col("decision")))
+          else joined.withColumn("is_dup", col("dup_of").isNotNull)
+        timed(onBatch(out, batchId))._2
+      }
+      if (nChecked == 0) onTimings(GateStageTimings(batchId, 0.0, 0.0, sink(Nil), 0.0, 0L))
+      else {
+        s.catalog.refreshTable(table)
+        validateMeta(s, table)
+        val docs = (if (decisions) rows.filter(col("decision") === "insert") else rows)
+          .select("doc_id", "text")
+        val ((banded, bandedRows), tSig) = timed {
+          val sigs = DedupOps.bandedSigs(docs)
+          // ≤ NBands distinct band hashes per doc: only a batch that could
+          // break the probe bound pays an exact count, before any collect
+          val (bound, message) = probeBound(s)
+          if (nChecked * NBands > bound &&
+              sigs.select("bh").distinct().limit(bound + 1).count() > bound)
+            throw new IllegalArgumentException(message)
+          val collected = sigs.collect().toSeq
+          (s.createDataFrame(collected.asJava, sigs.schema), collected)
+        }
+        val (flags, tProbe) = timed {
+          // bandedSigs rows are (doc_id, band_id, bh, sig), NBands per doc
+          val slice = s.table(table)
+            .filter(col("bh").isin(bandedRows.map(_.getLong(2)).distinct: _*))
+          // chains only form when the batch checks against ITSELF
+          if (withinBatch)
+            Survivors.chase(combinedFlags(slice, banded).collect().toSeq, 0, 1)
+          else checkAgainst(slice, banded).collect().toSeq
+        }
+        val tSink = sink(flags)
+        val flagged = flags.map(_.getLong(0)).toSet
+        val (appended, tAppend) = timed(appendBandedIdempotent(s,
+          s.createDataFrame(bandedRows.filterNot(r => flagged(r.getLong(0))).asJava,
+            banded.schema), table))
         onTimings(GateStageTimings(batchId, tSig, tProbe, tSink, tAppend, appended))
-      } finally GraftShim.releaseCheckpoint(flagsRdd)
-    } finally GraftShim.releaseCheckpoint(bandedRdd)
+      }
+    } finally GraftShim.releaseCheckpoint(rowsRdd)
   }
 
   /** foreachBatch body for a stream of INGEST DECISION rows (the
@@ -442,18 +462,11 @@ object DedupGate {
     * the batch, annotated, `text` retained — the [[StreamMerge]]
     * compositions decide its fate (the plain pipeline drops it for the
     * audit log; the scrubbed one redacts the final inserts' text first).
+    * A trigger with no `insert` row (every watermark no-data trigger)
+    * runs no gate job at all — see [[gateCore]].
     */
   private[graft] def gateDecisions(table: String,
       onBatch: (DataFrame, Long) => Unit,
-      onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit = {
-    val inserts = batch.filter(col("decision") === "insert").select("doc_id", "text")
-    gateBatchWithinAwareTimed(table, (annotated: DataFrame, id: Long) => {
-      val flags = annotated.filter(col("is_dup"))
-        .select(col("doc_id"), col("dup_of"), col("sig_match"))
-      val out = batch.join(flags, Seq("doc_id"), "left")
-        .withColumn("decision",
-          when(col("dup_of").isNotNull, "near_dup").otherwise(col("decision")))
-      onBatch(out, id)
-    }, onTimings)(inserts, batchId)
-  }
+      onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit =
+    gateCore(table, withinBatch = true, decisions = true, onBatch, onTimings)(batch, batchId)
 }

@@ -225,11 +225,14 @@ object StreamMerge {
     * the within-batch check.
     *
     * Scale shape: everything upstream of foreachBatch is the stateless /
-    * watermark-bounded [[ingestPipeline]] plan; the gate adds one
-    * signature pass over the batch's INSERTS only (shingle+minhash cost
-    * skips rows already dropped as short/quality/exact-dup), a file-pruned
-    * probe of the bucketed index, and a broadcast within-batch self-check
-    * — per-batch cost O(inserts × bucket), never an index scan.
+    * watermark-bounded [[ingestPipeline]] plan, evaluated ONCE per
+    * trigger (the gate pins it for the sink). A trigger with no inserts
+    * — every watermark no-data trigger — runs no gate job; otherwise the
+    * gate adds one driver-local signature pass over the INSERTS only, a
+    * file-pruned probe of the bucketed index (within-batch self-check in
+    * the same join), and an append whose replay check reads back only
+    * the batch's doc ids (a literal filter, no shuffle) — the probe is
+    * O(inserts × bucket), never an index scan.
     * `onBatch` receives every decision row (text dropped), so the same
     * audit-log sink layout as [[decisionsToParquet]] applies.
     */

@@ -37,9 +37,14 @@ private[graft] object Survivors {
     */
   def resolve(spark: SparkSession, flags: DataFrame, idCol: String): DataFrame = {
     val schema = flags.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val dupIdx = schema.fieldIndex("dup_of")
-    val rows = flags.collect()
+    spark.createDataFrame(chase(flags.collect().toSeq, schema.fieldIndex(idCol),
+      schema.fieldIndex("dup_of")).asJava, schema)
+  }
+
+  /** [[resolve]] over flag rows already on the driver: the Long id sits
+    * at `idIdx`, the Long `dup_of` at `dupIdx`.
+    */
+  def chase(rows: Seq[Row], idIdx: Int, dupIdx: Int): Seq[Row] = {
     val parent = rows.map(r => r.getLong(idIdx) -> r.getLong(dupIdx)).toMap
     def rep(start: Long): Long = {
       var cur = start
@@ -47,11 +52,10 @@ private[graft] object Survivors {
       while (parent.contains(cur) && seen.add(cur)) cur = parent(cur)
       cur
     }
-    val resolved: Seq[Row] = rows.toIndexedSeq.map { r =>
+    rows.map { r =>
       val vals = r.toSeq.toArray
       vals(dupIdx) = rep(r.getLong(dupIdx))
       Row.fromSeq(vals.toIndexedSeq)
     }
-    spark.createDataFrame(resolved.asJava, schema)
   }
 }

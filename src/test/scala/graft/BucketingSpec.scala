@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -597,6 +599,21 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val leaked = (sc.getPersistentRDDs.keySet -- before).size
     assert(leaked == 0,
       s"gateBatch left $leaked persisted blocks; an indefinite stream would accumulate them")
+    // the decision-row gate pins the whole batch: the pin frees too, on a
+    // batch with inserts and on one with none (the no-data trigger shape)
+    val seen = scala.collection.mutable.Map.empty[Long, String]
+    def decisions(rows: Seq[(Long, String, String)]): Unit =
+      DedupGate.gateDecisions("dedup_gate_idx4", (df, _) =>
+        df.collect().foreach(r => seen(r.getAs[Long]("doc_id")) = r.getAs[String]("decision")))(
+        rows.toDF("doc_id", "decision", "text"), 1L)
+    decisions(Seq((30L, "insert", gateText("a")), (31L, "short", "tiny"),
+      (32L, "insert", gateText("r"))))
+    decisions(Seq((33L, "short", "tiny too")))
+    assert(seen == Map(30L -> "near_dup", 31L -> "short", 32L -> "insert", 33L -> "short"),
+      s"gateDecisions decisions wrong: $seen")
+    val leakedDecisions = (sc.getPersistentRDDs.keySet -- before).size
+    assert(leakedDecisions == 0,
+      s"gateDecisions left $leakedDecisions persisted blocks (the pinned batch frame)")
   }
 
   test("DedupGate: signature append is replay-safe and stays bucket-pruned") {
@@ -615,6 +632,20 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(6L -> gateText("n")).toDF("doc_id", "text"), "dedup_gate_idx3")
     assertBucketPruning(probe, "dedup_gate_idx3", "probe after append")
     assert(probe.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq(6L -> 5L))
+    // through the gate: doc 5 re-delivered with DIFFERENT text keeps its
+    // original rows (the replay check is by doc_id); only the novel doc 7
+    // appends
+    def atRest() = {
+      spark.catalog.refreshTable("dedup_gate_idx3")
+      spark.table("dedup_gate_idx3").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getSeq[Long](3))).toSet
+    }
+    val before = atRest()
+    DedupGate.gateBatchWithinAware("dedup_gate_idx3", (df, _) => { df.collect(): Unit })(
+      Seq(5L -> gateText("changed"), 7L -> gateText("fresh")).toDF("doc_id", "text"), 0L)
+    val added = atRest() -- before
+    assert(added.map(_._1) == Set(7L) && added.size == DedupGate.NBands,
+      s"a doc_id at rest must not re-index, the novel doc must: ${added.map(_._1)}")
   }
 
   test("DedupGate: an empty micro-batch passes the within-aware gate without touching the index") {
@@ -715,6 +746,43 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ok = DedupGate.flagDuplicates(spark,
         Seq(200L -> gateText("pb")).toDF("doc_id", "text"), "dedup_gate_bound")
       assert(ok.collect().map(_.getLong(1)).toSeq == Seq(1L))
+
+      // the gate body checks the bound on its own driver-local path, and
+      // before it collects a banded row: no action whose plan signs the
+      // text may be a `collect`, and nothing reaches the sink or the index
+      val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          events.add((f, qe.analyzed.toString))
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        // events arrive asynchronously and in order: a marker action sets
+        // off the earlier probes' late events from the gate's own
+        spark.range(1).toDF("gate_bound_marker").count()
+        var sunk = false
+        val ex2 = intercept[IllegalArgumentException] {
+          DedupGate.gateBatchWithinAware("dedup_gate_bound", (_, _) => sunk = true)(big, 0L)
+        }
+        assert(ex2.getMessage.contains("band hashes") && !sunk,
+          s"gate bound violation must fail before the sink: ${ex2.getMessage}")
+        def gateActions = events.asScala.toSeq
+          .dropWhile(e => !e._2.contains("gate_bound_marker")).drop(1)
+          .map(e => (e._1, e._2.contains("minhash_shingle_sig")))
+        // the signing count that fires the bound is the gate's last action
+        val deadline = System.nanoTime() + 10000000000L
+        while (!gateActions.contains(("count", true)) && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        assert(gateActions.contains(("count", true)),
+          s"the bound must be checked by a bounded count: $gateActions")
+        assert(!gateActions.contains(("collect", true)),
+          s"banded rows were collected before the bound fired: $gateActions")
+      } finally spark.listenerManager.unregister(listener)
+      spark.catalog.refreshTable("dedup_gate_bound")
+      assert(spark.table("dedup_gate_bound").select("doc_id").distinct().count() == 1L,
+        "a batch over the bound must append nothing")
     } finally spark.conf.unset("graft.dedupGate.maxProbeLiterals")
   }
 

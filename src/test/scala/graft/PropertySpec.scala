@@ -309,4 +309,60 @@ class PropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("DedupGate.combinedFlags ≡ plain-Scala reference on randomized banded frames") {
+    import spark.implicits._
+    import graft.streaming.DedupGate
+    val rnd = new Random(20261019L)
+    val width = DedupGate.SigWidth
+    val verify = graft.operators.DedupOps.MinhashVerifySlots
+    var ties, multiBand, replays, flagged = 0
+    for (_ <- 0 until 12) {
+      // each doc's signature is one of three bases with up to 6 slots
+      // redrawn, so slot agreement straddles the verify threshold and
+      // exact copies (equal agreement with several docs) are common
+      val bases = Array.fill(3)(Array.fill(width)(rnd.nextLong()))
+      def sig(): Array[Long] = {
+        val b = bases(rnd.nextInt(bases.length)).clone()
+        (0 until rnd.nextInt(7)).foreach(_ => b(rnd.nextInt(width)) = rnd.nextInt(50).toLong)
+        b
+      }
+      // band hashes from a 3-value domain: most same-band pairs collide,
+      // often in several bands at once
+      def rowsOf(id: Long, s: Array[Long]) =
+        (0 until DedupGate.NBands).map(b => (id, b, rnd.nextInt(3).toLong, s))
+      val indexIds = (1L to (4 + rnd.nextInt(9)).toLong)
+      val index = indexIds.flatMap(id => rowsOf(id, sig()))
+      // batch: fresh ids plus re-delivered index ids (same or new text)
+      val replayed = indexIds.filter(_ => rnd.nextDouble() < 0.3)
+      val batchIds = replayed ++ (100L until 100L + 3 + rnd.nextInt(8))
+      val batch = batchIds.flatMap { id =>
+        val s = if (indexIds.contains(id) && rnd.nextBoolean()) index.find(_._1 == id).get._4 else sig()
+        rowsOf(id, s)
+      }
+      val ref = batchIds.flatMap { in =>
+        val pairs = batch.filter(_._1 == in).flatMap { case (_, band, bh, s) =>
+          (index.filter(r => r._1 != in) ++ batch.filter(r => r._1 < in))
+            .filter(r => r._2 == band && r._3 == bh)
+            .map(r => (r._1, (0 until width).count(i => r._4(i) == s(i))))
+        }
+        if (pairs.groupBy(identity).exists(_._2.size > 1)) multiBand += 1
+        val verified = pairs.filter(_._2 >= verify).distinct
+        if (verified.isEmpty) None
+        else {
+          val (dupOf, m) = verified.minBy { case (d, m) => (-m, d) }
+          if (verified.count(_._2 == m) > 1) ties += 1
+          if (indexIds.contains(in)) replays += 1
+          Some((in, dupOf, m))
+        }
+      }.toSet
+      flagged += ref.size
+      val cols = Seq("doc_id", "band_id", "bh", "sig")
+      val got = DedupGate.combinedFlags(index.toDF(cols: _*), batch.toDF(cols: _*))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(got == ref, s"flags diverged\n got=$got\n ref=$ref")
+    }
+    assert(flagged > 0 && ties > 0 && multiBand > 0 && replays > 0,
+      s"cases not covered: flagged=$flagged ties=$ties multiBand=$multiBand replays=$replays")
+  }
 }

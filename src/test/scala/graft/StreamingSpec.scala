@@ -2212,6 +2212,103 @@ class StreamingSpec extends AnyFunSuite {
     assert(atRest == Set(1L, 602L, 607L), s"only unflagged inserts may index: $atRest")
   }
 
+  test("gated pipeline: a watermark no-data trigger runs no gate job and the next trigger keeps the stream state") {
+    import graft.streaming.{DedupGate, GateStageTimings, StreamMerge}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.{col, md5, min}
+    import spark.implicits._
+    def wt(seed: String) = (1 to 30).map(i => s"${seed}_$i").mkString(" ")
+    def near(t: String, tail: String) = t.split(" ").init.mkString(" ") + " " + tail
+    val corpusText = wt("nd_corp"); val sibText = wt("nd_sib"); val lateText = wt("nd_late")
+    val staticBase = Seq((10L, wt("nd_known"))).toDF("doc_id", "text")
+      .groupBy(md5(col("text")).as("h")).agg(min("doc_id").as("existing_id"))
+    DedupGate.writeSigIndex(spark,
+      Seq(1L -> corpusText).toDF("doc_id", "text"), "nodata_gate_idx", nBuckets = 8)
+    // jobs per (query, micro-batch), from the job properties the stream sets
+    val jobsOf = new scala.collection.concurrent.TrieMap[(String, String), Int]()
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        started.incrementAndGet()
+        Option(e.properties).foreach { p =>
+          val key = (p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId"))
+          if (key._1 != null && key._2 != null) jobsOf.synchronized {
+            jobsOf.put(key, jobsOf.getOrElse(key, 0) + 1)
+          }
+        }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.incrementAndGet(): Unit }
+    }
+    val enc = implicitly[Encoder[(Long, String, java.sql.Timestamp)]]
+    val input = MemoryStream[(Long, String, java.sql.Timestamp)](enc, spark.sqlContext)
+    val checkpoint = Files.createTempDirectory("graft-spec-nodata-ckpt").toString
+    val decided = new ConcurrentLinkedQueue[(Long, String, Option[Long])]()
+    val rowsPerBatch = new scala.collection.concurrent.TrieMap[Long, Int]()
+    val timings = new ConcurrentLinkedQueue[GateStageTimings]()
+    def at(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    spark.sparkContext.addSparkListener(listener)
+    // no auto-broadcast: a broadcast static base adds its own build job to
+    // every evaluation of the stream plan; joined by shuffle, one
+    // evaluation is one job, so the count below is the gate's
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val q = try StreamMerge.gatedIngestPipeline(
+      input.toDS().toDF("doc_id", "text", "ts"), staticBase, "nodata_gate_idx",
+      (df, id) => {
+        val rows = df.collect()
+        rowsPerBatch.put(id, rows.length)
+        rows.foreach(r => decided.add((r.getAs[Long]("doc_id"), r.getAs[String]("decision"),
+          Option(r.getAs[java.lang.Long]("dup_of")).map(_.longValue()))))
+      },
+      delayThreshold = "5 seconds",
+      onGateTimings = (t: GateStageTimings) => { timings.add(t): Unit })
+      .option("checkpointLocation", checkpoint)
+      .start()
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      // data trigger, then the no-data trigger its watermark advance
+      // (25 s) schedules to evict the expired dedup state
+      input.addData(Seq((701L, corpusText, at(10)), (702L, sibText, at(11)),
+        (703L, near(sibText, "zz"), at(12)), (704L, lateText, at(30)), (705L, "tiny doc", at(30))))
+      q.processAllAvailable()
+      // the next data trigger: 706 repeats 704's text within the watermark,
+      // so only the dedup state 704 left (expiring at 35 s) can drop it
+      input.addData(Seq((706L, lateText, at(31)), (707L, near(sibText, "yy"), at(32)),
+        (708L, wt("nd_nov"), at(33))))
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      val deadline = System.nanoTime() + 10000000000L
+      var last = -1
+      while (System.nanoTime() < deadline && !(started.get == ended.get && started.get == last)) {
+        last = started.get
+        Thread.sleep(150)
+      }
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+    val byId = decided.asScala.map(t => t._1 -> (t._2, t._3)).toMap
+    assert(byId == Map(
+      701L -> (("near_dup", Some(1L))),
+      702L -> (("insert", None)),
+      703L -> (("near_dup", Some(702L))),
+      704L -> (("insert", None)),
+      705L -> (("short", None)),
+      707L -> (("near_dup", Some(702L))),
+      708L -> (("insert", None))),
+      s"decisions wrong (706 must die in the watermarked dedup): ${decided.asScala.toSeq}")
+    assert(rowsPerBatch.get(0L).contains(5) && rowsPerBatch.get(1L).contains(0) &&
+      rowsPerBatch.get(2L).contains(2), s"expected data, no-data, data triggers: $rowsPerBatch")
+    val noData = jobsOf.getOrElse((q.id.toString, "1"), 0)
+    assert(noData >= 1 && noData <= 2,
+      s"the no-data trigger may run only the stream plan's one evaluation and the sink's " +
+        s"collect, ran $noData jobs: $jobsOf")
+    val t1 = timings.asScala.filter(_.batchId == 1L).toSeq
+    assert(t1.size == 1 && t1.head.sigSec == 0.0 && t1.head.probeSec == 0.0 &&
+      t1.head.appendSec == 0.0 && t1.head.appended == 0L,
+      s"the no-data trigger must report one zero-stage timing: $t1")
+  }
+
   test("hygiene-gated pipeline: blocklist and LM gates slot into the chain, narrow and stateless") {
     import graft.streaming.{DedupGate, StreamMerge}
     import graft.operators.HygieneOps
