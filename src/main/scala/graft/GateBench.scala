@@ -621,7 +621,7 @@ object GateBench {
     val ckpt7 = Files.createTempDirectory("graft-gate-bench-pp-ckpt").toString
     val perceptDups = new java.util.concurrent.atomic.AtomicLong(0L)
     val perceptTimings =
-      new java.util.concurrent.ConcurrentLinkedQueue[graft.streaming.PerceptGateTimings]()
+      new java.util.concurrent.ConcurrentLinkedQueue[graft.streaming.GateStageTimings]()
     def prodSink(extra: DataFrame => Unit): (DataFrame, Long) => Unit =
       (df: DataFrame, _: Long) => {
         val r = df.agg(
@@ -669,7 +669,7 @@ object GateBench {
     val ppMed = median(ppWalls.toSeq)
     val pcPairRatios = pcWalls.zip(ppWalls).map { case (c, p) => c / p }
     val perceptT = dropWarm(perceptTimings.asScala.toVector, "percept")(_.batchId)
-    def pMedOf(f: graft.streaming.PerceptGateTimings => Double): Double =
+    def pMedOf(f: graft.streaming.GateStageTimings => Double): Double =
       if (perceptT.isEmpty) 0.0 else median(perceptT.map(f))
     spark.catalog.refreshTable(perceptTable)
     val perceptIdxFinal = spark.table(perceptTable).select("doc_id").distinct().count()
@@ -679,7 +679,7 @@ object GateBench {
         s""""plain_median_wall":${f4(ppMed)},"plain_walls":${wallsJson(ppWalls.toSeq)},""" +
         s""""percept_vs_plain_pair_ratios":${wallsJson(pcPairRatios.toSeq)},""" +
         s""""percept_vs_plain_pair_median":${f4(median(pcPairRatios.toSeq))},""" +
-        s""""code_med":${f4(pMedOf(_.codeSec))},"probe_med":${f4(pMedOf(_.probeSec))},""" +
+        s""""code_med":${f4(pMedOf(_.sigSec))},"probe_med":${f4(pMedOf(_.probeSec))},""" +
         s""""append_med":${f4(pMedOf(_.appendSec))},""" +
         s""""appended_total":${perceptT.map(_.appended).sum},""" +
         s""""percept_dups_total":${perceptDups.get()},""" +
@@ -758,12 +758,12 @@ object GateBench {
     val ckpt9 = Files.createTempDirectory("graft-gate-bench-ep-ckpt").toString
     val embFlagged = new java.util.concurrent.atomic.AtomicLong(0L)
     val embTimings =
-      new java.util.concurrent.ConcurrentLinkedQueue[graft.streaming.EmbedGateTimings]()
+      new java.util.concurrent.ConcurrentLinkedQueue[graft.streaming.GateStageTimings]()
     val q8 = input8.toDS().toDF("vec_id", "embedding").writeStream
       .option("checkpointLocation", ckpt8)
-      .foreachBatch(graft.streaming.EmbedGate.gateBatchWithinAwareTimed(egTable,
+      .foreachBatch(graft.streaming.EmbedGate.gateBatchWithinAware(egTable,
         (df, _) => embFlagged.addAndGet(df.filter(col("is_dup")).count()): Unit,
-        t => { embTimings.add(t): Unit }) _)
+        onTimings = t => { embTimings.add(t): Unit }) _)
       .start()
     val q9 = input9.toDS().toDF("vec_id", "embedding").writeStream
       .option("checkpointLocation", ckpt9)
@@ -798,7 +798,7 @@ object GateBench {
     q9.stop()
     val egPairRatios = egWalls.zip(epWalls).map { case (g, p) => g / p }
     val embT = dropWarm(embTimings.asScala.toVector, "embed")(_.batchId)
-    def eMedOf(f: graft.streaming.EmbedGateTimings => Double): Double =
+    def eMedOf(f: graft.streaming.GateStageTimings => Double): Double =
       if (embT.isEmpty) 0.0 else median(embT.map(f))
     spark.catalog.refreshTable(egTable)
     spark.catalog.refreshTable(epTable)

@@ -1,22 +1,14 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.operators.VectorOps
 import graft.functions.FloatDot.float_dot
 import graft.functions.LshBucket.lsh_bucket
-
-/** Wall-clock seconds per stage for ONE micro-batch of the embedding
-  * gate — the [[PerceptGateTimings]] analog at the vector grain:
-  * `sigSec` is the signature pass (norm + LSH bucket of the batch),
-  * `probeSec` the bucket-pruned index probe + within-batch check,
-  * `appendSec` the idempotent index append of unflagged novel vectors.
-  * `appended` is the number of vectors actually indexed this batch.
-  */
-final case class EmbedGateTimings(
-    batchId: Long, sigSec: Double, probeSec: Double,
-    appendSec: Double, appended: Long)
 
 /** Streaming EMBEDDING near-duplicate ingest gate: checks each arriving
   * micro-batch of `(vec_id, embedding)` rows against the PERSISTED LSH
@@ -60,8 +52,10 @@ final case class EmbedGateTimings(
   * declared batch key's 0.3 is that near-random test corpus's far-tail
   * setting).
   *
-  * Scale shape (100 TB): the batch side is BROADCAST (micro-batches are
-  * small by contract); the index contributes only the buckets the
+  * Scale shape (100 TB): the batch side is signed once into a
+  * driver-local relation and BROADCAST (micro-batches are small by
+  * contract — [[NearDup]]'s per-trigger core, shared with [[DedupGate]]
+  * and [[PerceptGate]]); the index contributes only the buckets the
   * batch's own signatures land in (literal bucket filter → FILE pruning
   * under the bucketed layout, or a broadcast semi-join above
   * [[DefaultMaxProbeLiterals]] distinct keys — [[PerceptGate]]'s dense
@@ -140,67 +134,36 @@ object EmbedGate {
   /** Verified cosine check of batch signatures against an at-rest side:
     * exact-bucket candidates, true-cosine ≥ `threshold` verify, one row
     * per flagged batch vector `(vec_id, dup_of, sim)` — strongest match
-    * kept (highest sim, ties to the lowest at-rest id). `pairKeep`
-    * carries the two policies: self-exclusion for the index probe (a
-    * REPLAYED batch's rows are already at rest and must not flag
-    * against themselves), `rest < in` direction for the within-batch
-    * check. Zero-norm rows are excluded on both sides (see the
-    * degenerate policy above — NaN would otherwise flag).
+    * kept (highest sim, ties to the lowest at-rest id). A REPLAYED
+    * batch's rows are already at rest and never flag against themselves.
     */
   private[graft] def checkAgainst(
-      index: DataFrame, batchSigs: DataFrame, threshold: Double,
-      pairKeep: Column => Column = rest => rest =!= col("in_id")): DataFrame = {
-    val rest = index.filter(col("nrm") > 0).select(col("vec_id").as("rest_id"),
-      col("embedding").as("rest_emb"), col("nrm").as("rest_nrm"), col("bucket"))
-    val in = batchSigs.filter(col("nrm") > 0)
-      .select(col("vec_id").as("in_id"), col("embedding").as("in_emb"),
-        col("nrm").as("in_nrm"), col("bucket"))
-    rest.join(broadcast(in), Seq("bucket"))
-      .filter(pairKeep(col("rest_id")))
-      .withColumn("sim",
-        float_dot(col("rest_emb"), col("in_emb")) / (col("rest_nrm") * col("in_nrm")))
-      .filter(col("sim") >= threshold)
-      .groupBy(col("in_id").as("vec_id"))
-      .agg(min(struct(negate(col("sim")).as("nsim"), col("rest_id").as("dup_of"))).as("best"))
-      .select(col("vec_id"), col("best.dup_of"), negate(col("best.nsim")).as("sim"))
-  }
+      index: DataFrame, batchSigs: DataFrame, threshold: Double): DataFrame =
+    NearDup.againstIndex(verified(threshold), index, batchSigs)
 
-  /** Within-batch flags, directional on vec_id — siblings arriving
-    * together resolve to one surviving (min-id) representative.
+  /** [[checkAgainst]] plus the within-batch check in one verified join
+    * ([[NearDup.combined]]): siblings arriving together resolve to one
+    * surviving (min-id) representative.
     */
-  private[graft] def withinBatchFlags(sigs: DataFrame, threshold: Double): DataFrame =
-    checkAgainst(sigs, sigs, threshold, rest => rest < col("in_id"))
-
-  /** Index flags ∪ within-batch flags, strongest match per vector. */
   private[graft] def combinedFlags(
       index: DataFrame, sigs: DataFrame, threshold: Double): DataFrame =
-    checkAgainst(index, sigs, threshold).unionByName(withinBatchFlags(sigs, threshold))
-      .groupBy("vec_id")
-      .agg(min(struct(negate(col("sim")).as("nsim"), col("dup_of"))).as("best"))
-      .select(col("vec_id"), col("best.dup_of"), negate(col("best.nsim")).as("sim"))
+    NearDup.combined(verified(threshold), index, sigs)
 
-  /** `dup_of` chains chased to the SURVIVING representative — the
-    * shared [[Survivors.resolve]] walk (see its doc for the
-    * termination and replay-cycle contract); `sim` is left as measured
-    * against the strongest match.
+  /** This gate's score: exact-bucket candidates verified by true cosine
+    * ≥ `threshold`. Zero-norm rows are excluded on both sides (see the
+    * degenerate policy above — NaN would otherwise flag).
     */
-  private[graft] def resolveToSurvivors(
-      spark: SparkSession, flags: DataFrame): DataFrame =
-    Survivors.resolve(spark, flags, "vec_id")
-
-  /** The index slice the batch can collide with — [[PerceptGate]]'s
-    * probe shape over the `bucket` key: sparse batches prune index
-    * FILES via a literal bucket filter, dense batches filter via a
-    * broadcast semi-join, empty batches probe a `limit(0)` slice.
-    */
-  private[streaming] def prunedIndexSlice(
-      spark: SparkSession, table: String, sigs: DataFrame): DataFrame =
-    IndexProbe.prunedSlice(spark, table, sigs, "bucket",
-      DefaultMaxProbeLiterals, IndexProbe.BroadcastSemiJoin)
+  private def verified(threshold: Double)(
+      rest: DataFrame, batch: DataFrame, keep: Column): DataFrame =
+    NearDup.verifiedBy("vec_id", Seq("bucket"), Seq("embedding", "nrm"),
+      "sim" -> float_dot(col("rest_embedding"), col("in_embedding")) /
+        (col("rest_nrm") * col("in_nrm")),
+      col("sim") >= threshold, negate(col("sim")))(
+      rest.filter(col("nrm") > 0), batch.filter(col("nrm") > 0), keep)
 
   /** Flags the batch's cosine near-dups against the persisted index —
-    * the lazy convenience form for plan inspection / one-shot use; the
-    * gate bodies checkpoint. Probe sessions need the documented
+    * the lazy convenience form ([[NearDup.flagLazily]]). Probe sessions
+    * need the documented
     * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false` for
     * the bucket filter to prune files.
     */
@@ -208,79 +171,65 @@ object EmbedGate {
       threshold: Double = DefaultThreshold): DataFrame = {
     require(spark eq vectors.sparkSession,
       "flagDuplicates must run on the batch frame's own session (foreachBatch hands a clone)")
-    val sigs = withSigs(vectors, requireNBits(spark, table))
-    checkAgainst(prunedIndexSlice(spark, table, sigs), sigs, threshold)
+    NearDup.flagLazily(check(spark, table, threshold), vectors)
+  }
+
+  /** The flag rows' schema (the [[checkAgainst]] shape). */
+  private[streaming] val FlagSchema = StructType.fromDDL("vec_id BIGINT, dup_of BIGINT, sim DOUBLE")
+
+  /** This gate's [[NearDup.Check]] over `table` for one trigger: rows
+    * sign with the index's own nBits, and unflagged novel vectors index
+    * through the SAME [[VectorOps.appendToLshIndexIdempotent]] the
+    * ungated maintainer uses (one artifact, two consumers) — except
+    * zero-norm ones (see the degenerate policy above).
+    */
+  private[streaming] def check(spark: SparkSession, table: String,
+      threshold: Double): NearDup.Check = {
+    spark.catalog.refreshTable(table)
+    val nBits = requireNBits(spark, table)
+    NearDup.Check(table, "bucket", 1, DefaultMaxProbeLiterals, IndexProbe.BroadcastSemiJoin,
+      rows => withSigs(rows, nBits), verified(threshold),
+      (rows, schema) => VectorOps.appendToLshIndexIdempotent(spark,
+        spark.createDataFrame(rows.asJava, schema).filter(col("nrm") > 0)
+          .select("vec_id", "embedding"),
+        table, nBits))
   }
 
   /** The full gate as a foreachBatch body over `(vec_id, embedding, …)`
     * micro-batches: flag against the index, hand the annotated batch
-    * (original columns + `is_dup`/`dup_of`/`sim`) to `onBatch`, index
-    * the novel unflagged vectors through the SAME
-    * [[VectorOps.appendToLshIndexIdempotent]] the ungated maintenance
-    * path uses. Batch-vs-index only — use [[gateBatchWithinAware]] to
-    * also resolve siblings arriving together.
+    * (original columns + `dup_of`/`sim`/`is_degenerate`/`is_dup`) to
+    * `onBatch`, index the novel unflagged vectors ([[check]]).
+    * Batch-vs-index only — use [[gateBatchWithinAware]] to also resolve
+    * siblings arriving together.
     */
   def gateBatch(table: String,
       onBatch: (DataFrame, Long) => Unit,
       threshold: Double = DefaultThreshold)(batch: DataFrame, batchId: Long): Unit =
-    gateCore(table, withinBatch = false, onBatch, threshold)(batch, batchId)
+    gateCore(table, withinBatch = false, onBatch, threshold, _ => ())(batch, batchId)
 
   /** [[gateBatch]] with the within-batch blind spot closed: sibling
     * near-dups arriving together index exactly ONE (min-id) member.
+    * `onTimings` receives the batch's [[GateStageTimings]].
     */
   def gateBatchWithinAware(table: String,
       onBatch: (DataFrame, Long) => Unit,
-      threshold: Double = DefaultThreshold)(batch: DataFrame, batchId: Long): Unit =
-    gateCore(table, withinBatch = true, onBatch, threshold)(batch, batchId)
-
-  /** [[gateBatchWithinAware]] with per-stage wall timings. */
-  def gateBatchWithinAwareTimed(table: String,
-      onBatch: (DataFrame, Long) => Unit,
-      onTimings: EmbedGateTimings => Unit,
-      threshold: Double = DefaultThreshold)(batch: DataFrame, batchId: Long): Unit =
+      threshold: Double = DefaultThreshold,
+      onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit =
     gateCore(table, withinBatch = true, onBatch, threshold, onTimings)(batch, batchId)
 
+  /** The gate body — [[NearDup.gate]] with this gate's check;
+    * `is_degenerate` is the zero-norm test of [[withSigs]], evaluated on
+    * the pinned rows.
+    */
   private def gateCore(table: String, withinBatch: Boolean,
       onBatch: (DataFrame, Long) => Unit, threshold: Double,
-      onTimings: EmbedGateTimings => Unit = _ => ())(
-      batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    s.catalog.refreshTable(table)
-    val nBits = requireNBits(s, table)
-    import org.apache.spark.sql.GraftShim
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val ((sigs, sigsRdd), tSig) = timed(GraftShim.localCheckpointTracked(
-      withSigs(batch.select("vec_id", "embedding"), nBits)))
-    try {
-      val rawFlags =
-        if (withinBatch) combinedFlags(prunedIndexSlice(s, table, sigs), sigs, threshold)
-        else checkAgainst(prunedIndexSlice(s, table, sigs), sigs, threshold)
-      val ((flags0, flagsRdd), tProbe) = timed(GraftShim.localCheckpointTracked(rawFlags))
-      try {
-        // chains only form when the batch checks against ITSELF; the
-        // resolved frame is a local relation read off the checkpoint
-        val flags = if (withinBatch) resolveToSurvivors(s, flags0) else flags0
-        val annotated = batch.join(flags, Seq("vec_id"), "left")
-          .join(sigs.select(col("vec_id"), (col("nrm") === 0).as("is_degenerate")),
-            Seq("vec_id"), "left")
-          .withColumn("is_dup", col("dup_of").isNotNull)
-        onBatch(annotated, batchId)
-        // degenerate (zero-norm) arrivals never index — see the policy
-        // in the object doc: they all share one bucket and cosine
-        // cannot self-limit a flood of them
-        val (appended, tAppend) = timed(VectorOps.appendToLshIndexIdempotent(s,
-          sigs.filter(col("nrm") > 0)
-            .join(flags.select("vec_id"), Seq("vec_id"), "left_anti")
-            .select("vec_id", "embedding"),
-          table, nBits))
-        onTimings(EmbedGateTimings(batchId, tSig, tProbe, tAppend, appended))
-      } finally GraftShim.releaseCheckpoint(flagsRdd)
-    } finally GraftShim.releaseCheckpoint(sigsRdd)
-  }
+      onTimings: GateStageTimings => Unit)(batch: DataFrame, batchId: Long): Unit =
+    NearDup.gate(check(batch.sparkSession, table, threshold), FlagSchema,
+      decisions = false, withinBatch,
+      _.withColumn("is_degenerate",
+          sqrt(float_dot(col("embedding"), col("embedding"))) === 0)
+        .withColumn("is_dup", col("dup_of").isNotNull),
+      onBatch, onTimings)(batch, batchId)
 
   /** [[VectorOps.lshIndexMaintenance]] upgraded to dedup-aware
     * maintenance — the production composition: wires a `(vec_id,

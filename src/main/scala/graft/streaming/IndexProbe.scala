@@ -85,6 +85,16 @@ private[graft] object IndexProbe {
     }
     val keys = keyed.select(keyCol).distinct()
       .limit(collectCap + 1).collect().map(_.getLong(0))
+    sliceOf(spark, table, keyCol, keys.toIndexedSeq, literalCap, dense,
+      keyed.select(keyCol).distinct())
+  }
+
+  /** [[prunedSlice]] over distinct keys already on the driver; `allKeys`
+    * (the batch's full distinct key set as a frame) is only planned for
+    * a dense [[BroadcastSemiJoin]] probe.
+    */
+  def sliceOf(spark: SparkSession, table: String, keyCol: String, keys: Seq[Long],
+      literalCap: Int, dense: DenseProbePolicy, allKeys: => DataFrame): DataFrame = {
     dense match {
       case FailFast(msg) if keys.length > literalCap =>
         throw new IllegalArgumentException(msg)
@@ -94,11 +104,10 @@ private[graft] object IndexProbe {
     }
     if (keys.isEmpty) spark.table(table).limit(0)
     else if (keys.length <= literalCap)
-      spark.table(table).filter(col(keyCol).isin(keys.toIndexedSeq: _*))
+      spark.table(table).filter(col(keyCol).isin(keys: _*))
     else dense match {
       case BroadcastSemiJoin =>
-        spark.table(table)
-          .join(broadcast(keyed.select(keyCol).distinct()), Seq(keyCol), "left_semi")
+        spark.table(table).join(broadcast(allKeys), Seq(keyCol), "left_semi")
       case PlainScanUpTo(_, _) => spark.table(table)
       case FailFast(_) =>
         throw new IllegalStateException("unreachable: FailFast handled above")

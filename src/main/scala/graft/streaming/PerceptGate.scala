@@ -2,22 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{FrameDecoder, AutoFrameDecoder, MultimodalOps, VectorOps}
-
-/** Wall-clock seconds per stage for ONE micro-batch of the perceptual
-  * gate — the [[GateStageTimings]] analog at the raster grain:
-  *   - `codeSec`: decode + dHash + banding of the batch's image payloads
-  *     (the tracked checkpoint of the banded codes);
-  *   - `probeSec`: the bucket-pruned index probe + within-batch check
-  *     (the flags checkpoint) — must stay FLAT as the index grows;
-  *   - `appendSec`: the idempotent code append of unflagged docs.
-  * `appended` is the number of docs actually indexed this batch. No
-  * sink stage: in the production composition the sink is shared with
-  * the text gates and timed there.
-  */
-final case class PerceptGateTimings(
-    batchId: Long, codeSec: Double, probeSec: Double,
-    appendSec: Double, appended: Long)
+import org.apache.spark.sql.types.StructType
+import graft.operators.{FrameDecoder, AutoFrameDecoder, MultimodalOps}
 
 /** Streaming PERCEPTUAL near-duplicate ingest gate: checks each arriving
   * micro-batch of image-kind payloads against a persisted dHash code
@@ -50,8 +36,10 @@ final case class PerceptGateTimings(
   * [[DedupGate]]'s index ([[graft.operators.IndexEpoch]]).
   *
   * Scale shape (100 TB): per batch the index contributes only the
-  * buckets the batch's band keys land in; the batch side is BROADCAST
-  * (micro-batches are small by contract); the probe ships 16 bytes of
+  * buckets the batch's band keys land in; the batch side is signed once
+  * into a driver-local relation and BROADCAST (micro-batches are small
+  * by contract — [[NearDup]]'s per-trigger core, shared with
+  * [[DedupGate]] and [[EmbedGate]]); the probe ships 16 bytes of
   * code per doc — never pixels, never frame arrays (the decode emits
   * `(doc_id, code)` and the payload bytes stay in their arrival
   * partition). One difference from [[DedupGate]]'s probe: band keys
@@ -85,7 +73,11 @@ object PerceptGate {
   val BandBits = 16
   val MaxHamming = 3
 
-  private[graft] def metaTableFor(table: String): String = table + "_meta"
+  private[graft] def metaTableFor(table: String): String = NearDup.metaTableFor(table)
+
+  /** The geometry persisted in, and validated against, the meta table. */
+  private val Geometry =
+    Seq("n_bands" -> NBands, "band_bits" -> BandBits, "max_hamming" -> MaxHamming)
 
   /** The 4×16-bit banded rows `(doc_id, band_id, bk, code)` of a
     * `(doc_id, simhash)` code frame ([[MultimodalOps.perceptualCodes]]'
@@ -100,130 +92,59 @@ object PerceptGate {
       .select(col("doc_id"), col("band.band_id"), col("band.bk"), col("code"))
 
   /** Builds (overwrites) the code index from a seed corpus of
-    * `(doc_id, payload: BINARY)` rows, plus its validation meta table.
-    * Docs whose payload yields no code (empty/degenerate profile) are
-    * simply absent — they can never flag and never collide.
+    * `(doc_id, payload: BINARY)` rows, plus its validation meta table
+    * ([[NearDup.writeBanded]]). Docs whose payload yields no code
+    * (empty/degenerate profile) are simply absent — they can never flag
+    * and never collide.
     */
   def writeCodeIndex(spark: SparkSession, payloads: DataFrame, table: String,
-      nBuckets: Int = 16, decoder: FrameDecoder = AutoFrameDecoder): Unit = {
-    VectorOps.clearStaleLocation(spark, table)
-    bandedCodes(MultimodalOps.perceptualCodes(spark, payloads, decoder))
-      .write.mode("overwrite").bucketBy(nBuckets, "bk").sortBy("bk")
-      .format("parquet").saveAsTable(table)
-    val baseN = spark.table(table).select("doc_id").distinct().count()
-    VectorOps.clearStaleLocation(spark, metaTableFor(table))
-    spark.createDataFrame(Seq((NBands, BandBits, MaxHamming, baseN)))
-      .toDF("n_bands", "band_bits", "max_hamming", "base_n")
-      .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
-    graft.operators.IndexEpoch.bumpUnconditional(spark, table)
-  }
+      nBuckets: Int = 16, decoder: FrameDecoder = AutoFrameDecoder): Unit =
+    NearDup.writeBanded(spark, bandedCodes(MultimodalOps.perceptualCodes(spark, payloads, decoder)),
+      table, "bk", nBuckets, Geometry)
 
-  /** In-place rebuild FROM THE INDEX'S OWN ROWS — the compaction a
-    * long-running gate performs when [[codeIndexStaleness]] crosses its
-    * threshold (each append lands small file slivers; the rebuild
-    * re-buckets into `nBuckets` tidy sorted files and resets `base_n`).
-    * Codes are all the index holds, so the rebuild needs no payloads.
-    * Mechanics and fencing are [[DedupGate.rebuildSigIndex]]'s: stage
-    * through `<table>_rebuild`, write back, unconditional epoch bump
-    * (in-flight appenders fail their commit), drop staging.
+  /** In-place rebuild FROM THE INDEX'S OWN ROWS ([[NearDup.rebuildBanded]],
+    * [[DedupGate.rebuildSigIndex]]'s compaction) when
+    * [[codeIndexStaleness]] crosses its threshold. Codes are all the
+    * index holds, so the rebuild needs no payloads.
     */
   def rebuildCodeIndex(spark: SparkSession, table: String, nBuckets: Int = 16): Unit = {
     validateMeta(spark, table)
-    spark.catalog.refreshTable(table)
-    val staging = table + "_rebuild"
-    VectorOps.clearStaleLocation(spark, staging)
-    spark.table(table).write.mode("overwrite")
-      .bucketBy(nBuckets, "bk").sortBy("bk").format("parquet").saveAsTable(staging)
-    val baseN = spark.table(staging).select("doc_id").distinct().count()
-    spark.table(staging).write.mode("overwrite")
-      .bucketBy(nBuckets, "bk").sortBy("bk").format("parquet").saveAsTable(table)
-    spark.createDataFrame(Seq((NBands, BandBits, MaxHamming, baseN)))
-      .toDF("n_bands", "band_bits", "max_hamming", "base_n")
-      .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
-    graft.operators.IndexEpoch.bumpUnconditional(spark, table)
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    spark.catalog.refreshTable(table)
+    NearDup.rebuildBanded(spark, table, "bk", nBuckets, Geometry)
   }
 
   /** The persisted geometry + build-time corpus size; None without meta. */
   def loadCodeMeta(spark: SparkSession, table: String): Option[(Int, Int, Int, Long)] =
-    if (!spark.catalog.tableExists(metaTableFor(table))) None
-    else {
-      spark.catalog.refreshTable(metaTableFor(table))
-      spark.table(metaTableFor(table)).collect().headOption
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-    }
+    NearDup.loadMeta(spark, table).map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
 
   /** Fraction of the index's docs appended since it was built — the
     * rebuild trigger, exactly [[DedupGate.sigIndexStaleness]]'s formula
-    * (appends keep probes correct; they just grow the per-bucket
-    * populations the probe scans). 1.0 without meta.
+    * ([[NearDup.staleness]]). 1.0 without meta.
     */
   def codeIndexStaleness(spark: SparkSession, table: String): Double =
-    loadCodeMeta(spark, table) match {
-      case None | Some((_, _, _, 0L)) => 1.0
-      case Some((_, _, _, baseN)) =>
-        spark.catalog.refreshTable(table)
-        val now = spark.table(table).select("doc_id").distinct().count()
-        math.max(0.0, (now - baseN).toDouble / baseN)
-    }
+    NearDup.staleness(spark, table, loadCodeMeta(spark, table).map(_._4))
 
-  private[graft] def validateMeta(spark: SparkSession, table: String): Unit = {
-    if (spark.catalog.tableExists(metaTableFor(table)))
-      spark.catalog.refreshTable(metaTableFor(table))
-    spark.table(metaTableFor(table)).collect().headOption match {
-      case Some(r) =>
-        require(r.getInt(0) == NBands && r.getInt(1) == BandBits && r.getInt(2) == MaxHamming,
-          s"index $table was built with geometry (${r.getInt(0)}, ${r.getInt(1)}, " +
-            s"${r.getInt(2)}), this build expects ($NBands, $BandBits, $MaxHamming) — " +
-            "mixed banding corrupts the probe; rebuild with writeCodeIndex")
-      case None =>
-        throw new IllegalStateException(
-          s"index $table has an empty meta table; rebuild with writeCodeIndex")
-    }
-  }
+  private[graft] def validateMeta(spark: SparkSession, table: String): Unit =
+    NearDup.validateGeometry(spark, table, Geometry, "writeCodeIndex")
 
   /** Verified hamming check of a banded batch against a banded at-rest
-    * side — [[DedupGate.checkAgainst]] with `bit_count(xor)` in place of
-    * slot agreement. One row per flagged batch doc: `(doc_id, dup_of,
-    * hamming)`, strongest match kept (lowest true hamming, ties to the
-    * lowest rest-side id). `pairKeep` carries the same two policies:
-    * self-match exclusion for the index probe, `rest < in` direction
-    * for the within-batch check.
+    * side: one row per flagged batch doc, `(doc_id, dup_of, hamming)` —
+    * [[DedupGate.checkAgainst]] with `bit_count(xor)` as the score.
     */
-  private[graft] def checkAgainst(
-      index: DataFrame, batchBanded: DataFrame,
-      pairKeep: Column => Column = rest => rest =!= col("in_doc")): DataFrame = {
-    val rest = index.select(col("doc_id").as("rest_doc"),
-      col("band_id"), col("bk"), col("code").as("rest_code"))
-    val in = batchBanded
-      .select(col("doc_id").as("in_doc"), col("band_id"), col("bk"), col("code").as("in_code"))
-    rest.join(broadcast(in), Seq("band_id", "bk"))
-      .filter(pairKeep(col("rest_doc")))
-      .withColumn("hamming", expr("bit_count(rest_code ^ in_code)"))
-      .filter(col("hamming") <= MaxHamming)
-      .groupBy(col("in_doc").as("doc_id"))
-      .agg(min(struct(col("hamming"), col("rest_doc").as("dup_of"))).as("best"))
-      .select(col("doc_id"), col("best.dup_of"), col("best.hamming"))
-  }
+  private[graft] def checkAgainst(index: DataFrame, batchBanded: DataFrame): DataFrame =
+    NearDup.againstIndex(verified, index, batchBanded)
 
-  /** Within-batch perceptual flags, directional on doc id — siblings
-    * arriving together resolve to one surviving (min-id) representative
-    * when composed ([[gateBatchWithinAware]] / the production chain);
-    * the composed paths also chase `dup_of` CHAINS (C near B near A
-    * with C far from A) to that representative via
-    * [[Survivors.resolve]] (r20 — `hamming` stays the strongest-match
-    * distance).
+  /** [[checkAgainst]] plus the within-batch check in one verified join
+    * ([[NearDup.combined]]).
     */
-  private[graft] def withinBatchFlags(banded: DataFrame): DataFrame =
-    checkAgainst(banded, banded, rest => rest < col("in_doc"))
-
-  /** Index flags ∪ within-batch flags, strongest match per doc. */
   private[graft] def combinedFlags(index: DataFrame, banded: DataFrame): DataFrame =
-    checkAgainst(index, banded).unionByName(withinBatchFlags(banded))
-      .groupBy("doc_id")
-      .agg(min(struct(col("hamming"), col("dup_of"))).as("best"))
-      .select(col("doc_id"), col("best.dup_of"), col("best.hamming"))
+    NearDup.combined(verified, index, banded)
+
+  /** This gate's score: band-colliding pairs on (band_id, bk), verified
+    * by true hamming ≤ [[MaxHamming]].
+    */
+  private val verified = NearDup.verifiedBy("doc_id", Seq("band_id", "bk"), Seq("code"),
+    "hamming" -> expr("bit_count(rest_code ^ in_code)"),
+    col("hamming") <= MaxHamming, col("hamming")) _
 
   /** Above this many distinct batch band keys the probe abandons the
     * `isin` literal bucket filter for a broadcast semi-join: `bk` lives
@@ -234,123 +155,73 @@ object PerceptGate {
     */
   val DefaultMaxProbeLiterals = 2048
 
-  /** The index slice the batch can collide with. Sparse batches prune
-    * index FILES via a literal bucket filter; dense batches (> the
-    * literal cap) filter via a broadcast semi-join on the same keys;
-    * empty batches probe a `limit(0)` slice (keeps column types stable
-    * for downstream sinks on intermittently empty micro-batches).
-    */
-  private[streaming] def prunedIndexSlice(
-      spark: SparkSession, table: String, banded: DataFrame): DataFrame =
-    IndexProbe.prunedSlice(spark, table, banded, "bk",
-      DefaultMaxProbeLiterals, IndexProbe.BroadcastSemiJoin)
-
   /** Flags the batch's perceptual dups against the persisted index —
-    * the lazy convenience form ([[DedupGate.flagDuplicates]]'s stance):
-    * plan inspection / one-shot use; the gate bodies checkpoint.
+    * the lazy convenience form ([[NearDup.flagLazily]]).
     */
   def flagDuplicates(spark: SparkSession, payloads: DataFrame, table: String,
       decoder: FrameDecoder = AutoFrameDecoder): DataFrame = {
     require(spark eq payloads.sparkSession,
       "flagDuplicates must run on the batch frame's own session (foreachBatch hands a clone)")
-    validateMeta(spark, table)
-    val banded = bandedCodes(MultimodalOps.perceptualCodes(spark, payloads, decoder))
-    checkAgainst(prunedIndexSlice(spark, table, banded), banded)
+    NearDup.flagLazily(check(spark, table, decoder), payloads)
   }
 
   /** Appends the codes of docs not already at rest — idempotent by
-    * doc_id anti-join under the epoch guard, the replay-safe
-    * foreachBatch form ([[DedupGate.appendNewSigsIdempotent]]'s
-    * contract). `insertInto` keeps the bucket spec, so probes stay
-    * file-pruned after arrival. Returns docs actually appended.
+    * doc_id under the epoch guard, the replay-safe foreachBatch form
+    * ([[NearDup.appendBanded]], [[DedupGate.appendNewSigsIdempotent]]'s
+    * contract). Returns docs actually appended.
     */
   def appendNewCodesIdempotent(spark: SparkSession, payloads: DataFrame, table: String,
       decoder: FrameDecoder = AutoFrameDecoder): Long = {
     validateMeta(spark, table)
-    appendBandedIdempotent(spark,
-      bandedCodes(MultimodalOps.perceptualCodes(spark, payloads, decoder)), table)
+    val banded = bandedCodes(MultimodalOps.perceptualCodes(spark, payloads, decoder))
+    NearDup.appendBanded(spark, table, banded.collect().toSeq, banded.schema)
   }
 
-  /** [[appendNewCodesIdempotent]] over ALREADY-BANDED rows — the gate's
-    * hot path reuses the batch's checkpointed codes (meta validation is
-    * the caller's, once per batch).
+  /** The flag rows' schema (the [[checkAgainst]] shape). */
+  private[streaming] val FlagSchema =
+    StructType.fromDDL("doc_id BIGINT, dup_of BIGINT, hamming INT")
+
+  /** This gate's [[NearDup.Check]] over `table` for one trigger (the
+    * index refreshed and validated): `(doc_id, payload)` rows decode and
+    * dHash into banded codes, unflagged codes [[NearDup.appendBanded]].
     */
-  private[graft] def appendBandedIdempotent(
-      spark: SparkSession, banded: DataFrame, table: String): Long = {
-    import org.apache.spark.sql.GraftShim
-    val epoch = graft.operators.IndexEpoch.current(spark, table)
-    val existing = spark.table(table).select("doc_id").distinct()
-    val (fresh, freshRdd) = GraftShim.localCheckpointTracked(
-      banded.join(existing, Seq("doc_id"), "left_anti"))
-    try {
-      val n = fresh.select("doc_id").distinct().count()
-      if (n > 0) {
-        graft.operators.IndexEpoch.bump(spark, table, epoch)
-        fresh.select("doc_id", "band_id", "bk", "code") // insertInto is POSITIONAL
-          .write.mode("append").insertInto(table)
-        spark.catalog.refreshTable(table)
-      }
-      n
-    } finally GraftShim.releaseCheckpoint(freshRdd)
+  private[streaming] def check(spark: SparkSession, table: String,
+      decoder: FrameDecoder = AutoFrameDecoder): NearDup.Check = {
+    spark.catalog.refreshTable(table)
+    validateMeta(spark, table)
+    NearDup.Check(table, "bk", NBands, DefaultMaxProbeLiterals, IndexProbe.BroadcastSemiJoin,
+      rows => bandedCodes(MultimodalOps.perceptualCodes(spark,
+        rows.select("doc_id", "payload"), decoder)),
+      verified,
+      (rows, schema) => NearDup.appendBanded(spark, table, rows, schema))
   }
 
   /** The full gate as a foreachBatch body over `(doc_id, payload, …)`
     * micro-batches: flag against the index, hand the annotated batch
-    * (original columns + `is_dup`/`dup_of`/`hamming`) to `onBatch`,
+    * (original columns + `dup_of`/`hamming`/`is_dup`) to `onBatch`,
     * index the novel codes. Batch-vs-index only — compose a
     * within-batch dedup upstream or use [[gateBatchWithinAware]].
     */
   def gateBatch(table: String,
       onBatch: (DataFrame, Long) => Unit,
       decoder: FrameDecoder = AutoFrameDecoder)(batch: DataFrame, batchId: Long): Unit =
-    gateCore(table, withinBatch = false, onBatch, decoder = decoder)(batch, batchId)
+    gateCore(table, withinBatch = false, onBatch, _ => (), decoder)(batch, batchId)
 
   /** [[gateBatch]] with the within-batch blind spot closed: sibling
     * dups arriving together index exactly ONE (min-id) member.
+    * `onTimings` receives the batch's [[GateStageTimings]].
     */
   def gateBatchWithinAware(table: String,
       onBatch: (DataFrame, Long) => Unit,
-      decoder: FrameDecoder = AutoFrameDecoder)(batch: DataFrame, batchId: Long): Unit =
-    gateCore(table, withinBatch = true, onBatch, decoder = decoder)(batch, batchId)
-
-  /** [[gateBatchWithinAware]] with per-stage wall timings. */
-  def gateBatchWithinAwareTimed(table: String,
-      onBatch: (DataFrame, Long) => Unit,
-      onTimings: PerceptGateTimings => Unit,
-      decoder: FrameDecoder = AutoFrameDecoder)(batch: DataFrame, batchId: Long): Unit =
+      decoder: FrameDecoder = AutoFrameDecoder,
+      onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit =
     gateCore(table, withinBatch = true, onBatch, onTimings, decoder)(batch, batchId)
 
+  /** The gate body — [[NearDup.gate]] with this gate's check. */
   private def gateCore(table: String, withinBatch: Boolean,
-      onBatch: (DataFrame, Long) => Unit,
-      onTimings: PerceptGateTimings => Unit = _ => (),
-      decoder: FrameDecoder = AutoFrameDecoder)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    s.catalog.refreshTable(table)
-    validateMeta(s, table)
-    import org.apache.spark.sql.GraftShim
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val ((banded, bandedRdd), tCode) = timed(GraftShim.localCheckpointTracked(
-      bandedCodes(MultimodalOps.perceptualCodes(s,
-        batch.select("doc_id", "payload"), decoder))))
-    try {
-      val rawFlags =
-        if (withinBatch) combinedFlags(prunedIndexSlice(s, table, banded), banded)
-        else checkAgainst(prunedIndexSlice(s, table, banded), banded)
-      val ((flags0, flagsRdd), tProbe) = timed(GraftShim.localCheckpointTracked(rawFlags))
-      try {
-        // chains only form when the batch checks against ITSELF
-        val flags = if (withinBatch) Survivors.resolve(s, flags0, "doc_id") else flags0
-        val annotated = batch.join(flags, Seq("doc_id"), "left")
-          .withColumn("is_dup", col("dup_of").isNotNull)
-        onBatch(annotated, batchId)
-        val (appended, tAppend) = timed(appendBandedIdempotent(
-          s, banded.join(flags.select("doc_id"), Seq("doc_id"), "left_anti"), table))
-        onTimings(PerceptGateTimings(batchId, tCode, tProbe, tAppend, appended))
-      } finally GraftShim.releaseCheckpoint(flagsRdd)
-    } finally GraftShim.releaseCheckpoint(bandedRdd)
-  }
+      onBatch: (DataFrame, Long) => Unit, onTimings: GateStageTimings => Unit,
+      decoder: FrameDecoder)(batch: DataFrame, batchId: Long): Unit =
+    NearDup.gate(check(batch.sparkSession, table, decoder), FlagSchema,
+      decisions = false, withinBatch,
+      _.withColumn("is_dup", col("dup_of").isNotNull), onBatch, onTimings)(batch, batchId)
 }

@@ -253,11 +253,6 @@ object SpanGate {
     s.catalog.refreshTable(table)
     validateMeta(s, table)
     import org.apache.spark.sql.GraftShim
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
     val inserts = batch.filter(col("decision") === "insert").select("doc_id", "text")
     // one tracked evaluation of the selected sites serves the probe
     // literal collect and the mark join; blocks free deterministically
@@ -324,11 +319,6 @@ object SpanGate {
     s.catalog.refreshTable(table)
     validateMeta(s, table)
     import org.apache.spark.sql.GraftShim
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
     val inserts = batch.filter(col("decision") === "insert").select("doc_id", "text")
     val ((sites, sitesRdd), tSelect) =
       timed(GraftShim.localCheckpointTracked(SpanOps.winnowSites(inserts)))

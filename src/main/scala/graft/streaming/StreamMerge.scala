@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming corpus merge — the stream-static join form of the batch
   * `corpus_merge` key: a live document feed is classified against a
@@ -51,24 +52,6 @@ object StreamMerge {
         when(col("existing_id").isNull, "insert").otherwise("skip_dup").as("action"),
         col("existing_id"))
 
-  /** The COMPLETE streaming ingestion pipeline in ONE query — the
-    * streaming composition of the batch `corpus_filter` → `corpus_merge`
-    * pair: within-stream content dedup (watermark-bounded state, first
-    * arrival per hash wins — the streaming reading of the batch
-    * min-id-canonical rule) → the SAME quality gate as `corpus_filter`
-    * ([[graft.operators.TextOps.withQualityScore]], so the stream cannot
-    * drift from the batch formula; same `short` < `quality` precedence
-    * and thresholds) → stream-static classification against the frozen
-    * corpus index. Every surviving document emits exactly one decision
-    * row: `short` / `quality` (gated out), `skip_dup` + canonical id
-    * (corpus already holds the content), or `insert`.
-    *
-    * Scale shape: quality scoring is stateless Column algebra on the
-    * stream side; the only stream state is the watermark-bounded dedup
-    * hash set; the static index joins per micro-batch (broadcast when it
-    * fits, else a co-partitioned hash join) — nothing here accumulates
-    * with stream HISTORY, so the pipeline runs indefinitely.
-    */
   /** Idempotent parquet audit log for [[ingestPipeline]] decision rows —
     * the same exactly-once layout as [[FileSink.chunksToParquet]]: each
     * micro-batch overwrites its own `batch=<id>` directory, so a replayed
@@ -160,6 +143,24 @@ object StreamMerge {
       (col("n_tokens") / col("d_tokens")).as("token_share")): _*)
   }
 
+  /** The COMPLETE streaming ingestion pipeline in ONE query — the
+    * streaming composition of the batch `corpus_filter` → `corpus_merge`
+    * pair: within-stream content dedup (watermark-bounded state, first
+    * arrival per hash wins — the streaming reading of the batch
+    * min-id-canonical rule) → the SAME quality gate as `corpus_filter`
+    * ([[graft.operators.TextOps.withQualityScore]], so the stream cannot
+    * drift from the batch formula; same `short` < `quality` precedence
+    * and thresholds) → stream-static classification against the frozen
+    * corpus index. Every surviving document emits exactly one decision
+    * row: `short` / `quality` (gated out), `skip_dup` + canonical id
+    * (corpus already holds the content), or `insert`.
+    *
+    * Scale shape: quality scoring is stateless Column algebra on the
+    * stream side; the only stream state is the watermark-bounded dedup
+    * hash set; the static index joins per micro-batch (broadcast when it
+    * fits, else a co-partitioned hash join) — nothing here accumulates
+    * with stream HISTORY, so the pipeline runs indefinitely.
+    */
   def ingestPipeline(
       docs: DataFrame, baseIndex: DataFrame,
       delayThreshold: String = Reassembly.DefaultTtl,
@@ -335,6 +336,20 @@ object StreamMerge {
         onBatch(scrubbed, id)
       }) _)
 
+  /** Runs `body` with `df` pinned under a tracked localCheckpoint — for
+    * multi-pass sink cascades: the span gates make 3+ passes over the
+    * handed-off decision frame (site selection, verdict join, sink), and
+    * unpinned each pass re-evaluates the whole micro-batch join plan
+    * from the source (the r16 production-body lesson, applied to the
+    * component chains). Blocks free deterministically before the batch
+    * returns.
+    */
+  private def pinned(df: DataFrame)(body: DataFrame => Unit): Unit = {
+    import org.apache.spark.sql.GraftShim
+    val (p, rdd) = GraftShim.localCheckpointTracked(df)
+    try body(p) finally GraftShim.releaseCheckpoint(rdd)
+  }
+
   /** [[gatedIngestPipeline]] plus the SPAN-DECONTAMINATION gate — the
     * online ExactSubstr check: after the near-dup gate, rows still
     * decided `insert` are winnow-probed against the persisted EVAL-gram
@@ -353,20 +368,6 @@ object StreamMerge {
     * `onBatch` receives every decision row, text dropped, with the leak
     * columns appended.
     */
-  /** Runs `body` with `df` pinned under a tracked localCheckpoint — for
-    * multi-pass sink cascades: the span gates make 3+ passes over the
-    * handed-off decision frame (site selection, verdict join, sink), and
-    * unpinned each pass re-evaluates the whole micro-batch join plan
-    * from the source (the r16 production-body lesson, applied to the
-    * component chains). Blocks free deterministically before the batch
-    * returns.
-    */
-  private def pinned(df: DataFrame)(body: DataFrame => Unit): Unit = {
-    import org.apache.spark.sql.GraftShim
-    val (p, rdd) = GraftShim.localCheckpointTracked(df)
-    try body(p) finally GraftShim.releaseCheckpoint(rdd)
-  }
-
   def gatedIngestPipelineDecontam(
       docs: DataFrame, baseIndex: DataFrame, sigTable: String, evalGramTable: String,
       onBatch: (DataFrame, Long) => Unit,
@@ -481,12 +482,17 @@ object StreamMerge {
     *
     * Batch-body shape (r15 verdict task 4): the stage cascade is FLAT,
     * not nested callbacks, and the LM-decided batch is pinned with one
-    * tracked localCheckpoint at entry — every later stage filters or
-    * joins back into those rows several times, and without the pin each
-    * pass re-evaluated the whole upstream chain (stream source → gates →
-    * LM join) from scratch; the scrubbed frame is pinned again before
-    * the PII/sink/re-sign passes for the same reason. Blocks free
-    * deterministically before the batch returns.
+    * tracked localCheckpoint at entry, which counts its inserts in the
+    * same job — every later stage filters or joins back into those rows,
+    * and the pin evaluates the upstream chain (stream source → gates →
+    * LM join, with its watermarked dedup state) exactly once per
+    * trigger. The three near-dup stages run the shared [[NearDup]]
+    * check: each signs its rows once into a driver-local relation,
+    * probes and verifies from the driver, and joins its flags back as a
+    * driver-local relation; a trigger with no insert runs none of them
+    * and reads none of their indexes. The span stage pins its sites,
+    * per-doc verdicts and the scrubbed frame before the PII/sink/re-sign
+    * passes. Blocks free deterministically before the batch returns.
     *
     * `onBatch` receives every decision row with the raw `text` dropped;
     * keep rows carry the `redacted` post-surgery payload plus the full
@@ -550,11 +556,11 @@ object StreamMerge {
       onSpanTimings: SpanGateTimings => Unit = _ => (),
       onLmSec: (Long, Double) => Unit = (_, _) => (),
       perceptTable: Option[String] = None,
-      onPerceptTimings: PerceptGateTimings => Unit = _ => (),
+      onPerceptTimings: GateStageTimings => Unit = _ => (),
       perceptKind: Column = col("doc_id") % 3 === 0,
       perceptPayload: Column = col("text").cast("binary"),
       embedTable: Option[String] = None,
-      onEmbedTimings: EmbedGateTimings => Unit = _ => (),
+      onEmbedTimings: GateStageTimings => Unit = _ => (),
       embedPayload: Column = col("embedding"),
       embedThreshold: Double = EmbedGate.DefaultThreshold): DataStreamWriter[Row] = {
     val scored = graft.operators.WebOps.withDomainGate(
@@ -593,9 +599,8 @@ object StreamMerge {
     * each and (b) the signature append can see the span verdicts and
     * dual-sign scrubbed rows (see [[gatedIngestPipelineProduction]]'s
     * scaladoc for both contracts). Stage semantics are the shared
-    * primitives themselves — [[CharLmGate.withLmDecisions]],
-    * [[graft.operators.DedupOps.bandedSigs]] +
-    * [[DedupGate.combinedFlags]], [[SpanGate.scrubPerDoc]] +
+    * primitives themselves — [[CharLmGate.withLmDecisions]], the
+    * near-dup gates' [[NearDup.run]] checks, [[SpanGate.scrubPerDoc]] +
     * [[SpanGate.applyScrub]] — so decisions stay bit-identical to the
     * component pipelines (StreamingSpec).
     */
@@ -606,190 +611,121 @@ object StreamMerge {
       onSpanTimings: SpanGateTimings => Unit,
       onLmSec: (Long, Double) => Unit = (_, _) => (),
       perceptTable: Option[String] = None,
-      onPerceptTimings: PerceptGateTimings => Unit = _ => (),
+      onPerceptTimings: GateStageTimings => Unit = _ => (),
       perceptKind: Column = col("doc_id") % 3 === 0,
       perceptPayload: Column = col("text").cast("binary"),
       embedTable: Option[String] = None,
-      onEmbedTimings: EmbedGateTimings => Unit = _ => (),
+      onEmbedTimings: GateStageTimings => Unit = _ => (),
       embedPayload: Column = col("embedding"),
       embedThreshold: Double = EmbedGate.DefaultThreshold)(
       batch: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.GraftShim
     import graft.operators.{DedupOps, SpanOps}
     val s = batch.sparkSession
-    s.catalog.refreshTable(sigTable)
-    DedupGate.validateMeta(s, sigTable)
     s.catalog.refreshTable(evalGramTable)
     SpanGate.validateMeta(s, evalGramTable)
-    perceptTable.foreach { pt =>
-      s.catalog.refreshTable(pt)
-      PerceptGate.validateMeta(s, pt)
-    }
-    embedTable.foreach(s.catalog.refreshTable) // nBits meta refreshes in requireNBits
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    // pin the LM-decided batch ONCE: every stage below filters or joins
-    // back into these rows. The pin's wall (the LM scoring join's
-    // materialization — the chain's only added MODEL cost vs the scrub
-    // sibling) is reported via onLmSec so the bench can decompose the
-    // production premium per added gate (r16 verdict task 2).
-    val ((decided, decidedRdd), tLm) = timed(GraftShim.localCheckpointTracked(
-      CharLmGate.withLmDecisions(batch, lmTable, maxBits)))
+    // pin the LM-decided batch ONCE, counting its inserts in the same
+    // job: every stage below filters or joins back into these rows. The
+    // pin's wall (the LM scoring join's materialization — the chain's
+    // only added MODEL cost vs the scrub sibling) is reported via onLmSec
+    // so the bench can decompose the production premium per added gate
+    // (r16 verdict task 2).
+    val ((decided, decidedRdd, nInserts), tLm) = timed(NearDup.pin(
+      CharLmGate.withLmDecisions(batch, lmTable, maxBits), insertsOnly = true))
     onLmSec(batchId, tLm)
     try {
-      val inserts = decided.filter(col("decision") === "insert").select("doc_id", "text")
-      val ((banded, bandedRdd), tSig) =
-        timed(GraftShim.localCheckpointTracked(DedupOps.bandedSigs(inserts)))
+      def inserts(frame: DataFrame): DataFrame = frame.filter(col("decision") === "insert")
+      // one near-dup stage's check of `rows` (still `insert`, projected
+      // to the gate's `(id, payload)`) against its index AND the batch's
+      // smaller-id siblings, chains chased to the surviving
+      // representative (the audit trail must not point at docs that will
+      // never be at rest); a batch without inserts checks nothing and
+      // reads no index
+      def check(c: => NearDup.Check, rows: => DataFrame): Option[NearDup.Checked] =
+        if (nInserts == 0) None else Some(NearDup.run(c, rows, nInserts, withinBatch = true))
+      // the stage's flags joined back (`of`/`score` riding to the sink),
+      // flagged rows taking the stage's `decision`
+      def decide(frame: DataFrame, stage: Option[NearDup.Checked],
+          flagSchema: StructType, decision: String, of: String, score: String): DataFrame =
+        NearDup.joinFlags(frame, stage.fold(Seq.empty[Row])(_.flags),
+          StructType(flagSchema.fields.zip(Seq("doc_id", of, score))
+            .map { case (f, n) => f.copy(name = n) }))
+          .withColumn("decision", when(col(of).isNotNull, decision).otherwise(col("decision")))
+      // the raster and embedding stages append their unflagged
+      // signatures HERE, before the span verdicts exist — the same
+      // documented conservatism as the signature index: a later-gutted
+      // doc's code or vector at rest only makes future dups of it flag
+      def appendNow(stage: Option[NearDup.Checked], onTimings: GateStageTimings => Unit): Unit = {
+        val (appended, tAppend) = stage.fold((0L, 0.0))(r => timed(r.append()))
+        onTimings(GateStageTimings(batchId, stage.fold(0.0)(_.sigSec),
+          stage.fold(0.0)(_.probeSec), 0.0, tAppend, appended))
+      }
+      val text = check(DedupGate.check(s, sigTable), inserts(decided))
+      val deduped = decide(decided, text, DedupGate.FlagSchema, "near_dup", "dup_of", "sig_match")
+      // PERCEPTUAL stage (r19 — the raster-grain member of the dedup
+      // cascade): image-kind inserts are dHash-checked and flagged rows
+      // become `percept_dup`. Placed with its text sibling — cheap
+      // 16-byte codes before the span probe, and a percept_dup needs no
+      // span check. Image-kind rows and their bytes are the CALLER's
+      // layout (perceptKind/perceptPayload); the defaults keep the
+      // multimodalMeta test convention (doc_id % 3 = 0, payload = the
+      // text bytes). With no perceptTable the frame passes unchanged
+      // (and without the two percept columns).
+      val dedupedP = perceptTable.fold(deduped) { pt =>
+        val stage = check(PerceptGate.check(s, pt),
+          inserts(deduped).filter(perceptKind).select(col("doc_id"), perceptPayload.as("payload")))
+        appendNow(stage, onPerceptTimings)
+        decide(deduped, stage, PerceptGate.FlagSchema, "percept_dup", "percept_of", "percept_hamming")
+      }
+      // EMBEDDING stage (r20 — the vector-grain member): inserts that
+      // CARRY an embedding are cosine-checked against the persisted
+      // doc-keyed LSH index and flagged rows become `embed_dup`;
+      // zero-norm embeddings neither flag nor index (EmbedGate's
+      // degenerate policy).
+      val dedupedE = embedTable.fold(dedupedP) { et =>
+        val stage = check(EmbedGate.check(s, et, embedThreshold),
+          inserts(dedupedP).filter(embedPayload.isNotNull)
+            .select(col("doc_id").as("vec_id"), embedPayload.as("embedding")))
+        appendNow(stage, onEmbedTimings)
+        decide(dedupedP, stage, EmbedGate.FlagSchema, "embed_dup", "embed_of", "embed_sim")
+      }
+      val still = inserts(dedupedE).select("doc_id", "text")
+      val ((sites, sitesRdd), tSelect) =
+        timed(GraftShim.localCheckpointTracked(SpanOps.winnowSites(still)))
       try {
-        val ((flags0, flagsRdd), tProbe) = timed(GraftShim.localCheckpointTracked(
-          DedupGate.combinedFlags(
-            DedupGate.prunedIndexSlice(s, sigTable, banded), banded)))
+        val ((perDoc, perDocRdd), tSpanProbe) = timed(
+          GraftShim.localCheckpointTracked(SpanGate.scrubPerDoc(s, sites, evalGramTable)))
         try {
-          // within-batch dup_of chains resolve to the surviving
-          // representative (the audit trail must not point at docs
-          // that will never be at rest — Survivors.resolve's contract)
-          val flags = Survivors.resolve(s, flags0, "doc_id")
-          val deduped = decided.join(flags, Seq("doc_id"), "left")
-            .withColumn("decision",
-              when(col("dup_of").isNotNull, "near_dup").otherwise(col("decision")))
-          // PERCEPTUAL near-dup gate (r19 — the raster-grain member of
-          // the dedup cascade): image-kind rows still decided `insert`
-          // are dHash-checked against the persisted code index AND
-          // their own batch's smaller-id siblings; flagged rows become
-          // `percept_dup` (with `percept_of`/`percept_hamming`).
-          // Placed with its text sibling — cheap 16-byte codes before
-          // the span probe, and a percept_dup needs no span check.
-          // Codes of unflagged image inserts index HERE, before the
-          // span verdicts exist — the same documented conservatism as
-          // the signature index: a later-gutted doc's code at rest only
-          // makes future dups of it flag. With no perceptTable the
-          // body runs on the text-gated frame unchanged (and without
-          // the two percept columns).
-          def withPercept[A](body: DataFrame => A): A = perceptTable match {
-            case None => body(deduped)
-            case Some(pt) =>
-              // image-kind rows and their bytes are the CALLER's layout
-              // (perceptKind/perceptPayload); the defaults keep the
-              // multimodalMeta test convention (doc_id % 3 = 0, payload
-              // = the text bytes)
-              val img = deduped
-                .filter(col("decision") === "insert" && perceptKind)
-                .select(col("doc_id"), perceptPayload.as("payload"))
-              val ((pBanded, pBandedRdd), tPCode) = timed(GraftShim.localCheckpointTracked(
-                PerceptGate.bandedCodes(
-                  graft.operators.MultimodalOps.perceptualCodes(s, img))))
-              try {
-                val ((pFlags0, pFlagsRdd), tPProbe) = timed(GraftShim.localCheckpointTracked(
-                  PerceptGate.combinedFlags(
-                    PerceptGate.prunedIndexSlice(s, pt, pBanded), pBanded)))
-                try {
-                  val pFlags = Survivors.resolve(s, pFlags0, "doc_id")
-                  val (pAppended, tPAppend) = timed(PerceptGate.appendBandedIdempotent(
-                    s, pBanded.join(pFlags.select("doc_id"), Seq("doc_id"), "left_anti"), pt))
-                  onPerceptTimings(PerceptGateTimings(
-                    batchId, tPCode, tPProbe, tPAppend, pAppended))
-                  body(deduped.join(
-                    pFlags.select(col("doc_id"), col("dup_of").as("percept_of"),
-                      col("hamming").as("percept_hamming")), Seq("doc_id"), "left")
-                    .withColumn("decision",
-                      when(col("percept_of").isNotNull, "percept_dup")
-                        .otherwise(col("decision"))))
-                } finally GraftShim.releaseCheckpoint(pFlagsRdd)
-              } finally GraftShim.releaseCheckpoint(pBandedRdd)
-          }
-          // EMBEDDING near-dup gate (r20 — the vector-grain member of
-          // the cascade): rows still `insert` that CARRY an embedding
-          // are cosine-checked against the persisted doc-keyed LSH
-          // index and their own batch's siblings; flagged rows become
-          // `embed_dup` (chains resolved to the surviving
-          // representative) and need no span check. Unflagged novel
-          // embeddings index HERE, before the span verdicts exist —
-          // the same documented conservatism as the signature and
-          // percept appends; zero-norm embeddings neither flag nor
-          // index (EmbedGate's degenerate policy).
-          def withEmbed[A](frame: DataFrame)(body: DataFrame => A): A = embedTable match {
-            case None => body(frame)
-            case Some(et) =>
-              val nBits = EmbedGate.requireNBits(s, et)
-              val vecs = frame
-                .filter(col("decision") === "insert" && embedPayload.isNotNull)
-                .select(col("doc_id").as("vec_id"), embedPayload.as("embedding"))
-              val ((eSigs, eSigsRdd), tESig) = timed(GraftShim.localCheckpointTracked(
-                EmbedGate.withSigs(vecs, nBits)))
-              try {
-                val ((eFlags0, eFlagsRdd), tEProbe) = timed(GraftShim.localCheckpointTracked(
-                  EmbedGate.combinedFlags(
-                    EmbedGate.prunedIndexSlice(s, et, eSigs), eSigs, embedThreshold)))
-                try {
-                  val eFlags = EmbedGate.resolveToSurvivors(s, eFlags0)
-                  val (eAppended, tEAppend) = timed(
-                    graft.operators.VectorOps.appendToLshIndexIdempotent(s,
-                      eSigs.filter(col("nrm") > 0)
-                        .join(eFlags.select("vec_id"), Seq("vec_id"), "left_anti")
-                        .select("vec_id", "embedding"), et, nBits))
-                  onEmbedTimings(EmbedGateTimings(batchId, tESig, tEProbe, tEAppend, eAppended))
-                  body(frame.join(
-                    eFlags.select(col("vec_id").as("doc_id"), col("dup_of").as("embed_of"),
-                      col("sim").as("embed_sim")), Seq("doc_id"), "left")
-                    .withColumn("decision",
-                      when(col("embed_of").isNotNull, "embed_dup")
-                        .otherwise(col("decision"))))
-                } finally GraftShim.releaseCheckpoint(eFlagsRdd)
-              } finally GraftShim.releaseCheckpoint(eSigsRdd)
-          }
-          withPercept { dedupedPOnly =>
-          withEmbed(dedupedPOnly) { dedupedP =>
-          val still = dedupedP.filter(col("decision") === "insert").select("doc_id", "text")
-          val ((sites, sitesRdd), tSelect) =
-            timed(GraftShim.localCheckpointTracked(SpanOps.winnowSites(still)))
+          // pin the post-surgery decision frame: the PII/sink pass AND
+          // the dual-sign append both read it
+          val (scrubbed, scrubbedRdd) = GraftShim.localCheckpointTracked(
+            SpanGate.applyScrub(dedupedE, perDoc, minTokens))
           try {
-            val ((perDoc, perDocRdd), tSpanProbe) = timed(
-              GraftShim.localCheckpointTracked(
-                SpanGate.scrubPerDoc(s, sites, evalGramTable)))
-            try {
-              // pin the post-surgery decision frame: the PII/sink pass
-              // AND the dual-sign append both read it
-              val (scrubbed, scrubbedRdd) = GraftShim.localCheckpointTracked(
-                SpanGate.applyScrub(dedupedP, perDoc, minTokens))
-              try {
-                val keep = col("decision").isin("insert", "scrubbed")
-                val core = scrubbed.withColumn("txt",
-                  when(keep, col("text")).otherwise(lit("")))
-                val out = graft.operators.HygieneOps.withPiiScrub(core)
-                  .withColumn("redacted", when(keep, col("redacted")))
-                  .withColumn("n_email", when(keep, col("n_email")))
-                  .withColumn("n_phone", when(keep, col("n_phone")))
-                  .withColumn("n_ip", when(keep, col("n_ip")))
-                  .drop("text", "txt")
-                val (_, tSink) = timed(onBatch(out, batchId))
-                // novel unflagged rows keep their original-text
-                // signatures; scrubbed rows ALSO sign the post-surgery
-                // text (dual-sign — one idempotent append covers both).
-                // Bands a small cut leaves untouched re-sign to the SAME
-                // (doc_id, band_id, bh, sig) row — the common case —
-                // so dedupe before appending or the index (and its
-                // staleness accounting) permanently carries byte-equal
-                // twins (r16 ADVICE; flagging itself was immune via the
-                // min-struct agg)
-                val novel = banded.join(flags.select("doc_id"), Seq("doc_id"), "left_anti")
-                val resigned = DedupOps.bandedSigs(
-                  scrubbed.filter(col("decision") === "scrubbed").select("doc_id", "text"))
-                val (appended, tAppend) = timed(DedupGate.appendBandedIdempotent(
-                  s, novel.unionByName(resigned)
-                    .dropDuplicates("doc_id", "band_id", "bh", "sig"), sigTable))
-                onGateTimings(GateStageTimings(
-                  batchId, tSig, tProbe, tSink, tAppend, appended))
-                onSpanTimings(SpanGateTimings(batchId, tSelect, tSpanProbe, tSink))
-              } finally GraftShim.releaseCheckpoint(scrubbedRdd)
-            } finally GraftShim.releaseCheckpoint(perDocRdd)
-          } finally GraftShim.releaseCheckpoint(sitesRdd)
-          }
-          }
-        } finally GraftShim.releaseCheckpoint(flagsRdd)
-      } finally GraftShim.releaseCheckpoint(bandedRdd)
+            val keep = col("decision").isin("insert", "scrubbed")
+            val core = scrubbed.withColumn("txt",
+              when(keep, col("text")).otherwise(lit("")))
+            val out = graft.operators.HygieneOps.withPiiScrub(core)
+              .withColumn("redacted", when(keep, col("redacted")))
+              .withColumn("n_email", when(keep, col("n_email")))
+              .withColumn("n_phone", when(keep, col("n_phone")))
+              .withColumn("n_ip", when(keep, col("n_ip")))
+              .drop("text", "txt")
+            val (_, tSink) = timed(onBatch(out, batchId))
+            // novel unflagged rows keep their original-text signatures;
+            // scrubbed rows ALSO sign the post-surgery text (dual-sign —
+            // one idempotent append covers both). Bands a small cut
+            // leaves untouched re-sign to the SAME (doc_id, band_id, bh,
+            // sig) row — the common case — and the shared append drops
+            // such byte-equal twins (r16 ADVICE)
+            val (appended, tAppend) = text.fold((0L, 0.0))(r => timed(r.append(
+              DedupOps.bandedSigs(scrubbed.filter(col("decision") === "scrubbed")
+                .select("doc_id", "text")).collect().toSeq)))
+            onGateTimings(GateStageTimings(batchId, text.fold(0.0)(_.sigSec),
+              text.fold(0.0)(_.probeSec), tSink, tAppend, appended))
+            onSpanTimings(SpanGateTimings(batchId, tSelect, tSpanProbe, tSink))
+          } finally GraftShim.releaseCheckpoint(scrubbedRdd)
+        } finally GraftShim.releaseCheckpoint(perDocRdd)
+      } finally GraftShim.releaseCheckpoint(sitesRdd)
     } finally GraftShim.releaseCheckpoint(decidedRdd)
   }
 

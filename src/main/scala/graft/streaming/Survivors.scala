@@ -1,8 +1,6 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 
 /** `dup_of` chain resolution shared by every within-aware gate: a
   * flagged arrival's strongest match may ITSELF be a flagged sibling
@@ -13,8 +11,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * slice: one implementation, not one per gate).
   *
   * The walk is DRIVER-side: flags are micro-batch metadata scale by the
-  * same contract that bounds the gates' probe-literal collects, so a
-  * map chase is exact, one pass, and adds no jobs. Batch-only chains
+  * same contract that bounds the gates' probe-literal collects, and the
+  * shared check ([[NearDup.run]]) already holds them on the driver, so
+  * a map chase is exact, one pass, and adds no jobs. Batch-only chains
   * terminate because within-batch edges strictly decrease the id by
   * construction (`rest < in` in every gate's within-batch check);
   * REPLAY of rows already at rest can produce cycles, where the walk
@@ -28,21 +27,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 private[graft] object Survivors {
 
-  /** `flags` with each `dup_of` chased to the surviving representative.
-    * `idCol` is the gate's Long id column (`doc_id`/`vec_id`); the
-    * frame must carry a Long `dup_of`. Schema and column order are
-    * preserved exactly (the result is a local relation built from the
-    * caller's checkpointed flags — callers checkpoint before calling,
-    * so the collect reads blocks, not lineage).
-    */
-  def resolve(spark: SparkSession, flags: DataFrame, idCol: String): DataFrame = {
-    val schema = flags.schema
-    spark.createDataFrame(chase(flags.collect().toSeq, schema.fieldIndex(idCol),
-      schema.fieldIndex("dup_of")).asJava, schema)
-  }
-
-  /** [[resolve]] over flag rows already on the driver: the Long id sits
-    * at `idIdx`, the Long `dup_of` at `dupIdx`.
+  /** Flag rows with each `dup_of` chased to the surviving
+    * representative: the Long id sits at `idIdx`, the Long `dup_of` at
+    * `dupIdx`, and every other value of a row is kept as it is.
     */
   def chase(rows: Seq[Row], idIdx: Int, dupIdx: Int): Seq[Row] = {
     val parent = rows.map(r => r.getLong(idIdx) -> r.getLong(dupIdx)).toMap

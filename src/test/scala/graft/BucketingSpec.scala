@@ -660,6 +660,91 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == 0L, "empty batch must still reach onBatch, empty")
     assert(spark.table("dedup_gate_empty").select("doc_id").distinct().count() == 1L,
       "empty batch must append nothing")
+    // the percept and embed within-aware gates: onBatch gets the empty
+    // frame with the annotated schema and column order, the gate itself
+    // runs no job beyond pinning the batch (no sign, probe or append),
+    // and no persisted RDD survives
+    import graft.streaming.{EmbedGate, PerceptGate}
+    import graft.operators.VectorOps
+    import org.apache.spark.sql.types._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    PerceptGate.writeCodeIndex(spark,
+      Seq(1L -> p5(rising)).toDF("doc_id", "payload"), "percept_gate_empty", nBuckets = 8)
+    VectorOps.writeLshIndexFrom(spark,
+      Seq(1L -> axis(0)).toDF("vec_id", "embedding"), "embed_gate_empty", nBuckets = 8)
+    val sc = spark.sparkContext
+    val phase = "graft.test.gatePhase"
+    val gateJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        started.incrementAndGet()
+        if (Option(e.properties).forall(_.getProperty(phase) != "sink")) gateJobs.incrementAndGet()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.incrementAndGet(): Unit }
+    }
+    def quiesce(): Unit = {
+      val deadline = System.nanoTime() + 10000000000L
+      var last = -1
+      while (System.nanoTime() < deadline && !(started.get == ended.get && started.get == last)) {
+        last = started.get
+        Thread.sleep(150)
+      }
+    }
+    def emptyGate(name: String, expected: Seq[(String, DataType)])(
+        gate: ((DataFrame, Long) => Unit) => Unit): Unit = {
+      var schema: StructType = null
+      var n = -1L
+      val before = sc.getPersistentRDDs.keySet
+      quiesce()
+      gateJobs.set(0)
+      gate { (df, _) =>
+        sc.setLocalProperty(phase, "sink")
+        try { schema = df.schema; n = df.count() } finally sc.setLocalProperty(phase, null)
+      }
+      quiesce()
+      assert(n == 0L, s"$name: empty batch must still reach onBatch, empty")
+      assert(schema.fields.toSeq.map(f => (f.name, f.dataType)) == expected,
+        s"$name: annotated schema drifted: ${schema.simpleString}")
+      assert(gateJobs.get <= 1,
+        s"$name: an empty batch may run only the pin job, ran ${gateJobs.get}")
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+        s"$name: a persisted RDD survived the batch")
+    }
+    sc.addSparkListener(listener)
+    try {
+      emptyGate("percept", Seq("doc_id" -> LongType, "payload" -> BinaryType,
+        "dup_of" -> LongType, "hamming" -> IntegerType, "is_dup" -> BooleanType)) { onBatch =>
+        PerceptGate.gateBatchWithinAware("percept_gate_empty", onBatch)(
+          Seq.empty[(Long, Array[Byte])].toDF("doc_id", "payload"), 0L)
+      }
+      emptyGate("embed", Seq("vec_id" -> LongType, "embedding" -> ArrayType(FloatType, false),
+        "dup_of" -> LongType, "sim" -> DoubleType, "is_degenerate" -> BooleanType,
+        "is_dup" -> BooleanType)) { onBatch =>
+        EmbedGate.gateBatchWithinAware("embed_gate_empty", onBatch)(
+          Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"), 0L)
+      }
+    } finally sc.removeSparkListener(listener)
+    spark.catalog.refreshTable("percept_gate_empty")
+    spark.catalog.refreshTable("embed_gate_empty")
+    assert(spark.table("percept_gate_empty").select("doc_id").distinct().count() == 1L &&
+      spark.table("embed_gate_empty").count() == 1L, "empty batches must append nothing")
+  }
+
+  test("DedupGate: a doc delivered twice in one batch indexes one banded row set") {
+    import spark.implicits._
+    import graft.streaming.DedupGate
+    DedupGate.writeSigIndex(spark,
+      Seq(1L -> gateText("tw")).toDF("doc_id", "text"), "dedup_gate_twin", nBuckets = 8)
+    // at-least-once sources re-emit rows: the same (doc_id, text) twice
+    DedupGate.gateBatch("dedup_gate_twin", (df, _) => { df.collect(): Unit })(
+      Seq(40L -> gateText("twin"), 40L -> gateText("twin")).toDF("doc_id", "text"), 0L)
+    spark.catalog.refreshTable("dedup_gate_twin")
+    val rows = spark.table("dedup_gate_twin")
+      .filter(org.apache.spark.sql.functions.col("doc_id") === 40L).count()
+    assert(rows == DedupGate.NBands.toLong,
+      s"the twin rows must index once: $rows rows for ${DedupGate.NBands} bands")
   }
 
   test("DedupGate: sigIndexStaleness grows with appends and resets on rebuild") {
@@ -1246,14 +1331,14 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = ((0 until 5).map(i => (70L + i) -> axis(6, 1f + i)) :+ (30L -> axis(0, 5f)))
       .toDF("vec_id", "embedding")
     val seen = scala.collection.mutable.Map[Long, (Boolean, Option[Long])]()
-    var timings: graft.streaming.EmbedGateTimings = null
+    var timings: graft.streaming.GateStageTimings = null
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    def run(): Unit = EmbedGate.gateBatchWithinAwareTimed("embed_gate_within", (df, _) =>
+    def run(): Unit = EmbedGate.gateBatchWithinAware("embed_gate_within", (df, _) =>
       df.collect().foreach { r =>
         seen.put(r.getAs[Long]("vec_id"), (r.getAs[Boolean]("is_dup"),
           Option(r.getAs[java.lang.Long]("dup_of")).map(_.longValue())))
-      }, t => timings = t)(batch, 0L)
+      }, onTimings = t => timings = t)(batch, 0L)
     run()
     assert(seen(70L) == ((false, None)), s"min-id flood member must survive: ${seen.get(70L)}")
     (71L to 74L).foreach { i =>
@@ -1347,13 +1432,13 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(EmbedGate.withSigs(batch, nBits).select("bucket").distinct().count() == 1L,
       "fixture vacuous: the chain must share one LSH bucket")
     val seen = scala.collection.mutable.Map[Long, (Option[Long], Option[Double])]()
-    var timings: graft.streaming.EmbedGateTimings = null
-    EmbedGate.gateBatchWithinAwareTimed("embed_gate_chain", (df, _) =>
+    var timings: graft.streaming.GateStageTimings = null
+    EmbedGate.gateBatchWithinAware("embed_gate_chain", (df, _) =>
       df.collect().foreach { r =>
         seen.put(r.getAs[Long]("vec_id"),
           (Option(r.getAs[java.lang.Long]("dup_of")).map(_.longValue()),
             Option(r.getAs[java.lang.Double]("sim")).map(_.doubleValue())))
-      }, t => timings = t)(batch, 0L)
+      }, onTimings = t => timings = t)(batch, 0L)
     assert(seen(70L)._1.isEmpty, s"the min-id member survives: ${seen.get(70L)}")
     assert(seen(71L)._1.contains(70L), s"B flags to A: ${seen.get(71L)}")
     assert(seen(72L)._1.contains(70L),
@@ -1375,12 +1460,12 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(1L -> axis(0)).toDF("vec_id", "embedding"), "embed_gate_zero", nBuckets = 8)
     val batch = Seq(80L -> Array.fill(64)(0f), 81L -> axis(3)).toDF("vec_id", "embedding")
     val seen = scala.collection.mutable.Map[Long, (Boolean, Boolean)]()
-    var timings: graft.streaming.EmbedGateTimings = null
-    def run(): Unit = EmbedGate.gateBatchWithinAwareTimed("embed_gate_zero", (df, _) =>
+    var timings: graft.streaming.GateStageTimings = null
+    def run(): Unit = EmbedGate.gateBatchWithinAware("embed_gate_zero", (df, _) =>
       df.collect().foreach { r =>
         seen.put(r.getAs[Long]("vec_id"),
           (r.getAs[Boolean]("is_dup"), r.getAs[Boolean]("is_degenerate")))
-      }, t => timings = t)(batch, 0L)
+      }, onTimings = t => timings = t)(batch, 0L)
     run()
     assert(seen(80L) == ((false, true)),
       s"a zero vector is degenerate, not a dup: ${seen.get(80L)}")
@@ -1397,26 +1482,23 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("embed_gate_zero").count() == 2L)
   }
 
-  test("Survivors.resolve: chains chase to the terminal id, cycles stop without self-pointers, schema and values survive") {
-    import spark.implicits._
+  test("Survivors.chase: chains chase to the terminal id, cycles stop without self-pointers, values survive") {
+    import org.apache.spark.sql.Row
     import graft.streaming.Survivors
     // chain C(3)->B(2)->A(1), A unflagged; D(9) points at an at-rest id
-    val flags = Seq((3L, 2L, 0.97), (2L, 1L, 0.95), (9L, 100L, 0.91))
-      .toDF("doc_id", "dup_of", "score")
-    val r = Survivors.resolve(spark, flags, "doc_id")
-    assert(r.schema == flags.schema, "schema must be preserved exactly")
-    val got = r.collect().map(x => x.getLong(0) -> ((x.getLong(1), x.getDouble(2)))).toMap
+    val flags = Seq(Row(3L, 2L, 0.97), Row(2L, 1L, 0.95), Row(9L, 100L, 0.91))
+    val r = Survivors.chase(flags, 0, 1)
+    assert(r.forall(_.length == 3), "row arity must be preserved exactly")
+    val got = r.map(x => x.getLong(0) -> ((x.getLong(1), x.getDouble(2)))).toMap
     assert(got(3L) == ((1L, 0.97)), s"chain resolves, value column untouched: $got")
     assert(got(2L) == ((1L, 0.95)) && got(9L) == ((100L, 0.91)), s"$got")
     // replay 2-cycle 5<->9: the walk stops at the re-entry edge and
     // never emits dup_of == own id
-    val cyc = Survivors.resolve(spark,
-      Seq((5L, 9L, 1.0), (9L, 5L, 1.0)).toDF("doc_id", "dup_of", "score"), "doc_id")
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val cyc = Survivors.chase(Seq(Row(5L, 9L, 1.0), Row(9L, 5L, 1.0)), 0, 1)
+      .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(cyc(5L) != 5L && cyc(9L) != 9L, s"no self-pointers under cycles: $cyc")
-    // empty flags stay empty with the same schema
-    val e = Survivors.resolve(spark, flags.limit(0), "doc_id")
-    assert(e.schema == flags.schema && e.count() == 0)
+    // empty flags stay empty
+    assert(Survivors.chase(Nil, 0, 1).isEmpty)
   }
 
   test("PerceptGate: within-batch dup_of chains resolve to the surviving representative (r20)") {
@@ -1441,13 +1523,13 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(1L -> p5(rising.reverse)).toDF("doc_id", "payload"),
       "percept_gate_chain", nBuckets = 8)
     val seen = scala.collection.mutable.Map[Long, (Option[Long], Option[Int])]()
-    var timings: graft.streaming.PerceptGateTimings = null
-    PerceptGate.gateBatchWithinAwareTimed("percept_gate_chain", (df, _) =>
+    var timings: graft.streaming.GateStageTimings = null
+    PerceptGate.gateBatchWithinAware("percept_gate_chain", (df, _) =>
       df.collect().foreach { r =>
         seen.put(r.getAs[Long]("doc_id"),
           (Option(r.getAs[java.lang.Long]("dup_of")).map(_.longValue()),
             Option(r.getAs[java.lang.Integer]("hamming")).map(_.intValue())))
-      }, t => timings = t)(
+      }, onTimings = t => timings = t)(
       Seq(70L -> x, 71L -> y, 72L -> z).toDF("doc_id", "payload"), 0L)
     assert(seen(70L)._1.isEmpty, s"the min-id member survives: ${seen.get(70L)}")
     assert(seen(71L)._1.contains(70L), s"Y flags to X: ${seen.get(71L)}")

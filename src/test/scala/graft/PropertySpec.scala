@@ -365,4 +365,122 @@ class PropertySpec extends AnyFunSuite {
     assert(flagged > 0 && ties > 0 && multiBand > 0 && replays > 0,
       s"cases not covered: flagged=$flagged ties=$ties multiBand=$multiBand replays=$replays")
   }
+
+  test("PerceptGate.combinedFlags ≡ plain-Scala reference on randomized banded frames") {
+    import spark.implicits._
+    import graft.streaming.PerceptGate
+    val rnd = new Random(20261020L)
+    var ties, multiBand, replays, flagged = 0
+    for (_ <- 0 until 12) {
+      // each doc's code is one of three bases with up to 5 bits flipped,
+      // so hamming straddles MaxHamming and exact copies are common
+      val bases = Array.fill(3)(rnd.nextLong())
+      def code(): Long = (0 until rnd.nextInt(6))
+        .foldLeft(bases(rnd.nextInt(bases.length)))((c, _) => c ^ (1L << rnd.nextInt(64)))
+      // band keys from a 3-value domain: most same-band pairs collide,
+      // often in several bands at once
+      def rowsOf(id: Long, c: Long) =
+        (0 until PerceptGate.NBands).map(b => (id, b, rnd.nextInt(3).toLong, c))
+      val indexIds = (1L to (4 + rnd.nextInt(9)).toLong)
+      val index = indexIds.flatMap(id => rowsOf(id, code()))
+      // batch: fresh ids plus re-delivered index ids (same or new code)
+      val replayed = indexIds.filter(_ => rnd.nextDouble() < 0.3)
+      val batchIds = replayed ++ (100L until 100L + 3 + rnd.nextInt(8))
+      val batch = batchIds.flatMap { id =>
+        val c = if (indexIds.contains(id) && rnd.nextBoolean()) index.find(_._1 == id).get._4 else code()
+        rowsOf(id, c)
+      }
+      val ref = batchIds.flatMap { in =>
+        val pairs = batch.filter(_._1 == in).flatMap { case (_, band, bk, c) =>
+          (index.filter(r => r._1 != in) ++ batch.filter(r => r._1 < in))
+            .filter(r => r._2 == band && r._3 == bk)
+            .map(r => (r._1, java.lang.Long.bitCount(r._4 ^ c)))
+        }
+        if (pairs.groupBy(identity).exists(_._2.size > 1)) multiBand += 1
+        val verified = pairs.filter(_._2 <= PerceptGate.MaxHamming).distinct
+        if (verified.isEmpty) None
+        else {
+          val (dupOf, h) = verified.minBy { case (d, h) => (h, d) }
+          if (verified.count(_._2 == h) > 1) ties += 1
+          if (indexIds.contains(in)) replays += 1
+          Some((in, dupOf, h))
+        }
+      }.toSet
+      flagged += ref.size
+      val cols = Seq("doc_id", "band_id", "bk", "code")
+      val got = PerceptGate.combinedFlags(index.toDF(cols: _*), batch.toDF(cols: _*))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(got == ref, s"flags diverged\n got=$got\n ref=$ref")
+    }
+    assert(flagged > 0 && ties > 0 && multiBand > 0 && replays > 0,
+      s"cases not covered: flagged=$flagged ties=$ties multiBand=$multiBand replays=$replays")
+  }
+
+  test("EmbedGate.combinedFlags ≡ plain-Scala reference on randomized sig frames") {
+    import spark.implicits._
+    import graft.streaming.EmbedGate
+    val rnd = new Random(20261021L)
+    val threshold = 0.6
+    def dot(a: Array[Float], b: Array[Float]): Double = {
+      // FloatDot's evaluation order (see the checkAgainst property above)
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      s
+    }
+    def nrm(a: Array[Float]): Double = math.sqrt(dot(a, a))
+    var ties, multiHit, replays, flagged = 0
+    for (_ <- 0 until 12) {
+      // vectors: exact copies of three bases (equal cosine with every
+      // copy — ties), scaled copies, perturbed copies straddling the
+      // threshold, and ~10% zero vectors (the NaN guard's class)
+      val bases = Array.fill(3)(Array.fill(8)((rnd.nextDouble() * 2 - 1).toFloat))
+      def vec(): Array[Float] = {
+        val b = bases(rnd.nextInt(bases.length))
+        rnd.nextInt(10) match {
+          case 0 => Array.fill(8)(0f)
+          case 1 | 2 | 3 => b.clone()
+          case 4 | 5 => b.map(_ * (2 + rnd.nextInt(2)))
+          case _ => b.map(x => x + (rnd.nextDouble() - 0.5).toFloat)
+        }
+      }
+      // buckets from a 3-value domain: most pairs are candidates
+      def rowOf(id: Long, v: Array[Float]) = (id, v, nrm(v), rnd.nextInt(3).toLong)
+      val indexIds = (1L to (4 + rnd.nextInt(9)).toLong)
+      val index = indexIds.map(id => rowOf(id, vec()))
+      // batch: fresh ids plus re-delivered index ids (same or new vector)
+      val replayed = indexIds.filter(_ => rnd.nextDouble() < 0.3)
+      val batchIds = replayed ++ (100L until 100L + 3 + rnd.nextInt(8))
+      val batch = batchIds.map { id =>
+        if (indexIds.contains(id) && rnd.nextBoolean()) index.find(_._1 == id).get
+        else rowOf(id, vec())
+      }
+      val ref = batch.filter(_._3 > 0).flatMap { case (in, v, n, bucket) =>
+        // a re-delivered id is a candidate twice: at rest and in the batch
+        val cands = (index.filter(r => r._1 != in) ++ batch.filter(r => r._1 < in))
+          .filter(r => r._4 == bucket && r._3 > 0)
+          .map(r => (r._1, dot(r._2, v) / (r._3 * n)))
+        if (cands.map(_._1).distinct.size < cands.size) multiHit += 1
+        val verified = cands.filter(_._2 >= threshold).distinct
+        if (verified.isEmpty) None
+        else {
+          val (dupOf, sim) = verified.minBy { case (d, s) => (-s, d) }
+          if (verified.count(_._2 == sim) > 1) ties += 1
+          if (indexIds.contains(in)) replays += 1
+          Some((in, dupOf, sim))
+        }
+      }.toSet
+      flagged += ref.size
+      val cols = Seq("vec_id", "embedding", "nrm", "bucket")
+      val got = EmbedGate.combinedFlags(index.toDF(cols: _*), batch.toDF(cols: _*), threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got.map(t => (t._1, t._2)) == ref.map(t => (t._1, t._2)),
+        s"flag pairs diverged\n got=$got\n ref=$ref")
+      val refSim = ref.map(t => (t._1, t._2) -> t._3).toMap
+      got.foreach { case (b, d, s) =>
+        assert(math.abs(s - refSim((b, d))) < 1e-12, s"sim diverged for ($b,$d)")
+      }
+    }
+    assert(flagged > 0 && ties > 0 && multiHit > 0 && replays > 0,
+      s"cases not covered: flagged=$flagged ties=$ties multiHit=$multiHit replays=$replays")
+  }
 }

@@ -1707,7 +1707,7 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String, java.sql.Timestamp)](enc, spark.sqlContext)
     val checkpoint = Files.createTempDirectory("graft-spec-pcpt-ckpt").toString
     val acc = new ConcurrentLinkedQueue[(Long, String, Option[Long], Option[Int], Option[String])]()
-    val timings = new ConcurrentLinkedQueue[graft.streaming.PerceptGateTimings]()
+    val timings = new ConcurrentLinkedQueue[graft.streaming.GateStageTimings]()
     def at(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     var lastStates: Seq[Int] = Nil
     def phase(rows: Seq[(Long, String, java.sql.Timestamp)]): Unit = {
@@ -1883,7 +1883,7 @@ class StreamingSpec extends AnyFunSuite {
       enc, spark.sqlContext)
     val checkpoint = Files.createTempDirectory("graft-spec-embp-ckpt").toString
     val acc = new ConcurrentLinkedQueue[(Long, String, Option[Long], Option[Double], Option[String])]()
-    val timings = new ConcurrentLinkedQueue[graft.streaming.EmbedGateTimings]()
+    val timings = new ConcurrentLinkedQueue[graft.streaming.GateStageTimings]()
     def at(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     def phase(rows: Seq[(Long, String, java.sql.Timestamp, Option[Array[Float]])]): Unit = {
       input.addData(rows)
