@@ -207,6 +207,9 @@ object GateBench {
 
     def f4(d: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, d)
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    // one gate stage's median over a gate's per-batch timings (0 if none)
+    def stageMed(ts: Seq[GateStageTimings])(f: GateStageTimings => Double): Double =
+      if (ts.isEmpty) 0.0 else median(ts.map(f))
     // raw per-batch walls for each epilogue: medians over 6 batches hide
     // the variance structure (a single GC/host stall can move a median
     // 30-50% between runs — the r16 production-wall ambiguity); the raw
@@ -322,7 +325,7 @@ object GateBench {
     val ckpt3 = Files.createTempDirectory("graft-gate-bench-dec-ckpt").toString
     val contamCounts = new java.util.concurrent.atomic.AtomicLong(0L)
     val spanTimings =
-      new java.util.concurrent.ConcurrentLinkedQueue[graft.streaming.SpanGateTimings]()
+      new java.util.concurrent.ConcurrentLinkedQueue[GateStageTimings]()
     val q3 = StreamMerge.gatedIngestPipelineDecontam(
       input3.toDS().toDF("doc_id", "text", "ts"), baseIdx, gateTable3, evalTable,
       (df: DataFrame, _: Long) => {
@@ -352,17 +355,15 @@ object GateBench {
     q3.stop()
     val decMed = median(dWalls.toSeq)
     val spanT = spanTimings.asScala.toVector
-    def medOf(f: graft.streaming.SpanGateTimings => Double): Double =
-      if (spanT.isEmpty) 0.0 else median(spanT.map(f))
     val decontam =
       s"""{"batches":$HygieneBatches,"warmup_batches":$HygWarmup,""" +
         s""""median_wall":${f4(decMed)},"walls":${wallsJson(dWalls.toSeq)},""" +
         s""""base_win${HygWarmup}to${HygWarmup + HygieneBatches}_median_wall":${f4(baseEarlyMed)},""" +
         s""""overhead_ratio":${f4(decMed / baseEarlyMed)},""" +
         s""""contaminated_total":${contamCounts.get()},""" +
-        s""""span_select_med":${f4(medOf(_.selectSec))},""" +
-        s""""span_probe_med":${f4(medOf(_.probeSec))},""" +
-        s""""span_sink_med":${f4(medOf(_.sinkSec))},""" +
+        s""""span_select_med":${f4(stageMed(spanT)(_.sigSec))},""" +
+        s""""span_probe_med":${f4(stageMed(spanT)(_.probeSec))},""" +
+        s""""span_sink_med":${f4(stageMed(spanT)(_.sinkSec))},""" +
         s""""warm_jvm_bias":"epilogue runs in the baseline-warmed JVM; ratio is a mild underestimate",""" +
         // the decontam stream processes batchRows(b) PLUS 4 injected
         // contaminated docs per batch while the baseline windows ran
@@ -389,7 +390,7 @@ object GateBench {
     val scrubbedTotal = new java.util.concurrent.atomic.AtomicLong(0L)
     val guttedTotal = new java.util.concurrent.atomic.AtomicLong(0L)
     val scrubTimings =
-      new java.util.concurrent.ConcurrentLinkedQueue[graft.streaming.SpanGateTimings]()
+      new java.util.concurrent.ConcurrentLinkedQueue[GateStageTimings]()
     val scrubGateTimings =
       new java.util.concurrent.ConcurrentLinkedQueue[GateStageTimings]()
     val q4 = StreamMerge.gatedIngestPipelineDecontamScrub(
@@ -426,7 +427,7 @@ object GateBench {
     val ckpt5 = Files.createTempDirectory("graft-gate-bench-prod-ckpt").toString
     val prodKept = new java.util.concurrent.atomic.AtomicLong(0L)
     val prodTimings =
-      new java.util.concurrent.ConcurrentLinkedQueue[graft.streaming.SpanGateTimings]()
+      new java.util.concurrent.ConcurrentLinkedQueue[GateStageTimings]()
     val prodGateTimings =
       new java.util.concurrent.ConcurrentLinkedQueue[GateStageTimings]()
     val prodLmSecs =
@@ -510,8 +511,6 @@ object GateBench {
     q5.stop()
     val scrubMed = median(sWalls.toSeq)
     val scrubT = dropWarm(scrubTimings.asScala.toVector, "scrubSpan")(_.batchId)
-    def scrubMedOf(f: graft.streaming.SpanGateTimings => Double): Double =
-      if (scrubT.isEmpty) 0.0 else median(scrubT.map(f))
     val scrub =
       s"""{"batches":$HygieneBatches,"warmup_batches":$HygWarmup,""" +
         s""""median_wall":${f4(scrubMed)},"walls":${wallsJson(sWalls.toSeq)},""" +
@@ -521,9 +520,9 @@ object GateBench {
         s""""overhead_ratio":${f4(scrubMed / baseEarlyMed)},""" +
         s""""scrubbed_total":${scrubbedTotal.get()},""" +
         s""""gutted_total":${guttedTotal.get()},""" +
-        s""""span_select_med":${f4(scrubMedOf(_.selectSec))},""" +
-        s""""span_probe_med":${f4(scrubMedOf(_.probeSec))},""" +
-        s""""span_sink_med":${f4(scrubMedOf(_.sinkSec))},""" +
+        s""""span_select_med":${f4(stageMed(scrubT)(_.sigSec))},""" +
+        s""""span_probe_med":${f4(stageMed(scrubT)(_.probeSec))},""" +
+        s""""span_sink_med":${f4(stageMed(scrubT)(_.sinkSec))},""" +
         s""""warm_jvm_bias":"windows run interleaved with the production stream in the baseline- and flag-warmed JVM; ratios vs earlier blocks are mild underestimates",""" +
         s""""input_bias":"+4 contaminated docs/batch vs the baseline windows (same as the flag epilogue, so scrub_vs_flag_ratio carries no input bias)"}"""
 
@@ -539,42 +538,32 @@ object GateBench {
     // cost (onLmSec); dual-sign rides the signature append (prod appends
     // novel + resigned, scrub novel only — both pipelines' appendSec
     // wraps appendBandedIdempotent alone, so the delta is clean); PII is
-    // fused into the DOCUMENT sink, which is SpanGateTimings.sinkSec on
-    // both sides. GateStageTimings' sig/probe/sink are NOT cross-
+    // fused into the DOCUMENT sink, which is the span timings' sinkSec on
+    // both sides. The near-dup gate's sig/probe/sink are NOT cross-
     // pipeline comparable and are deliberately excluded: in the scrub
     // chain gateDecisions' sinkSec wraps the ENTIRE span body
-    // (select+probe+surgery+sink) and its sigSec includes evaluating the
-    // un-pinned upstream plan, where productionBatch pins upstream into
-    // the LM bucket first — comparing those buckets mis-attributed the
-    // premium in the first r17 record (review finding).
+    // (pin+select+probe+surgery+sink) — comparing those buckets
+    // mis-attributed the premium in the first r17 record (review
+    // finding).
     def qMed(q: java.util.concurrent.ConcurrentLinkedQueue[GateStageTimings],
-        key: String, f: GateStageTimings => Double): Double = {
-      val v = dropWarm(q.asScala.toVector, key)(_.batchId)
-      if (v.isEmpty) 0.0 else median(v.map(f))
-    }
+        key: String, f: GateStageTimings => Double): Double =
+      stageMed(dropWarm(q.asScala.toVector, key)(_.batchId))(f)
     val lmMed = {
       val v = dropWarm(prodLmSecs.asScala.toVector, "prodLm")(_._1).map(_._2)
       if (v.isEmpty) 0.0 else median(v)
     }
-    val scrubSpanT = scrubT
     val prodSpanT = dropWarm(prodTimings.asScala.toVector, "prodSpan")(_.batchId)
-    def spanMed(v: Vector[graft.streaming.SpanGateTimings],
-        f: graft.streaming.SpanGateTimings => Double): Double =
-      if (v.isEmpty) 0.0 else median(v.map(f))
     val decomposition =
       s"""{"lm_pin_med":${f4(lmMed)},""" +
         s""""append_med_prod":${f4(qMed(prodGateTimings, "prodGate", _.appendSec))},""" +
         s""""append_med_scrub":${f4(qMed(scrubGateTimings, "scrubGate", _.appendSec))},""" +
-        s""""doc_sink_med_prod":${f4(spanMed(prodSpanT, _.sinkSec))},""" +
-        s""""doc_sink_med_scrub":${f4(spanMed(scrubSpanT, _.sinkSec))},""" +
-        s""""span_select_med_prod":${f4(spanMed(prodSpanT, _.selectSec))},""" +
-        s""""span_select_med_scrub":${f4(spanMed(scrubSpanT, _.selectSec))},""" +
-        s""""span_probe_med_prod":${f4(spanMed(prodSpanT, _.probeSec))},""" +
-        s""""span_probe_med_scrub":${f4(spanMed(scrubSpanT, _.probeSec))},""" +
+        s""""doc_sink_med_prod":${f4(stageMed(prodSpanT)(_.sinkSec))},""" +
+        s""""doc_sink_med_scrub":${f4(stageMed(scrubT)(_.sinkSec))},""" +
+        s""""span_select_med_prod":${f4(stageMed(prodSpanT)(_.sigSec))},""" +
+        s""""span_select_med_scrub":${f4(stageMed(scrubT)(_.sigSec))},""" +
+        s""""span_probe_med_prod":${f4(stageMed(prodSpanT)(_.probeSec))},""" +
+        s""""span_probe_med_scrub":${f4(stageMed(scrubT)(_.probeSec))},""" +
         s""""read":"added-gate cost = lm_pin_med (LM) + (append_prod - append_scrub) (dual-sign) + (doc_sink_prod - doc_sink_scrub) (PII on keep rows); span select/probe meds are the shared work and should match"}"""
-    val prodT = prodSpanT
-    def prodMedOf(f: graft.streaming.SpanGateTimings => Double): Double =
-      if (prodT.isEmpty) 0.0 else median(prodT.map(f))
     val production =
       s"""{"batches":$HygieneBatches,"warmup_batches":$HygWarmup,""" +
         s""""median_wall":${f4(prodMed)},"walls":${wallsJson(pWalls.toSeq)},""" +
@@ -586,9 +575,9 @@ object GateBench {
         s""""prod_vs_scrub_pair_median":${f4(pairMed)},""" +
         s""""decomposition":$decomposition,""" +
         s""""kept_total":${prodKept.get()},""" +
-        s""""span_select_med":${f4(prodMedOf(_.selectSec))},""" +
-        s""""span_probe_med":${f4(prodMedOf(_.probeSec))},""" +
-        s""""span_sink_med":${f4(prodMedOf(_.sinkSec))},""" +
+        s""""span_select_med":${f4(stageMed(prodSpanT)(_.sigSec))},""" +
+        s""""span_probe_med":${f4(stageMed(prodSpanT)(_.probeSec))},""" +
+        s""""span_sink_med":${f4(stageMed(prodSpanT)(_.sinkSec))},""" +
         s""""methodology":"scrub and production windows INTERLEAVED per batch, order alternating — pair ratios cancel host bursts (r16 task 2); read prod_vs_scrub_pair_median",""" +
         s""""input_bias":"+4 contaminated docs/batch vs the baseline windows; same volume as the flag/scrub epilogues"}"""
 
@@ -669,8 +658,6 @@ object GateBench {
     val ppMed = median(ppWalls.toSeq)
     val pcPairRatios = pcWalls.zip(ppWalls).map { case (c, p) => c / p }
     val perceptT = dropWarm(perceptTimings.asScala.toVector, "percept")(_.batchId)
-    def pMedOf(f: graft.streaming.GateStageTimings => Double): Double =
-      if (perceptT.isEmpty) 0.0 else median(perceptT.map(f))
     spark.catalog.refreshTable(perceptTable)
     val perceptIdxFinal = spark.table(perceptTable).select("doc_id").distinct().count()
     val percept =
@@ -679,8 +666,8 @@ object GateBench {
         s""""plain_median_wall":${f4(ppMed)},"plain_walls":${wallsJson(ppWalls.toSeq)},""" +
         s""""percept_vs_plain_pair_ratios":${wallsJson(pcPairRatios.toSeq)},""" +
         s""""percept_vs_plain_pair_median":${f4(median(pcPairRatios.toSeq))},""" +
-        s""""code_med":${f4(pMedOf(_.sigSec))},"probe_med":${f4(pMedOf(_.probeSec))},""" +
-        s""""append_med":${f4(pMedOf(_.appendSec))},""" +
+        s""""code_med":${f4(stageMed(perceptT)(_.sigSec))},"probe_med":${f4(stageMed(perceptT)(_.probeSec))},""" +
+        s""""append_med":${f4(stageMed(perceptT)(_.appendSec))},""" +
         s""""appended_total":${perceptT.map(_.appended).sum},""" +
         s""""percept_dups_total":${perceptDups.get()},""" +
         s""""index_docs_final":$perceptIdxFinal,""" +
@@ -798,8 +785,6 @@ object GateBench {
     q9.stop()
     val egPairRatios = egWalls.zip(epWalls).map { case (g, p) => g / p }
     val embT = dropWarm(embTimings.asScala.toVector, "embed")(_.batchId)
-    def eMedOf(f: graft.streaming.GateStageTimings => Double): Double =
-      if (embT.isEmpty) 0.0 else median(embT.map(f))
     spark.catalog.refreshTable(egTable)
     spark.catalog.refreshTable(epTable)
     val egRows = spark.table(egTable).count()
@@ -810,8 +795,8 @@ object GateBench {
         s""""plain_median_wall":${f4(median(epWalls.toSeq))},"plain_walls":${wallsJson(epWalls.toSeq)},""" +
         s""""gated_vs_plain_pair_ratios":${wallsJson(egPairRatios.toSeq)},""" +
         s""""gated_vs_plain_pair_median":${f4(median(egPairRatios.toSeq))},""" +
-        s""""sig_med":${f4(eMedOf(_.sigSec))},"probe_med":${f4(eMedOf(_.probeSec))},""" +
-        s""""append_med":${f4(eMedOf(_.appendSec))},""" +
+        s""""sig_med":${f4(stageMed(embT)(_.sigSec))},"probe_med":${f4(stageMed(embT)(_.probeSec))},""" +
+        s""""append_med":${f4(stageMed(embT)(_.appendSec))},""" +
         s""""appended_total":${embT.map(_.appended).sum},""" +
         s""""flagged_total":${embFlagged.get()},""" +
         s""""index_rows_gated":$egRows,"index_rows_plain":$epRows,""" +

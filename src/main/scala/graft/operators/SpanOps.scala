@@ -711,7 +711,7 @@ object SpanOps {
     // upstream (quality regex + URL gate + md5 + LM bitsum + minhash
     // banding). Checkpoint each stage once, exactly as the STREAM chain
     // this mirrors pins its per-batch frames between gates
-    // (StreamMerge.pinned): one evaluation per stage, blocks read by
+    // (NearDup.pin): one evaluation per stage, blocks read by
     // both consumers. Decision identity is storage-independent
     // (StreamingSpec pins it against the stream chain).
     val scored = WebOps.withDomainGate(TextOps.withQualityScore(raw))
@@ -739,16 +739,8 @@ object SpanOps {
         when(col("dup_of").isNotNull, "near_dup").otherwise(col("decision")))
       .localCheckpoint()
     val still = deduped.filter(col("decision") === "insert").select("doc_id", "text")
-    val perDoc = crossSpansWinnowOf(still, evalDocs)
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("span_start"), col("span_end")))).as("sp"),
-        count(lit(1)).as("n_leak_spans"),
-        sum("span_len").as("leak_chars"),
-        min(struct(col("first_eval"), col("first_eval_pos"))).as("fe"))
-      .select(col("doc_id"), col("sp"), col("n_leak_spans"), col("leak_chars"),
-        col("fe.first_eval").as("first_eval"),
-        col("fe.first_eval_pos").as("first_eval_pos"))
-    val scrubbed = SpanGate.applyScrub(deduped, perDoc, minTokens)
+    val scrubbed = SpanGate.applyScrub(deduped,
+      leakVerdictsOf(crossSpansWinnowOf(still, evalDocs)), minTokens)
     val keep = col("decision").isin("insert", "scrubbed")
     HygieneOps.withPiiScrub(scrubbed.withColumn("txt",
         when(keep, col("text")).otherwise(lit(""))))
@@ -876,6 +868,25 @@ object SpanOps {
       fe.getField("first_eval") -> "first_eval",
       fe.getField("first_eval_pos") -> "first_eval_pos"))
   }
+
+  /** Per-doc leak verdicts of a leak-span relation (the
+    * [[crossSpansWinnowOf]] shape): one row per leaking doc — `sp`, its
+    * sorted `(span_start, span_end)` list (the input [[cutSpansFold]]
+    * walks), `n_leak_spans`, `leak_chars` and the lexicographically
+    * earliest implicated eval `(first_eval, first_eval_pos)`. Shared by
+    * the batch curation chain and every streaming span gate
+    * ([[graft.streaming.SpanGate]]), so their decisions agree by
+    * construction.
+    */
+  private[graft] def leakVerdictsOf(spans: DataFrame): DataFrame =
+    spans.groupBy("doc_id")
+      .agg(sort_array(collect_list(struct(col("span_start"), col("span_end")))).as("sp"),
+        count(lit(1)).as("n_leak_spans"),
+        sum("span_len").as("leak_chars"),
+        min(struct(col("first_eval"), col("first_eval_pos"))).as("fe"))
+      .select(col("doc_id"), col("sp"), col("n_leak_spans"), col("leak_chars"),
+        col("fe.first_eval").as("first_eval"),
+        col("fe.first_eval_pos").as("first_eval_pos"))
 
   private def decontaminateSpansWinnow(spark: SparkSession, sfDir: String): DataFrame = {
     val d = planted(docs(spark, sfDir))

@@ -132,7 +132,7 @@ object DedupGate {
   def flagDuplicates(spark: SparkSession, batchDocs: DataFrame, table: String): DataFrame = {
     require(spark eq batchDocs.sparkSession,
       "flagDuplicates must run on the batch frame's own session (foreachBatch hands a clone)")
-    NearDup.flagLazily(check(spark, table), batchDocs)
+    NearDup.flagLazily(check(spark, table, withinBatch = false), batchDocs)
   }
 
   /** Ceiling on the number of distinct band-hash literals a batch probe
@@ -174,14 +174,17 @@ object DedupGate {
   /** This gate's [[NearDup.Check]] over `table` for one trigger (the
     * index refreshed and validated): `(doc_id, text)` rows minhash into
     * banded signatures, the probe fails fast past the probe-literal
-    * bound, unflagged signatures [[NearDup.appendBanded]].
+    * bound (`withinBatch`: also against the batch's siblings), unflagged
+    * signatures [[NearDup.appendBanded]].
     */
-  private[streaming] def check(spark: SparkSession, table: String): NearDup.Check = {
+  private[streaming] def check(spark: SparkSession, table: String,
+      withinBatch: Boolean): NearDup.Check = {
     spark.catalog.refreshTable(table)
     validateMeta(spark, table)
     val (bound, message) = probeBound(spark)
     NearDup.Check(table, "bh", NBands, bound, IndexProbe.FailFast(message),
-      rows => DedupOps.bandedSigs(rows.select("doc_id", "text")), verified,
+      rows => DedupOps.bandedSigs(rows.select("doc_id", "text")),
+      NearDup.verifiedProbe(verified, withinBatch),
       (rows, schema) => NearDup.appendBanded(spark, table, rows, schema))
   }
 
@@ -214,7 +217,7 @@ object DedupGate {
   private def gateCore(table: String, withinBatch: Boolean, decisions: Boolean,
       onBatch: (DataFrame, Long) => Unit,
       onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit =
-    NearDup.gate(check(batch.sparkSession, table), FlagSchema, decisions, withinBatch,
+    NearDup.gate(check(batch.sparkSession, table, withinBatch), FlagSchema, decisions,
       out =>
         if (decisions) out.withColumn("decision",
           when(col("dup_of").isNotNull, "near_dup").otherwise(col("decision")))

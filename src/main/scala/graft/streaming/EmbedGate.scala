@@ -171,27 +171,29 @@ object EmbedGate {
       threshold: Double = DefaultThreshold): DataFrame = {
     require(spark eq vectors.sparkSession,
       "flagDuplicates must run on the batch frame's own session (foreachBatch hands a clone)")
-    NearDup.flagLazily(check(spark, table, threshold), vectors)
+    NearDup.flagLazily(check(spark, table, threshold, withinBatch = false), vectors)
   }
 
   /** The flag rows' schema (the [[checkAgainst]] shape). */
   private[streaming] val FlagSchema = StructType.fromDDL("vec_id BIGINT, dup_of BIGINT, sim DOUBLE")
 
   /** This gate's [[NearDup.Check]] over `table` for one trigger: rows
-    * sign with the index's own nBits, and unflagged novel vectors index
-    * through the SAME [[VectorOps.appendToLshIndexIdempotent]] the
-    * ungated maintainer uses (one artifact, two consumers) — except
-    * zero-norm ones (see the degenerate policy above).
+    * sign with the index's own nBits — zero-norm ones are not signed, so
+    * they neither flag nor index (see the degenerate policy above) —
+    * the probe checks `withinBatch` siblings too when asked, and
+    * unflagged novel vectors index through the SAME
+    * [[VectorOps.appendToLshIndexIdempotent]] the ungated maintainer
+    * uses (one artifact, two consumers).
     */
   private[streaming] def check(spark: SparkSession, table: String,
-      threshold: Double): NearDup.Check = {
+      threshold: Double, withinBatch: Boolean): NearDup.Check = {
     spark.catalog.refreshTable(table)
     val nBits = requireNBits(spark, table)
     NearDup.Check(table, "bucket", 1, DefaultMaxProbeLiterals, IndexProbe.BroadcastSemiJoin,
-      rows => withSigs(rows, nBits), verified(threshold),
+      rows => withSigs(rows, nBits).filter(col("nrm") > 0),
+      NearDup.verifiedProbe(verified(threshold), withinBatch),
       (rows, schema) => VectorOps.appendToLshIndexIdempotent(spark,
-        spark.createDataFrame(rows.asJava, schema).filter(col("nrm") > 0)
-          .select("vec_id", "embedding"),
+        spark.createDataFrame(rows.asJava, schema).select("vec_id", "embedding"),
         table, nBits))
   }
 
@@ -224,8 +226,8 @@ object EmbedGate {
   private def gateCore(table: String, withinBatch: Boolean,
       onBatch: (DataFrame, Long) => Unit, threshold: Double,
       onTimings: GateStageTimings => Unit)(batch: DataFrame, batchId: Long): Unit =
-    NearDup.gate(check(batch.sparkSession, table, threshold), FlagSchema,
-      decisions = false, withinBatch,
+    NearDup.gate(check(batch.sparkSession, table, threshold, withinBatch), FlagSchema,
+      decisions = false,
       _.withColumn("is_degenerate",
           sqrt(float_dot(col("embedding"), col("embedding"))) === 0)
         .withColumn("is_dup", col("dup_of").isNotNull),

@@ -54,6 +54,16 @@ private[graft] object IndexProbe {
     */
   final case class PlainScanUpTo(hardCap: Int, message: String) extends DenseProbePolicy
 
+  /** The distinct-key bound `dense` enforces, with its failure message:
+    * [[FailFast]] at the literal cap, [[PlainScanUpTo]] at its hard cap,
+    * [[BroadcastSemiJoin]] none.
+    */
+  def keyBound(dense: DenseProbePolicy, literalCap: Int): Option[(Int, String)] = dense match {
+    case FailFast(msg) => Some((literalCap, msg))
+    case PlainScanUpTo(hardCap, msg) => Some((hardCap, msg))
+    case BroadcastSemiJoin => None
+  }
+
   /** A gate's probe-literal bound from session conf (`confKey`), falling
     * back to `default` — parse and positivity failures name the key.
     */
@@ -79,10 +89,7 @@ private[graft] object IndexProbe {
   def prunedSlice(spark: SparkSession, table: String, keyed: DataFrame,
       keyCol: String, literalCap: Int, dense: DenseProbePolicy): DataFrame = {
     require(literalCap > 0, s"literalCap must be positive, got $literalCap")
-    val collectCap = dense match {
-      case PlainScanUpTo(hardCap, _) => math.max(literalCap, hardCap)
-      case _ => literalCap
-    }
+    val collectCap = math.max(literalCap, keyBound(dense, literalCap).fold(0)(_._1))
     val keys = keyed.select(keyCol).distinct()
       .limit(collectCap + 1).collect().map(_.getLong(0))
     sliceOf(spark, table, keyCol, keys.toIndexedSeq, literalCap, dense,
@@ -95,12 +102,8 @@ private[graft] object IndexProbe {
     */
   def sliceOf(spark: SparkSession, table: String, keyCol: String, keys: Seq[Long],
       literalCap: Int, dense: DenseProbePolicy, allKeys: => DataFrame): DataFrame = {
-    dense match {
-      case FailFast(msg) if keys.length > literalCap =>
-        throw new IllegalArgumentException(msg)
-      case PlainScanUpTo(hardCap, msg) if keys.length > hardCap =>
-        throw new IllegalArgumentException(msg)
-      case _ => ()
+    keyBound(dense, literalCap).foreach { case (bound, msg) =>
+      if (keys.length > bound) throw new IllegalArgumentException(msg)
     }
     if (keys.isEmpty) spark.table(table).limit(0)
     else if (keys.length <= literalCap)

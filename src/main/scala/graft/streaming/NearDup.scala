@@ -12,18 +12,22 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.{IndexEpoch, VectorOps}
 
 /** Wall-clock seconds per gate stage for ONE micro-batch — the record
-  * of every near-dup gate ([[DedupGate]], [[PerceptGate]], [[EmbedGate]]
-  * and the production chain's three near-dup stages; `GateBench` and
+  * of every streaming gate: the near-dup gates ([[DedupGate]],
+  * [[PerceptGate]], [[EmbedGate]]), the span-decontamination gate
+  * ([[SpanGate]]) and the production chain's stages (`GateBench` and
   * perfbench read it). Stages map 1:1 onto [[NearDup]]'s per-trigger
   * body, each ended by an eager action:
-  *   - `sigSec`: the gate's signing pass into a driver-local relation;
+  *   - `sigSec`: the gate's signing pass into a driver-local relation
+  *     (for the span gate, the winnow selection of the batch's sites);
   *   - `probeSec`: the file-pruned index probe + within-batch check +
   *     verification, flags collected — the number that must stay FLAT as
   *     the index grows, or the bucketed-probe claim is wrong;
   *   - `sinkSec`: the caller's `onBatch` over the PINNED batch rows (0
   *     for the production chain's raster and embedding stages, whose
   *     sink is the text gate's);
-  *   - `appendSec`: the idempotent append of unflagged signatures.
+  *   - `appendSec`: the idempotent append of unflagged signatures (for
+  *     the span gate a no-op, ~0: its eval index never appends from a
+  *     batch; 0 in the production chain's span stage).
   * `appended` is the number of docs indexed. A trigger with nothing to
   * check (every watermark no-data trigger) reports zero sig, probe and
   * append time.
@@ -32,11 +36,11 @@ final case class GateStageTimings(
     batchId: Long, sigSec: Double, probeSec: Double,
     sinkSec: Double, appendSec: Double, appended: Long)
 
-/** The one near-dup gate core: text minhash ([[DedupGate]]), raster dHash
-  * ([[PerceptGate]]) and embedding cosine ([[EmbedGate]]) run their
-  * foreachBatch bodies ([[gate]]) and the production chain's stages
-  * ([[run]]) through it, each supplying only what differs as a
-  * [[Check]]. Per trigger:
+/** The one streaming gate core: text minhash ([[DedupGate]]), raster
+  * dHash ([[PerceptGate]]), embedding cosine ([[EmbedGate]]) and eval
+  * span decontamination ([[SpanGate]]) run their foreachBatch bodies
+  * ([[gate]]) and the production chain's stages ([[run]]) through it,
+  * each supplying only what differs as a [[Check]]. Per trigger:
   *   - the batch plan evaluates ONCE: a tracked checkpoint pins it and
   *     counts the rows to check in the same job — in a stream, the
   *     trigger's one pass over its stateful operators, so their state
@@ -44,8 +48,8 @@ final case class GateStageTimings(
   *     no-data trigger) no sign, probe or append job runs;
   *   - the rows to check are signed ONCE into a driver-local relation;
   *   - the probe reads only the index rows sharing a bucket key with the
-  *     batch ([[IndexProbe.sliceOf]]), verifies, and brings the flags
-  *     back to the driver;
+  *     batch ([[IndexProbe.sliceOf]]), runs the gate's [[Probe]], and
+  *     brings the flags back to the driver;
   *   - the unflagged signatures append from the driver.
   * Every pinned block frees before the batch returns.
   */
@@ -101,64 +105,82 @@ private[streaming] object NearDup {
       batch,
       col("rest_id") < col("in_id") || (col("at_rest") && col("rest_id") > col("in_id")))
 
+  /** A gate's probe: `flags` maps the index slice and the driver-local
+    * batch signature rows to flag rows, the Long id first, one per
+    * flagged id. `chained` when the batch also checks against ITSELF, so
+    * a flag's `dup_of` (second column) may point at a flagged sibling and
+    * is chased to the survivor on the driver ([[Survivors.chase]]).
+    */
+  final case class Probe(flags: (DataFrame, DataFrame) => DataFrame, chained: Boolean)
+
+  /** A near-dup gate's probe over its verified score: against the index
+    * only, or — `withinBatch` — also against the batch's smaller-id
+    * siblings ([[combined]]).
+    */
+  def verifiedProbe(verified: Verified, withinBatch: Boolean): Probe =
+    if (withinBatch) Probe(combined(verified, _, _), chained = true)
+    else Probe(againstIndex(verified, _, _), chained = false)
+
   /** One gate's side of the check, built for one trigger over the
     * batch's session once something is to be checked (each gate's
     * `check` refreshes and validates the index):
     *   - `sign` maps the rows to check to signature rows, the Long id
     *     first, at most `keysPerRow` Long `keyCol` keys per row;
     *   - `literalCap`/`dense` is the probe policy ([[IndexProbe]]);
-    *   - `verified` is the gate's score;
+    *   - `probe` turns the slice and the signatures into flags;
     *   - `append` indexes unflagged signature rows and returns the
     *     number of docs appended.
     */
   final case class Check(
       table: String, keyCol: String, keysPerRow: Int,
       literalCap: Int, dense: IndexProbe.DenseProbePolicy,
-      sign: DataFrame => DataFrame, verified: Verified,
+      sign: DataFrame => DataFrame, probe: Probe,
       append: (Seq[Row], StructType) => Long)
 
-  /** A check's outcome on the driver: flag rows (chased when
-    * within-aware), the batch's signature rows, and the stage walls.
+  /** A check's outcome on the driver: flag rows (chased when the probe
+    * is chained), the batch's signature rows, and the stage walls.
     */
   final case class Checked(check: Check, flags: Seq[Row], sigs: Seq[Row],
       sigSchema: StructType, sigSec: Double, probeSec: Double) {
     /** Appends the signatures of the checked rows that did not flag
       * (plus `extra` rows of the same schema); returns the docs appended.
+      * With no row left to index the gate's append does not run.
       */
     def append(extra: Seq[Row] = Nil): Long = {
       val flagged = flags.map(_.getLong(0)).toSet
-      check.append(sigs.filterNot(r => flagged(r.getLong(0))) ++ extra, sigSchema)
+      val rows = sigs.filterNot(r => flagged(r.getLong(0))) ++ extra
+      if (rows.isEmpty) 0L else check.append(rows, sigSchema)
     }
   }
 
   /** The gates' lazy `flagDuplicates` form (plan inspection / one-shot
     * use): `rows` signed, the index sliced by their keys
-    * ([[IndexProbe.prunedSlice]] under the gate's policy), verified
-    * against the index only. The signatures evaluate twice (key collect +
-    * verify join), bounded by batch size; the gate bodies sign once.
+    * ([[IndexProbe.prunedSlice]] under the gate's policy), probed by a
+    * check built against the index only. The signatures evaluate twice
+    * (key collect + probe join), bounded by batch size; the gate bodies
+    * sign once.
     */
   def flagLazily(c: Check, rows: DataFrame): DataFrame = {
     val signed = c.sign(rows)
-    againstIndex(c.verified, IndexProbe.prunedSlice(
+    c.probe.flags(IndexProbe.prunedSlice(
       rows.sparkSession, c.table, signed, c.keyCol, c.literalCap, c.dense), signed)
   }
 
-  /** Signs `rows` once, probes and verifies: see the object doc. `nRows`
-    * is the number of rows to check (the pin's count), which decides
-    * whether a FailFast gate must count its distinct keys before the
+  /** Signs `rows` once, probes: see the object doc. `nRows` is the
+    * number of rows to check (the pin's count), which decides whether a
+    * gate with a key bound must count its distinct keys before the
     * collect.
     */
-  def run(c: Check, rows: DataFrame, nRows: Long, withinBatch: Boolean): Checked = {
+  def run(c: Check, rows: DataFrame, nRows: Long): Checked = {
     val s = rows.sparkSession
     val ((sigSchema, sigs), tSig) = timed {
       val signed = c.sign(rows)
-      c.dense match {
-        // ≤ keysPerRow keys per row: only a batch that could break the
-        // bound pays an exact count, before any collect
-        case IndexProbe.FailFast(message) if nRows * c.keysPerRow > c.literalCap &&
-            signed.select(c.keyCol).distinct().limit(c.literalCap + 1).count() > c.literalCap =>
+      // ≤ keysPerRow keys per row: only a batch that could break the
+      // policy's key bound pays an exact count, before any collect
+      IndexProbe.keyBound(c.dense, c.literalCap).foreach { case (bound, message) =>
+        if (nRows * c.keysPerRow > bound &&
+            signed.select(c.keyCol).distinct().limit(bound + 1).count() > bound)
           throw new IllegalArgumentException(message)
-        case _ =>
       }
       (signed.schema, signed.collect().toSeq)
     }
@@ -170,10 +192,8 @@ private[streaming] object NearDup {
         val slice = IndexProbe.sliceOf(s, c.table, c.keyCol, keys, c.literalCap, c.dense,
           s.createDataFrame(keys.map(Row(_)).asJava,
             StructType(Seq(StructField(c.keyCol, LongType, nullable = false)))))
-        val batch = s.createDataFrame(sigs.asJava, sigSchema)
-        // chains only form when the batch checks against ITSELF
-        if (withinBatch) Survivors.chase(combined(c.verified, slice, batch).collect().toSeq, 0, 1)
-        else againstIndex(c.verified, slice, batch).collect().toSeq
+        val flags = c.probe.flags(slice, s.createDataFrame(sigs.asJava, sigSchema)).collect().toSeq
+        if (c.probe.chained) Survivors.chase(flags, 0, 1) else flags
       }
     }
     Checked(c, flags, sigs, sigSchema, tSig, tProbe)
@@ -196,15 +216,15 @@ private[streaming] object NearDup {
     frame.join(broadcast(frame.sparkSession.createDataFrame(flags.asJava, flagSchema)),
       Seq(flagSchema.fields(0).name), "left")
 
-  /** The near-dup gates' one foreachBatch body: with `decisions`, only
+  /** The streaming gates' one foreachBatch body: with `decisions`, only
     * `insert` rows are checked; otherwise every row is. `onBatch` gets
-    * the pinned rows joined with the flags (`flagSchema`: `dup_of` and
-    * the score, null when unflagged) and finished by `verdict`; the
+    * the pinned rows joined with the flags (`flagSchema`, e.g. `dup_of`
+    * and the score; null when unflagged) and finished by `verdict`; the
     * unflagged signatures append after the sink. `check` is built only
     * when something is to be checked — a trigger with nothing to check
     * reads no index and runs no job beyond the pin.
     */
-  def gate(check: => Check, flagSchema: StructType, decisions: Boolean, withinBatch: Boolean,
+  def gate(check: => Check, flagSchema: StructType, decisions: Boolean,
       verdict: DataFrame => DataFrame, onBatch: (DataFrame, Long) => Unit,
       onTimings: GateStageTimings => Unit)(batch: DataFrame, batchId: Long): Unit = {
     val (rows, rowsRdd, nChecked) = pin(batch, decisions)
@@ -214,8 +234,7 @@ private[streaming] object NearDup {
       if (nChecked == 0) onTimings(GateStageTimings(batchId, 0.0, 0.0, sink(Nil), 0.0, 0L))
       else {
         val checked = run(check,
-          if (decisions) rows.filter(col("decision") === "insert") else rows,
-          nChecked, withinBatch)
+          if (decisions) rows.filter(col("decision") === "insert") else rows, nChecked)
         val tSink = sink(checked.flags)
         val (appended, tAppend) = timed(checked.append())
         onTimings(GateStageTimings(

@@ -162,7 +162,7 @@ object PerceptGate {
       decoder: FrameDecoder = AutoFrameDecoder): DataFrame = {
     require(spark eq payloads.sparkSession,
       "flagDuplicates must run on the batch frame's own session (foreachBatch hands a clone)")
-    NearDup.flagLazily(check(spark, table, decoder), payloads)
+    NearDup.flagLazily(check(spark, table, withinBatch = false, decoder), payloads)
   }
 
   /** Appends the codes of docs not already at rest — idempotent by
@@ -183,16 +183,17 @@ object PerceptGate {
 
   /** This gate's [[NearDup.Check]] over `table` for one trigger (the
     * index refreshed and validated): `(doc_id, payload)` rows decode and
-    * dHash into banded codes, unflagged codes [[NearDup.appendBanded]].
+    * dHash into banded codes (`withinBatch`: checked also against the
+    * batch's siblings), unflagged codes [[NearDup.appendBanded]].
     */
-  private[streaming] def check(spark: SparkSession, table: String,
+  private[streaming] def check(spark: SparkSession, table: String, withinBatch: Boolean,
       decoder: FrameDecoder = AutoFrameDecoder): NearDup.Check = {
     spark.catalog.refreshTable(table)
     validateMeta(spark, table)
     NearDup.Check(table, "bk", NBands, DefaultMaxProbeLiterals, IndexProbe.BroadcastSemiJoin,
       rows => bandedCodes(MultimodalOps.perceptualCodes(spark,
         rows.select("doc_id", "payload"), decoder)),
-      verified,
+      NearDup.verifiedProbe(verified, withinBatch),
       (rows, schema) => NearDup.appendBanded(spark, table, rows, schema))
   }
 
@@ -221,7 +222,7 @@ object PerceptGate {
   private def gateCore(table: String, withinBatch: Boolean,
       onBatch: (DataFrame, Long) => Unit, onTimings: GateStageTimings => Unit,
       decoder: FrameDecoder)(batch: DataFrame, batchId: Long): Unit =
-    NearDup.gate(check(batch.sparkSession, table, decoder), FlagSchema,
-      decisions = false, withinBatch,
+    NearDup.gate(check(batch.sparkSession, table, withinBatch, decoder), FlagSchema,
+      decisions = false,
       _.withColumn("is_dup", col("dup_of").isNotNull), onBatch, onTimings)(batch, batchId)
 }

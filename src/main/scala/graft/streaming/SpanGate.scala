@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.{IndexEpoch, SpanOps, VectorOps}
 
 /** Streaming SPAN-DECONTAMINATION gate: checks each arriving micro-batch
@@ -51,6 +52,16 @@ import graft.operators.{IndexEpoch, SpanOps, VectorOps}
   * benchmarks arriving over time) are idempotent by eval_doc anti-join
   * and epoch-guarded ([[graft.operators.IndexEpoch]]) — same
   * single-sequential-maintainer contract as every other index.
+  *
+  * Gate body: the span gates ([[spanGateDecisions]],
+  * [[spanScrubDecisions]]) and the production chain's span stage run
+  * the shared per-trigger core [[NearDup]] with this gate's [[check]]:
+  * the batch is pinned once, a trigger with no `insert` row runs no
+  * selection or probe and reads neither the index nor its meta, the
+  * sites are selected once into a driver-local relation, and the
+  * per-doc verdicts come back to the driver, to be joined into the
+  * pinned rows by the gate's verdict (the `contaminated` rewrite or the
+  * scrub cut). Timings are [[GateStageTimings]].
   */
 object SpanGate {
 
@@ -90,7 +101,7 @@ object SpanGate {
     IndexEpoch.bumpUnconditional(spark, table)
   }
 
-  private[streaming] def validateMeta(spark: SparkSession, table: String): Unit = {
+  private def validateMeta(spark: SparkSession, table: String): Unit = {
     if (spark.catalog.tableExists(metaTableFor(table)))
       spark.catalog.refreshTable(metaTableFor(table))
     val meta = spark.table(metaTableFor(table))
@@ -170,42 +181,40 @@ object SpanGate {
     */
   val ProbeLiteralPlanMax = 2048
 
-  /** The index slice a batch's selected sites can possibly match: their
-    * distinct `gh` values as a literal bucket filter (file pruning on
-    * the bucketed scan). Empty batch → `limit(0)` slice, keeping
-    * downstream schemas stable.
+  /** This gate's dense policy at the probe-literal bound in force: the
+    * downstream broadcast mark join already restricts matched rows, so a
+    * dense batch scans plainly (see [[ProbeLiteralPlanMax]]) — up to the
+    * hard contract bound.
     */
-  private def prunedIndexSlice(spark: SparkSession, table: String,
-      sites: DataFrame): DataFrame = {
+  private def probePolicy(spark: SparkSession): IndexProbe.PlainScanUpTo = {
     val bound = IndexProbe.confBound(
       spark, "graft.spanGate.maxProbeLiterals", DefaultMaxProbeLiterals)
-    // this gate's dense policy: the downstream broadcast mark join
-    // already restricts matched rows, so a dense batch scans plainly
-    // (see ProbeLiteralPlanMax) — up to the hard contract bound
-    IndexProbe.prunedSlice(spark, table, sites, "gh", ProbeLiteralPlanMax,
-      IndexProbe.PlainScanUpTo(bound,
-        s"batch produced more than $bound distinct selected gram hashes — the " +
-          "micro-batch-is-small probe contract is broken; use smaller triggers, the " +
-          "offline decontaminate_spans path, or raise graft.spanGate.maxProbeLiterals"))
+    IndexProbe.PlainScanUpTo(bound,
+      s"batch produced more than $bound distinct selected gram hashes — the " +
+        "micro-batch-is-small probe contract is broken; use smaller triggers, the " +
+        "offline decontaminate_spans path, or raise graft.spanGate.maxProbeLiterals")
   }
 
   /** Leak spans of a batch against the persisted index: one row per
     * maximal contaminated span —
     * `(doc_id, span_start, span_end, span_len, n_grams, first_eval,
     * first_eval_pos)` — the same shape and merge rule as the offline
-    * `decontaminate_spans`. Pure frame logic given an already-selected
-    * site frame; [[spanGateDecisions]] wraps it with the checkpoint and
-    * decision plumbing.
+    * `decontaminate_spans`. The lazy form (plan inspection / one-shot
+    * use): the batch's distinct gram hashes are collected, bounded, into
+    * the index slice ([[IndexProbe.prunedSlice]]); the gate bodies run
+    * the same probe through [[NearDup]].
     */
   def flagLeakSpans(spark: SparkSession, batchDocs: DataFrame, table: String): DataFrame = {
     require(spark eq batchDocs.sparkSession,
       "flagLeakSpans must run on the batch frame's own session (foreachBatch hands a clone)")
     validateMeta(spark, table)
-    leakSpansOf(spark, SpanOps.winnowSites(batchDocs), table)
+    val sites = SpanOps.winnowSites(batchDocs)
+    leakSpans(IndexProbe.prunedSlice(spark, table, sites, "gh", ProbeLiteralPlanMax,
+      probePolicy(spark)), sites)
   }
 
-  private def leakSpansOf(spark: SparkSession, sites: DataFrame,
-      table: String): DataFrame = {
+  /** The leak spans of the selected `sites` against the index `slice`. */
+  private def leakSpans(slice: DataFrame, sites: DataFrame): DataFrame = {
     // Probe shape (round 15, the r14 "cut the probe cost" task): the
     // batch's selected sites are micro-batch-small BY CONTRACT (the
     // maxProbeLiterals bound above), so they BROADCAST into the pruned
@@ -217,29 +226,61 @@ object SpanGate {
     // batch site × its eval hits) leave the scan, and the post-join
     // per-site argmin collapses the eval fan-out to the lexicographically
     // earliest coordinate — partial-agg'd, so a site hitting many eval
-    // sites combines map-side instead of shuffling every hit.
-    val marked = prunedIndexSlice(spark, table, sites)
+    // sites combines map-side instead of shuffling every hit. The eval
+    // doc id is a BIGINT whatever the eval corpus keyed on, so the
+    // verdicts keep [[VerdictSchema]].
+    val marked = slice
       .join(broadcast(sites), Seq("gh", "gh2"))
       .groupBy("doc_id", "pos")
       .agg(min(struct(col("eval_doc").as("fd"), col("eval_pos").as("fp"))).as("fe"))
       .select(col("doc_id"), col("pos"),
-        col("fe.fd").as("first_eval"), col("fe.fp").as("first_eval_pos"))
+        col("fe.fd").cast("long").as("first_eval"), col("fe.fp").as("first_eval_pos"))
     val fe = min(struct(col("first_eval"), col("first_eval_pos")))
     SpanOps.mergeSpans(marked, Seq(
       fe.getField("first_eval") -> "first_eval",
       fe.getField("first_eval_pos") -> "first_eval_pos"))
   }
 
+  /** The per-doc verdict rows' schema ([[SpanOps.leakVerdictsOf]] over
+    * [[leakSpans]]).
+    */
+  private[streaming] val VerdictSchema = StructType.fromDDL(
+    "doc_id BIGINT, sp ARRAY<STRUCT<span_start: BIGINT, span_end: BIGINT>>, " +
+      "n_leak_spans BIGINT, leak_chars BIGINT, first_eval BIGINT, first_eval_pos BIGINT")
+
+  /** This gate's [[NearDup.Check]] over `table` for one trigger (the
+    * index refreshed and its meta validated): `(doc_id, text)` rows sign
+    * into their winnow-selected sites (~chars/8 per doc, so no per-row
+    * key bound: every checked batch counts its distinct gram hashes
+    * against the probe-literal bound before the sites are collected),
+    * keyed by `gh`; the probe is the broadcast mark join, the span merge
+    * and the per-doc verdict ([[SpanOps.leakVerdictsOf]]); the eval index
+    * never appends from a batch (train docs must not enter it), so the
+    * append is a no-op.
+    */
+  private[streaming] def check(spark: SparkSession, table: String): NearDup.Check = {
+    spark.catalog.refreshTable(table)
+    validateMeta(spark, table)
+    NearDup.Check(table, "gh", Int.MaxValue, ProbeLiteralPlanMax, probePolicy(spark),
+      rows => SpanOps.winnowSites(rows.select("doc_id", "text")),
+      NearDup.Probe((slice, sites) => SpanOps.leakVerdictsOf(leakSpans(slice, sites)),
+        chained = false),
+      (_, _) => 0L)
+  }
+
   /** foreachBatch body for a stream of INGEST DECISION rows (the
-    * [[StreamMerge]] pipeline shape): only rows still decided `insert`
-    * are span-checked — short/quality/dup rows are already out and must
-    * not pay the selection cost. Contaminated inserts have their
-    * decision REWRITTEN to `contaminated` and carry
+    * [[StreamMerge]] pipeline shape) — [[NearDup.gate]] with this gate's
+    * [[check]]: only rows still decided `insert` are span-checked —
+    * short/quality/dup rows are already out and must not pay the
+    * selection cost, and a trigger with no insert (every watermark
+    * no-data trigger) reads neither the index nor its meta. Contaminated
+    * inserts have their decision REWRITTEN to `contaminated` and carry
     * `n_leak_spans`/`leak_chars`/`first_eval`/`first_eval_pos` (the
     * worst span's eval coordinate — lexicographic min); clean rows
     * carry nulls/zeros. The eval index is NEVER appended from the batch
     * path (train docs must not enter the eval index); maintenance goes
-    * through [[appendEvalDocsIdempotent]].
+    * through [[appendEvalDocsIdempotent]]. `onTimings` gets the batch's
+    * [[GateStageTimings]].
     *
     * Replay idempotence: the gate is a pure function of (batch, index) —
     * no state is written per batch, so a replayed batch reproduces its
@@ -248,54 +289,32 @@ object SpanGate {
     */
   private[graft] def spanGateDecisions(table: String,
       onBatch: (DataFrame, Long) => Unit,
-      onTimings: SpanGateTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    s.catalog.refreshTable(table)
-    validateMeta(s, table)
-    import org.apache.spark.sql.GraftShim
-    val inserts = batch.filter(col("decision") === "insert").select("doc_id", "text")
-    // one tracked evaluation of the selected sites serves the probe
-    // literal collect and the mark join; blocks free deterministically
-    val ((sites, sitesRdd), tSelect) =
-      timed(GraftShim.localCheckpointTracked(SpanOps.winnowSites(inserts)))
-    try {
-      val rawPerDoc = leakSpansOf(s, sites, table)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_leak_spans"),
-          sum("span_len").as("leak_chars"),
-          min(struct(col("first_eval"), col("first_eval_pos"))).as("fe"))
-        .select(col("doc_id"), col("n_leak_spans"), col("leak_chars"),
-          col("fe.first_eval").as("first_eval"),
-          col("fe.first_eval_pos").as("first_eval_pos"))
-      val ((perDoc, perDocRdd), tProbe) = timed(GraftShim.localCheckpointTracked(rawPerDoc))
-      try {
-        val out = batch.join(perDoc, Seq("doc_id"), "left")
-          .withColumn("decision",
-            when(col("n_leak_spans").isNotNull && col("decision") === "insert",
-              "contaminated").otherwise(col("decision")))
-          .withColumn("n_leak_spans", coalesce(col("n_leak_spans"), lit(0L)))
-          .withColumn("leak_chars", coalesce(col("leak_chars"), lit(0L)))
-        val (_, tSink) = timed(onBatch(out, batchId))
-        onTimings(SpanGateTimings(batchId, tSelect, tProbe, tSink))
-      } finally GraftShim.releaseCheckpoint(perDocRdd)
-    } finally GraftShim.releaseCheckpoint(sitesRdd)
-  }
+      onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit =
+    NearDup.gate(check(batch.sparkSession, table), VerdictSchema, decisions = true,
+      _.drop("sp")
+        .withColumn("decision",
+          when(col("n_leak_spans").isNotNull && col("decision") === "insert",
+            "contaminated").otherwise(col("decision")))
+        .withColumn("n_leak_spans", coalesce(col("n_leak_spans"), lit(0L)))
+        .withColumn("leak_chars", coalesce(col("leak_chars"), lit(0L))),
+      onBatch, onTimings)(batch, batchId)
 
-  /** [[spanGateDecisions]]' REMEDIATION sibling: instead of dropping a
-    * contaminated doc, CUT its leak spans and keep the surgery — the
-    * online form of the offline `decontaminate_strip` / winnowed-strip
-    * policy (Lee et al. §6.2 surgery at ingest time). Detection is the
-    * identical probe (winnow selection against the persisted eval
-    * index), so stream scrub output is BIT-identical to the batch
-    * [[graft.operators.SpanOps]] winnowed strip on the same docs and
-    * eval set (StreamingSpec pins this). Decision rewrite for `insert`
-    * rows with leaks: `scrubbed` (text replaced by the cut rebuild,
-    * [[graft.operators.SpanOps.cutSpansFold]] over the broadcast span
-    * lists — the batch's own text never shuffles) — or `scrub_gutted`
-    * when the surgery leaves fewer than `minTokens` whitespace tokens
-    * (a doc that was mostly leak is a stub, not a document; same token
-    * measure as the upstream length gate). Clean inserts pass through
-    * text-unchanged.
+  /** [[spanGateDecisions]]' REMEDIATION sibling — the same
+    * [[NearDup.gate]] body and [[check]], a different verdict: instead of
+    * dropping a contaminated doc, CUT its leak spans and keep the
+    * surgery ([[cutLeaks]]) — the online form of the offline
+    * `decontaminate_strip` / winnowed-strip policy (Lee et al. §6.2
+    * surgery at ingest time). Detection is the identical probe (winnow
+    * selection against the persisted eval index), so stream scrub output
+    * is BIT-identical to the batch [[graft.operators.SpanOps]] winnowed
+    * strip on the same docs and eval set (StreamingSpec pins this).
+    * Decision rewrite for `insert` rows with leaks: `scrubbed` (text
+    * replaced by the cut rebuild, [[graft.operators.SpanOps.cutSpansFold]]
+    * over the broadcast span lists — the batch's own text never
+    * shuffles) — or `scrub_gutted` when the surgery leaves fewer than
+    * `minTokens` whitespace tokens (a doc that was mostly leak is a stub,
+    * not a document; same token measure as the upstream length gate).
+    * Clean inserts pass through text-unchanged.
     *
     * Audit caveats, both deliberate: `h` and `n_tokens` remain the
     * INGEST-time values of the original text (`h` is the lineage link
@@ -314,53 +333,24 @@ object SpanGate {
     */
   private[graft] def spanScrubDecisions(table: String, minTokens: Int,
       onBatch: (DataFrame, Long) => Unit,
-      onTimings: SpanGateTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    s.catalog.refreshTable(table)
-    validateMeta(s, table)
-    import org.apache.spark.sql.GraftShim
-    val inserts = batch.filter(col("decision") === "insert").select("doc_id", "text")
-    val ((sites, sitesRdd), tSelect) =
-      timed(GraftShim.localCheckpointTracked(SpanOps.winnowSites(inserts)))
-    try {
-      val ((perDoc, perDocRdd), tProbe) =
-        timed(GraftShim.localCheckpointTracked(scrubPerDoc(s, sites, table)))
-      try {
-        val out = applyScrub(batch, perDoc, minTokens)
-        val (_, tSink) = timed(onBatch(out, batchId))
-        onTimings(SpanGateTimings(batchId, tSelect, tProbe, tSink))
-      } finally GraftShim.releaseCheckpoint(perDocRdd)
-    } finally GraftShim.releaseCheckpoint(sitesRdd)
-  }
+      onTimings: GateStageTimings => Unit = _ => ())(batch: DataFrame, batchId: Long): Unit =
+    NearDup.gate(check(batch.sparkSession, table), VerdictSchema, decisions = true,
+      cutLeaks(_, minTokens), onBatch, onTimings)(batch, batchId)
 
-  /** Per-doc scrub verdict relation for a batch's selected sites: one
-    * row per leaking doc carrying BOTH the scrub input (the sorted span
-    * list the cut fold walks) and the flag-path leak stats. Shared by
-    * [[spanScrubDecisions]] and [[StreamMerge
-    * .gatedIngestPipelineProduction]]'s flattened batch body — ONE
-    * implementation, so stream scrub stays bit-identical to the batch
-    * strip everywhere it is composed.
-    */
-  private[streaming] def scrubPerDoc(s: SparkSession, sites: DataFrame,
-      table: String): DataFrame =
-    leakSpansOf(s, sites, table)
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("span_start"), col("span_end")))).as("sp"),
-        count(lit(1)).as("n_leak_spans"),
-        sum("span_len").as("leak_chars"),
-        min(struct(col("first_eval"), col("first_eval_pos"))).as("fe"))
-      .select(col("doc_id"), col("sp"), col("n_leak_spans"), col("leak_chars"),
-        col("fe.first_eval").as("first_eval"),
-        col("fe.first_eval_pos").as("first_eval_pos"))
-
-  /** Applies the [[scrubPerDoc]] verdicts to a decision frame: cut the
-    * leak spans out of still-`insert` rows (the broadcast-join surgery),
-    * rewrite their decision to `scrubbed` / `scrub_gutted`, pass every
-    * other row through text-unchanged.
+  /** [[cutLeaks]] of a decision frame joined with per-doc verdicts
+    * ([[SpanOps.leakVerdictsOf]]) — the batch curation chain's form.
     */
   private[graft] def applyScrub(frame: DataFrame, perDoc: DataFrame,
       minTokens: Int): DataFrame =
-    frame.join(broadcast(perDoc), Seq("doc_id"), "left")
+    cutLeaks(frame.join(broadcast(perDoc), Seq("doc_id"), "left"), minTokens)
+
+  /** Applies the per-doc verdicts a decision frame was left-joined with:
+    * cut the leak spans out of still-`insert` rows, rewrite their
+    * decision to `scrubbed` / `scrub_gutted`, pass every other row
+    * through text-unchanged.
+    */
+  private[streaming] def cutLeaks(joined: DataFrame, minTokens: Int): DataFrame =
+    joined
       .withColumn("text",
         when(col("sp").isNull || col("decision") =!= "insert", col("text"))
           .otherwise(SpanOps.cutSpansFold))
@@ -373,16 +363,3 @@ object SpanGate {
           .otherwise(col("decision")))
       .drop("sp")
 }
-
-/** Wall-clock seconds per span-gate stage for ONE micro-batch (the
-  * [[GateStageTimings]] pattern applied to [[SpanGate]]):
-  *   - `selectSec`: winnow selection of the batch's insert rows (the
-  *     tracked checkpoint of the selected sites);
-  *   - `probeSec`: the file-pruned eval-index probe + mark join + span
-  *     merge + per-doc aggregation (the checkpoint of the verdicts) —
-  *     the number that must stay flat as the eval index grows, or the
-  *     bucketed-probe claim is wrong;
-  *   - `sinkSec`: the caller's `onBatch` body.
-  */
-final case class SpanGateTimings(
-    batchId: Long, selectSec: Double, probeSec: Double, sinkSec: Double)

@@ -336,20 +336,6 @@ object StreamMerge {
         onBatch(scrubbed, id)
       }) _)
 
-  /** Runs `body` with `df` pinned under a tracked localCheckpoint — for
-    * multi-pass sink cascades: the span gates make 3+ passes over the
-    * handed-off decision frame (site selection, verdict join, sink), and
-    * unpinned each pass re-evaluates the whole micro-batch join plan
-    * from the source (the r16 production-body lesson, applied to the
-    * component chains). Blocks free deterministically before the batch
-    * returns.
-    */
-  private def pinned(df: DataFrame)(body: DataFrame => Unit): Unit = {
-    import org.apache.spark.sql.GraftShim
-    val (p, rdd) = GraftShim.localCheckpointTracked(df)
-    try body(p) finally GraftShim.releaseCheckpoint(rdd)
-  }
-
   /** [[gatedIngestPipeline]] plus the SPAN-DECONTAMINATION gate — the
     * online ExactSubstr check: after the near-dup gate, rows still
     * decided `insert` are winnow-probed against the persisted EVAL-gram
@@ -366,7 +352,10 @@ object StreamMerge {
     * index only makes future near-dups of it flag (conservative,
     * correct); the EVAL index is never touched by the batch path.
     * `onBatch` receives every decision row, text dropped, with the leak
-    * columns appended.
+    * columns appended. The span gate runs in the near-dup gate's sink
+    * over its pinned rows and pins its own input once ([[NearDup.gate]]
+    * both): on a trigger with no insert neither gate reads its index.
+    * `onSpanTimings` gets the span gate's [[GateStageTimings]].
     */
   def gatedIngestPipelineDecontam(
       docs: DataFrame, baseIndex: DataFrame, sigTable: String, evalGramTable: String,
@@ -374,14 +363,14 @@ object StreamMerge {
       delayThreshold: String = Reassembly.DefaultTtl,
       minTokens: Int = 20, minQuality: Double = 0.4,
       onGateTimings: GateStageTimings => Unit = _ => (),
-      onSpanTimings: SpanGateTimings => Unit = _ => ()): DataStreamWriter[Row] =
+      onSpanTimings: GateStageTimings => Unit = _ => ()): DataStreamWriter[Row] =
     pipelineCore(docs, baseIndex, delayThreshold, minTokens, minQuality)
       .writeStream
       .outputMode("append")
-      .foreachBatch(DedupGate.gateDecisions(sigTable, (out, id) =>
-        pinned(out)(p => SpanGate.spanGateDecisions(evalGramTable,
-          (flagged, fid) => onBatch(flagged.drop("text"), fid),
-          onSpanTimings)(p, id)), onGateTimings) _)
+      .foreachBatch(DedupGate.gateDecisions(sigTable,
+        SpanGate.spanGateDecisions(evalGramTable,
+          (flagged, fid) => onBatch(flagged.drop("text"), fid), onSpanTimings) _,
+        onGateTimings) _)
 
   /** [[gatedIngestPipelineDecontam]]'s REMEDIATION sibling — same chain,
     * same probe, different policy on contaminated inserts: leak spans
@@ -395,7 +384,8 @@ object StreamMerge {
     * whose sinks audit decisions, this one's sink persists documents.
     * The signature-index caveat from the flag sibling carries over
     * verbatim (pre-scrub signatures at rest, conservative); the eval
-    * index is never touched by the batch path.
+    * index is never touched by the batch path. Gate composition and
+    * timings as in the flag sibling.
     */
   def gatedIngestPipelineDecontamScrub(
       docs: DataFrame, baseIndex: DataFrame, sigTable: String, evalGramTable: String,
@@ -403,13 +393,13 @@ object StreamMerge {
       delayThreshold: String = Reassembly.DefaultTtl,
       minTokens: Int = 20, minQuality: Double = 0.4,
       onGateTimings: GateStageTimings => Unit = _ => (),
-      onSpanTimings: SpanGateTimings => Unit = _ => ()): DataStreamWriter[Row] =
+      onSpanTimings: GateStageTimings => Unit = _ => ()): DataStreamWriter[Row] =
     pipelineCore(docs, baseIndex, delayThreshold, minTokens, minQuality)
       .writeStream
       .outputMode("append")
-      .foreachBatch(DedupGate.gateDecisions(sigTable, (out, id) =>
-        pinned(out)(p => SpanGate.spanScrubDecisions(evalGramTable, minTokens,
-          onBatch, onSpanTimings)(p, id)), onGateTimings) _)
+      .foreachBatch(DedupGate.gateDecisions(sigTable,
+        SpanGate.spanScrubDecisions(evalGramTable, minTokens, onBatch, onSpanTimings) _,
+        onGateTimings) _)
 
   /** [[gatedIngestPipeline]] plus the PERSISTED-model quality gate — the
     * train-once model artifact ([[graft.operators.HygieneOps
@@ -423,7 +413,8 @@ object StreamMerge {
     * never pay signature cost or touch the signature index. Stream
     * scores are bit-identical to the batch `charlm_quality` key on the
     * same docs (StreamingSpec); no new stream state — the stateful plan
-    * is byte-identical to [[gatedIngestPipeline]]'s.
+    * is byte-identical to [[gatedIngestPipeline]]'s. The near-dup gate's
+    * pin evaluates the model join once per trigger ([[NearDup.gate]]).
     */
   def gatedIngestPipelineLm(
       docs: DataFrame, baseIndex: DataFrame, sigTable: String, lmTable: String,
@@ -436,13 +427,8 @@ object StreamMerge {
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // pin the LM-decided frame: the gate's signature/probe/out passes
-        // would otherwise re-run the model join per pass (the production
-        // body's discipline, applied to the component chain)
-        pinned(CharLmGate.withLmDecisions(batch, lmTable, maxBits)) { decorated =>
-          DedupGate.gateDecisions(sigTable,
-            (out, bid) => onBatch(out.drop("text"), bid), onGateTimings)(decorated, id)
-        }
+        DedupGate.gateDecisions(sigTable, (out, bid) => onBatch(out.drop("text"), bid),
+          onGateTimings)(CharLmGate.withLmDecisions(batch, lmTable, maxBits), id)
       }
 
   /** The COMPLETE production ingest chain — every gate this surface
@@ -486,13 +472,16 @@ object StreamMerge {
     * same job — every later stage filters or joins back into those rows,
     * and the pin evaluates the upstream chain (stream source → gates →
     * LM join, with its watermarked dedup state) exactly once per
-    * trigger. The three near-dup stages run the shared [[NearDup]]
-    * check: each signs its rows once into a driver-local relation,
-    * probes and verifies from the driver, and joins its flags back as a
-    * driver-local relation; a trigger with no insert runs none of them
-    * and reads none of their indexes. The span stage pins its sites,
-    * per-doc verdicts and the scrubbed frame before the PII/sink/re-sign
-    * passes. Blocks free deterministically before the batch returns.
+    * trigger. The three near-dup stages and the span stage run the
+    * shared [[NearDup]] check: each signs its rows once into a
+    * driver-local relation (the span stage: its winnow-selected sites),
+    * probes from the driver, and joins its flags (the span stage: its
+    * per-doc verdicts) back as a driver-local relation; a trigger with no
+    * insert runs none of them and reads none of their indexes or metas.
+    * The scrubbed frame is not pinned: the PII/sink pass and the
+    * dual-sign re-sign (which runs only when some doc leaked) read it
+    * from the pinned rows and the driver-local verdicts. The one pin's
+    * blocks free deterministically before the batch returns.
     *
     * `onBatch` receives every decision row with the raw `text` dropped;
     * keep rows carry the `redacted` post-surgery payload plus the full
@@ -553,7 +542,7 @@ object StreamMerge {
       delayThreshold: String = Reassembly.DefaultTtl,
       minTokens: Int = 20, minQuality: Double = 0.4,
       onGateTimings: GateStageTimings => Unit = _ => (),
-      onSpanTimings: SpanGateTimings => Unit = _ => (),
+      onSpanTimings: GateStageTimings => Unit = _ => (),
       onLmSec: (Long, Double) => Unit = (_, _) => (),
       perceptTable: Option[String] = None,
       onPerceptTimings: GateStageTimings => Unit = _ => (),
@@ -599,16 +588,15 @@ object StreamMerge {
     * each and (b) the signature append can see the span verdicts and
     * dual-sign scrubbed rows (see [[gatedIngestPipelineProduction]]'s
     * scaladoc for both contracts). Stage semantics are the shared
-    * primitives themselves — [[CharLmGate.withLmDecisions]], the
-    * near-dup gates' [[NearDup.run]] checks, [[SpanGate.scrubPerDoc]] +
-    * [[SpanGate.applyScrub]] — so decisions stay bit-identical to the
-    * component pipelines (StreamingSpec).
+    * primitives themselves — [[CharLmGate.withLmDecisions]], the gates'
+    * [[NearDup.run]] checks, [[SpanGate.cutLeaks]] — so decisions stay
+    * bit-identical to the component pipelines (StreamingSpec).
     */
   private def productionBatch(sigTable: String, evalGramTable: String,
       lmTable: String, maxBits: Double, minTokens: Int,
       onBatch: (DataFrame, Long) => Unit,
       onGateTimings: GateStageTimings => Unit,
-      onSpanTimings: SpanGateTimings => Unit,
+      onSpanTimings: GateStageTimings => Unit,
       onLmSec: (Long, Double) => Unit = (_, _) => (),
       perceptTable: Option[String] = None,
       onPerceptTimings: GateStageTimings => Unit = _ => (),
@@ -620,10 +608,8 @@ object StreamMerge {
       embedThreshold: Double = EmbedGate.DefaultThreshold)(
       batch: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.GraftShim
-    import graft.operators.{DedupOps, SpanOps}
+    import graft.operators.DedupOps
     val s = batch.sparkSession
-    s.catalog.refreshTable(evalGramTable)
-    SpanGate.validateMeta(s, evalGramTable)
     // pin the LM-decided batch ONCE, counting its inserts in the same
     // job: every stage below filters or joins back into these rows. The
     // pin's wall (the LM scoring join's materialization — the chain's
@@ -635,14 +621,14 @@ object StreamMerge {
     onLmSec(batchId, tLm)
     try {
       def inserts(frame: DataFrame): DataFrame = frame.filter(col("decision") === "insert")
-      // one near-dup stage's check of `rows` (still `insert`, projected
-      // to the gate's `(id, payload)`) against its index AND the batch's
-      // smaller-id siblings, chains chased to the surviving
-      // representative (the audit trail must not point at docs that will
-      // never be at rest); a batch without inserts checks nothing and
-      // reads no index
+      // one stage's check of `rows` (still `insert`, projected to the
+      // gate's `(id, payload)`): a near-dup stage checks against its index
+      // AND the batch's smaller-id siblings, chains chased to the
+      // surviving representative (the audit trail must not point at docs
+      // that will never be at rest); a batch without inserts checks
+      // nothing and reads no index
       def check(c: => NearDup.Check, rows: => DataFrame): Option[NearDup.Checked] =
-        if (nInserts == 0) None else Some(NearDup.run(c, rows, nInserts, withinBatch = true))
+        if (nInserts == 0) None else Some(NearDup.run(c, rows, nInserts))
       // the stage's flags joined back (`of`/`score` riding to the sink),
       // flagged rows taking the stage's `decision`
       def decide(frame: DataFrame, stage: Option[NearDup.Checked],
@@ -660,7 +646,7 @@ object StreamMerge {
         onTimings(GateStageTimings(batchId, stage.fold(0.0)(_.sigSec),
           stage.fold(0.0)(_.probeSec), 0.0, tAppend, appended))
       }
-      val text = check(DedupGate.check(s, sigTable), inserts(decided))
+      val text = check(DedupGate.check(s, sigTable, withinBatch = true), inserts(decided))
       val deduped = decide(decided, text, DedupGate.FlagSchema, "near_dup", "dup_of", "sig_match")
       // PERCEPTUAL stage (r19 — the raster-grain member of the dedup
       // cascade): image-kind inserts are dHash-checked and flagged rows
@@ -672,7 +658,7 @@ object StreamMerge {
       // text bytes). With no perceptTable the frame passes unchanged
       // (and without the two percept columns).
       val dedupedP = perceptTable.fold(deduped) { pt =>
-        val stage = check(PerceptGate.check(s, pt),
+        val stage = check(PerceptGate.check(s, pt, withinBatch = true),
           inserts(deduped).filter(perceptKind).select(col("doc_id"), perceptPayload.as("payload")))
         appendNow(stage, onPerceptTimings)
         decide(deduped, stage, PerceptGate.FlagSchema, "percept_dup", "percept_of", "percept_hamming")
@@ -683,49 +669,43 @@ object StreamMerge {
       // zero-norm embeddings neither flag nor index (EmbedGate's
       // degenerate policy).
       val dedupedE = embedTable.fold(dedupedP) { et =>
-        val stage = check(EmbedGate.check(s, et, embedThreshold),
+        val stage = check(EmbedGate.check(s, et, embedThreshold, withinBatch = true),
           inserts(dedupedP).filter(embedPayload.isNotNull)
             .select(col("doc_id").as("vec_id"), embedPayload.as("embedding")))
         appendNow(stage, onEmbedTimings)
         decide(dedupedP, stage, EmbedGate.FlagSchema, "embed_dup", "embed_of", "embed_sim")
       }
-      val still = inserts(dedupedE).select("doc_id", "text")
-      val ((sites, sitesRdd), tSelect) =
-        timed(GraftShim.localCheckpointTracked(SpanOps.winnowSites(still)))
-      try {
-        val ((perDoc, perDocRdd), tSpanProbe) = timed(
-          GraftShim.localCheckpointTracked(SpanGate.scrubPerDoc(s, sites, evalGramTable)))
-        try {
-          // pin the post-surgery decision frame: the PII/sink pass AND
-          // the dual-sign append both read it
-          val (scrubbed, scrubbedRdd) = GraftShim.localCheckpointTracked(
-            SpanGate.applyScrub(dedupedE, perDoc, minTokens))
-          try {
-            val keep = col("decision").isin("insert", "scrubbed")
-            val core = scrubbed.withColumn("txt",
-              when(keep, col("text")).otherwise(lit("")))
-            val out = graft.operators.HygieneOps.withPiiScrub(core)
-              .withColumn("redacted", when(keep, col("redacted")))
-              .withColumn("n_email", when(keep, col("n_email")))
-              .withColumn("n_phone", when(keep, col("n_phone")))
-              .withColumn("n_ip", when(keep, col("n_ip")))
-              .drop("text", "txt")
-            val (_, tSink) = timed(onBatch(out, batchId))
-            // novel unflagged rows keep their original-text signatures;
-            // scrubbed rows ALSO sign the post-surgery text (dual-sign —
-            // one idempotent append covers both). Bands a small cut
-            // leaves untouched re-sign to the SAME (doc_id, band_id, bh,
-            // sig) row — the common case — and the shared append drops
-            // such byte-equal twins (r16 ADVICE)
-            val (appended, tAppend) = text.fold((0L, 0.0))(r => timed(r.append(
-              DedupOps.bandedSigs(scrubbed.filter(col("decision") === "scrubbed")
-                .select("doc_id", "text")).collect().toSeq)))
-            onGateTimings(GateStageTimings(batchId, text.fold(0.0)(_.sigSec),
-              text.fold(0.0)(_.probeSec), tSink, tAppend, appended))
-            onSpanTimings(SpanGateTimings(batchId, tSelect, tSpanProbe, tSink))
-          } finally GraftShim.releaseCheckpoint(scrubbedRdd)
-        } finally GraftShim.releaseCheckpoint(perDocRdd)
-      } finally GraftShim.releaseCheckpoint(sitesRdd)
+      // SPAN stage: still-`insert` rows are winnow-probed against the
+      // eval index and their leak spans cut (a doc whose text is mostly
+      // leak becomes `scrub_gutted`)
+      val span = check(SpanGate.check(s, evalGramTable), inserts(dedupedE))
+      val scrubbed = SpanGate.cutLeaks(NearDup.joinFlags(dedupedE,
+        span.fold(Seq.empty[Row])(_.flags), SpanGate.VerdictSchema), minTokens)
+      val keep = col("decision").isin("insert", "scrubbed")
+      val core = scrubbed.withColumn("txt",
+        when(keep, col("text")).otherwise(lit("")))
+      val out = graft.operators.HygieneOps.withPiiScrub(core)
+        .withColumn("redacted", when(keep, col("redacted")))
+        .withColumn("n_email", when(keep, col("n_email")))
+        .withColumn("n_phone", when(keep, col("n_phone")))
+        .withColumn("n_ip", when(keep, col("n_ip")))
+        .drop("text", "txt")
+      val (_, tSink) = timed(onBatch(out, batchId))
+      // novel unflagged rows keep their original-text signatures;
+      // scrubbed rows ALSO sign the post-surgery text (dual-sign — one
+      // idempotent append covers both). Bands a small cut leaves
+      // untouched re-sign to the SAME (doc_id, band_id, bh, sig) row —
+      // the common case — and the shared append drops such byte-equal
+      // twins (r16 ADVICE). Only a batch with a leaking doc can hold a
+      // scrubbed row.
+      val (appended, tAppend) = text.fold((0L, 0.0))(r => timed(r.append(
+        if (span.forall(_.flags.isEmpty)) Nil
+        else DedupOps.bandedSigs(scrubbed.filter(col("decision") === "scrubbed")
+          .select("doc_id", "text")).collect().toSeq)))
+      onGateTimings(GateStageTimings(batchId, text.fold(0.0)(_.sigSec),
+        text.fold(0.0)(_.probeSec), tSink, tAppend, appended))
+      onSpanTimings(GateStageTimings(batchId, span.fold(0.0)(_.sigSec),
+        span.fold(0.0)(_.probeSec), tSink, 0.0, 0L))
     } finally GraftShim.releaseCheckpoint(decidedRdd)
   }
 

@@ -1056,6 +1056,79 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(badCol.getMessage.contains("pre-sel_tag"), badCol.getMessage)
   }
 
+  test("SpanGate: a contract-breaking batch fails at the probe-literal bound, naming the key, before its sites are collected") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    import graft.streaming.SpanGate
+    SpanGate.writeEvalGramIndex(spark,
+      Seq(9101L -> sgFiller('b', 120)).toDF("doc_id", "text"), "span_gate_bound", nBuckets = 8)
+    val big = Seq(11L -> sgFiller('c', 400), 12L -> sgFiller('d', 400)).toDF("doc_id", "text")
+    assert(graft.operators.SpanOps.winnowSites(big).select("gh").distinct().count() > 8,
+      "fixture vacuous: the batch must select more than 8 distinct gram hashes")
+    spark.conf.set("graft.spanGate.maxProbeLiterals", "8")
+    // every action this session runs, in order: (name — a marker's own
+    // column name for the marker actions —, its plan selects winnow
+    // sites, its plan is bounded by a limit)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean, Boolean)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val plan = qe.analyzed.toString
+        val marker = "span_bound_marker_\\d+".r.findFirstIn(plan)
+        events.add((marker.getOrElse(f), plan.contains("winnow_select"), plan.contains("GlobalLimit")))
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // events arrive asynchronously and in order: marker actions before
+    // and after `body` set its events off from every other action's
+    var nMarks = 0
+    def mark(): String = {
+      nMarks += 1
+      val m = s"span_bound_marker_$nMarks"
+      spark.range(1).toDF(m).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!events.asScala.exists(_._1 == m) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(events.asScala.exists(_._1 == m), s"marker $m never arrived")
+      m
+    }
+    // the winnow-selecting actions `body` ran before the bound fired in it
+    def failsAtBound(body: => Unit): Seq[(String, Boolean, Boolean)] = {
+      val before = mark()
+      val ex = intercept[IllegalArgumentException](body)
+      assert(ex.getMessage.contains("graft.spanGate.maxProbeLiterals"),
+        s"the bound violation must name the conf key: ${ex.getMessage}")
+      val after = mark()
+      events.asScala.toSeq.dropWhile(_._1 != before).drop(1).takeWhile(_._1 != after)
+        .filter(_._2)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // the lazy form: only its bounded distinct-key collect reads the sites
+      val lazyActions = failsAtBound {
+        SpanGate.flagLeakSpans(spark, big, "span_gate_bound").collect()
+      }
+      assert(lazyActions.nonEmpty && lazyActions.forall(_._3),
+        s"flagLeakSpans may only read the sites under a limit: $lazyActions")
+      // the gate body: a bounded count fires the bound before any collect
+      var sunk = false
+      val gateActions = failsAtBound {
+        SpanGate.spanGateDecisions("span_gate_bound", (_, _) => sunk = true)(
+          big.withColumn("decision", lit("insert")), 0L)
+      }
+      assert(!sunk, "a batch over the bound must not reach the sink")
+      assert(gateActions.contains(("count", true, true)),
+        s"the gate must check the bound by a bounded count: $gateActions")
+      assert(gateActions.forall(_._3),
+        s"the gate collected its sites before the bound fired: $gateActions")
+      // a conforming batch still probes under the tightened bound
+      assert(SpanGate.flagLeakSpans(spark,
+        Seq(13L -> sgFiller('e', 50)).toDF("doc_id", "text"), "span_gate_bound").count() == 0L)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.unset("graft.spanGate.maxProbeLiterals")
+    }
+  }
+
   test("charlm persisted model scores the training corpus row-identically to the inline key") {
     graft.operators.HygieneOps.writeCharLmTable(spark, sfDir, "charlm_model_b")
     val persisted = graft.operators.HygieneOps
@@ -1480,6 +1553,68 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"replayed zero vector: flagged degenerate again, still not indexed: $timings")
     spark.catalog.refreshTable("embed_gate_zero")
     assert(spark.table("embed_gate_zero").count() == 2L)
+  }
+
+  test("NearDup: a checked batch with no row left to index reads no epoch and runs no append") {
+    import spark.implicits._
+    import graft.streaming.{EmbedGate, GateStageTimings, PerceptGate}
+    import graft.operators.VectorOps
+    PerceptGate.writeCodeIndex(spark,
+      Seq(1L -> p5(rising)).toDF("doc_id", "payload"), "percept_gate_noappend", nBuckets = 8)
+    VectorOps.writeLshIndexFrom(spark,
+      Seq(1L -> axis(0)).toDF("vec_id", "embedding"), "embed_gate_noappend", nBuckets = 8)
+    // every action this session runs, in order, by its analyzed plan
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        events.add(qe.analyzed.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = events.add(qe.analyzed.toString)
+    }
+    // the plans of the actions `body` runs: events arrive asynchronously
+    // and in order, so marker actions before and after set them off
+    def actionsOf(tag: String)(body: => Unit): Seq[String] = {
+      def mark(m: String): Unit = {
+        spark.range(1).toDF(m).count()
+        val deadline = System.nanoTime() + 10000000000L
+        while (!events.asScala.exists(_.contains(m)) && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        assert(events.asScala.exists(_.contains(m)), s"marker $m never arrived")
+      }
+      mark(tag + "_before")
+      body
+      mark(tag + "_after")
+      events.asScala.toSeq.dropWhile(!_.contains(tag + "_before")).drop(1)
+        .takeWhile(!_.contains(tag + "_after"))
+    }
+    spark.listenerManager.register(listener)
+    try {
+      var timings: GateStageTimings = null
+      // a copy of the indexed vector (flags) and a zero vector (never
+      // signed): nothing is left to index
+      val embed = actionsOf("embed_noappend") {
+        EmbedGate.gateBatchWithinAware("embed_gate_noappend", (df, _) => { df.collect(): Unit },
+          onTimings = t => timings = t)(
+          Seq(90L -> axis(0), 91L -> Array.fill(64)(0f)).toDF("vec_id", "embedding"), 0L)
+      }
+      assert(timings.appended == 0L && timings.probeSec > 0.0,
+        s"the batch must be probed and append nothing: $timings")
+      assert(embed.exists(_.contains("embed_gate_noappend")), s"fixture vacuous: no probe ran: $embed")
+      assert(!embed.exists(_.contains("embed_gate_noappend_epoch")),
+        s"an append with nothing to index must not run (it read the epoch): $embed")
+      // flat icons dHash to no code: the batch is checked, nothing signs
+      val percept = actionsOf("percept_noappend") {
+        PerceptGate.gateBatchWithinAware("percept_gate_noappend", (df, _) => { df.collect(): Unit },
+          onTimings = t => timings = t)(
+          (0 until 3).map(i => (50L + i) -> p5(Array.fill(3 + i)(i * 20 % 256)))
+            .toDF("doc_id", "payload"), 0L)
+      }
+      assert(timings.appended == 0L, s"flat icons must append nothing: $timings")
+      assert(!percept.exists(_.contains("percept_gate_noappend_epoch")),
+        s"an append with nothing to index must not run (it read the epoch): $percept")
+    } finally spark.listenerManager.unregister(listener)
+    spark.catalog.refreshTable("embed_gate_noappend")
+    assert(spark.table("embed_gate_noappend").count() == 1L, "the LSH index must be unchanged")
   }
 
   test("Survivors.chase: chains chase to the terminal id, cycles stop without self-pointers, values survive") {

@@ -2213,19 +2213,31 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("gated pipeline: a watermark no-data trigger runs no gate job and the next trigger keeps the stream state") {
-    import graft.streaming.{DedupGate, GateStageTimings, StreamMerge}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import graft.streaming.{DedupGate, GateStageTimings, SpanGate, StreamMerge}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.apache.spark.sql.functions.{col, md5, min}
     import spark.implicits._
     def wt(seed: String) = (1 to 30).map(i => s"${seed}_$i").mkString(" ")
     def near(t: String, tail: String) = t.split(" ").init.mkString(" ") + " " + tail
     val corpusText = wt("nd_corp"); val sibText = wt("nd_sib"); val lateText = wt("nd_late")
+    val novText = wt("nd_nov")
     val staticBase = Seq((10L, wt("nd_known"))).toDF("doc_id", "text")
       .groupBy(md5(col("text")).as("h")).agg(min("doc_id").as("existing_id"))
-    DedupGate.writeSigIndex(spark,
-      Seq(1L -> corpusText).toDF("doc_id", "text"), "nodata_gate_idx", nBuckets = 8)
-    // jobs per (query, micro-batch), from the job properties the stream sets
+    // the span pipelines' eval index shares novText's first eight words
+    // (past the K+w−1 detection floor), so their span stage does real
+    // work on the second data trigger
+    val leak = novText.split(" ").take(8).mkString(" ")
+    assert(leak.length >= graft.operators.SpanOps.GramK + graft.operators.SpanOps.WinnowW - 1)
+    SpanGate.writeEvalGramIndex(spark, Seq(9400L -> (wt("nd_evq") + " " + leak + " " + wt("nd_evr")))
+      .toDF("doc_id", "text"), "nodata_eval_idx", nBuckets = 8)
+    graft.operators.HygieneOps.writeCharLmTableFrom(spark,
+      Seq(1L -> corpusText, 2L -> sibText).toDF("doc_id", "text"), "nodata_lm")
+    // jobs and SQL plans per (query, micro-batch), from the job properties
+    // the stream sets
     val jobsOf = new scala.collection.concurrent.TrieMap[(String, String), Int]()
+    val execsOf = new scala.collection.concurrent.TrieMap[String, (String, String)]()
+    val planOf = new scala.collection.concurrent.TrieMap[Long, String]()
     val started = new java.util.concurrent.atomic.AtomicInteger()
     val ended = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
@@ -2235,49 +2247,77 @@ class StreamingSpec extends AnyFunSuite {
           val key = (p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId"))
           if (key._1 != null && key._2 != null) jobsOf.synchronized {
             jobsOf.put(key, jobsOf.getOrElse(key, 0) + 1)
+            Option(p.getProperty("spark.sql.execution.id")).foreach(execsOf.put(_, key))
           }
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.incrementAndGet(): Unit }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => planOf.put(x.executionId, x.physicalPlanDescription)
+        case _ =>
+      }
     }
-    val enc = implicitly[Encoder[(Long, String, java.sql.Timestamp)]]
-    val input = MemoryStream[(Long, String, java.sql.Timestamp)](enc, spark.sqlContext)
-    val checkpoint = Files.createTempDirectory("graft-spec-nodata-ckpt").toString
-    val decided = new ConcurrentLinkedQueue[(Long, String, Option[Long])]()
-    val rowsPerBatch = new scala.collection.concurrent.TrieMap[Long, Int]()
-    val timings = new ConcurrentLinkedQueue[GateStageTimings]()
     def at(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    spark.sparkContext.addSparkListener(listener)
-    // no auto-broadcast: a broadcast static base adds its own build job to
-    // every evaluation of the stream plan; joined by shuffle, one
-    // evaluation is one job, so the count below is the gate's
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val q = try StreamMerge.gatedIngestPipeline(
-      input.toDS().toDF("doc_id", "text", "ts"), staticBase, "nodata_gate_idx",
-      (df, id) => {
+    final case class Run(id: String, decided: Map[Long, (String, Option[Long])],
+        rowsPerBatch: Map[Long, Int], gateT: Seq[GateStageTimings], spanT: Seq[GateStageTimings])
+    // one pipeline over a fresh signature index: a data trigger, the
+    // no-data trigger its watermark advance (25 s) schedules to evict the
+    // expired dedup state, and the next data trigger
+    def run(pipeline: String): Run = {
+      DedupGate.writeSigIndex(spark,
+        Seq(1L -> corpusText).toDF("doc_id", "text"), "nodata_gate_idx", nBuckets = 8)
+      val enc = implicitly[Encoder[(Long, String, java.sql.Timestamp)]]
+      val input = MemoryStream[(Long, String, java.sql.Timestamp)](enc, spark.sqlContext)
+      val docs = input.toDS().toDF("doc_id", "text", "ts")
+      val checkpoint = Files.createTempDirectory("graft-spec-nodata-ckpt").toString
+      val decided = new ConcurrentLinkedQueue[(Long, String, Option[Long])]()
+      val rowsPerBatch = new scala.collection.concurrent.TrieMap[Long, Int]()
+      val gateT = new ConcurrentLinkedQueue[GateStageTimings]()
+      val spanT = new ConcurrentLinkedQueue[GateStageTimings]()
+      val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (df, id) => {
         val rows = df.collect()
         rowsPerBatch.put(id, rows.length)
         rows.foreach(r => decided.add((r.getAs[Long]("doc_id"), r.getAs[String]("decision"),
           Option(r.getAs[java.lang.Long]("dup_of")).map(_.longValue()))))
-      },
-      delayThreshold = "5 seconds",
-      onGateTimings = (t: GateStageTimings) => { timings.add(t): Unit })
-      .option("checkpointLocation", checkpoint)
-      .start()
-    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // data trigger, then the no-data trigger its watermark advance
-      // (25 s) schedules to evict the expired dedup state
-      input.addData(Seq((701L, corpusText, at(10)), (702L, sibText, at(11)),
-        (703L, near(sibText, "zz"), at(12)), (704L, lateText, at(30)), (705L, "tiny doc", at(30))))
-      q.processAllAvailable()
-      // the next data trigger: 706 repeats 704's text within the watermark,
-      // so only the dedup state 704 left (expiring at 35 s) can drop it
-      input.addData(Seq((706L, lateText, at(31)), (707L, near(sibText, "yy"), at(32)),
-        (708L, wt("nd_nov"), at(33))))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
+      }
+      val onGate = (t: GateStageTimings) => { gateT.add(t): Unit }
+      val onSpan = (t: GateStageTimings) => { spanT.add(t): Unit }
+      // no auto-broadcast: a broadcast static base adds its own build job
+      // to every evaluation of the stream plan; joined by shuffle, one
+      // evaluation is one job, so the counts below are the gates'
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val q = try (pipeline match {
+        case "plain" => StreamMerge.gatedIngestPipeline(docs, staticBase, "nodata_gate_idx",
+          sink, delayThreshold = "5 seconds", onGateTimings = onGate)
+        case "decontam" => StreamMerge.gatedIngestPipelineDecontam(docs, staticBase,
+          "nodata_gate_idx", "nodata_eval_idx", sink, delayThreshold = "5 seconds",
+          onGateTimings = onGate, onSpanTimings = onSpan)
+        case "scrub" => StreamMerge.gatedIngestPipelineDecontamScrub(docs, staticBase,
+          "nodata_gate_idx", "nodata_eval_idx", sink, delayThreshold = "5 seconds",
+          onGateTimings = onGate, onSpanTimings = onSpan)
+        case "production" => StreamMerge.gatedIngestPipelineProduction(docs, staticBase,
+          "nodata_gate_idx", "nodata_eval_idx", "nodata_lm", Double.MaxValue, sink,
+          delayThreshold = "5 seconds", onGateTimings = onGate, onSpanTimings = onSpan)
+      }).option("checkpointLocation", checkpoint).start()
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        input.addData(Seq((701L, corpusText, at(10)), (702L, sibText, at(11)),
+          (703L, near(sibText, "zz"), at(12)), (704L, lateText, at(30)), (705L, "tiny doc", at(30))))
+        q.processAllAvailable()
+        // the next data trigger: 706 repeats 704's text within the
+        // watermark, so only the dedup state 704 left (expiring at 35 s)
+        // can drop it
+        input.addData(Seq((706L, lateText, at(31)), (707L, near(sibText, "yy"), at(32)),
+          (708L, novText, at(33))))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(q.exception.isEmpty, s"$pipeline stream failed: ${q.exception}")
+      Run(q.id.toString, decided.asScala.map(t => t._1 -> (t._2, t._3)).toMap,
+        rowsPerBatch.toMap, gateT.asScala.toSeq, spanT.asScala.toSeq)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val runs = try Seq("plain", "decontam", "scrub", "production").map(p => p -> run(p))
+    finally {
       val deadline = System.nanoTime() + 10000000000L
       var last = -1
       while (System.nanoTime() < deadline && !(started.get == ended.get && started.get == last)) {
@@ -2286,27 +2326,52 @@ class StreamingSpec extends AnyFunSuite {
       }
       spark.sparkContext.removeSparkListener(listener)
     }
-    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
-    val byId = decided.asScala.map(t => t._1 -> (t._2, t._3)).toMap
-    assert(byId == Map(
-      701L -> (("near_dup", Some(1L))),
-      702L -> (("insert", None)),
-      703L -> (("near_dup", Some(702L))),
-      704L -> (("insert", None)),
-      705L -> (("short", None)),
-      707L -> (("near_dup", Some(702L))),
-      708L -> (("insert", None))),
-      s"decisions wrong (706 must die in the watermarked dedup): ${decided.asScala.toSeq}")
-    assert(rowsPerBatch.get(0L).contains(5) && rowsPerBatch.get(1L).contains(0) &&
-      rowsPerBatch.get(2L).contains(2), s"expected data, no-data, data triggers: $rowsPerBatch")
-    val noData = jobsOf.getOrElse((q.id.toString, "1"), 0)
-    assert(noData >= 1 && noData <= 2,
-      s"the no-data trigger may run only the stream plan's one evaluation and the sink's " +
-        s"collect, ran $noData jobs: $jobsOf")
-    val t1 = timings.asScala.filter(_.batchId == 1L).toSeq
-    assert(t1.size == 1 && t1.head.sigSec == 0.0 && t1.head.probeSec == 0.0 &&
-      t1.head.appendSec == 0.0 && t1.head.appended == 0L,
-      s"the no-data trigger must report one zero-stage timing: $t1")
+    // the no-data trigger's jobs: the plain pipeline's stream-plan
+    // evaluation (the pin) and the sink's collect; the span pipelines'
+    // second pin (the span gate's own) or, in production, the LM gate's
+    // per-trigger model-generation read
+    val maxNoDataJobs = Map("plain" -> 2, "decontam" -> 3, "scrub" -> 3, "production" -> 3)
+    // 708 leaks the eval run: flagged, or cut with more than minTokens
+    // words left
+    val spanDecision = Map("plain" -> "insert", "decontam" -> "contaminated",
+      "scrub" -> "scrubbed", "production" -> "scrubbed")
+    for ((pipeline, r) <- runs) {
+      assert(r.decided == Map(
+        701L -> (("near_dup", Some(1L))),
+        702L -> (("insert", None)),
+        703L -> (("near_dup", Some(702L))),
+        704L -> (("insert", None)),
+        705L -> (("short", None)),
+        707L -> (("near_dup", Some(702L))),
+        708L -> ((spanDecision(pipeline), None))),
+        s"$pipeline decisions wrong (706 must die in the watermarked dedup): ${r.decided}")
+      assert(r.rowsPerBatch.get(0L).contains(5) && r.rowsPerBatch.get(1L).contains(0) &&
+        r.rowsPerBatch.get(2L).contains(2),
+        s"$pipeline: expected data, no-data, data triggers: ${r.rowsPerBatch}")
+      val noData = jobsOf.getOrElse((r.id, "1"), 0)
+      assert(noData >= 1 && noData <= maxNoDataJobs(pipeline),
+        s"$pipeline: the no-data trigger may run only its pins and the sink's collect, ran " +
+          s"$noData jobs: $jobsOf")
+      val noDataPlans = execsOf.collect { case (e, k) if k == ((r.id, "1")) =>
+        planOf.getOrElse(e.toLong, "") }.toSeq
+      Seq("nodata_gate_idx", "nodata_eval_idx", "winnow_select", "minhash_shingle_sig").foreach { read =>
+        assert(!noDataPlans.exists(_.contains(read)),
+          s"$pipeline: the no-data trigger must not run $read:\n${noDataPlans.mkString("\n")}")
+      }
+      def zeroStage(ts: Seq[GateStageTimings]): Boolean = {
+        val t1 = ts.filter(_.batchId == 1L)
+        t1.size == 1 && t1.head.sigSec == 0.0 && t1.head.probeSec == 0.0 &&
+          t1.head.appendSec == 0.0 && t1.head.appended == 0L
+      }
+      assert(zeroStage(r.gateT),
+        s"$pipeline: the no-data trigger must report one zero-stage gate timing: ${r.gateT}")
+      if (pipeline != "plain") {
+        assert(zeroStage(r.spanT),
+          s"$pipeline: the no-data trigger must report one zero-stage span timing: ${r.spanT}")
+        assert(r.spanT.exists(t => t.batchId == 2L && t.probeSec > 0.0),
+          s"$pipeline: the second data trigger must probe the eval index: ${r.spanT}")
+      }
+    }
   }
 
   test("hygiene-gated pipeline: blocklist and LM gates slot into the chain, narrow and stateless") {
