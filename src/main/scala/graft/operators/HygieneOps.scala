@@ -682,17 +682,15 @@ object HygieneOps {
     */
   def writeCharLmTableFrom(spark: SparkSession, d: DataFrame, table: String): Unit = {
     val (counts, ctx, vocab) = charlmModelOf(d)
-    graft.operators.VectorOps.clearStaleLocation(spark, table)
-    graft.operators.VectorOps.clearStaleLocation(spark, table + "_ctx")
-    counts.write.mode("overwrite").format("parquet").saveAsTable(table)
-    ctx.crossJoin(vocab).write.mode("overwrite").format("parquet").saveAsTable(table + "_ctx")
-    // generation stamp AFTER the data lands (a bump the gate observes
-    // must always point at the new counts — the reverse order could
-    // cache the OLD model under the NEW epoch and never re-arm): gate
-    // JVMs in OTHER processes re-validate this epoch per batch and
-    // re-collect on drift (r17 verdict task 1 — the same discipline as
-    // the ANN `_meta` staleness signals)
-    IndexEpoch.bumpUnconditional(spark, table)
+    // the epoch is the generation stamp, bumped AFTER the data lands (a
+    // bump the gate observes must always point at the new counts — the
+    // reverse order could cache the OLD model under the NEW epoch and
+    // never re-arm): gate JVMs in OTHER processes re-validate this epoch
+    // per batch and re-collect on drift
+    IndexTable.replace(spark, table, Seq(table + "_ctx")) {
+      counts.write.mode("overwrite").format("parquet").saveAsTable(table)
+      ctx.crossJoin(vocab).write.mode("overwrite").format("parquet").saveAsTable(table + "_ctx")
+    }
     // a REBUILD at the same (warehouse, name) must also re-arm THIS
     // JVM's gate cache immediately (CharLmGate r16 ADVICE) — same-JVM
     // writers shouldn't wait a batch for the epoch read to notice

@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *   - ids ride a broadcast anti-join, never an `isin` literal tree
   *     (the plan-scale trap measured on the span-gate probe);
   *   - a purge interleaving another maintainer fails LOUDLY at the
-  *     epoch check with the live table untouched ([[IndexEpoch]]), and
+  *     epoch check with the live table untouched ([[IndexTable]]), and
   *     any in-flight appender that began before the purge fails ITS
   *     commit instead of resurrecting purged rows it had already read.
   *
@@ -101,7 +101,7 @@ object IndexPurge {
     require(base.columns.contains(idCol),
       s"$table has no column $idCol (columns: ${base.columns.mkString(", ")})")
 
-    val epoch0 = IndexEpoch.current(spark, table)
+    val epoch0 = IndexTable.current(spark, table)
     val idsDf = spark.createDataFrame(ids.distinct.map(Tuple1(_))).toDF(idCol)
     val removed = base.join(broadcast(idsDf), Seq(idCol), "left_semi").count()
     if (removed == 0L) return 0L
@@ -112,7 +112,7 @@ object IndexPurge {
 
     // phase 1: survivors staged — live table untouched
     val staging = stagingTableFor(table)
-    VectorOps.clearStaleLocation(spark, staging)
+    IndexTable.clearStaleLocation(spark, staging)
     writeLike(spark, table, kept, staging)
     if (failAfterPhase <= 1) sys.error("injected crash after phase 1 (staging, pre-commit)")
     // serialization point BEFORE the commit marker: a concurrent
@@ -122,7 +122,7 @@ object IndexPurge {
     // can never replay a survivor set that lost a race (the
     // marker-then-bump order would let a crash in between roll a stale
     // set over the other maintainer's committed rows, silently)
-    try IndexEpoch.bump(spark, table, epoch0)
+    try IndexTable.bump(spark, table, epoch0)
     catch {
       case e: java.util.ConcurrentModificationException =>
         spark.sql(s"DROP TABLE IF EXISTS $staging")
@@ -135,7 +135,7 @@ object IndexPurge {
     // recovery (legal — it read the post-claim epoch and bumped past it)
     // rolls the now-stale staging BACK instead of silently erasing the
     // appended rows under the roll-forward
-    VectorOps.clearStaleLocation(spark, markerTableFor(table))
+    IndexTable.clearStaleLocation(spark, markerTableFor(table))
     spark.createDataFrame(Seq((removed, epoch0 + 1))).toDF("removed", "epoch")
       .write.mode("overwrite").format("parquet").saveAsTable(markerTableFor(table))
     if (failAfterPhase <= 2) sys.error("injected crash after phase 2 (committed, unswapped)")
@@ -180,7 +180,7 @@ object IndexPurge {
             s"the claim epoch is unrecoverable from it; inspect $staging vs $table " +
             "manually, then drop the marker (and staging if stale) to re-arm purge"))
         .getLong(1)
-      if (IndexEpoch.current(spark, table) == claimed) {
+      if (IndexTable.current(spark, table) == claimed) {
         spark.catalog.refreshTable(staging)
         writeLike(spark, staging, spark.table(staging), table)
       } else {

@@ -1,0 +1,216 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.functions.col
+
+/** The persisted-index protocol, the one module every index family
+  * (the banded text and raster indexes, the eval-gram index, the LSH,
+  * IVF, PQ and IVF-PQ indexes, the char-LM artifact) builds, measures
+  * and appends through. A family keeps only its own encoding and
+  * geometry; what is written here is the same for all of them:
+  *
+  *  - an index is a table plus side tables (`_meta`, `_codebook`,
+  *    `_books`, `_emb`, `_ctx`) and an `_epoch` fence;
+  *  - [[replace]] builds it: stale locations cleared, the family's
+  *    writes, then an unconditional epoch bump — the build owns the
+  *    index, so any appender that began before it fails its own commit
+  *    instead of appending rows signed under replaced geometry;
+  *  - [[staleness]] is the rebuild signal: the fraction of distinct ids
+  *    at rest beyond the `base_n` the build recorded, which every build
+  *    counts from the rows it wrote ([[idCount]]), never from its input;
+  *  - [[appendNovel]] is the replay-safe append.
+  *
+  * EPOCH GUARD. A monotonic epoch in a tiny side table (`<index>_epoch`,
+  * one bigint row), read at the START of an append's read-compute-write
+  * span and CHECK-AND-BUMPED immediately before the data write. Every
+  * append path has a single-sequential-maintainer contract: the
+  * idempotence anti-joins read the at-rest identity set, so two
+  * appenders interleaving the same span can each pass the check and land
+  * duplicate rows — duplicate probe candidates that silently skew TopK
+  * and staleness. Plain parquet has no compare-and-swap, so this guard
+  * cannot PREVENT that; what it does is make the contract violation
+  * LOUD: the second writer's bump observes the first writer's bump (its
+  * snapshot epoch is stale) and throws BEFORE writing any data, leaving
+  * the index exactly as the first writer committed it.
+  *
+  * Residual window (documented, not hidden): a writer that BEGINS after
+  * another's bump but before its data write becomes visible can still
+  * compute a stale anti-join — detection covers spans that overlap a
+  * bump, which is every interleaving longer than the sub-second
+  * bump-to-write gap. True concurrent maintenance needs a transactional
+  * table format (SURVEY §2's FileSink note); until then the contract
+  * stays single-maintainer and this guard converts violations from
+  * silent corruption to a loud, data-less failure. Legacy indexes
+  * without an epoch table read as epoch 0 and gain the table on their
+  * first guarded write.
+  *
+  * REPLAY SAFETY. foreachBatch is at-least-once: a micro-batch replayed
+  * after a failure re-delivers rows whose previous append DID commit.
+  * The family's id column is the index's identity, so idempotence is an
+  * anti-join against the at-rest ids: replayed rows vanish, genuinely
+  * new ones append. Parquet appends commit atomically per job, so
+  * probe-the-ids-then-insert composes to exactly-once for one sequential
+  * maintainer. Cost is one scan of the index's id column per append —
+  * the price of idempotence on a plain parquet table (a transactional
+  * format would key a MERGE on the id instead); the at-rest side takes
+  * no `distinct`, which would shuffle the whole index every batch.
+  *
+  * STALE RELATION CACHE. Under foreachBatch an insert executes through
+  * the micro-batch CLONE session, which invalidates only the clone's
+  * table-relation cache: the caller session's file listing goes stale,
+  * and a stale id list would silently re-append a prior batch's rows.
+  * The table is refreshed before the identity read and after the write.
+  *
+  * WITHIN-BATCH DEDUP. An id delivered TWICE within one batch (source
+  * re-emission) passes the at-rest anti-join twice, so within-batch
+  * identity needs its own dedup. It is the family's: a family with one
+  * index row per id passes one row per id (the first occurrence wins,
+  * arbitrary among conflicting payloads — a malformed input); a family
+  * whose id owns a row group (the eval-gram sites of one eval doc)
+  * passes the group, which one job writes, so the anti-join keeps or
+  * drops it whole.
+  *
+  * SINGLE SESSION. [[ensure]] and [[clearStaleLocation]] check, delete
+  * and build without atomicity: two sessions sharing one warehouse
+  * directory can race, one deleting the location the other is building
+  * or reading. Index tables are session-owned derived state here; a
+  * shared-metastore deployment needs an external build lock.
+  */
+object IndexTable {
+
+  private[graft] def epochTableFor(table: String): String = table + "_epoch"
+
+  /** The index's current epoch: 0 for a legacy index (no epoch table
+    * yet). Refreshes the relation cache first — bumps may have landed
+    * through a micro-batch clone session.
+    */
+  def current(spark: SparkSession, table: String): Long = {
+    val t = epochTableFor(table)
+    if (!spark.catalog.tableExists(t)) 0L
+    else {
+      spark.catalog.refreshTable(t)
+      spark.table(t).collect().headOption.map(_.getLong(0)).getOrElse(0L)
+    }
+  }
+
+  /** Check-and-bump: requires the epoch is still `expected` (the value
+    * read when the caller's read-compute-write span began) and advances
+    * it. Throws [[java.util.ConcurrentModificationException]] — with no
+    * data written by the caller — if another writer bumped in between.
+    */
+  def bump(spark: SparkSession, table: String, expected: Long): Unit = {
+    val now = current(spark, table)
+    if (now != expected) throw new java.util.ConcurrentModificationException(
+      s"index $table epoch moved $expected -> $now during this append's " +
+        "read-compute-write span: another maintainer (append or rebuild) committed in " +
+        "between, so this append's idempotence anti-join and geometry validation are " +
+        "stale. Nothing was written. The index supports ONE sequential maintainer — " +
+        "serialize appends, or rebuild if a concurrent write already landed.")
+    clearStaleLocation(spark, epochTableFor(table))
+    spark.createDataFrame(Seq(Tuple1(expected + 1))).toDF("epoch")
+      .write.mode("overwrite").format("parquet").saveAsTable(epochTableFor(table))
+  }
+
+  /** Unconditional bump for REBUILDS (overwrite paths own the index by
+    * contract): any in-flight appender that began before the rebuild
+    * fails its own commit instead of appending under dead geometry.
+    */
+  def bumpUnconditional(spark: SparkSession, table: String): Unit =
+    bump(spark, table, current(spark, table))
+
+  /** Deletes the managed location `saveAsTable(table)` would create when
+    * the catalog has NO entry for `table` but a previous JVM left the
+    * directory behind (Spark refuses to CREATE over it). The path is the
+    * EXACT location the session catalog derives (honoring the current
+    * database), and it is a derived table, regenerated from its inputs.
+    */
+  private[graft] def clearStaleLocation(spark: SparkSession, table: String): Unit =
+    if (!spark.catalog.tableExists(table)) {
+      val loc = new org.apache.hadoop.fs.Path(
+        GraftShim.defaultTablePath(spark, table))
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(loc)) fs.delete(loc, true)
+    }
+
+  /** Runs `build` unless `table` already exists in the session catalog,
+    * clearing a previous JVM's stale location first.
+    */
+  def ensure(spark: SparkSession, table: String)(build: => Unit): Unit =
+    if (!spark.catalog.tableExists(table)) {
+      clearStaleLocation(spark, table)
+      build
+    }
+
+  /** Builds (overwrites) `table` and its `sides`: clears their stale
+    * locations, runs the family's `write`, then bumps the epoch
+    * unconditionally — after the data lands, so an epoch a reader
+    * observes always points at the new rows.
+    */
+  def replace[A](spark: SparkSession, table: String, sides: Seq[String])(write: => A): A = {
+    (table +: sides).foreach(clearStaleLocation(spark, _))
+    val built = write
+    bumpUnconditional(spark, table)
+    built
+  }
+
+  /** Distinct ids at rest in `table` — the `base_n` a build records and
+    * the numerator of [[staleness]].
+    */
+  def idCount(spark: SparkSession, table: String, idCol: String): Long =
+    spark.table(table).select(idCol).distinct().count()
+
+  /** Fraction of `table`'s distinct ids added since the build recorded
+    * `baseN`: 0 right after a build, the rebuild signal for every frozen
+    * geometry or quantizer. 1.0 without a baseline (no meta, or an empty
+    * build): unconditionally stale.
+    */
+  def staleness(spark: SparkSession, table: String, idCol: String, baseN: Option[Long]): Double =
+    baseN match {
+      case Some(base) if base > 0 =>
+        spark.catalog.refreshTable(table) // appends land via the clone session
+        math.max(0.0, (idCount(spark, table, idCol) - base).toDouble / base)
+      case _ => 1.0
+    }
+
+  /** One epoch-guarded append span: the span starts (or inherits
+    * `beganEpoch`, for a caller whose own reads began earlier) BEFORE
+    * `novel` reads the at-rest ids; `novel` returns how many ids are new
+    * and what `write` needs to land them. Only with a nonzero count is
+    * the epoch checked-and-bumped, `write` run and the table refreshed.
+    * Returns the count.
+    */
+  def guardedAppend[A](spark: SparkSession, table: String, beganEpoch: Option[Long] = None)(
+      novel: => (Long, A))(write: A => Unit): Long = {
+    val epoch = beganEpoch.getOrElse(current(spark, table))
+    val (n, fresh) = novel
+    if (n > 0) {
+      bump(spark, table, epoch)
+      write(fresh)
+      spark.catalog.refreshTable(table)
+    }
+    n
+  }
+
+  /** The replay-safe append: the `rows` whose `idCol` (a bigint) is not
+    * yet at rest are pinned once, and their distinct ids counted in the same job;
+    * with a nonzero count the epoch is checked-and-bumped and the
+    * family's `write` (encode, then `insertInto`, which is positional:
+    * the pinned rows keep `rows`' column order) lands them. A fully
+    * replayed batch bumps nothing and writes nothing. Returns the ids
+    * appended.
+    */
+  def appendNovel(spark: SparkSession, table: String, idCol: String, rows: DataFrame,
+      beganEpoch: Option[Long] = None)(write: DataFrame => Unit): Long = {
+    spark.catalog.refreshTable(table)
+    var pinned: Option[org.apache.spark.rdd.RDD[_]] = None
+    try guardedAppend(spark, table, beganEpoch) {
+      val atRest = spark.table(table).select(col(idCol).as("at_rest_id"))
+      val (fresh, rdd, n) = GraftShim.localCheckpointTrackedDistinct(
+        rows.join(atRest, col(idCol) === col("at_rest_id"), "left_anti"),
+        rows.schema.fieldIndex(idCol), "appendNovel")
+      pinned = Some(rdd)
+      (n, fresh)
+    }(write)
+    finally pinned.foreach(GraftShim.releaseCheckpoint)
+  }
+}

@@ -776,16 +776,11 @@ object SpanOps {
     val ingested = raw.filter(col("doc_id") % 10 === 3).select("doc_id", "text")
     val sfx = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val lmTable = "graft_curate_lm_" + sfx
-    if (!spark.catalog.tableExists(lmTable + "_ctx")) {
-      VectorOps.clearStaleLocation(spark, lmTable)
-      VectorOps.clearStaleLocation(spark, lmTable + "_ctx")
-      HygieneOps.writeCharLmTableFrom(spark, ingested, lmTable)
-    }
+    IndexTable.ensure(spark, lmTable + "_ctx")(
+      HygieneOps.writeCharLmTableFrom(spark, ingested, lmTable))
     val sigTable = "graft_curate_sig_" + sfx
-    if (!spark.catalog.tableExists(sigTable)) {
-      VectorOps.clearStaleLocation(spark, sigTable)
-      graft.streaming.DedupGate.writeSigIndex(spark, ingested, sigTable)
-    }
+    IndexTable.ensure(spark, sigTable)(
+      graft.streaming.DedupGate.writeSigIndex(spark, ingested, sigTable))
     val baseIndex = ingested.groupBy(md5(col("text")).as("h"))
       .agg(min("doc_id").as("existing_id"))
     // threshold pass scores through the NARROW native form whenever the

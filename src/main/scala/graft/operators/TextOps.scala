@@ -1078,7 +1078,7 @@ object TextOps {
     */
   def writeMergeTable(spark: SparkSession, sfDir: String, table: String,
       rounds: Int = 10): Unit = {
-    graft.operators.VectorOps.clearStaleLocation(spark, table)
+    IndexTable.clearStaleLocation(spark, table)
     bpeMerges(spark, sfDir, rounds)
       .write.mode("overwrite").format("parquet").saveAsTable(table)
   }

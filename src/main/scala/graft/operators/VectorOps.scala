@@ -368,46 +368,11 @@ object VectorOps {
     * asserted in VectorSpec. No SQL oracle (seeded-hash buckets, like
     * ann_lsh); deterministic.
     */
-  /** Runs `build` unless `table` already exists in the session catalog.
-    * A previous JVM may have left the managed location on disk while
-    * this session's catalog has no entry — Spark refuses to CREATE over
-    * it, so the stale location is cleared first. The path deleted is the
-    * EXACT location `saveAsTable` is about to create (derived by the
-    * session catalog itself, honoring the current database — never a
-    * hand-built `warehouse/<name>` guess), and it is OUR derived index
-    * table, regenerated deterministically from the same data.
-    *
-    * SINGLE-SESSION ASSUMPTION: the check-then-delete-then-build sequence
-    * is not atomic. Two sessions sharing one warehouse directory (or
-    * concurrent annLshIndexed/annIvfIndexed calls in separate sessions)
-    * can race — one deleting the location the other is building or
-    * reading. Index tables are session-owned derived state here; a
-    * shared-metastore deployment needs an external build lock.
-    */
-  private def ensureIndexTable(spark: SparkSession, table: String)(build: => Unit): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      clearStaleLocation(spark, table)
-      build
-    }
-
-  /** Deletes the managed location `saveAsTable(table)` would create when
-    * the catalog has NO entry for `table` but a previous JVM left the
-    * directory behind (Spark refuses to CREATE over it). Same
-    * single-session assumption as [[ensureIndexTable]].
-    */
-  private[graft] def clearStaleLocation(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        org.apache.spark.sql.GraftShim.defaultTablePath(spark, table))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-
   private[graft] def annLshIndexed(spark: SparkSession, sfDir: String,
       probeRadius: Int = 1): DataFrame = {
     val base = emb(spark, sfDir)
     val table = "graft_lsh_index_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    ensureIndexTable(spark, table)(writeLshIndex(spark, sfDir, table))
+    IndexTable.ensure(spark, table)(writeLshIndex(spark, sfDir, table))
     // probe with the nBits the index was BUILT with (persisted metadata —
     // correct even after appends changed the corpus count); legacy
     // indexes without a meta table fall back to the deterministic
@@ -724,7 +689,7 @@ object VectorOps {
       nProbeOpt: Option[Int] = None, topK: Int = 3): DataFrame = {
     val base = emb(spark, sfDir)
     val table = "graft_ivf_index_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    ensureIndexTable(spark, table)(writeIvfIndex(spark, sfDir, table))
+    IndexTable.ensure(spark, table)(writeIvfIndex(spark, sfDir, table))
     val cents =
       if (spark.catalog.tableExists(codebookTableFor(table))) loadIvfCodebook(spark, table)._1
       else {
@@ -790,31 +755,22 @@ object VectorOps {
   private def writeLshIndexCounted(spark: SparkSession, base: DataFrame, n: Long,
       table: String, nBuckets: Int, nBitsOpt: Option[Int]): Int = {
     val nBits = nBitsOpt.getOrElse(bitsFor(n))
-    // a previous JVM may have left the managed location while THIS
-    // session's in-memory catalog has no entry — saveAsTable refuses to
-    // create over it (no-op when the catalog knows the table)
-    clearStaleLocation(spark, table)
-    withLshBucket(
-      base.select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm")), nBits)
-      .write.mode("overwrite").bucketBy(nBuckets, "bucket").sortBy("bucket")
-      .format("parquet").saveAsTable(table)
-    // persist the signature width + build-time corpus size next to the
-    // index (the LSH analog of the IVF codebook table): probes read the
-    // nBits the cells were actually hashed with, appends VALIDATE against
-    // it, and staleness has its baseline. base_n is counted from the rows
-    // ACTUALLY WRITTEN (a parquet-metadata count), not the caller's
-    // frame: a nondeterministic input (sample, shuffle+limit) can
-    // re-evaluate between the sizing count and the write, and the meta
-    // must describe the artifact it sits next to (r19 ADVICE) — the
-    // pre-count `n` only SIZES nBits, a heuristic, while `nbits` records
-    // the width actually hashed either way
-    clearStaleLocation(spark, metaTableFor(table))
-    val writtenN = spark.table(table).count()
-    spark.createDataFrame(Seq((nBits, writtenN))).toDF("nbits", "base_n")
-      .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
-    // rebuild owns the index: any in-flight appender fails its commit
-    IndexEpoch.bumpUnconditional(spark, table)
-    nBits
+    IndexTable.replace(spark, table, Seq(metaTableFor(table))) {
+      withLshBucket(
+        base.select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm")), nBits)
+        .write.mode("overwrite").bucketBy(nBuckets, "bucket").sortBy("bucket")
+        .format("parquet").saveAsTable(table)
+      // persist the signature width + build-time corpus size next to the
+      // index (the LSH analog of the IVF codebook table): probes read the
+      // nBits the cells were actually hashed with, appends VALIDATE
+      // against it, and staleness has its baseline. The pre-count `n`
+      // only SIZES nBits, a heuristic; `nbits` records the width actually
+      // hashed, and base_n the rows actually written
+      spark.createDataFrame(Seq((nBits, IndexTable.idCount(spark, table, "vec_id"))))
+        .toDF("nbits", "base_n")
+        .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
+      nBits
+    }
   }
 
   private[graft] def metaTableFor(table: String): String = table + "_meta"
@@ -827,115 +783,66 @@ object VectorOps {
     else spark.table(metaTableFor(table)).collect().headOption
       .map(r => (r.getInt(0), r.getLong(1)))
 
-  /** Fraction of the index appended since it was built — the LSH
-    * counterpart of [[ivfIndexStaleness]]. The hyperplanes are
-    * data-independent, so what drifts here is not a quantizer but BUCKET
-    * SIZING: `bitsFor` targeted ~32 vectors/bucket at build, and every
-    * append grows the average population, degrading the within-bucket
-    * scan bound. Rebuild ([[writeLshIndex]]) re-derives nBits for the
-    * grown corpus.
+  /** Fraction of the index appended since it was built
+    * ([[IndexTable.staleness]]). The hyperplanes are data-independent, so
+    * what drifts here is not a quantizer but BUCKET SIZING: `bitsFor`
+    * targeted ~32 vectors/bucket at build, and every append grows the
+    * average population, degrading the within-bucket scan bound. Rebuild
+    * ([[writeLshIndex]]) re-derives nBits for the grown corpus.
     */
   def lshIndexStaleness(spark: SparkSession, table: String): Double =
-    loadLshMeta(spark, table) match {
-      case None | Some((_, 0L)) => 1.0
-      case Some((_, baseN)) =>
-        val now = spark.table(table).count()
-        math.max(0.0, (now - baseN).toDouble / baseN)
-    }
+    IndexTable.staleness(spark, table, "vec_id", loadLshMeta(spark, table).map(_._2))
 
-  /** Incremental maintenance for a persisted LSH index: computes
-    * signatures for the NEW rows only and appends them through
-    * `insertInto`, which writes under the TABLE's bucket spec — every
-    * appended file set is bucketed by the same hash, so probes stay
-    * file-pruned and probe joins stay exchange-free on the index side
-    * (asserted in BucketingSpec after an append). `nBits` must be the
-    * value the index was built with (returned by [[writeLshIndex]]) —
-    * mixing signature widths would corrupt the probe contract, which is
-    * why it is a required argument and not re-derived from a count that
-    * the append itself changes. Full-refresh ([[writeLshIndex]]) remains
-    * the compaction path; append handles arrival.
+  /** Replay-safe append to a vector index ([[IndexTable.appendNovel]]
+    * keyed on vec_id): one row per vec_id, the first of a batch's repeats.
+    */
+  private def appendVectors(spark: SparkSession, table: String, newRows: DataFrame,
+      beganEpoch: Option[Long])(write: DataFrame => Unit): Long =
+    IndexTable.appendNovel(spark, table, "vec_id", newRows.dropDuplicates("vec_id"),
+      beganEpoch)(write)
+
+  /** Incremental maintenance for a persisted LSH index: signs the rows
+    * whose vec_id is not yet at rest ([[IndexTable.appendNovel]]) and
+    * appends them through `insertInto`, which writes under the TABLE's
+    * bucket spec, so probes stay file-pruned and probe joins stay
+    * exchange-free on the index side (asserted in BucketingSpec after an
+    * append). `nBits` must be the width the index was built with
+    * (returned by [[writeLshIndex]]): it is validated against the meta
+    * table, and a META-LESS (legacy) index is refused outright — without
+    * the persisted width the check would be a no-op, and a width mismatch
+    * would surface only as silently missing neighbors. The check runs
+    * inside the epoch span: a refused append writes no rows. Rebuild
+    * ([[writeLshIndex]]) is the compaction path. Returns the rows
+    * appended.
     */
   // (The PQ/IVFADC appends carry an extra dual-store obligation — see
   // appendToIvfPqIndexIdempotent — because their indexes hold codes,
   // not vectors; the LSH/IVF-Flat indexes store the embeddings
   // themselves, so appended rows are immediately probe-reachable.)
   def appendToLshIndex(spark: SparkSession, newRows: DataFrame, table: String, nBits: Int,
-      beganEpoch: Option[Long] = None): Unit = {
-    // epoch guard (see [[IndexEpoch]]): capture-or-inherit the span start,
-    // check-and-bump right before the write. Callers that read table
-    // state BEFORE calling (the idempotent wrapper's anti-join) pass the
-    // epoch they captured at that read, so the guard covers their whole
-    // read-compute-write span, not just this call.
-    val epoch = beganEpoch.getOrElse(IndexEpoch.current(spark, table))
-    // hard guard against the one misuse that silently corrupts probes:
-    // signatures of a different width than the at-rest cells'. A
-    // meta-less (legacy) index is refused outright — without the
-    // persisted width this check would be a no-op, the append would
-    // break the probe fallback's index-mirrors-corpus assumption, and
-    // the mismatch would surface only as silently missing neighbors
-    loadLshMeta(spark, table) match {
-      case Some((builtBits, _)) =>
-        require(builtBits == nBits,
-          s"index $table was built with nBits=$builtBits but append got nBits=$nBits — " +
-            "mixed signature widths corrupt the probe contract; rebuild with writeLshIndex")
-      case None =>
-        throw new IllegalArgumentException(
-          s"index $table has no meta table, so its signature width cannot be validated — " +
-            "appending would risk a silent width mismatch; rebuild with writeLshIndex first")
+      beganEpoch: Option[Long] = None): Long =
+    appendVectors(spark, table, newRows, beganEpoch) { fresh =>
+      loadLshMeta(spark, table) match {
+        case Some((builtBits, _)) =>
+          require(builtBits == nBits,
+            s"index $table was built with nBits=$builtBits but append got nBits=$nBits — " +
+              "mixed signature widths corrupt the probe contract; rebuild with writeLshIndex")
+        case None =>
+          throw new IllegalArgumentException(
+            s"index $table has no meta table, so its signature width cannot be validated — " +
+              "appending would risk a silent width mismatch; rebuild with writeLshIndex first")
+      }
+      withLshBucket(
+        fresh.select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm")), nBits)
+        .write.mode("append").insertInto(table)
     }
-    IndexEpoch.bump(spark, table, epoch)
-    withLshBucket(
-      newRows.select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm")), nBits)
-      .write.mode("append").insertInto(table)
-  }
 
-  /** REPLAY-SAFE [[appendToLshIndex]] — the form a streaming
-    * `foreachBatch` must use. foreachBatch is at-least-once: a micro-batch
-    * replayed after a failure re-delivers rows whose previous append DID
-    * commit, and duplicate index rows become duplicate probe candidates
-    * that silently skew TopK results and inflate staleness. vec_id is the
-    * index's identity, so idempotence is an anti-join against the at-rest
-    * ids: replayed rows vanish, genuinely new ones append. (Parquet
-    * appends commit atomically per job — a failed append leaves nothing —
-    * so probe-the-ids-then-insert composes to exactly-once for a single
-    * sequential maintainer; concurrent appenders of the SAME vec_id would
-    * race the check, the same single-writer assumption
-    * [[ensureIndexTable]] documents.) Cost is one scan of the index's
-    * vec_id column per batch — the price of idempotence on a plain
-    * parquet table; a transactional table format would key a MERGE on
-    * vec_id instead. Returns the rows actually appended (0 for a fully
-    * replayed batch — which then bumps no epoch and runs no insert).
+  /** [[appendToLshIndex]] under the name the streaming callers use — the
+    * form a `foreachBatch` must use (every index append is replay-safe).
     */
   def appendToLshIndexIdempotent(spark: SparkSession, newRows: DataFrame,
-      table: String, nBits: Int): Long = {
-    // refresh BEFORE the identity read and AFTER the insert: under
-    // foreachBatch the insert executes through the micro-batch CLONE
-    // session, which invalidates only the clone's table-relation cache —
-    // this session's cached file listing goes stale, and a stale id list
-    // here would silently re-append a prior batch's rows (the exact
-    // duplicate-candidates failure idempotence exists to prevent).
-    // dropDuplicates: a vec_id delivered TWICE within one batch (source
-    // re-emission) passes the at-rest anti-join twice — within-batch
-    // identity needs its own dedup (first occurrence wins, arbitrary
-    // among conflicting embeddings for one id — a malformed input)
-    spark.catalog.refreshTable(table)
-    // span start for the epoch guard: BEFORE the anti-join reads the
-    // at-rest identity set, so an interleaved writer invalidates it
-    val epoch = IndexEpoch.current(spark, table)
-    import org.apache.spark.sql.GraftShim
-    val (fresh, freshRdd) = GraftShim.localCheckpointTracked(
-      newRows.dropDuplicates("vec_id")
-        .join(spark.table(table).select("vec_id"), Seq("vec_id"), "left_anti"))
-    try {
-      // rows actually appended — [[EmbedGate]]'s per-batch observability
-      // and a free no-op fast path (a fully-replayed batch bumps no
-      // epoch and runs no insert job)
-      val n = fresh.count()
-      if (n > 0) appendToLshIndex(spark, fresh, table, nBits, beganEpoch = Some(epoch))
-      spark.catalog.refreshTable(table)
-      n
-    } finally GraftShim.releaseCheckpoint(freshRdd)
-  }
+      table: String, nBits: Int): Long =
+    appendToLshIndex(spark, newRows, table, nBits)
 
   /** Streaming LSH index maintenance: wires a `(vec_id, embedding)`
     * stream into per-batch idempotent appends — with checkpointing this
@@ -966,29 +873,29 @@ object VectorOps {
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, _: Long) =>
-        appendToIvfIndexIdempotent(spark, df, table)
+        appendToIvfIndexIdempotent(spark, df, table): Unit
       }
 
   /** IVF sibling of [[writeLshIndex]]: the multi-assigned cell frame
     * persisted bucketed on `cell`. Probes prune to the probed cells'
-    * files; the codebook for probe computation is the memoized quantizer
-    * metadata ([[centroidCache]]). Returns the centroids.
+    * files; the codebook persists next to it, with the distinct vec_ids
+    * written as the staleness baseline. Returns the centroids.
     */
   def writeIvfIndex(spark: SparkSession, sfDir: String, table: String,
       nBuckets: Int = 16, kOpt: Option[Int] = None,
       lloydRounds: Int = 10, multiAssign: Int = 2): Seq[(Int, Array[Float], Double)] = {
     val (cents, e) = ivfAssignments(spark, sfDir, kOpt, lloydRounds, multiAssign)
     require(cents.nonEmpty, "cannot index an empty corpus")
-    clearStaleLocation(spark, table) // same stale-location story as writeLshIndex
-    e.write.mode("overwrite").bucketBy(nBuckets, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
-    // persist the trained quantizer NEXT TO the index (k ≤ 64 rows —
-    // metadata scale): probes and appends in ANY later JVM read the
-    // codebook the cell assignments were actually built with, instead of
-    // retraining on a corpus that appends may since have changed
-    val baseN = corpusCount(emb(spark, sfDir), sfDir)
-    persistIvfCodebook(spark, table, cents, baseN, multiAssign)
-    IndexEpoch.bumpUnconditional(spark, table) // rebuild owns the index
+    IndexTable.replace(spark, table, Seq(codebookTableFor(table))) {
+      e.write.mode("overwrite").bucketBy(nBuckets, "cell").sortBy("cell")
+        .format("parquet").saveAsTable(table)
+      // persist the trained quantizer NEXT TO the index (k ≤ 64 rows —
+      // metadata scale): probes and appends in ANY later JVM read the
+      // codebook the cell assignments were actually built with, instead
+      // of retraining on a corpus that appends may since have changed
+      persistIvfCodebook(spark, table, cents, IndexTable.idCount(spark, table, "vec_id"),
+        multiAssign)
+    }
     cents
   }
 
@@ -1000,13 +907,11 @@ object VectorOps {
     * columns positionally, so a schema change lives here or nowhere.
     */
   private def persistIvfCodebook(spark: SparkSession, table: String,
-      cents: Seq[(Int, Array[Float], Double)], baseN: Long, multiAssign: Int): Unit = {
-    clearStaleLocation(spark, codebookTableFor(table))
+      cents: Seq[(Int, Array[Float], Double)], baseN: Long, multiAssign: Int): Unit =
     spark.createDataFrame(
       cents.map { case (i, arr, _) => (i, arr.toSeq, baseN, multiAssign) })
       .toDF("cent", "embedding", "base_n", "multi_assign")
       .write.mode("overwrite").format("parquet").saveAsTable(codebookTableFor(table))
-  }
 
   /** The persisted quantizer for an IVF index: the codebook rows (sorted
     * by centroid id, norms recomputed — floats roundtrip parquet exactly,
@@ -1061,51 +966,34 @@ object VectorOps {
     * guard refuses.
     */
   def appendToIvfIndex(spark: SparkSession, newRows: DataFrame, table: String,
-      beganEpoch: Option[Long] = None): Unit = {
-    val epoch = beganEpoch.getOrElse(IndexEpoch.current(spark, table))
-    val (cents, _, builtMa) = loadIvfCodebookFull(spark, table)
-    require(cents.nonEmpty, s"no persisted codebook for $table — build with writeIvfIndex")
-    val m = math.min(builtMa, cents.length)
-    IndexEpoch.bump(spark, table, epoch)
-    newRows
-      .select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm"))
-      .withColumn("cells", topCellsFor(cents, "embedding", "nrm", m))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cells")(0).as("cent"),
-        posexplode(col("cells")).as(Seq("cidx", "cell")))
-      .write.mode("append").insertInto(table)
-  }
+      beganEpoch: Option[Long] = None): Long =
+    appendVectors(spark, table, newRows, beganEpoch) { fresh =>
+      val (cents, _, builtMa) = loadIvfCodebookFull(spark, table)
+      require(cents.nonEmpty, s"no persisted codebook for $table — build with writeIvfIndex")
+      val m = math.min(builtMa, cents.length)
+      fresh
+        .select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm"))
+        .withColumn("cells", topCellsFor(cents, "embedding", "nrm", m))
+        .select(col("vec_id"), col("embedding"), col("nrm"), col("cells")(0).as("cent"),
+          posexplode(col("cells")).as(Seq("cidx", "cell")))
+        .write.mode("append").insertInto(table)
+    }
 
-  /** REPLAY-SAFE [[appendToIvfIndex]] — see [[appendToLshIndexIdempotent]]
-    * for the at-least-once rationale. A vec_id's multiAssign cell rows are
-    * written by ONE append job, so the distinct-id anti-join either keeps
-    * or drops the whole row group — a replay can never land a partial
-    * second assignment.
+  /** [[appendToIvfIndex]] under the name the streaming callers use. A
+    * vec_id's multiAssign cell rows are written by ONE append job, so the
+    * at-rest anti-join either keeps or drops the whole row group — a
+    * replay can never land a partial second assignment.
     */
-  def appendToIvfIndexIdempotent(spark: SparkSession, newRows: DataFrame, table: String): Unit = {
-    // same stale-cache and within-batch-dedup discipline as
-    // [[appendToLshIndexIdempotent]]; no distinct on the at-rest side —
-    // left_anti is unaffected by right-side duplicates (the multiAssign
-    // rows), and the distinct would shuffle the whole index every batch
-    spark.catalog.refreshTable(table)
-    val epoch = IndexEpoch.current(spark, table) // span start: before the anti-join read
-    appendToIvfIndex(spark,
-      newRows.dropDuplicates("vec_id")
-        .join(spark.table(table).select("vec_id"), Seq("vec_id"), "left_anti"),
-      table, beganEpoch = Some(epoch))
-    spark.catalog.refreshTable(table)
-  }
+  def appendToIvfIndexIdempotent(spark: SparkSession, newRows: DataFrame, table: String): Long =
+    appendToIvfIndex(spark, newRows, table)
 
-  /** Fraction of the index appended since its codebook was trained:
-    * `(distinct vec_ids now − corpus size at build) / corpus size at
-    * build`. 0 right after a build; the rebuild signal for the frozen
-    * quantizer (see [[appendToIvfIndex]]).
+  /** Fraction of the index appended since its codebook was trained
+    * ([[IndexTable.staleness]] over distinct vec_ids against the
+    * codebook's `base_n`): the rebuild signal for the frozen quantizer
+    * (see [[appendToIvfIndex]]).
     */
-  def ivfIndexStaleness(spark: SparkSession, table: String): Double = {
-    val (_, baseN) = loadIvfCodebook(spark, table)
-    if (baseN <= 0L) return 1.0
-    val now = spark.table(table).select("vec_id").distinct().count()
-    math.max(0.0, (now - baseN).toDouble / baseN)
-  }
+  def ivfIndexStaleness(spark: SparkSession, table: String): Double =
+    IndexTable.staleness(spark, table, "vec_id", Some(loadIvfCodebook(spark, table)._2))
 
   /** Radius-1 probe set for one query vector against a persisted LSH
     * index, computed through the SAME `bucketCol` definition as the
@@ -1517,11 +1405,9 @@ object VectorOps {
     removed
   }
 
-  private def writeEmbSidecar(spark: SparkSession, base: DataFrame, table: String): Unit = {
-    clearStaleLocation(spark, embTableFor(table))
+  private def writeEmbSidecar(spark: SparkSession, base: DataFrame, table: String): Unit =
     base.select("vec_id", "embedding")
       .write.mode("overwrite").format("parquet").saveAsTable(embTableFor(table))
-  }
 
   /** Sidecar half of an idempotent append: lands the arrival embeddings
     * not already in the sidecar. Runs BEFORE the code write, and
@@ -1549,18 +1435,20 @@ object VectorOps {
     * (S·ks rows of 8 floats, metadata scale), the [[writeIvfIndex]]
     * codebook discipline: any later JVM probes with the books the codes
     * were actually encoded with, never a retrain that could silently
-    * diverge from the at-rest codes.
+    * diverge from the at-rest codes. The build bumps the epoch
+    * ([[IndexTable.replace]]), so an append that began before it fails
+    * its commit instead of landing codes encoded under replaced books.
     */
   def writePqIndex(spark: SparkSession, sfDir: String, table: String): Unit = {
     val base = emb(spark, sfDir)
-    val n = corpusCount(base, sfDir)
-    val books = pqBookCache.getOrElseUpdate(sfDir, trainPqBooks(base, n))
+    val books = pqBookCache.getOrElseUpdate(sfDir, trainPqBooks(base, corpusCount(base, sfDir)))
     require(books.nonEmpty, "cannot index an empty corpus")
-    clearStaleLocation(spark, table)
-    withPqCodes(base, books).select("vec_id", "codes")
-      .write.mode("overwrite").format("parquet").saveAsTable(table)
-    persistPqBooks(spark, table, books, n)
-    writeEmbSidecar(spark, base, table)
+    IndexTable.replace(spark, table, Seq(pqBooksTableFor(table), embTableFor(table))) {
+      withPqCodes(base, books).select("vec_id", "codes")
+        .write.mode("overwrite").format("parquet").saveAsTable(table)
+      persistPqBooks(spark, table, books, IndexTable.idCount(spark, table, "vec_id"))
+      writeEmbSidecar(spark, base, table)
+    }
   }
 
   /** The ONE copy of the PQ-books artifact schema — shared by
@@ -1569,7 +1457,6 @@ object VectorOps {
     */
   private def persistPqBooks(spark: SparkSession, table: String,
       books: Array[Array[Array[Float]]], baseN: Long): Unit = {
-    clearStaleLocation(spark, pqBooksTableFor(table))
     val rows = for {
       (book, s) <- books.zipWithIndex.toSeq
       (cvec, c) <- book.zipWithIndex.toSeq
@@ -1592,40 +1479,34 @@ object VectorOps {
   }
 
   /** Incremental maintenance for the persisted PQ index — the
-    * [[appendToIvfIndexIdempotent]] stance verbatim: arrivals encode
-    * against the FROZEN persisted books (train once, assign forever —
-    * a retrain would silently diverge from the codes already at rest);
-    * the cost of freezing is quantization distortion on drifted
-    * arrivals, quantified by [[pqIndexStaleness]] exactly like the IVF
-    * rebuild signal. Idempotent by vec_id anti-join with the same
-    * stale-cache refreshes; `insertInto` writes by POSITION, so the
-    * select is pinned to the table's (vec_id, codes) column order.
-    * The arrival's EMBEDDINGS land in the index-owned sidecar FIRST
-    * ([[appendEmbSidecarIdempotent]] — sidecar ⊇ codes at every step),
-    * so [[annPqIndexed]]'s default re-rank store reaches appended rows
-    * with no caller-threaded `embStore` (r18 verdict task 2; an
-    * explicit `embStore` still overrides, and then covering the
-    * appended ids is that caller's obligation as before).
+    * [[appendToIvfIndex]] stance verbatim: arrivals encode against the
+    * FROZEN persisted books (train once, assign forever — a retrain would
+    * silently diverge from the codes already at rest); the cost of
+    * freezing is quantization distortion on drifted arrivals, quantified
+    * by [[pqIndexStaleness]] exactly like the IVF rebuild signal.
+    * Replay-safe and epoch-guarded ([[IndexTable.appendNovel]]): the
+    * novel rows are pinned once and feed both writes. `insertInto` writes
+    * by POSITION, so the select is pinned to the table's (vec_id, codes)
+    * column order. The arrival's EMBEDDINGS land in the index-owned
+    * sidecar FIRST ([[appendEmbSidecarIdempotent]] — sidecar ⊇ codes at
+    * every step), so [[annPqIndexed]]'s default re-rank store reaches
+    * appended rows with no caller-threaded `embStore` (an explicit
+    * `embStore` still overrides, and then covering the appended ids is
+    * that caller's obligation). Returns the rows appended.
     */
-  def appendToPqIndexIdempotent(spark: SparkSession, newRows: DataFrame, table: String): Unit = {
-    val (books, _) = loadPqBooks(spark, table)
-    require(books.nonEmpty, s"PQ index $table has an empty books table")
-    spark.catalog.refreshTable(table)
-    val novel = newRows.dropDuplicates("vec_id")
-      .join(spark.table(table).select("vec_id"), Seq("vec_id"), "left_anti")
-    appendEmbSidecarIdempotent(spark, novel, table)
-    withPqCodes(novel, books).select("vec_id", "codes").write.insertInto(table)
-    spark.catalog.refreshTable(table)
-  }
+  def appendToPqIndexIdempotent(spark: SparkSession, newRows: DataFrame, table: String,
+      beganEpoch: Option[Long] = None): Long =
+    appendVectors(spark, table, newRows, beganEpoch) { fresh =>
+      val (books, _) = loadPqBooks(spark, table)
+      require(books.nonEmpty, s"PQ index $table has an empty books table")
+      appendEmbSidecarIdempotent(spark, fresh, table)
+      withPqCodes(fresh, books).select("vec_id", "codes").write.insertInto(table)
+    }
 
   /** Fraction of the code table appended since its books were trained —
     * the [[ivfIndexStaleness]] analog for the frozen-book policy. */
-  def pqIndexStaleness(spark: SparkSession, table: String): Double = {
-    val (_, baseN) = loadPqBooks(spark, table)
-    if (baseN <= 0L) return 1.0
-    val now = spark.table(table).select("vec_id").distinct().count()
-    math.max(0.0, (now - baseN).toDouble / baseN)
-  }
+  def pqIndexStaleness(spark: SparkSession, table: String): Double =
+    IndexTable.staleness(spark, table, "vec_id", Some(loadPqBooks(spark, table)._2))
 
   /** The exhaustive-ADC workload answered from the PERSISTED code table
     * with the PERSISTED books (frozen-book policy — the
@@ -1640,7 +1521,7 @@ object VectorOps {
       tableOpt: Option[String] = None): DataFrame = {
     val table = tableOpt.getOrElse(
       "graft_pq_index_" + sfDir.replaceAll("[^A-Za-z0-9]", "_"))
-    ensureIndexTable(spark, table)(writePqIndex(spark, sfDir, table))
+    IndexTable.ensure(spark, table)(writePqIndex(spark, sfDir, table))
     val (books, _) = loadPqBooks(spark, table)
     require(books.nonEmpty, s"PQ index $table has an empty books table")
     val base = emb(spark, sfDir)
@@ -1669,42 +1550,42 @@ object VectorOps {
     * PQ subspaces) under the frozen-quantizer discipline every other
     * index follows: any later JVM probes with exactly the artifacts the
     * at-rest rows were assigned/encoded with. Rebuild bumps the epoch
-    * so in-flight appenders fail loudly ([[IndexEpoch]]).
+    * so in-flight appenders fail loudly ([[IndexTable.replace]]).
     */
   def writeIvfPqIndex(spark: SparkSession, sfDir: String, table: String,
       nBuckets: Int = 16): Unit = {
     val base = emb(spark, sfDir)
-    val n = corpusCount(base, sfDir)
     // the ONE multiAssign value: assigned with AND persisted (a literal
     // in the codebook row could silently drift from the assignment call)
     val multiAssign = 2
-    val books = pqBookCache.getOrElseUpdate(sfDir, trainPqBooks(base, n))
+    val books = pqBookCache.getOrElseUpdate(sfDir, trainPqBooks(base, corpusCount(base, sfDir)))
     val (cents, pre) = ivfCellsFrame(spark, sfDir, kOpt = None,
       lloydRounds = 10, multiAssign = multiAssign)
     require(books.nonEmpty && cents.nonEmpty, "cannot index an empty corpus")
-    clearStaleLocation(spark, table)
-    // encode below the multi-assign explode — once per vector, not per
-    // assignment copy (the annIvfPq fix, same build geometry)
-    explodeCells(withPqCodes(pre, books), Seq("vec_id", "codes"))
-      .select(col("vec_id"), col("cent"), col("cidx"), col("cell"), col("codes"))
-      .write.mode("overwrite").bucketBy(nBuckets, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
-    persistIvfCodebook(spark, table, cents, n, multiAssign)
-    persistPqBooks(spark, table, books, n)
-    writeEmbSidecar(spark, base, table)
-    IndexEpoch.bumpUnconditional(spark, table)
+    IndexTable.replace(spark, table,
+        Seq(codebookTableFor(table), pqBooksTableFor(table), embTableFor(table))) {
+      // encode below the multi-assign explode — once per vector, not per
+      // assignment copy (the annIvfPq fix, same build geometry)
+      explodeCells(withPqCodes(pre, books), Seq("vec_id", "codes"))
+        .select(col("vec_id"), col("cent"), col("cidx"), col("cell"), col("codes"))
+        .write.mode("overwrite").bucketBy(nBuckets, "cell").sortBy("cell")
+        .format("parquet").saveAsTable(table)
+      val baseN = IndexTable.idCount(spark, table, "vec_id")
+      persistIvfCodebook(spark, table, cents, baseN, multiAssign)
+      persistPqBooks(spark, table, books, baseN)
+      writeEmbSidecar(spark, base, table)
+    }
   }
 
   /** Incremental maintenance for the persisted IVFADC index — both
     * frozen-artifact obligations at once: arrivals are cell-assigned
     * against the PERSISTED coarse codebook (its build-time multiAssign,
     * never a retrain) AND encoded against the PERSISTED books, so new
-    * rows can never diverge from the at-rest geometry. Replay-safe by
-    * the same distinct-id anti-join as the siblings; `insertInto`
+    * rows can never diverge from the at-rest geometry. Replay-safe and
+    * epoch-guarded like the siblings ([[IndexTable.appendNovel]]: the
+    * novel rows are pinned once and feed both writes); `insertInto`
     * writes by POSITION under the table's bucket spec, so the select is
-    * pinned to (vec_id, cent, cidx, cell, codes). Epoch-guarded: the
-    * span starts before the anti-join read and check-and-bumps right
-    * before the write. [[ivfPqIndexStaleness]] is the rebuild signal
+    * pinned to (vec_id, cent, cidx, cell, codes). [[ivfPqIndexStaleness]] is the rebuild signal
     * (distinct vec_ids vs the codebook's build-time corpus size — the
     * code rows are ×multiAssign, so a raw count would double-read).
     *
@@ -1721,27 +1602,22 @@ object VectorOps {
     * Pinned end-to-end in VectorSpec's append test.
     */
   def appendToIvfPqIndexIdempotent(spark: SparkSession, newRows: DataFrame,
-      table: String): Unit = {
-    spark.catalog.refreshTable(table)
-    val epoch = IndexEpoch.current(spark, table)
-    val (books, _) = loadPqBooks(spark, table)
-    val (cents, _, builtMa) = loadIvfCodebookFull(spark, table)
-    require(books.nonEmpty && cents.nonEmpty,
-      s"IVFADC index $table is missing its quantizer tables — rebuild with writeIvfPqIndex")
-    val m = math.min(builtMa, cents.length)
-    val novel = newRows.dropDuplicates("vec_id")
-      .join(spark.table(table).select("vec_id"), Seq("vec_id"), "left_anti")
-    IndexEpoch.bump(spark, table, epoch)
-    appendEmbSidecarIdempotent(spark, novel, table)
-    withPqCodes(novel, books)
-      .select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm"), col("codes"))
-      .withColumn("cells", topCellsFor(cents, "embedding", "nrm", m))
-      .select(col("vec_id"), col("cells")(0).as("cent"),
-        posexplode(col("cells")).as(Seq("cidx", "cell")), col("codes"))
-      .select("vec_id", "cent", "cidx", "cell", "codes")
-      .write.mode("append").insertInto(table)
-    spark.catalog.refreshTable(table)
-  }
+      table: String): Long =
+    appendVectors(spark, table, newRows, beganEpoch = None) { fresh =>
+      val (books, _) = loadPqBooks(spark, table)
+      val (cents, _, builtMa) = loadIvfCodebookFull(spark, table)
+      require(books.nonEmpty && cents.nonEmpty,
+        s"IVFADC index $table is missing its quantizer tables — rebuild with writeIvfPqIndex")
+      val m = math.min(builtMa, cents.length)
+      appendEmbSidecarIdempotent(spark, fresh, table)
+      withPqCodes(fresh, books)
+        .select(col("vec_id"), col("embedding"), normCol("embedding").as("nrm"), col("codes"))
+        .withColumn("cells", topCellsFor(cents, "embedding", "nrm", m))
+        .select(col("vec_id"), col("cells")(0).as("cent"),
+          posexplode(col("cells")).as(Seq("cidx", "cell")), col("codes"))
+        .select("vec_id", "cent", "cidx", "cell", "codes")
+        .write.mode("append").insertInto(table)
+    }
 
   /** Fraction of the IVFADC index appended since its quantizers were
     * trained — identical artifact layout (`_codebook` with base_n) and
@@ -1767,7 +1643,7 @@ object VectorOps {
       tableOpt: Option[String] = None): DataFrame = {
     val table = tableOpt.getOrElse(
       "graft_ivfpq_index_" + sfDir.replaceAll("[^A-Za-z0-9]", "_"))
-    ensureIndexTable(spark, table)(writeIvfPqIndex(spark, sfDir, table))
+    IndexTable.ensure(spark, table)(writeIvfPqIndex(spark, sfDir, table))
     val (books, _) = loadPqBooks(spark, table)
     val (cents, _) = loadIvfCodebook(spark, table)
     require(books.nonEmpty && cents.nonEmpty,

@@ -14,7 +14,7 @@ import graft.operators.HygieneOps
   *
   * The gate picks its scoring PLAN by artifact size, resolved once per
   * artifact generation per (warehouse, table) and re-validated against
-  * the persisted [[graft.operators.IndexEpoch]] stamp each batch (r17
+  * the persisted [[graft.operators.IndexTable]] epoch stamp each batch (r17
   * introduced the memoization; r18 scoped it to the generation so a
   * rebuild by ANOTHER process is picked up within one batch): an
   * artifact within `CharLmLiteralMax` is collected
@@ -54,7 +54,7 @@ object CharLmGate {
     */
   /** Per-(warehouse, table) gate-side model state, resolved once per
     * artifact GENERATION (r17 resolved once per JVM; r18 verdict task 1
-    * scoped the memoization to the [[graft.operators.IndexEpoch]] stamp
+    * scoped the memoization to the [[graft.operators.IndexTable]] epoch stamp
     * [[HygieneOps.writeCharLmTableFrom]] writes): `Literal` carries the
     * collected maps for the narrow native scoring form, `JoinForm` marks
     * a model over [[HygieneOps.CharLmLiteralMax]] that must keep scoring
@@ -107,7 +107,7 @@ object CharLmGate {
       // one 1-row read per batch: the generation stamp writeCharLmTableFrom
       // bumps after every (re)write — the cache is valid exactly while the
       // persisted generation matches the one it was collected under
-      val epoch = graft.operators.IndexEpoch.current(s, lmTable)
+      val epoch = graft.operators.IndexTable.current(s, lmTable)
       if (cached != null && cached.epoch == epoch) cached.model
       else {
         // the artifact moved (or first use): drop relation caches first —
@@ -126,7 +126,7 @@ object CharLmGate {
       }
     } catch {
       // a CROSS-PROCESS rebuild uses non-atomic drop+recreate writes
-      // (writeCharLmTableFrom, IndexEpoch.bump), so the per-batch
+      // (writeCharLmTableFrom, IndexTable.bump), so the per-batch
       // validation can catch the artifact mid-overwrite: the epoch read,
       // the refresh, or the re-collect transiently fails
       // (table-not-found / empty _ctx) in exactly the scenario the

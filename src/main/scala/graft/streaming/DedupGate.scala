@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.operators.{DedupOps, VectorOps}
+import graft.operators.{DedupOps, IndexTable, VectorOps}
 
 /** Streaming near-duplicate INGEST GATE: checks each arriving micro-batch
   * of documents against a persisted MinHash signature index and flags
@@ -93,10 +93,10 @@ object DedupGate {
   /** Fraction of the index's documents appended since it was built — the
     * signature-index counterpart of [[VectorOps.lshIndexStaleness]], and
     * the REBUILD TRIGGER a long-running gate needs
-    * ([[NearDup.staleness]]). 1.0 for an index without meta.
+    * ([[IndexTable.staleness]]). 1.0 for an index without meta.
     */
   def sigIndexStaleness(spark: SparkSession, table: String): Double =
-    NearDup.staleness(spark, table, loadSigMeta(spark, table).map(_._3))
+    IndexTable.staleness(spark, table, "doc_id", loadSigMeta(spark, table).map(_._3))
 
   private[streaming] def validateMeta(spark: SparkSession, table: String): Unit =
     NearDup.validateGeometry(spark, table, Geometry, "writeSigIndex")
@@ -155,11 +155,8 @@ object DedupGate {
   }
 
   /** Appends the signatures of docs not already at rest — idempotent by
-    * doc_id, the replay-safe form foreachBatch needs
-    * ([[NearDup.appendBanded]]; same contract and
-    * single-sequential-maintainer assumption as
-    * [[VectorOps.appendToLshIndexIdempotent]]). Returns the number of
-    * docs actually appended.
+    * doc_id ([[NearDup.appendBanded]], under the [[IndexTable]] append
+    * contract). Returns the number of docs actually appended.
     */
   def appendNewSigsIdempotent(spark: SparkSession, docs: DataFrame, table: String): Long = {
     validateMeta(spark, table)

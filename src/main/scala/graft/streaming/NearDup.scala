@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.operators.{IndexEpoch, VectorOps}
+import graft.operators.IndexTable
 
 /** Wall-clock seconds per gate stage for ONE micro-batch — the record
   * of every streaming gate: the near-dup gates ([[DedupGate]],
@@ -245,39 +245,32 @@ private[streaming] object NearDup {
 
   /** Appends the signature rows of ids not already at rest to the banded
     * index `table` (text and raster; the first column is the doc id) —
-    * idempotent by id, the replay-safe form foreachBatch's at-least-once
-    * contract needs, under the single-sequential-maintainer assumption
-    * fenced by [[IndexEpoch]]. The rows are micro-batch scale and on the
-    * driver: byte-equal duplicate rows drop here (a source that delivers
-    * one row twice, or a dual-signed doc whose bands a scrub left
-    * untouched, must not index twins), only the batch's ids are read
-    * back from the index (a literal filter, no `distinct` or shuffle),
-    * and the fresh rows write from the driver in one task (at most one
-    * file per bucket). `insertInto` is positional and keeps the table's
-    * bucket spec, so `schema` must be the table's column order and
-    * probes stay file-pruned after arrival. Returns the docs appended.
+    * idempotent by id and epoch-guarded ([[IndexTable.guardedAppend]]).
+    * The rows are micro-batch scale and on the driver, so the replay
+    * check is driver-local rather than [[IndexTable.appendNovel]]'s
+    * pinned anti-join: byte-equal duplicate rows drop here (a source
+    * that delivers one row twice, or a dual-signed doc whose bands a
+    * scrub left untouched, must not index twins), only the batch's ids
+    * are read back from the index (a literal filter, no `distinct` or
+    * shuffle), and the fresh rows write from the driver in one task (at
+    * most one file per bucket). `insertInto` is positional and keeps the
+    * table's bucket spec, so `schema` must be the table's column order
+    * and probes stay file-pruned after arrival. Returns the docs
+    * appended.
     */
-  def appendBanded(spark: SparkSession, table: String, rows: Seq[Row], schema: StructType): Long = {
-    // epoch span start: before the replay check reads the at-rest ids
-    val epoch = IndexEpoch.current(spark, table)
-    val ids = rows.map(_.getLong(0)).distinct
-    val atRest =
-      if (ids.isEmpty) Set.empty[Long]
-      else spark.table(table).select(schema.fields(0).name)
-        .filter(col(schema.fields(0).name).isin(ids: _*))
-        .collect().map(_.getLong(0)).toSet
-    val n = ids.count(id => !atRest(id)).toLong
-    if (n > 0) {
-      IndexEpoch.bump(spark, table, epoch)
-      spark.createDataFrame(rows.distinct.filterNot(r => atRest(r.getLong(0))).asJava, schema)
+  def appendBanded(spark: SparkSession, table: String, rows: Seq[Row], schema: StructType): Long =
+    IndexTable.guardedAppend(spark, table) {
+      val ids = rows.map(_.getLong(0)).distinct
+      val atRest =
+        if (ids.isEmpty) Set.empty[Long]
+        else spark.table(table).select(schema.fields(0).name)
+          .filter(col(schema.fields(0).name).isin(ids: _*))
+          .collect().map(_.getLong(0)).toSet
+      (ids.count(id => !atRest(id)).toLong, rows.distinct.filterNot(r => atRest(r.getLong(0))))
+    } { fresh =>
+      spark.createDataFrame(fresh.asJava, schema)
         .coalesce(1).write.mode("append").insertInto(table)
-      // foreachBatch writes through the micro-batch CLONE session; the
-      // caller session's relation cache must not serve the pre-append
-      // file list (counts/anti-joins would silently miss the new rows)
-      spark.catalog.refreshTable(table)
     }
-    n
-  }
 
   // ---- the banded index of the text and raster gates: build, rebuild, meta ----
 
@@ -287,46 +280,40 @@ private[streaming] object NearDup {
     * first), BUCKETED BY `keyCol` so a probe prunes index files, plus its
     * meta table: the gate's `geometry`, persisted so an index written
     * under another geometry fails validation instead of silently mixing
-    * layouts, and `base_n`, the doc count at build. The build owns the
-    * index: the epoch bumps unconditionally, so in-flight appenders fail
-    * their commit ([[IndexEpoch]]).
+    * layouts, and `base_n`, the doc count written. Built through
+    * [[IndexTable.replace]].
     */
   def writeBanded(spark: SparkSession, banded: DataFrame, table: String, keyCol: String,
-      nBuckets: Int, geometry: Seq[(String, Int)]): Unit = {
-    VectorOps.clearStaleLocation(spark, table)
-    banded.write.mode("overwrite").bucketBy(nBuckets, keyCol).sortBy(keyCol)
-      .format("parquet").saveAsTable(table)
-    // base_n from the just-written table, not a second pass over the seed
-    // corpus (at index-build scale the corpus scan is the whole cost)
-    val baseN = spark.table(table).select("doc_id").distinct().count()
-    VectorOps.clearStaleLocation(spark, metaTableFor(table))
-    writeMeta(spark, table, geometry, baseN)
-    IndexEpoch.bumpUnconditional(spark, table)
-  }
+      nBuckets: Int, geometry: Seq[(String, Int)]): Unit =
+    IndexTable.replace(spark, table, Seq(metaTableFor(table))) {
+      banded.write.mode("overwrite").bucketBy(nBuckets, keyCol).sortBy(keyCol)
+        .format("parquet").saveAsTable(table)
+      writeMeta(spark, table, geometry, IndexTable.idCount(spark, table, "doc_id"))
+    }
 
   /** In-place rebuild of a banded index FROM ITS OWN ROWS — what a
     * long-running gate runs when its staleness crosses a threshold: the
     * append slivers (up to `nBuckets` small files per append) compact
     * into `nBuckets` sorted files, `nBuckets` may GROW with the corpus
     * (restoring the O(batch × bucket-population) probe bound), `base_n`
-    * resets, and the epoch bumps unconditionally as in [[writeBanded]].
-    * Spark cannot overwrite a table from a plan that reads it, so the
-    * rows stage through `<table>_rebuild`, write back, and the staging
-    * drops — two sequential writes, the restart-safe cost of a rebuild,
-    * under the single-sequential-maintainer contract of the appends.
+    * resets, and the epoch bumps as in [[writeBanded]]. Spark cannot
+    * overwrite a table from a plan that reads it, so the rows stage
+    * through `<table>_rebuild`, write back, and the staging drops — two
+    * sequential writes, the restart-safe cost of a rebuild, under the
+    * single-sequential-maintainer contract of the appends.
     */
   def rebuildBanded(spark: SparkSession, table: String, keyCol: String,
       nBuckets: Int, geometry: Seq[(String, Int)]): Unit = {
     spark.catalog.refreshTable(table)
     val staging = table + "_rebuild"
-    VectorOps.clearStaleLocation(spark, staging)
     def rewrite(from: String, to: String): Unit = spark.table(from).write.mode("overwrite")
       .bucketBy(nBuckets, keyCol).sortBy(keyCol).format("parquet").saveAsTable(to)
-    rewrite(table, staging)
-    val baseN = spark.table(staging).select("doc_id").distinct().count()
-    rewrite(staging, table)
-    writeMeta(spark, table, geometry, baseN)
-    IndexEpoch.bumpUnconditional(spark, table)
+    IndexTable.replace(spark, table, Seq(staging)) {
+      rewrite(table, staging)
+      val baseN = IndexTable.idCount(spark, staging, "doc_id")
+      rewrite(staging, table)
+      writeMeta(spark, table, geometry, baseN)
+    }
     spark.sql(s"DROP TABLE IF EXISTS $staging")
     spark.catalog.refreshTable(table)
   }
@@ -349,22 +336,6 @@ private[streaming] object NearDup {
     else {
       spark.catalog.refreshTable(metaTableFor(table))
       spark.table(metaTableFor(table)).collect().headOption
-    }
-
-  /** Fraction of the index's docs appended since `baseN` (the build) —
-    * the REBUILD TRIGGER a long-running gate needs: appends keep probes
-    * correct (geometry is validated per batch), but every appended doc
-    * grows the per-band bucket populations the probe scans, degrading the
-    * O(batch × bucket) cost bound the bucketed build sized for. 1.0 for
-    * an index without meta (unconditionally stale).
-    */
-  def staleness(spark: SparkSession, table: String, baseN: Option[Long]): Double =
-    baseN match {
-      case None | Some(0L) => 1.0
-      case Some(base) =>
-        spark.catalog.refreshTable(table) // appends land via the clone session
-        val now = spark.table(table).select("doc_id").distinct().count()
-        math.max(0.0, (now - base).toDouble / base)
     }
 
   /** Fails unless the index's meta carries this build's `geometry`;

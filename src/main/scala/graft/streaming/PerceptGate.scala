@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.operators.{FrameDecoder, AutoFrameDecoder, MultimodalOps}
+import graft.operators.{FrameDecoder, AutoFrameDecoder, IndexTable, MultimodalOps}
 
 /** Streaming PERCEPTUAL near-duplicate ingest gate: checks each arriving
   * micro-batch of image-kind payloads against a persisted dHash code
@@ -33,7 +33,7 @@ import graft.operators.{FrameDecoder, AutoFrameDecoder, MultimodalOps}
   * as every other persisted probe; asserted in BucketingSpec). Meta
   * `(n_bands, band_bits, max_hamming, base_n)` validates geometry per
   * batch; the epoch table fences concurrent maintainers exactly like
-  * [[DedupGate]]'s index ([[graft.operators.IndexEpoch]]).
+  * [[DedupGate]]'s index ([[graft.operators.IndexTable]]).
   *
   * Scale shape (100 TB): per batch the index contributes only the
   * buckets the batch's band keys land in; the batch side is signed once
@@ -118,10 +118,10 @@ object PerceptGate {
 
   /** Fraction of the index's docs appended since it was built — the
     * rebuild trigger, exactly [[DedupGate.sigIndexStaleness]]'s formula
-    * ([[NearDup.staleness]]). 1.0 without meta.
+    * ([[IndexTable.staleness]]). 1.0 without meta.
     */
   def codeIndexStaleness(spark: SparkSession, table: String): Double =
-    NearDup.staleness(spark, table, loadCodeMeta(spark, table).map(_._4))
+    IndexTable.staleness(spark, table, "doc_id", loadCodeMeta(spark, table).map(_._4))
 
   private[graft] def validateMeta(spark: SparkSession, table: String): Unit =
     NearDup.validateGeometry(spark, table, Geometry, "writeCodeIndex")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.operators.{IndexEpoch, SpanOps, VectorOps}
+import graft.operators.{IndexTable, SpanOps}
 
 /** Streaming SPAN-DECONTAMINATION gate: checks each arriving micro-batch
   * of documents for verbatim character runs shared with a PERSISTED
@@ -47,11 +47,9 @@ import graft.operators.{IndexEpoch, SpanOps, VectorOps}
   * plan and lets the broadcast mark join filter the index scan at
   * hash-lookup speed — O(index), but the index is eval-corpus-sized
   * (benchmarks, not the training corpus), so one scan per micro-batch
-  * is bounded. The span
-  * merge windows only MATCHED sites per batch doc. Appends (new
-  * benchmarks arriving over time) are idempotent by eval_doc anti-join
-  * and epoch-guarded ([[graft.operators.IndexEpoch]]) — same
-  * single-sequential-maintainer contract as every other index.
+  * is bounded. The span merge windows only MATCHED sites per batch doc.
+  * Appends (new benchmarks arriving over time) follow the
+  * [[graft.operators.IndexTable]] append contract, keyed on eval_doc.
   *
   * Gate body: the span gates ([[spanGateDecisions]],
   * [[spanScrubDecisions]]) and the production chain's span stage run
@@ -80,26 +78,25 @@ object SpanGate {
         col("doc_id").as("eval_doc"), col("pos").as("eval_pos"))
 
   /** Builds (overwrites) the eval-gram fingerprint index from an eval
-    * corpus of `(doc_id, text)` rows, plus its validation meta table.
+    * corpus of `(doc_id, text)` rows, plus its validation meta table
+    * ([[IndexTable.replace]]).
     */
   def writeEvalGramIndex(spark: SparkSession, evalDocs: DataFrame, table: String,
-      nBuckets: Int = 16): Unit = {
-    VectorOps.clearStaleLocation(spark, table)
-    evalSites(evalDocs)
-      .write.mode("overwrite").bucketBy(nBuckets, "gh").sortBy("gh")
-      .format("parquet").saveAsTable(table)
-    val baseN = spark.table(table).select("eval_doc").distinct().count()
-    VectorOps.clearStaleLocation(spark, metaTableFor(table))
-    // sel_tag pins the FULL selection scheme (gram-hash base, fmix64
-    // multipliers, tie rule, mark-hash seeds) next to the geometry pair:
-    // selected sites depend on all of it, and a constants change that
-    // kept (gram_k, winnow_w) would otherwise pass validation and
-    // silently desynchronize probes from persisted indexes
-    spark.createDataFrame(Seq((GramK, WinnowW, baseN, SpanOps.SelectionTag)))
-      .toDF("gram_k", "winnow_w", "base_n", "sel_tag")
-      .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
-    IndexEpoch.bumpUnconditional(spark, table)
-  }
+      nBuckets: Int = 16): Unit =
+    IndexTable.replace(spark, table, Seq(metaTableFor(table))) {
+      evalSites(evalDocs)
+        .write.mode("overwrite").bucketBy(nBuckets, "gh").sortBy("gh")
+        .format("parquet").saveAsTable(table)
+      val baseN = IndexTable.idCount(spark, table, "eval_doc")
+      // sel_tag pins the FULL selection scheme (gram-hash base, fmix64
+      // multipliers, tie rule, mark-hash seeds) next to the geometry
+      // pair: selected sites depend on all of it, and a constants change
+      // that kept (gram_k, winnow_w) would otherwise pass validation and
+      // silently desynchronize probes from persisted indexes
+      spark.createDataFrame(Seq((GramK, WinnowW, baseN, SpanOps.SelectionTag)))
+        .toDF("gram_k", "winnow_w", "base_n", "sel_tag")
+        .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
+    }
 
   private def validateMeta(spark: SparkSession, table: String): Unit = {
     if (spark.catalog.tableExists(metaTableFor(table)))
@@ -126,36 +123,19 @@ object SpanGate {
   }
 
   /** Appends the winnow sites of eval docs not already indexed — the
-    * "new benchmark arrived" maintenance path. Idempotent by eval_doc
-    * anti-join (replay-safe), epoch-guarded, written through
-    * `insertInto` so appended files keep the bucket spec and probes
-    * stay file-pruned. Returns the number of eval docs actually
-    * appended.
+    * "new benchmark arrived" maintenance path, replay-safe and
+    * epoch-guarded by eval_doc ([[IndexTable.appendNovel]]; an eval doc's
+    * sites are one row group), written through `insertInto` so appended
+    * files keep the bucket spec and probes stay file-pruned.
+    * `beganEpoch` pins the epoch captured at the START of a caller's
+    * longer read-compute-write span. Returns the number of eval docs
+    * actually appended.
     */
   def appendEvalDocsIdempotent(spark: SparkSession, evalDocs: DataFrame,
       table: String, beganEpoch: Option[Long] = None): Long = {
     validateMeta(spark, table)
-    import org.apache.spark.sql.GraftShim
-    // beganEpoch lets a caller (and the spec) pin the epoch captured at
-    // the START of a longer read-compute-write span — the same
-    // interleaving-injection seam as VectorOps.appendToLshIndex
-    val epoch = beganEpoch.getOrElse(IndexEpoch.current(spark, table))
-    val existing = spark.table(table).select("eval_doc").distinct()
-    // the using-column join puts eval_doc FIRST in its output, and
-    // insertInto writes by POSITION — re-project to the table's column
-    // order or appended rows land scrambled
-    val (fresh, freshRdd) = GraftShim.localCheckpointTracked(
-      evalSites(evalDocs).join(existing, Seq("eval_doc"), "left_anti")
-        .select("gh", "gh2", "eval_doc", "eval_pos"))
-    try {
-      val n = fresh.select("eval_doc").distinct().count()
-      if (n > 0) {
-        IndexEpoch.bump(spark, table, epoch)
-        fresh.write.mode("append").insertInto(table)
-        spark.catalog.refreshTable(table)
-      }
-      n
-    } finally GraftShim.releaseCheckpoint(freshRdd)
+    IndexTable.appendNovel(spark, table, "eval_doc", evalSites(evalDocs), beganEpoch)(
+      _.write.mode("append").insertInto(table))
   }
 
   /** Ceiling on the number of distinct gram-hash literals a batch probe

@@ -79,6 +79,35 @@ object GraftShim {
     (session.internalCreateDataFrame(rdd, df.schema, isStreaming = false), rdd, counts.sum)
   }
 
+  /** [[localCheckpointTracked]] run as the named SQL execution `name` —
+    * query-execution listeners and the SQL UI see the plan it reads, as
+    * for any Dataset action — whose materializing job also counts the
+    * DISTINCT values of the long column at `ordinal` (null counts as one
+    * value). Each task ships its partition's distinct values to the
+    * driver, so the fold is sized by the rows pinned: meant for
+    * micro-batch-scale frames.
+    */
+  def localCheckpointTrackedDistinct(df: DataFrame, ordinal: Int, name: String)
+      : (DataFrame, RDD[InternalRow], Long) = {
+    import org.apache.spark.util.collection.OpenHashSet
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val rdd = qe.toRdd.map(_.copy())
+      rdd.localCheckpoint()
+      val parts = session.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+        val ids = new OpenHashSet[Long]
+        var sawNull = false
+        it.foreach(r => if (r.isNullAt(ordinal)) sawNull = true else ids.add(r.getLong(ordinal)))
+        (ids.iterator.toArray, sawNull)
+      })
+      val ids = new OpenHashSet[Long]
+      parts.foreach(_._1.foreach(ids.add))
+      val n = ids.size.toLong + (if (parts.exists(_._2)) 1L else 0L)
+      (session.internalCreateDataFrame(rdd, df.schema, isStreaming = false), rdd, n)
+    }
+  }
+
   private def countFold(pred: InternalRow => Boolean): Iterator[InternalRow] => Long =
     it => {
       var n = 0L

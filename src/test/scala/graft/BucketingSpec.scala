@@ -257,7 +257,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("epoch guard: the second of two interleaved index appenders fails loudly, writing nothing") {
-    import graft.operators.{IndexEpoch, VectorOps}
+    import graft.operators.{IndexTable, VectorOps}
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val nBits = VectorOps.writeLshIndex(spark, sfDir, "lsh_idx_epoch", nBuckets = 8)
@@ -265,7 +265,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("vec_id") === 3).select("embedding").head().getSeq[Float](0).toArray
     // appender A begins its read-compute-write span: captures the epoch
     // (as the idempotent wrapper does before its anti-join read)
-    val epochA = IndexEpoch.current(spark, "lsh_idx_epoch")
+    val epochA = IndexTable.current(spark, "lsh_idx_epoch")
     // appender B interleaves a COMPLETE append — epoch bumps
     VectorOps.appendToLshIndexIdempotent(spark,
       Seq((888881L, vec)).toDF("vec_id", "embedding"), "lsh_idx_epoch", nBits)
@@ -281,7 +281,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("lsh_idx_epoch").count() == afterB,
       "the failed appender must write no rows")
     // a REBUILD also invalidates an in-flight appender's span
-    val epochC = IndexEpoch.current(spark, "lsh_idx_epoch")
+    val epochC = IndexTable.current(spark, "lsh_idx_epoch")
     VectorOps.writeLshIndex(spark, sfDir, "lsh_idx_epoch", nBuckets = 8)
     intercept[java.util.ConcurrentModificationException] {
       VectorOps.appendToLshIndex(spark,
@@ -297,14 +297,43 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.streaming.DedupGate
     DedupGate.writeSigIndex(spark,
       Seq(1L -> gateText("ep")).toDF("doc_id", "text"), "dedup_gate_epoch", nBuckets = 8)
-    val sigEpoch = IndexEpoch.current(spark, "dedup_gate_epoch")
+    val sigEpoch = IndexTable.current(spark, "dedup_gate_epoch")
     DedupGate.appendNewSigsIdempotent(spark,
       Seq(2L -> gateText("ep2")).toDF("doc_id", "text"), "dedup_gate_epoch")
-    assert(IndexEpoch.current(spark, "dedup_gate_epoch") == sigEpoch + 1,
+    assert(IndexTable.current(spark, "dedup_gate_epoch") == sigEpoch + 1,
       "a sig append must advance the epoch")
     intercept[java.util.ConcurrentModificationException] {
-      IndexEpoch.bump(spark, "dedup_gate_epoch", sigEpoch)
+      IndexTable.bump(spark, "dedup_gate_epoch", sigEpoch)
     }
+    // the PQ index takes the same guard: its build bumps the epoch, an
+    // append that lands rows bumps it exactly once, a fully replayed
+    // append bumps nothing, and an append whose span a rebuild
+    // interleaved fails loudly, writing nothing (codes or sidecar)
+    val pqTable = "pq_idx_epoch"
+    val pqBefore = IndexTable.current(spark, pqTable)
+    VectorOps.writePqIndex(spark, sfDir, pqTable)
+    val pqBuilt = IndexTable.current(spark, pqTable)
+    assert(pqBuilt > pqBefore, "a PQ build must bump the epoch")
+    val pqArrival = Seq((888891L, vec.toSeq)).toDF("vec_id", "embedding")
+    assert(VectorOps.appendToPqIndexIdempotent(spark, pqArrival, pqTable) == 1L)
+    assert(IndexTable.current(spark, pqTable) == pqBuilt + 1,
+      "a PQ append that lands rows must bump the epoch exactly once")
+    assert(VectorOps.appendToPqIndexIdempotent(spark, pqArrival, pqTable) == 0L)
+    assert(IndexTable.current(spark, pqTable) == pqBuilt + 1,
+      "a fully replayed PQ append must bump nothing")
+    val pqSpan = IndexTable.current(spark, pqTable)
+    VectorOps.writePqIndex(spark, sfDir, pqTable)
+    val pqRows = spark.table(pqTable).count()
+    val pqBoom = intercept[java.util.ConcurrentModificationException] {
+      VectorOps.appendToPqIndexIdempotent(spark,
+        Seq((888892L, vec.toSeq)).toDF("vec_id", "embedding"), pqTable, beganEpoch = Some(pqSpan))
+    }
+    assert(pqBoom.getMessage.contains("ONE sequential maintainer"), pqBoom.getMessage)
+    spark.catalog.refreshTable(pqTable)
+    spark.catalog.refreshTable(VectorOps.embTableFor(pqTable))
+    assert(spark.table(pqTable).count() == pqRows, "the failed PQ appender must write no codes")
+    assert(spark.table(VectorOps.embTableFor(pqTable)).filter(col("vec_id") === 888892L)
+      .count() == 0, "the failed PQ appender must write no sidecar rows")
   }
 
   test("persisted IVF index: probing nProbe cells prunes to those cells' files") {
@@ -406,7 +435,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("IndexPurge: right-to-be-forgotten across sig and LSH indexes — semantics, layout, epoch, idempotence") {
-    import graft.operators.{IndexEpoch, IndexPurge, VectorOps}
+    import graft.operators.{IndexTable, IndexPurge, VectorOps}
     import graft.streaming.DedupGate
     import org.apache.spark.sql.catalyst.TableIdentifier
     import org.apache.spark.sql.functions.col
@@ -423,7 +452,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(21L -> gateText("pa"), 22L -> gateText("pb")).toDF("doc_id", "text"), "purge_sig")
         .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("dup_of")).toMap
     assert(flags() == Map(21L -> 1L, 22L -> 2L))
-    val e0 = IndexEpoch.current(spark, "purge_sig")
+    val e0 = IndexTable.current(spark, "purge_sig")
     val schemaBefore = spark.table("purge_sig").schema
     val bucketBefore =
       spark.sessionState.catalog.getTableMetadata(TableIdentifier("purge_sig")).bucketSpec
@@ -437,14 +466,14 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .bucketSpec == bucketBefore, "purge must not flatten the bucket layout")
     // the epoch moved exactly once; an appender whose span began before
     // the purge fails its commit instead of resurrecting purged rows
-    assert(IndexEpoch.current(spark, "purge_sig") == e0 + 1)
+    assert(IndexTable.current(spark, "purge_sig") == e0 + 1)
     intercept[java.util.ConcurrentModificationException] {
-      IndexEpoch.bump(spark, "purge_sig", e0)
+      IndexTable.bump(spark, "purge_sig", e0)
     }
     // a re-issued deletion request (at-least-once queues) is a no-op:
     // nothing rewrites, the epoch does not churn
     assert(IndexPurge.purge(spark, "purge_sig", "doc_id", Seq(1L)) == 0L)
-    assert(IndexEpoch.current(spark, "purge_sig") == e0 + 1)
+    assert(IndexTable.current(spark, "purge_sig") == e0 + 1)
 
     // --- LSH index: the purged vector must stop being a neighbor ---
     val nBits = VectorOps.writeLshIndex(spark, sfDir, "purge_lsh", nBuckets = 8)
@@ -493,7 +522,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // post-commit crash: the epoch was claimed and the marker published,
     // but the write-back never ran — the doomed rows are still live
     // until recovery rolls forward
-    val ePre = IndexEpoch.current(spark, "purge_crash")
+    val ePre = IndexTable.current(spark, "purge_crash")
     intercept[RuntimeException] {
       IndexPurge.purge(spark, "purge_crash", "doc_id", Seq(6L), failAfterPhase = 2)
     }
@@ -502,13 +531,13 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "pre-write-back crash leaves rows; recovery owes the roll-forward")
     // the fence landed WITH the claim (marker ⟺ epoch owned): in-flight
     // appenders already fail, and recovery need not bump again
-    assert(IndexEpoch.current(spark, "purge_crash") == ePre + 1,
+    assert(IndexTable.current(spark, "purge_crash") == ePre + 1,
       "the epoch claim must precede the commit marker")
     IndexPurge.recover(spark, "purge_crash")
     spark.catalog.refreshTable("purge_crash")
     assert(spark.table("purge_crash").filter(col("doc_id") === 6L).count() == 0,
       "roll-forward must finish the committed purge")
-    assert(IndexEpoch.current(spark, "purge_crash") == ePre + 1,
+    assert(IndexTable.current(spark, "purge_crash") == ePre + 1,
       "recovery must not move the already-claimed epoch")
     assert(!spark.catalog.tableExists(IndexPurge.markerTableFor("purge_crash")))
     assert(!spark.catalog.tableExists(IndexPurge.stagingTableFor("purge_crash")))
@@ -769,7 +798,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("DedupGate: signature-only in-place rebuild compacts, re-buckets, resets, and fences") {
     import spark.implicits._
     import graft.streaming.DedupGate
-    import graft.operators.IndexEpoch
+    import graft.operators.IndexTable
     def batch(ids: Seq[Long]) = ids.map(i => i -> gateText(s"rb$i")).toDF("doc_id", "text")
     DedupGate.writeSigIndex(spark, batch(1L to 6L), "dedup_gate_rebuild", nBuckets = 8)
     assert(DedupGate.appendNewSigsIdempotent(spark, batch(7L to 14L), "dedup_gate_rebuild") == 8L)
@@ -779,7 +808,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val filesBefore = spark.table("dedup_gate_rebuild").inputFiles.length
     assert(DedupGate.sigIndexStaleness(spark, "dedup_gate_rebuild") > 1.0,
       "appends past the base must read stale")
-    val epochBefore = IndexEpoch.current(spark, "dedup_gate_rebuild")
+    val epochBefore = IndexTable.current(spark, "dedup_gate_rebuild")
 
     DedupGate.rebuildSigIndex(spark, "dedup_gate_rebuild", nBuckets = 16)
 
@@ -803,10 +832,10 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!spark.catalog.tableExists("dedup_gate_rebuild_rebuild"),
       "rebuild staging table must be dropped")
     // rebuild owns the index: an appender whose span straddles it fails loudly
-    assert(IndexEpoch.current(spark, "dedup_gate_rebuild") > epochBefore,
+    assert(IndexTable.current(spark, "dedup_gate_rebuild") > epochBefore,
       "rebuild must advance the epoch")
     val ex = intercept[java.util.ConcurrentModificationException] {
-      IndexEpoch.bump(spark, "dedup_gate_rebuild", epochBefore)
+      IndexTable.bump(spark, "dedup_gate_rebuild", epochBefore)
     }
     assert(ex.getMessage.contains("epoch"), s"stale appender must fail on the epoch: ${ex.getMessage}")
     // and a FRESH append over the rebuilt index works
@@ -1014,7 +1043,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(siteCounts == 0, "idempotent append must never duplicate index rows")
 
     // epoch guard: an appender whose span a rebuild/append interleaved fails loudly
-    val epochA = graft.operators.IndexEpoch.current(spark, "span_gate_idx")
+    val epochA = graft.operators.IndexTable.current(spark, "span_gate_idx")
     SpanGate.appendEvalDocsIdempotent(spark,
       Seq(9004L -> (sgFiller('e', 40) + runC)).toDF("doc_id", "text"), "span_gate_idx")
     val rowsNow = spark.table("span_gate_idx").count()
@@ -1293,7 +1322,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("PerceptGate: staleness grows with appends, in-place rebuild compacts/resets/fences") {
     import spark.implicits._
     import graft.streaming.PerceptGate
-    import graft.operators.IndexEpoch
+    import graft.operators.IndexTable
     def raster(i: Long) = p5(Array.tabulate(64)(r => (r * (2 * i.toInt + 1) + i.toInt * 53) % 256))
     def batch(ids: Seq[Long]) = ids.map(i => i -> raster(i)).toDF("doc_id", "payload")
     PerceptGate.writeCodeIndex(spark, batch(1L to 4L), "percept_gate_stale", nBuckets = 8)
@@ -1309,7 +1338,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val filesBefore = spark.table("percept_gate_stale").inputFiles.length
     val rowsBefore = spark.table("percept_gate_stale").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val epochBefore = IndexEpoch.current(spark, "percept_gate_stale")
+    val epochBefore = IndexTable.current(spark, "percept_gate_stale")
     PerceptGate.rebuildCodeIndex(spark, "percept_gate_stale", nBuckets = 8)
     val rowsAfter = spark.table("percept_gate_stale").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
@@ -1321,7 +1350,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!spark.catalog.tableExists("percept_gate_stale_rebuild"),
       "rebuild staging must drop")
     intercept[java.util.ConcurrentModificationException] {
-      IndexEpoch.bump(spark, "percept_gate_stale", epochBefore)
+      IndexTable.bump(spark, "percept_gate_stale", epochBefore)
     }
     // geometry validation: a foreign-geometry meta fails loudly
     spark.createDataFrame(Seq((8, 8, 3, 4L)))

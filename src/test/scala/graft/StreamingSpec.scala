@@ -1934,7 +1934,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CharLmGate: a batch catching a cross-process rebuild mid-overwrite scores with the cached model instead of failing (r18 ADVICE)") {
     import graft.streaming.CharLmGate
-    import graft.operators.IndexEpoch
+    import graft.operators.IndexTable
     import spark.implicits._
     def wt(seed: String) = (1 to 30).map(i => s"${seed}_$i").mkString(" ")
     val train = (1L to 8L).map(i => i -> wt(s"fb$i")).toDF("doc_id", "text")
@@ -1951,7 +1951,7 @@ class StreamingSpec extends AnyFunSuite {
     // epoch but the re-collect finds no _ctx
     spark.sql("DROP TABLE fallback_lm")
     spark.sql("DROP TABLE fallback_lm_ctx")
-    IndexEpoch.bumpUnconditional(spark, "fallback_lm")
+    IndexTable.bumpUnconditional(spark, "fallback_lm")
     val d2 = score() // must not throw: falls back to the cached model
     assert(d2 == d1, s"fallback batch must score with the cached model: $d2 vs $d1")
     // the failure was not cached: once the rebuild completes, the next
@@ -1962,7 +1962,7 @@ class StreamingSpec extends AnyFunSuite {
     CharLmGate.invalidate(spark, "fallback_lm")
     spark.sql("DROP TABLE fallback_lm")
     spark.sql("DROP TABLE fallback_lm_ctx")
-    IndexEpoch.bumpUnconditional(spark, "fallback_lm")
+    IndexTable.bumpUnconditional(spark, "fallback_lm")
     intercept[Exception] { score() }
   }
 
@@ -2093,7 +2093,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("CharLmGate re-validates the artifact generation per batch: a rebuild by ANOTHER process (no invalidate) is picked up (r18 task 1)") {
-    import graft.operators.{HygieneOps, IndexEpoch, VectorOps}
+    import graft.operators.{HygieneOps, IndexTable, VectorOps}
     import graft.streaming.CharLmGate
     import org.apache.spark.sql.functions.col
     import spark.implicits._
@@ -2113,12 +2113,12 @@ class StreamingSpec extends AnyFunSuite {
     // so a stale cache produces bitsA, a re-collected one produces bitsB.
     val (counts, ctx, vocab) = HygieneOps.charlmModelOf(
       Seq((1L, "azazaz")).toDF("doc_id", "text"))
-    VectorOps.clearStaleLocation(spark, table)
-    VectorOps.clearStaleLocation(spark, table + "_ctx")
+    IndexTable.clearStaleLocation(spark, table)
+    IndexTable.clearStaleLocation(spark, table + "_ctx")
     counts.write.mode("overwrite").format("parquet").saveAsTable(table)
     ctx.crossJoin(vocab).write.mode("overwrite").format("parquet")
       .saveAsTable(table + "_ctx")
-    IndexEpoch.bumpUnconditional(spark, table)
+    IndexTable.bumpUnconditional(spark, table)
     // next batch must score against model B without any same-JVM signal
     val bitsB = gateBits()
     val ctxV = spark.table(table + "_ctx")
@@ -2140,12 +2140,12 @@ class StreamingSpec extends AnyFunSuite {
       (i.toLong, chars.map(cj => s"$c$cj").mkString)
     }.toDF("doc_id", "text")
     val (c2, x2, v2) = HygieneOps.charlmModelOf(big)
-    VectorOps.clearStaleLocation(spark, table)
-    VectorOps.clearStaleLocation(spark, table + "_ctx")
+    IndexTable.clearStaleLocation(spark, table)
+    IndexTable.clearStaleLocation(spark, table + "_ctx")
     c2.write.mode("overwrite").format("parquet").saveAsTable(table)
     x2.crossJoin(v2).write.mode("overwrite").format("parquet")
       .saveAsTable(table + "_ctx")
-    IndexEpoch.bumpUnconditional(spark, table)
+    IndexTable.bumpUnconditional(spark, table)
     val out3 = CharLmGate.withLmDecisions(batch, table, maxBits = 1e9)
     assert(out3.queryExecution.optimizedPlan.toString.contains(table),
       "an over-cap cross-process rebuild must flip the gate to the join plan (tables in plan)")

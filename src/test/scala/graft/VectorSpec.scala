@@ -369,6 +369,41 @@ class VectorSpec extends AnyFunSuite {
     assert(r.isNullAt(0), "length-mismatched input must yield NULL codes")
   }
 
+  /** Reads of `table` by the actions `body` runs: one per relation of
+    * `table` in each reported action's analyzed plan, counted between two
+    * marker actions (listener events arrive asynchronously, in order).
+    */
+  private def tableReadsOf(table: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import scala.jdk.CollectionConverters._
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val marker = "table_reads_marker_\\d".r.findFirstIn(qe.analyzed.toString)
+        val reads = qe.analyzed.collect {
+          case r: LogicalRelation if r.catalogTable.exists(_.identifier.table == table) => r
+        }.size
+        events.add((marker.getOrElse(f), reads))
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def mark(m: String): Unit = {
+      spark.range(1).toDF(m).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!events.asScala.exists(_._1 == m) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(events.asScala.exists(_._1 == m), s"marker $m never arrived")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      mark("table_reads_marker_1")
+      body
+      mark("table_reads_marker_2")
+    } finally spark.listenerManager.unregister(listener)
+    events.asScala.toSeq.dropWhile(_._1 != "table_reads_marker_1").drop(1)
+      .takeWhile(_._1 != "table_reads_marker_2").map(_._2).sum
+  }
+
   test("PQ index append: frozen-book encode, idempotent replay, staleness signal") {
     import spark.implicits._
     val table = "pq_append_test_idx"
@@ -386,14 +421,18 @@ class VectorSpec extends AnyFunSuite {
     val arrivals = Seq((900001L, arr1.toSeq), (900002L, arr2.toSeq), (0L, arr1.toSeq))
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    VectorOps.appendToPqIndexIdempotent(spark, arrivals, table)
+    // the novel rows are evaluated once: one read of the code table per
+    // append, shared by the sidecar and the code writes
+    val appendReads = tableReadsOf(table)(VectorOps.appendToPqIndexIdempotent(spark, arrivals, table))
+    assert(appendReads == 1, s"an append must read the code table once, read it $appendReads times")
     assert(spark.table(table).count() == n0 + 2, "two novel rows append; the replayed id does not")
     val gotNew = spark.table(table).filter(col("vec_id") >= 900001L)
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getSeq[Int](1)))
     assert(gotNew.length == 2 && gotNew.forall(_._2.length == VectorOps.PqSub),
       "appended rows carry full-width codes")
     // replay: the whole batch again appends nothing
-    VectorOps.appendToPqIndexIdempotent(spark, arrivals, table)
+    val replayReads = tableReadsOf(table)(VectorOps.appendToPqIndexIdempotent(spark, arrivals, table))
+    assert(replayReads == 1, s"a replay must read the code table once, read it $replayReads times")
     assert(spark.table(table).count() == n0 + 2, "replayed append must be a no-op")
     val staleness = VectorOps.pqIndexStaleness(spark, table)
     assert(staleness > 0.0 && staleness < 0.05, s"2/$n0 appended rows, got staleness $staleness")
@@ -427,6 +466,39 @@ class VectorSpec extends AnyFunSuite {
     // staleness covers the sidecar-backed flow: 3 appended ids over n0/PqSub docs
     val st2 = VectorOps.pqIndexStaleness(spark, table)
     assert(st2 > staleness && st2 < 0.05, s"staleness must grow with the twin append: $st2")
+  }
+
+  test("IVF, PQ and IVF-PQ builds count base_n from the rows they write, not a per-directory memo") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_base_n").toString
+    val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    def stage(n: Long): Unit =
+      corpus.filter(col("vec_id") < n).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def build(tag: String): Seq[String] = {
+      val tables = Seq("ivf", "pq", "ivfpq").map(f => s"base_n_${f}_$tag")
+      tables.flatMap(t => Seq(t, t + "_codebook", t + "_books", t + "_emb", t + "_epoch"))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      VectorOps.writeIvfIndex(spark, dir, tables(0), nBuckets = 4)
+      VectorOps.writePqIndex(spark, dir, tables(1))
+      VectorOps.writeIvfPqIndex(spark, dir, tables(2), nBuckets = 4)
+      tables
+    }
+    try {
+      // a first build counts (and memoizes) the 200-row corpus under `dir`
+      stage(200)
+      build("a")
+      // the data under `dir` is rewritten with more rows: fresh builds
+      // must record the rows they wrote as their baseline
+      stage(500)
+      val Seq(ivf, pq, ivfpq) = build("b")
+      assert(spark.table(pq).count() == 500, "the rebuilt index must hold the rewritten corpus")
+      assert(VectorOps.ivfIndexStaleness(spark, ivf) == 0.0, "fresh IVF index must read staleness 0")
+      assert(VectorOps.pqIndexStaleness(spark, pq) == 0.0, "fresh PQ index must read staleness 0")
+      assert(VectorOps.ivfPqIndexStaleness(spark, ivfpq) == 0.0,
+        "fresh IVF-PQ index must read staleness 0")
+    } finally {
+      val path = new org.apache.hadoop.fs.Path(dir)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    }
   }
 
   test("IVFADC index append: frozen cells + frozen codes, idempotent replay, staleness (r18)") {
