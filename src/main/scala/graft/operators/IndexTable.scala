@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -10,7 +11,8 @@ import org.apache.spark.sql.functions.col
   * geometry; what is written here is the same for all of them:
   *
   *  - an index is a table plus side tables (`_meta`, `_codebook`,
-  *    `_books`, `_emb`, `_ctx`) and an `_epoch` fence;
+  *    `_books`, `_emb`, `_ctx`) and an epoch fence (marker files in a
+  *    directory beside the table, `<location>.epoch`);
   *  - [[replace]] builds it: stale locations cleared, the family's
   *    writes, then an unconditional epoch bump — the build owns the
   *    index, so any appender that began before it fails its own commit
@@ -20,18 +22,31 @@ import org.apache.spark.sql.functions.col
   *    counts from the rows it wrote ([[idCount]]), never from its input;
   *  - [[appendNovel]] is the replay-safe append.
   *
-  * EPOCH GUARD. A monotonic epoch in a tiny side table (`<index>_epoch`,
-  * one bigint row), read at the START of an append's read-compute-write
-  * span and CHECK-AND-BUMPED immediately before the data write. Every
-  * append path has a single-sequential-maintainer contract: the
-  * idempotence anti-joins read the at-rest identity set, so two
-  * appenders interleaving the same span can each pass the check and land
-  * duplicate rows — duplicate probe candidates that silently skew TopK
-  * and staleness. Plain parquet has no compare-and-swap, so this guard
-  * cannot PREVENT that; what it does is make the contract violation
+  * EPOCH GUARD. A monotonic epoch, read at the START of an append's
+  * read-compute-write span and CHECK-AND-BUMPED immediately before the
+  * data write. Every append path has a single-sequential-maintainer
+  * contract: the idempotence anti-joins read the at-rest identity set,
+  * so two appenders interleaving the same span can each pass the check
+  * and land duplicate rows — duplicate probe candidates that silently
+  * skew TopK and staleness. The guard makes that contract violation
   * LOUD: the second writer's bump observes the first writer's bump (its
   * snapshot epoch is stale) and throws BEFORE writing any data, leaving
   * the index exactly as the first writer committed it.
+  *
+  * The epoch is the highest numeric name among the marker files in
+  * `<location>.epoch`, the index's default location plus an `.epoch`
+  * suffix (0 without a marker). A read is one directory listing and a
+  * bump one exclusive create plus one delete, so neither runs a Spark
+  * job. The bump creates marker `expected + 1` exclusively:
+  * on HDFS and the local file system that create is atomic, so two
+  * bumpers starting from the same epoch cannot both win — the loser
+  * throws with nothing written. An object store without an atomic
+  * exclusive create keeps the weaker contract: a violation is detected
+  * loudly when the spans overlap a bump, not prevented. The directory
+  * sits BESIDE the index, never inside it: a rebuild's overwrite (or a
+  * DROP TABLE) deletes the table directory, and an epoch kept there
+  * would restart at 0 and let a stale appender's check pass again. It
+  * is not a catalog table, so [[clearStaleLocation]] never clears it.
   *
   * Residual window (documented, not hidden): a writer that BEGINS after
   * another's bump but before its data write becomes visible can still
@@ -40,9 +55,10 @@ import org.apache.spark.sql.functions.col
   * bump-to-write gap. True concurrent maintenance needs a transactional
   * table format (SURVEY §2's FileSink note); until then the contract
   * stays single-maintainer and this guard converts violations from
-  * silent corruption to a loud, data-less failure. Legacy indexes
-  * without an epoch table read as epoch 0 and gain the table on their
-  * first guarded write.
+  * silent corruption to a loud, data-less failure. A legacy index (no
+  * marker yet; an `<index>_epoch` parquet table of an older layout is
+  * ignored) reads as epoch 0 and gains a marker on its first guarded
+  * write.
   *
   * REPLAY SAFETY. foreachBatch is at-least-once: a micro-batch replayed
   * after a failure re-delivers rows whose previous append DID commit.
@@ -78,38 +94,76 @@ import org.apache.spark.sql.functions.col
   */
 object IndexTable {
 
-  private[graft] def epochTableFor(table: String): String = table + "_epoch"
+  /** The marker directory of `table`'s epoch: beside the table's
+    * default location, so a rebuild or DROP TABLE of the index keeps it.
+    */
+  private[graft] def epochDir(spark: SparkSession, table: String): Path = {
+    val loc = new Path(GraftShim.defaultTablePath(spark, table))
+    new Path(loc.getParent, loc.getName + ".epoch")
+  }
 
-  /** The index's current epoch: 0 for a legacy index (no epoch table
-    * yet). Refreshes the relation cache first — bumps may have landed
-    * through a micro-batch clone session.
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The index's current epoch: the highest marker, 0 without one (a
+    * legacy index). One directory listing, no Spark job.
     */
   def current(spark: SparkSession, table: String): Long = {
-    val t = epochTableFor(table)
-    if (!spark.catalog.tableExists(t)) 0L
-    else {
-      spark.catalog.refreshTable(t)
-      spark.table(t).collect().headOption.map(_.getLong(0)).getOrElse(0L)
-    }
+    val dir = epochDir(spark, table)
+    val names =
+      try fsOf(spark, dir).listStatus(dir).map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+    names.flatMap(_.toLongOption).foldLeft(0L)(math.max)
   }
 
   /** Check-and-bump: requires the epoch is still `expected` (the value
     * read when the caller's read-compute-write span began) and advances
-    * it. Throws [[java.util.ConcurrentModificationException]] — with no
-    * data written by the caller — if another writer bumped in between.
+    * it by creating marker `expected + 1` exclusively. Throws
+    * [[java.util.ConcurrentModificationException]] — with no data
+    * written by the caller — if another writer bumped in between, or
+    * won the exclusive create from the same epoch.
     */
-  def bump(spark: SparkSession, table: String, expected: Long): Unit = {
-    val now = current(spark, table)
-    if (now != expected) throw new java.util.ConcurrentModificationException(
+  def bump(spark: SparkSession, table: String, expected: Long): Unit =
+    bump(spark, table, expected, () => ())
+
+  /** [[bump]] with a test seam: `beforeClaim` runs between the check and
+    * the exclusive create, where a racing bumper would interleave.
+    */
+  private[graft] def bump(spark: SparkSession, table: String, expected: Long,
+      beforeClaim: () => Unit): Unit = {
+    def moved(now: Long) = new java.util.ConcurrentModificationException(
       s"index $table epoch moved $expected -> $now during this append's " +
         "read-compute-write span: another maintainer (append or rebuild) committed in " +
         "between, so this append's idempotence anti-join and geometry validation are " +
         "stale. Nothing was written. The index supports ONE sequential maintainer — " +
         "serialize appends, or rebuild if a concurrent write already landed.")
-    clearStaleLocation(spark, epochTableFor(table))
-    spark.createDataFrame(Seq(Tuple1(expected + 1))).toDF("epoch")
-      .write.mode("overwrite").format("parquet").saveAsTable(epochTableFor(table))
+    val now = current(spark, table)
+    if (now != expected) throw moved(now)
+    beforeClaim()
+    val dir = epochDir(spark, table)
+    val fs = fsOf(spark, dir)
+    fs.mkdirs(dir)
+    if (!createExclusive(fs, new Path(dir, (expected + 1).toString)))
+      throw moved(current(spark, table))
+    fs.delete(new Path(dir, expected.toString), false)
   }
+
+  /** Creates the empty file `p`, false if it exists. The local file
+    * system goes through `Files.createFile` (O_CREAT|O_EXCL): Hadoop's
+    * local `createNewFile` checks existence and then creates, which two
+    * processes can both pass. Elsewhere `createNewFile`, whose create is
+    * exclusive on HDFS.
+    */
+  private def createExclusive(fs: FileSystem, p: Path): Boolean =
+    try fs match {
+      case local: LocalFileSystem =>
+        java.nio.file.Files.createFile(local.pathToFile(p).toPath)
+        true
+      case _ => fs.createNewFile(p)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+           _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+    }
 
   /** Unconditional bump for REBUILDS (overwrite paths own the index by
     * contract): any in-flight appender that began before the rebuild
@@ -126,9 +180,8 @@ object IndexTable {
     */
   private[graft] def clearStaleLocation(spark: SparkSession, table: String): Unit =
     if (!spark.catalog.tableExists(table)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        GraftShim.defaultTablePath(spark, table))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val loc = new Path(GraftShim.defaultTablePath(spark, table))
+      val fs = fsOf(spark, loc)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
 

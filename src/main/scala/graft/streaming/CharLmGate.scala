@@ -65,13 +65,13 @@ object CharLmGate {
     * first session's model for the second's different artifact.
     *
     * Why the epoch re-validation (every [[withLmDecisions]] call — one
-    * 1-row parquet read, ~ms against a multi-second batch): a model
+    * listing of the epoch's marker directory, no Spark job): a model
     * REBUILT BY ANOTHER PROCESS while this gate JVM is alive never
     * calls this JVM's [[invalidate]], and both plans are decision-valid,
     * so a JVM-lifetime cache would silently score every subsequent
     * batch with the dead counts. Comparing the persisted generation per
     * batch turns that into at most ONE stale batch (the writer stamps
-    * AFTER the data lands). Legacy artifacts with no epoch table read
+    * AFTER the data lands). Legacy artifacts with no epoch marker read
     * as generation 0 and gain the stamp on their next rebuild.
     */
   private sealed trait GateModel
@@ -104,9 +104,10 @@ object CharLmGate {
     val key = cacheKeyOf(s, lmTable)
     val cached = models.get(key)
     try {
-      // one 1-row read per batch: the generation stamp writeCharLmTableFrom
-      // bumps after every (re)write — the cache is valid exactly while the
-      // persisted generation matches the one it was collected under
+      // one directory listing per batch: the generation stamp
+      // writeCharLmTableFrom bumps after every (re)write — the cache is
+      // valid exactly while the persisted generation matches the one it
+      // was collected under
       val epoch = graft.operators.IndexTable.current(s, lmTable)
       if (cached != null && cached.epoch == epoch) cached.model
       else {
@@ -126,13 +127,12 @@ object CharLmGate {
       }
     } catch {
       // a CROSS-PROCESS rebuild uses non-atomic drop+recreate writes
-      // (writeCharLmTableFrom, IndexTable.bump), so the per-batch
-      // validation can catch the artifact mid-overwrite: the epoch read,
-      // the refresh, or the re-collect transiently fails
-      // (table-not-found / empty _ctx) in exactly the scenario the
-      // generation check exists to serve. With a resolved model in hand,
-      // score THIS batch with it and retry validation next batch — at
-      // most one extra stale batch, strictly better than failing the
+      // (writeCharLmTableFrom), so the per-batch validation can catch
+      // the artifact mid-overwrite: the refresh or the re-collect
+      // transiently fails (table-not-found / empty _ctx) in exactly the
+      // scenario the generation check exists to serve. With a resolved
+      // model in hand, score THIS batch with it and retry validation next
+      // batch — at most one extra stale batch, strictly better than failing the
       // streaming query (r18 ADVICE). First use has nothing to fall back
       // to and still fails loudly; the failure is never cached. (A
       // JoinForm model's per-batch table reads happen at the scoring

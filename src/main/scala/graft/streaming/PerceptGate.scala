@@ -32,7 +32,7 @@ import graft.operators.{FrameDecoder, AutoFrameDecoder, IndexTable, MultimodalOp
   * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false`, same
   * as every other persisted probe; asserted in BucketingSpec). Meta
   * `(n_bands, band_bits, max_hamming, base_n)` validates geometry per
-  * batch; the epoch table fences concurrent maintainers exactly like
+  * batch; the index epoch fences concurrent maintainers exactly like
   * [[DedupGate]]'s index ([[graft.operators.IndexTable]]).
   *
   * Scale shape (100 TB): per batch the index contributes only the

@@ -336,6 +336,102 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .count() == 0, "the failed PQ appender must write no sidecar rows")
   }
 
+  test("epoch markers: current, bump and a guardedAppend with nothing new run no Spark job") {
+    import spark.implicits._
+    import graft.operators.IndexTable
+    import graft.streaming.DedupGate
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = "epoch_nojob"
+    DedupGate.writeSigIndex(spark, Seq(1L -> gateText("nj")).toDF("doc_id", "text"), t, nBuckets = 8)
+    // the job group of every job started, in order; marker jobs in their
+    // own groups set off the jobs the epoch calls run
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = groups.add(
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def mark(tag: String): Unit = {
+      sc.setJobGroup(tag, tag)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains(tag), s"marker job $tag never arrived")
+    }
+    sc.addSparkListener(listener)
+    val (e, after, n) = try {
+      mark("epoch_nojob_before")
+      val e = IndexTable.current(spark, t)
+      IndexTable.bump(spark, t, e)
+      val n = IndexTable.guardedAppend(spark, t)((0L, ())) { _ =>
+        fail("an append with nothing new must not write")
+      }
+      val after = IndexTable.current(spark, t)
+      mark("epoch_nojob_after")
+      (e, after, n)
+    } finally sc.removeSparkListener(listener)
+    val between = groups.asScala.toSeq.dropWhile(_ != "epoch_nojob_before")
+      .dropWhile(_ == "epoch_nojob_before").takeWhile(_ != "epoch_nojob_after")
+    assert(between.isEmpty, s"the epoch calls ran ${between.size} Spark jobs")
+    assert(e > 0 && after == e + 1 && n == 0L,
+      s"the bump must advance the epoch, the empty append nothing: $e -> $after, $n")
+    // an `<index>_epoch` parquet table of the older layout is ignored
+    Seq(1L).toDF("id").write.mode("overwrite").format("parquet").saveAsTable("epoch_legacy")
+    Seq(7L).toDF("epoch").write.mode("overwrite").format("parquet").saveAsTable("epoch_legacy_epoch")
+    assert(IndexTable.current(spark, "epoch_legacy") == 0L, "a legacy index must read epoch 0")
+  }
+
+  test("epoch markers: a bump whose exclusive create loses to a racer throws, writing nothing") {
+    import spark.implicits._
+    import graft.operators.IndexTable
+    import graft.streaming.DedupGate
+    import org.apache.hadoop.fs.Path
+    val t = "epoch_cas"
+    DedupGate.writeSigIndex(spark, Seq(1L -> gateText("cas")).toDF("doc_id", "text"), t, nBuckets = 8)
+    val e = IndexTable.current(spark, t)
+    val dir = IndexTable.epochDir(spark, t)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def markers: Set[String] = fs.listStatus(dir).map(_.getPath.getName).toSet
+    val rows = spark.table(t).count()
+    // a racer that passed the same check claims e + 1 between this
+    // bump's check and its create; the write after the bump never runs
+    val boom = intercept[java.util.ConcurrentModificationException] {
+      IndexTable.bump(spark, t, e, () => assert(fs.createNewFile(new Path(dir, (e + 1).toString))))
+      DedupGate.appendNewSigsIdempotent(spark, Seq(2L -> gateText("cas2")).toDF("doc_id", "text"), t)
+    }
+    assert(boom.getMessage.contains(s"epoch moved $e -> ${e + 1}") &&
+      boom.getMessage.contains("Nothing was written"), boom.getMessage)
+    assert(markers == Set(e.toString, (e + 1).toString),
+      s"the losing bump must create and delete no marker: $markers")
+    assert(IndexTable.current(spark, t) == e + 1, "the racer's epoch stands")
+    spark.catalog.refreshTable(t)
+    assert(spark.table(t).count() == rows, "the losing appender must write no rows")
+  }
+
+  test("epoch markers: the epoch stays monotonic across DROP TABLE of the index and a rebuild") {
+    import spark.implicits._
+    import graft.operators.IndexTable
+    import graft.streaming.DedupGate
+    val t = "epoch_aba"
+    def build(): Unit = DedupGate.writeSigIndex(spark,
+      Seq(1L -> gateText("aba")).toDF("doc_id", "text"), t, nBuckets = 8)
+    build()
+    assert(DedupGate.appendNewSigsIdempotent(spark,
+      Seq(2L -> gateText("aba2")).toDF("doc_id", "text"), t) == 1L)
+    // an appender's span begins, then the index is dropped and rebuilt
+    val stale = IndexTable.current(spark, t)
+    spark.sql(s"DROP TABLE $t")
+    assert(IndexTable.current(spark, t) == stale, "dropping the index must keep its epoch")
+    build()
+    assert(IndexTable.current(spark, t) == stale + 1, "the rebuild must continue the epoch")
+    intercept[java.util.ConcurrentModificationException] {
+      IndexTable.bump(spark, t, stale)
+    }
+    // a rebuild onto the same index (the overwrite path) moves it again
+    build()
+    assert(IndexTable.current(spark, t) == stale + 2)
+  }
+
   test("persisted IVF index: probing nProbe cells prunes to those cells' files") {
     import graft.operators.VectorOps
     import org.apache.spark.sql.functions.col
@@ -614,6 +710,40 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(flags == Set((8L, 3L, 16)),
       s"false collision must not flag; true dup must: $flags")
+  }
+
+  test("DedupGate: a batch covering every bucket plans no bh literal filter and flags as the literal form") {
+    import spark.implicits._
+    import graft.operators.DedupOps
+    import graft.streaming.{DedupGate, IndexProbe}
+    import org.apache.spark.sql.functions.col
+    val t = "dedup_gate_cover"
+    DedupGate.writeSigIndex(spark,
+      (1L to 40L).map(i => i -> gateText(s"cv$i")).toDF("doc_id", "text"), t, nBuckets = 4)
+    // copies of six indexed docs, and six novel docs
+    val batch = ((1L to 6L).map(i => (100L + i) -> gateText(s"cv${i * 5}")) ++
+      (7L to 12L).map(i => (100L + i) -> gateText(s"novel$i"))).toDF("doc_id", "text")
+    val keys = DedupOps.bandedSigs(batch).select("bh").distinct().as[Long].collect().toSeq
+    assert(IndexProbe.bucketIds(4, keys).toSet == (0 until 4).toSet,
+      "fixture: the batch's band hashes must land in every bucket")
+    val probe = DedupGate.flagDuplicates(spark, batch, t)
+    bucketScansOf(probe, t)
+    val literals = flattenPlan(probe.queryExecution.executedPlan).flatMap(_.expressions)
+      .filter(_.exists {
+        case i: In => i.value.references.exists(_.name == "bh")
+        case i: InSet => i.child.references.exists(_.name == "bh")
+        case _ => false
+      })
+    assert(literals.isEmpty, s"a filter that cannot prune was planted: $literals")
+    val literalForm = DedupGate.checkAgainst(
+      spark.table(t).filter(col("bh").isin(keys: _*)), DedupOps.bandedSigs(batch))
+    assertPlantedInFilter(literalForm, t, "bh", "literal form")
+    def flagsOf(df: DataFrame): Set[(Long, Long, Int)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val flags = flagsOf(probe)
+    assert(flags == flagsOf(literalForm), s"$flags vs ${flagsOf(literalForm)}")
+    assert(flags.map(f => f._1 -> f._2) == (1L to 6L).map(i => (100L + i) -> i * 5).toSet,
+      s"each copy must flag against its original: $flags")
   }
 
   test("DedupGate: a gated batch releases every per-batch checkpoint block") {
@@ -1587,7 +1717,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("NearDup: a checked batch with no row left to index reads no epoch and runs no append") {
     import spark.implicits._
     import graft.streaming.{EmbedGate, GateStageTimings, PerceptGate}
-    import graft.operators.VectorOps
+    import graft.operators.{IndexTable, VectorOps}
     PerceptGate.writeCodeIndex(spark,
       Seq(1L -> p5(rising)).toDF("doc_id", "payload"), "percept_gate_noappend", nBuckets = 8)
     VectorOps.writeLshIndexFrom(spark,
@@ -1616,6 +1746,12 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       events.asScala.toSeq.dropWhile(!_.contains(tag + "_before")).drop(1)
         .takeWhile(!_.contains(tag + "_after"))
     }
+    // an epoch read runs no Spark job: a local file system counting the
+    // listings of epoch marker directories makes it visible
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set("fs.file.impl", classOf[EpochListingCountingFs].getName)
+    hadoopConf.setBoolean("fs.file.impl.disable.cache", true)
+    EpochListingCountingFs.listings.set(0)
     spark.listenerManager.register(listener)
     try {
       var timings: GateStageTimings = null
@@ -1629,19 +1765,24 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(timings.appended == 0L && timings.probeSec > 0.0,
         s"the batch must be probed and append nothing: $timings")
       assert(embed.exists(_.contains("embed_gate_noappend")), s"fixture vacuous: no probe ran: $embed")
-      assert(!embed.exists(_.contains("embed_gate_noappend_epoch")),
-        s"an append with nothing to index must not run (it read the epoch): $embed")
+      assert(EpochListingCountingFs.listings.get == 0,
+        "an append with nothing to index must not run (it read the epoch)")
       // flat icons dHash to no code: the batch is checked, nothing signs
-      val percept = actionsOf("percept_noappend") {
-        PerceptGate.gateBatchWithinAware("percept_gate_noappend", (df, _) => { df.collect(): Unit },
-          onTimings = t => timings = t)(
-          (0 until 3).map(i => (50L + i) -> p5(Array.fill(3 + i)(i * 20 % 256)))
-            .toDF("doc_id", "payload"), 0L)
-      }
+      PerceptGate.gateBatchWithinAware("percept_gate_noappend", (df, _) => { df.collect(): Unit },
+        onTimings = t => timings = t)(
+        (0 until 3).map(i => (50L + i) -> p5(Array.fill(3 + i)(i * 20 % 256)))
+          .toDF("doc_id", "payload"), 0L)
       assert(timings.appended == 0L, s"flat icons must append nothing: $timings")
-      assert(!percept.exists(_.contains("percept_gate_noappend_epoch")),
-        s"an append with nothing to index must not run (it read the epoch): $percept")
-    } finally spark.listenerManager.unregister(listener)
+      assert(EpochListingCountingFs.listings.get == 0,
+        "an append with nothing to index must not run (it read the epoch)")
+      assert(IndexTable.current(spark, "percept_gate_noappend") > 0L &&
+        EpochListingCountingFs.listings.get > 0,
+        "fixture: the counting file system must see an epoch read")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      hadoopConf.unset("fs.file.impl")
+      hadoopConf.unset("fs.file.impl.disable.cache")
+    }
     spark.catalog.refreshTable("embed_gate_noappend")
     assert(spark.table("embed_gate_noappend").count() == 1L, "the LSH index must be unchanged")
   }
@@ -1782,4 +1923,19 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(ex2.getMessage == "too many")
   }
+}
+
+/** A local file system counting listings of index epoch marker
+  * directories (`<location>.epoch`): an epoch read runs no Spark job, so
+  * this is how a test sees one.
+  */
+class EpochListingCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName.endsWith(".epoch")) EpochListingCountingFs.listings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object EpochListingCountingFs {
+  val listings = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -179,6 +179,33 @@ class PropertySpec extends AnyFunSuite {
     assert(result(32) == exact)
   }
 
+  test("IndexProbe.bucketIds ≡ the bucket file a bucketBy write puts each key in") {
+    import spark.implicits._
+    import graft.streaming.IndexProbe
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    import org.apache.spark.sql.functions.input_file_name
+    val rnd = new Random(1207)
+    val keys = (Seq(0L, 1L, -1L, 42L, -42L, Long.MinValue, Long.MinValue + 1, Long.MaxValue,
+      Long.MaxValue - 1) ++ Seq.fill(300)(rnd.nextLong())).distinct
+    for (n <- Seq(1, 2, 3, 8, 16, 61)) {
+      val table = s"bucket_ids_$n"
+      val dir = java.nio.file.Files.createTempDirectory("graft-bucket-ids").resolve("t")
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      keys.toDF("k").write.bucketBy(n, "k").option("path", dir.toString)
+        .format("parquet").saveAsTable(table)
+      val landed = spark.table(table).select($"k", input_file_name()).as[(Long, String)]
+        .collect().map { case (k, f) =>
+          k -> BucketingUtils.getBucketId(f.substring(f.lastIndexOf('/') + 1)).get
+        }.toMap
+      spark.sql(s"DROP TABLE $table")
+      assert(landed.size == keys.size, s"$n buckets: ${landed.size} of ${keys.size} keys read back")
+      val want = keys.zip(IndexProbe.bucketIds(n, keys)).toMap
+      val wrong = keys.filter(k => landed(k) != want(k))
+      assert(wrong.isEmpty, s"$n buckets: driver-side bucket ids differ for " +
+        wrong.take(5).map(k => s"$k (file ${landed(k)}, driver ${want(k)})").mkString(", "))
+    }
+  }
+
   test("TopK.Buf equals take-k of the fully sorted input, for random inputs and k") {
     val rnd = new Random(42)
     (1 to 300).foreach { _ =>
