@@ -690,6 +690,7 @@ object HygieneOps {
     IndexTable.replace(spark, table, Seq(table + "_ctx")) {
       counts.write.mode("overwrite").format("parquet").saveAsTable(table)
       ctx.crossJoin(vocab).write.mode("overwrite").format("parquet").saveAsTable(table + "_ctx")
+      None // a model, not an id-keyed index: no staleness to feed
     }
     // a REBUILD at the same (warehouse, name) must also re-arm THIS
     // JVM's gate cache immediately (CharLmGate r16 ADVICE) — same-JVM

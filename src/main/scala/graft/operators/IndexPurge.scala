@@ -64,7 +64,13 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * staleness counters (`base_n`) — [[graft.streaming.DedupGate
   * .sigIndexStaleness]] clamps at 0, so a purge under-reads staleness
   * until appends pass the old base; a maintainer whose cumulative purges
-  * are material should rebuild, which resets the counter.
+  * are material should rebuild, which resets the counter. Nor does it
+  * record the ids at rest with its epoch ([[IndexTable]]'s id record):
+  * the marker its bump creates stays empty, so the next staleness read
+  * scans the index ([[IndexTable.recordedIds]] is None), and appends
+  * after it record nothing until the next build. A purge is rare, and
+  * one scan after it is simpler than carrying a count through the
+  * roll-forward recovery.
   *
   * A purge of ZERO matching rows is a no-op: nothing rewrites, the epoch
   * does not move — so re-issuing a deletion request (the at-least-once

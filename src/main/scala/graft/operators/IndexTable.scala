@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -21,6 +23,22 @@ import org.apache.spark.sql.functions.col
   *    at rest beyond the `base_n` the build recorded, which every build
   *    counts from the rows it wrote ([[idCount]]), never from its input;
   *  - [[appendNovel]] is the replay-safe append.
+  *
+  * ID RECORD. Each time the epoch moves, the distinct ids at rest ride
+  * it: the new marker's content is that count (decimal digits and a
+  * newline), so [[staleness]] reads one small file instead of scanning
+  * the index. [[replace]] records the count its family's build already
+  * took; [[guardedAppend]] (and [[appendNovel]] through it) records the
+  * prior count plus the novel ids it computed, after the data lands and
+  * only when it won the bump. A record that is missing or unreadable —
+  * a legacy index, a crash between the bump and the record, a purge
+  * ([[IndexPurge]] bumps without one), an id-less artifact — makes
+  * [[recordedIds]] None, and [[staleness]] falls back to the
+  * [[idCount]] scan, which gives the same answer. The record is only as
+  * true as the single-maintainer contract below: a row written to the
+  * table outside this module (a direct `insertInto`, a drop and
+  * re-create by hand) leaves the record describing rows that are no
+  * longer there.
   *
   * EPOCH GUARD. A monotonic epoch, read at the START of an append's
   * read-compute-write span and CHECK-AND-BUMPED immediately before the
@@ -143,10 +161,13 @@ object IndexTable {
     val dir = epochDir(spark, table)
     val fs = fsOf(spark, dir)
     fs.mkdirs(dir)
-    if (!createExclusive(fs, new Path(dir, (expected + 1).toString)))
+    if (!createExclusive(fs, marker(spark, table, expected + 1)))
       throw moved(current(spark, table))
-    fs.delete(new Path(dir, expected.toString), false)
+    fs.delete(marker(spark, table, expected), false)
   }
+
+  private def marker(spark: SparkSession, table: String, epoch: Long): Path =
+    new Path(epochDir(spark, table), epoch.toString)
 
   /** Creates the empty file `p`, false if it exists. The local file
     * system goes through `Files.createFile` (O_CREAT|O_EXCL): Hadoop's
@@ -168,9 +189,55 @@ object IndexTable {
   /** Unconditional bump for REBUILDS (overwrite paths own the index by
     * contract): any in-flight appender that began before the rebuild
     * fails its own commit instead of appending under dead geometry.
+    * Returns the new epoch.
     */
-  def bumpUnconditional(spark: SparkSession, table: String): Unit =
-    bump(spark, table, current(spark, table))
+  def bumpUnconditional(spark: SparkSession, table: String): Long = {
+    val epoch = current(spark, table)
+    bump(spark, table, epoch)
+    epoch + 1
+  }
+
+  /** The distinct ids at rest recorded with `table`'s current epoch;
+    * None without a readable record (see the object doc), when only the
+    * [[idCount]] scan can tell. One listing and one small read, no Spark
+    * job.
+    */
+  def recordedIds(spark: SparkSession, table: String): Option[Long] =
+    recordedIds(spark, table, current(spark, table))
+
+  private def recordedIds(spark: SparkSession, table: String, epoch: Long): Option[Long] = {
+    val p = marker(spark, table, epoch)
+    val text =
+      try Some(fsOf(spark, p) match {
+        case local: LocalFileSystem =>
+          new String(java.nio.file.Files.readAllBytes(local.pathToFile(p).toPath), UTF_8)
+        case fs =>
+          val in = fs.open(p)
+          try new String(in.readAllBytes(), UTF_8) finally in.close()
+      }) catch { case _: java.io.IOException => None }
+    // a record cut short by a crash lacks its newline
+    text.filter(_.endsWith("\n")).flatMap(_.dropRight(1).toLongOption).filter(_ >= 0)
+  }
+
+  /** Writes `ids` into the marker of `epoch`, which the caller's bump
+    * created; a marker a later bump already deleted is not re-created.
+    */
+  private def record(spark: SparkSession, table: String, epoch: Long, ids: Long): Unit = {
+    val p = marker(spark, table, epoch)
+    val bytes = s"$ids\n".getBytes(UTF_8)
+    fsOf(spark, p) match {
+      case local: LocalFileSystem =>
+        try java.nio.file.Files.write(local.pathToFile(p).toPath, bytes,
+          java.nio.file.StandardOpenOption.WRITE,
+          java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+        catch { case _: java.nio.file.NoSuchFileException => () }
+      case fs =>
+        if (fs.exists(p)) {
+          val out = fs.create(p, true)
+          try out.write(bytes) finally out.close()
+        }
+    }
+  }
 
   /** Deletes the managed location `saveAsTable(table)` would create when
     * the catalog has NO entry for `table` but a previous JVM left the
@@ -197,13 +264,16 @@ object IndexTable {
   /** Builds (overwrites) `table` and its `sides`: clears their stale
     * locations, runs the family's `write`, then bumps the epoch
     * unconditionally — after the data lands, so an epoch a reader
-    * observes always points at the new rows.
+    * observes always points at the new rows — and records with it the
+    * distinct ids `write` returns (the `base_n` its family counted; None
+    * for an artifact without ids).
     */
-  def replace[A](spark: SparkSession, table: String, sides: Seq[String])(write: => A): A = {
+  def replace(spark: SparkSession, table: String, sides: Seq[String])(
+      write: => Option[Long]): Unit = {
     (table +: sides).foreach(clearStaleLocation(spark, _))
-    val built = write
-    bumpUnconditional(spark, table)
-    built
+    val ids = write
+    val epoch = bumpUnconditional(spark, table)
+    ids.foreach(record(spark, table, epoch, _))
   }
 
   /** Distinct ids at rest in `table` — the `base_n` a build records and
@@ -215,13 +285,17 @@ object IndexTable {
   /** Fraction of `table`'s distinct ids added since the build recorded
     * `baseN`: 0 right after a build, the rebuild signal for every frozen
     * geometry or quantizer. 1.0 without a baseline (no meta, or an empty
-    * build): unconditionally stale.
+    * build): unconditionally stale. The ids at rest come from the epoch's
+    * record ([[recordedIds]]), or from an [[idCount]] scan without one.
     */
   def staleness(spark: SparkSession, table: String, idCol: String, baseN: Option[Long]): Double =
     baseN match {
       case Some(base) if base > 0 =>
-        spark.catalog.refreshTable(table) // appends land via the clone session
-        math.max(0.0, (idCount(spark, table, idCol) - base).toDouble / base)
+        val ids = recordedIds(spark, table).getOrElse {
+          spark.catalog.refreshTable(table) // appends land via the clone session
+          idCount(spark, table, idCol)
+        }
+        math.max(0.0, (ids - base).toDouble / base)
       case _ => 1.0
     }
 
@@ -229,16 +303,19 @@ object IndexTable {
     * `beganEpoch`, for a caller whose own reads began earlier) BEFORE
     * `novel` reads the at-rest ids; `novel` returns how many ids are new
     * and what `write` needs to land them. Only with a nonzero count is
-    * the epoch checked-and-bumped, `write` run and the table refreshed.
-    * Returns the count.
+    * the epoch checked-and-bumped, `write` run, the ids at rest recorded
+    * (the span's record plus the count, when the span's epoch had one)
+    * and the table refreshed. Returns the count.
     */
   def guardedAppend[A](spark: SparkSession, table: String, beganEpoch: Option[Long] = None)(
       novel: => (Long, A))(write: A => Unit): Long = {
     val epoch = beganEpoch.getOrElse(current(spark, table))
     val (n, fresh) = novel
     if (n > 0) {
+      val prior = recordedIds(spark, table, epoch) // the bump deletes its marker
       bump(spark, table, epoch)
       write(fresh)
+      prior.foreach(ids => record(spark, table, epoch + 1, ids + n))
       spark.catalog.refreshTable(table)
     }
     n

@@ -766,11 +766,12 @@ object VectorOps {
       // against it, and staleness has its baseline. The pre-count `n`
       // only SIZES nBits, a heuristic; `nbits` records the width actually
       // hashed, and base_n the rows actually written
-      spark.createDataFrame(Seq((nBits, IndexTable.idCount(spark, table, "vec_id"))))
-        .toDF("nbits", "base_n")
+      val baseN = IndexTable.idCount(spark, table, "vec_id")
+      spark.createDataFrame(Seq((nBits, baseN))).toDF("nbits", "base_n")
         .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
-      nBits
+      Some(baseN)
     }
+    nBits
   }
 
   private[graft] def metaTableFor(table: String): String = table + "_meta"
@@ -893,8 +894,9 @@ object VectorOps {
       // metadata scale): probes and appends in ANY later JVM read the
       // codebook the cell assignments were actually built with, instead
       // of retraining on a corpus that appends may since have changed
-      persistIvfCodebook(spark, table, cents, IndexTable.idCount(spark, table, "vec_id"),
-        multiAssign)
+      val baseN = IndexTable.idCount(spark, table, "vec_id")
+      persistIvfCodebook(spark, table, cents, baseN, multiAssign)
+      Some(baseN)
     }
     cents
   }
@@ -1446,8 +1448,10 @@ object VectorOps {
     IndexTable.replace(spark, table, Seq(pqBooksTableFor(table), embTableFor(table))) {
       withPqCodes(base, books).select("vec_id", "codes")
         .write.mode("overwrite").format("parquet").saveAsTable(table)
-      persistPqBooks(spark, table, books, IndexTable.idCount(spark, table, "vec_id"))
+      val baseN = IndexTable.idCount(spark, table, "vec_id")
+      persistPqBooks(spark, table, books, baseN)
       writeEmbSidecar(spark, base, table)
+      Some(baseN)
     }
   }
 
@@ -1574,6 +1578,7 @@ object VectorOps {
       persistIvfCodebook(spark, table, cents, baseN, multiAssign)
       persistPqBooks(spark, table, books, baseN)
       writeEmbSidecar(spark, base, table)
+      Some(baseN)
     }
   }
 

@@ -79,9 +79,16 @@ object DedupGate {
     * ([[writeSigIndex]] needs `(doc_id, text)`), so the rebuild must be
     * signature-only.
     */
-  def rebuildSigIndex(spark: SparkSession, table: String, nBuckets: Int = 16): Unit = {
+  def rebuildSigIndex(spark: SparkSession, table: String, nBuckets: Int = 16): Unit =
+    rebuildSigIndex(spark, table, nBuckets, failAfterPhase = Int.MaxValue)
+
+  /** Test seam: [[rebuildSigIndex]] crashing after `failAfterPhase`
+    * ([[NearDup.rebuildBanded]]).
+    */
+  private[graft] def rebuildSigIndex(spark: SparkSession, table: String, nBuckets: Int,
+      failAfterPhase: Int): Unit = {
     validateMeta(spark, table)
-    NearDup.rebuildBanded(spark, table, "bh", nBuckets, Geometry)
+    NearDup.rebuildBanded(spark, table, "bh", nBuckets, Geometry, failAfterPhase)
   }
 
   /** The persisted (sig_width, n_bands, build-time corpus size) of a
@@ -176,8 +183,8 @@ object DedupGate {
     */
   private[streaming] def check(spark: SparkSession, table: String,
       withinBatch: Boolean): NearDup.Check = {
-    spark.catalog.refreshTable(table)
     validateMeta(spark, table)
+    spark.catalog.refreshTable(table)
     val (bound, message) = probeBound(spark)
     NearDup.Check(table, "bh", NBands, bound, IndexProbe.FailFast(message),
       rows => DedupOps.bandedSigs(rows.select("doc_id", "text")),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -20,15 +20,20 @@ import org.apache.spark.sql.types.LongType
   *     layout (`SelectedBucketsCount` in the plan — BucketingSpec pins
   *     this before and after appends) — unless the keys land in EVERY
   *     bucket of a table bucketed by the key, which no filter can prune:
-  *     then the slice is the plain table. The bucket ids are computed on
+  *     then the slice is the whole table read UNBUCKETED
+  *     ([[GraftShim.withoutBuckets]]), so the scan packs the index files
+  *     into split-sized tasks instead of running one task per bucket (what
+  *     `autoBucketedScan` would do, were the probe sessions not to turn it
+  *     off for the pruning). The bucket ids are computed on
   *     the driver with Spark's own bucket function, bound once; the
   *     planner's bucket-set derivation instead code-generates one
   *     projection PER LITERAL (180–320 ms of planning on a 4-vCPU host
   *     for the ~750 band hashes of a 200-doc text batch, which cover
   *     all 16 buckets). The caller's verified join keys
-  *     on the bucket key, so the rows a filter would drop never match;
-  *     both arms give the same answer, and a wrong bucket id could only
-  *     pick the slower one;
+  *     on the bucket key against a broadcast batch, so the rows a filter
+  *     would drop never match and no arm needs the bucketed
+  *     distribution; both arms give the same answer, and a wrong bucket
+  *     id could only pick the slower one;
   *   - DENSE batch (> `literalCap`) → the gate's declared
   *     [[DenseProbePolicy]], because a many-thousand-literal filter
   *     costs seconds of DRIVER-side analysis/optimizer time per
@@ -121,7 +126,7 @@ private[graft] object IndexProbe {
     }
     if (keys.isEmpty) spark.table(table).limit(0)
     else if (keys.length <= literalCap) {
-      if (coversEveryBucket(spark, table, keyCol, keys)) spark.table(table)
+      if (coversEveryBucket(spark, table, keyCol, keys)) GraftShim.withoutBuckets(spark.table(table))
       else spark.table(table).filter(col(keyCol).isin(keys: _*))
     } else dense match {
       case BroadcastSemiJoin =>

@@ -288,8 +288,12 @@ private[streaming] object NearDup {
     IndexTable.replace(spark, table, Seq(metaTableFor(table))) {
       banded.write.mode("overwrite").bucketBy(nBuckets, keyCol).sortBy(keyCol)
         .format("parquet").saveAsTable(table)
-      writeMeta(spark, table, geometry, IndexTable.idCount(spark, table, "doc_id"))
+      val baseN = IndexTable.idCount(spark, table, "doc_id")
+      writeMeta(spark, table, geometry, baseN)
+      Some(baseN)
     }
+
+  private def stagingTableFor(table: String): String = table + "_rebuild"
 
   /** In-place rebuild of a banded index FROM ITS OWN ROWS — what a
     * long-running gate runs when its staleness crosses a threshold: the
@@ -297,25 +301,62 @@ private[streaming] object NearDup {
     * into `nBuckets` sorted files, `nBuckets` may GROW with the corpus
     * (restoring the O(batch × bucket-population) probe bound), `base_n`
     * resets, and the epoch bumps as in [[writeBanded]]. Spark cannot
-    * overwrite a table from a plan that reads it, so the rows stage
-    * through `<table>_rebuild`, write back, and the staging drops — two
-    * sequential writes, the restart-safe cost of a rebuild, under the
-    * single-sequential-maintainer contract of the appends.
+    * overwrite a table from a plan that reads it, so the rows are written
+    * ONCE, into `<table>_rebuild`, by one task per slot; then the table
+    * drops and the staging table is renamed into its place
+    * ([[finishRebuild]]: the session catalog renames the directory,
+    * nothing is rewritten). `base_n` is
+    * the epoch's id record ([[IndexTable.recordedIds]]; the staged ids
+    * are the table's), counted from the staging table only without one.
+    *
+    * A crash before the drop leaves the table whole (the next rebuild
+    * overwrites the stale staging); a crash between the drop and the
+    * rename leaves no table and a complete staging table — a catalog
+    * entry only appears once its rows are written — and the next gate
+    * check or rebuild ([[validateGeometry]]) finishes the rename. Callers
+    * validate the geometry first, so an interrupted swap completes before
+    * the table is read. A check that finishes a swap takes the rebuild
+    * that began it for dead: the gate and its rebuild are one sequential
+    * maintainer, as for the appends, and never run at once.
+    * `failAfterPhase` is a test seam: a crash after phase 1 (staged,
+    * table untouched) or phase 2 (table dropped, staging not yet
+    * renamed).
     */
   def rebuildBanded(spark: SparkSession, table: String, keyCol: String,
-      nBuckets: Int, geometry: Seq[(String, Int)]): Unit = {
+      nBuckets: Int, geometry: Seq[(String, Int)], failAfterPhase: Int = Int.MaxValue): Unit = {
     spark.catalog.refreshTable(table)
-    val staging = table + "_rebuild"
-    def rewrite(from: String, to: String): Unit = spark.table(from).write.mode("overwrite")
-      .bucketBy(nBuckets, keyCol).sortBy(keyCol).format("parquet").saveAsTable(to)
-    IndexTable.replace(spark, table, Seq(staging)) {
-      rewrite(table, staging)
-      val baseN = IndexTable.idCount(spark, staging, "doc_id")
-      rewrite(staging, table)
-      writeMeta(spark, table, geometry, baseN)
+    val staging = stagingTableFor(table)
+    IndexTable.clearStaleLocation(spark, staging)
+    // the bucketed scan hands each task whole buckets; coalescing them to
+    // one task per slot keeps one file per target bucket when the bucket
+    // count holds, at a slot's worth of tasks instead of one per bucket
+    spark.table(table).coalesce(spark.sparkContext.defaultParallelism).write.mode("overwrite")
+      .bucketBy(nBuckets, keyCol).sortBy(keyCol).format("parquet").saveAsTable(staging)
+    if (failAfterPhase <= 1) sys.error("injected crash after phase 1 (staged, table untouched)")
+    spark.sql(s"DROP TABLE $table")
+    if (failAfterPhase <= 2) sys.error("injected crash after phase 2 (dropped, not renamed)")
+    finishRebuild(spark, table, geometry)
+  }
+
+  /** The swap of [[rebuildBanded]], and its recovery: when `table` is
+    * gone and its staging table is present, renames the staging table
+    * into place, writes the meta with `base_n` = the ids at rest, and
+    * bumps the epoch with that count recorded ([[IndexTable.replace]]).
+    * A no-op while the table exists — one catalog lookup, no job.
+    */
+  private def finishRebuild(spark: SparkSession, table: String,
+      geometry: Seq[(String, Int)]): Unit = {
+    val staging = stagingTableFor(table)
+    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(staging)) {
+      IndexTable.replace(spark, table, Nil) {
+        val baseN = IndexTable.recordedIds(spark, table)
+          .getOrElse(IndexTable.idCount(spark, staging, "doc_id"))
+        spark.sql(s"ALTER TABLE $staging RENAME TO $table")
+        writeMeta(spark, table, geometry, baseN)
+        Some(baseN)
+      }
+      spark.catalog.refreshTable(table)
     }
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    spark.catalog.refreshTable(table)
   }
 
   private def writeMeta(spark: SparkSession, table: String,
@@ -339,10 +380,12 @@ private[streaming] object NearDup {
     }
 
   /** Fails unless the index's meta carries this build's `geometry`;
-    * `rebuildWith` names the gate's build call.
+    * `rebuildWith` names the gate's build call. A rebuild interrupted
+    * between its drop and its rename is finished first.
     */
   def validateGeometry(spark: SparkSession, table: String,
-      geometry: Seq[(String, Int)], rebuildWith: String): Unit =
+      geometry: Seq[(String, Int)], rebuildWith: String): Unit = {
+    finishRebuild(spark, table, geometry)
     loadMeta(spark, table) match {
       case Some(r) =>
         val found = geometry.indices.map(r.getInt)
@@ -354,4 +397,5 @@ private[streaming] object NearDup {
         throw new IllegalStateException(
           s"index $table has no meta row; rebuild with $rebuildWith")
     }
+  }
 }

@@ -188,8 +188,8 @@ object PerceptGate {
     */
   private[streaming] def check(spark: SparkSession, table: String, withinBatch: Boolean,
       decoder: FrameDecoder = AutoFrameDecoder): NearDup.Check = {
-    spark.catalog.refreshTable(table)
     validateMeta(spark, table)
+    spark.catalog.refreshTable(table)
     NearDup.Check(table, "bk", NBands, DefaultMaxProbeLiterals, IndexProbe.BroadcastSemiJoin,
       rows => bandedCodes(MultimodalOps.perceptualCodes(spark,
         rows.select("doc_id", "payload"), decoder)),

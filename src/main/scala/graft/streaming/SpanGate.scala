@@ -96,6 +96,7 @@ object SpanGate {
       spark.createDataFrame(Seq((GramK, WinnowW, baseN, SpanOps.SelectionTag)))
         .toDF("gram_k", "winnow_w", "base_n", "sel_tag")
         .write.mode("overwrite").format("parquet").saveAsTable(metaTableFor(table))
+      Some(baseN)
     }
 
   private def validateMeta(spark: SparkSession, table: String): Unit = {

@@ -29,6 +29,23 @@ object GraftShim {
     spark.sessionState.catalog.defaultTablePath(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
 
+  /** `df` with the bucket spec dropped from every file relation it
+    * reads: the scan packs the files into split-sized tasks instead of
+    * running one task per bucket, and offers no bucket pruning and no
+    * bucketed distribution — for a read that needs neither.
+    */
+  def withoutBuckets(df: DataFrame): DataFrame = {
+    import execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session, df.queryExecution.analyzed.transform {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.bucketSpec.isDefined =>
+          l.copy(relation = r.copy(bucketSpec = None)(r.sparkSession))
+        case _ => l
+      }
+    })
+  }
+
   /** Eager localCheckpoint that also returns the EXACT checkpointed RDD
     * handle, so iterative callers can `unpersist` a superseded
     * generation's blocks deterministically — `Dataset.localCheckpoint`

@@ -432,6 +432,153 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(IndexTable.current(spark, t) == stale + 2)
   }
 
+  /** The staleness formula over a scan of the distinct ids at rest —
+    * what every staleness read computed before the epoch carried the
+    * count.
+    */
+  private def scannedStaleness(table: String, idCol: String, baseN: Long): Double = {
+    spark.catalog.refreshTable(table)
+    math.max(0.0, (spark.table(table).select(idCol).distinct().count() - baseN).toDouble / baseN)
+  }
+
+  /** The jobs `body` starts on this thread, counted by a listener on
+    * the job group set around it; a marker job in its own group, awaited
+    * after the body, makes sure every event has arrived.
+    */
+  private def jobsOf(tag: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = groups.add(
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, tag)
+      try body finally sc.clearJobGroup()
+      val done = tag + "_done"
+      sc.setJobGroup(done, done)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains(done) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains(done), s"marker job $done never arrived")
+    } finally sc.removeSparkListener(listener)
+    groups.asScala.count(_ == tag)
+  }
+
+  test("id record: every index family's staleness from the epoch's record equals the scan") {
+    import spark.implicits._
+    import graft.operators.{IndexPurge, IndexTable, VectorOps}
+    import graft.streaming.{DedupGate, PerceptGate}
+    import org.apache.spark.sql.functions.col
+    final case class Family(table: String, idCol: String, staleness: () => Double,
+        baseN: () => Long, build: () => Unit, append: Seq[Long] => Long, rebuild: () => Unit)
+    def docs(ids: Seq[Long]) = ids.map(i => i -> gateText(s"idr$i")).toDF("doc_id", "text")
+    def raster(i: Long) = p5(Array.tabulate(64)(r => (r * (2 * i.toInt + 1) + i.toInt * 53) % 256))
+    def rasters(ids: Seq[Long]) = ids.map(i => i -> raster(i)).toDF("doc_id", "payload")
+    val vec = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .filter(col("vec_id") === 3).select("embedding").head().getSeq[Float](0)
+    def vecs(ids: Seq[Long]) = ids.map(i => (i, vec)).toDF("vec_id", "embedding")
+    val lshBase = (0L until 8L).map(i => i -> axis(i.toInt).toSeq).toDF("vec_id", "embedding")
+    var nBits = 0
+    val families = Seq(
+      Family("idrec_sig", "doc_id", () => DedupGate.sigIndexStaleness(spark, "idrec_sig"),
+        () => DedupGate.loadSigMeta(spark, "idrec_sig").get._3,
+        () => DedupGate.writeSigIndex(spark, docs(1L to 8L), "idrec_sig", nBuckets = 8),
+        ids => DedupGate.appendNewSigsIdempotent(spark, docs(ids), "idrec_sig"),
+        () => DedupGate.rebuildSigIndex(spark, "idrec_sig", nBuckets = 8)),
+      Family("idrec_code", "doc_id", () => PerceptGate.codeIndexStaleness(spark, "idrec_code"),
+        () => PerceptGate.loadCodeMeta(spark, "idrec_code").get._4,
+        () => PerceptGate.writeCodeIndex(spark, rasters(1L to 8L), "idrec_code", nBuckets = 8),
+        ids => PerceptGate.appendNewCodesIdempotent(spark, rasters(ids), "idrec_code"),
+        () => PerceptGate.rebuildCodeIndex(spark, "idrec_code", nBuckets = 8)),
+      Family("idrec_lsh", "vec_id", () => VectorOps.lshIndexStaleness(spark, "idrec_lsh"),
+        () => VectorOps.loadLshMeta(spark, "idrec_lsh").get._2,
+        () => nBits = VectorOps.writeLshIndexFrom(spark, lshBase, "idrec_lsh", nBuckets = 8),
+        ids => VectorOps.appendToLshIndexIdempotent(spark,
+          ids.map(i => i -> axis((i % 64).toInt).toSeq).toDF("vec_id", "embedding"),
+          "idrec_lsh", nBits),
+        () => nBits = VectorOps.writeLshIndexFrom(spark, lshBase, "idrec_lsh", nBuckets = 8)),
+      Family("idrec_ivf", "vec_id", () => VectorOps.ivfIndexStaleness(spark, "idrec_ivf"),
+        () => VectorOps.loadIvfCodebook(spark, "idrec_ivf")._2,
+        () => VectorOps.writeIvfIndex(spark, sfDir, "idrec_ivf", nBuckets = 8): Unit,
+        ids => VectorOps.appendToIvfIndexIdempotent(spark, vecs(ids), "idrec_ivf"),
+        () => VectorOps.writeIvfIndex(spark, sfDir, "idrec_ivf", nBuckets = 8): Unit),
+      Family("idrec_pq", "vec_id", () => VectorOps.pqIndexStaleness(spark, "idrec_pq"),
+        () => VectorOps.loadPqBooks(spark, "idrec_pq")._2,
+        () => VectorOps.writePqIndex(spark, sfDir, "idrec_pq"),
+        ids => VectorOps.appendToPqIndexIdempotent(spark, vecs(ids), "idrec_pq"),
+        () => VectorOps.writePqIndex(spark, sfDir, "idrec_pq")))
+    // ids above the fixture corpus's vec_ids
+    families.foreach { f =>
+      def check(step: String, recorded: Boolean): Unit = {
+        val st = f.staleness()
+        val want = scannedStaleness(f.table, f.idCol, f.baseN())
+        assert(math.abs(st - want) < 1e-9, s"${f.table} after $step: record gives $st, scan $want")
+        val ids = spark.table(f.table).select(f.idCol).distinct().count()
+        val rec = IndexTable.recordedIds(spark, f.table)
+        assert(rec == (if (recorded) Some(ids) else None),
+          s"${f.table} after $step: record $rec with $ids ids at rest")
+      }
+      f.build()
+      check("build", recorded = true)
+      assert(f.append(Seq(900101L, 900102L)) == 2L, s"${f.table}: the append must land two ids")
+      check("append", recorded = true)
+      assert(f.staleness() > 0.0, s"${f.table}: fixture: the append must read stale")
+      assert(f.append(Seq(900101L, 900102L)) == 0L, s"${f.table}: the replay must land nothing")
+      check("replayed append", recorded = true)
+      f.rebuild()
+      check("rebuild", recorded = true)
+      assert(f.append(Seq(900103L)) == 1L, s"${f.table}: the append must land one id")
+      check("append after rebuild", recorded = true)
+      // a purge leaves no record: the next staleness read scans, and the
+      // appends after it have no prior count to add to until a build
+      assert(IndexPurge.purge(spark, f.table, f.idCol, Seq(900101L, 900103L)) > 0L,
+        s"${f.table}: the purge must remove rows")
+      check("purge", recorded = false)
+      assert(f.append(Seq(900104L)) == 1L, s"${f.table}: the append must land one id")
+      check("append after purge", recorded = false)
+      f.rebuild()
+      check("rebuild after purge", recorded = true)
+    }
+  }
+
+  test("id record: sigIndexStaleness reads only the meta; without a readable record it scans") {
+    import spark.implicits._
+    import graft.operators.IndexTable
+    import graft.streaming.DedupGate
+    val t = "idrec_jobs"
+    def docs(ids: Seq[Long]) = ids.map(i => i -> gateText(s"ij$i")).toDF("doc_id", "text")
+    DedupGate.writeSigIndex(spark, docs(1L to 10L), t, nBuckets = 8)
+    assert(DedupGate.appendNewSigsIdempotent(spark, docs(11L to 14L), t) == 4L)
+    var st = 0.0
+    val jobs = jobsOf("idrec_jobs_record") { st = DedupGate.sigIndexStaleness(spark, t) }
+    assert(math.abs(st - 0.4) < 1e-9, s"4 appends over base 10 must read 0.4: $st")
+    assert(jobs == 1, s"staleness from the record must run the meta read alone: $jobs jobs")
+    // an empty marker (a crash between bump and record) and a record cut
+    // short (no newline) both read as missing: the scan gives the same value
+    val markerFile = new java.io.File(IndexTable.epochDir(spark, t).toUri.getPath,
+      IndexTable.current(spark, t).toString)
+    assert(Files.readString(markerFile.toPath) == "14\n", "the record is the marker's content")
+    Seq("", "1").foreach { content =>
+      Files.writeString(markerFile.toPath, content)
+      assert(IndexTable.recordedIds(spark, t).isEmpty, s"record '$content' must read as missing")
+      var scanned = 0.0
+      val scanJobs = jobsOf(s"idrec_jobs_scan${content.length}") {
+        scanned = DedupGate.sigIndexStaleness(spark, t)
+      }
+      assert(scanned == st, s"the scan must give the record's value: $scanned vs $st")
+      assert(scanJobs > jobs, s"without a record the ids must be scanned: $scanJobs jobs")
+    }
+    // an append onto a missing record records nothing; the next build does
+    assert(DedupGate.appendNewSigsIdempotent(spark, docs(Seq(15L)), t) == 1L)
+    assert(IndexTable.recordedIds(spark, t).isEmpty)
+    assert(math.abs(DedupGate.sigIndexStaleness(spark, t) - 0.5) < 1e-9)
+    DedupGate.rebuildSigIndex(spark, t, nBuckets = 8)
+    assert(IndexTable.recordedIds(spark, t) == Some(15L))
+  }
+
   test("persisted IVF index: probing nProbe cells prunes to those cells' files") {
     import graft.operators.VectorOps
     import org.apache.spark.sql.functions.col
@@ -727,7 +874,8 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(IndexProbe.bucketIds(4, keys).toSet == (0 until 4).toSet,
       "fixture: the batch's band hashes must land in every bucket")
     val probe = DedupGate.flagDuplicates(spark, batch, t)
-    bucketScansOf(probe, t)
+    assert(bucketScansOf(probe, t).forall(s => !s.bucketedScan && s.relation.bucketSpec.isEmpty),
+      s"a full-coverage probe must scan unbucketed:\n${probe.queryExecution.executedPlan}")
     val literals = flattenPlan(probe.queryExecution.executedPlan).flatMap(_.expressions)
       .filter(_.exists {
         case i: In => i.value.references.exists(_.name == "bh")
@@ -970,6 +1118,48 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex.getMessage.contains("epoch"), s"stale appender must fail on the epoch: ${ex.getMessage}")
     // and a FRESH append over the rebuilt index works
     assert(DedupGate.appendNewSigsIdempotent(spark, batch(15L to 15L), "dedup_gate_rebuild") == 1L)
+  }
+
+  test("DedupGate: a rebuild that crashes between drop and rename is finished by the next check or rebuild") {
+    import spark.implicits._
+    import graft.operators.IndexTable
+    import graft.streaming.DedupGate
+    def batch(ids: Seq[Long]) = ids.map(i => i -> gateText(s"cw$i")).toDF("doc_id", "text")
+    def rowsOf(t: String) = {
+      spark.catalog.refreshTable(t)
+      spark.table(t).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getSeq[Long](3))).toSet
+    }
+    // the finisher: a gate check (the lazy probe builds one) or the next rebuild
+    Seq[(String, String => Unit)](
+      "check" -> (t => DedupGate.flagDuplicates(spark, batch(Seq(200L)), t).collect(): Unit),
+      "rebuild" -> (t => DedupGate.rebuildSigIndex(spark, t, nBuckets = 8))
+    ).foreach { case (finisher, finish) =>
+      val t = s"dedup_gate_swap_$finisher"
+      val staging = t + "_rebuild"
+      DedupGate.writeSigIndex(spark, batch(1L to 6L), t, nBuckets = 8)
+      assert(DedupGate.appendNewSigsIdempotent(spark, batch(7L to 12L), t) == 6L)
+      val rowsBefore = rowsOf(t)
+      val epochBefore = IndexTable.current(spark, t)
+      // crash after the staged write: the table is untouched
+      intercept[RuntimeException](DedupGate.rebuildSigIndex(spark, t, 8, failAfterPhase = 1))
+      assert(spark.catalog.tableExists(t) && rowsOf(t) == rowsBefore &&
+        IndexTable.current(spark, t) == epochBefore, s"$finisher: a staged crash touched the table")
+      // crash after the drop: no table, a complete staging table
+      intercept[RuntimeException](DedupGate.rebuildSigIndex(spark, t, 8, failAfterPhase = 2))
+      assert(!spark.catalog.tableExists(t) && spark.catalog.tableExists(staging),
+        s"$finisher: fixture: the crash must fall between the drop and the rename")
+      finish(t)
+      assert(spark.catalog.tableExists(t), s"$finisher must restore the table")
+      assert(rowsOf(t) == rowsBefore, s"$finisher restored different rows")
+      assert(!spark.catalog.tableExists(staging), s"$finisher left the staging table")
+      assert(IndexTable.current(spark, t) > epochBefore, s"$finisher must advance the epoch")
+      assert(IndexTable.recordedIds(spark, t) == Some(12L) &&
+        DedupGate.sigIndexStaleness(spark, t) == 0.0, s"$finisher must reset staleness")
+      // the restored index probes and appends as before
+      assert(DedupGate.flagDuplicates(spark, batch(Seq(300L)), t).collect().isEmpty)
+      assert(DedupGate.appendNewSigsIdempotent(spark, batch(13L to 13L), t) == 1L)
+    }
   }
 
   test("DedupGate: a contract-breaking batch fails loudly at the probe-literal bound") {
